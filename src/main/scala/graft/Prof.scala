@@ -8,8 +8,9 @@ object Prof {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val names = args.drop(1)
-    // same cpus/coalescing-floor envs as Bench/QBench/Verify so probe
-    // numbers are comparable to the bench evidence they support
+    // reads the cpus/coalescing-floor env names of Bench/QBench/Verify,
+    // but not their defaults: cpus is 32 here and in Bench, 8 in QBench
+    // and 4 in Verify. Set SPARK_GRAFT_CPUS to compare with their numbers
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder().master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -36,8 +37,8 @@ object PhaseProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val names = args.drop(1)
-    // cpus/floor default to the same envs as Bench/QBench (PP_* still
-    // override for deliberate single-knob experiments)
+    // cpus/floor read the same env names as Bench/QBench (defaults as in
+    // Prof above; PP_* still override for single-knob experiments)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder().master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions",

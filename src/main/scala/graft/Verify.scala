@@ -1,6 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardOpenOption}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -23,13 +23,23 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
+    // a failing query leaves no result behind (an earlier run's matching
+    // one would pass the oracle compare) and a line in verify_failures.txt
+    val failures = Paths.get(s"$outDir/verify_failures.txt")
+    Files.deleteIfExists(failures)
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          val msg = String.valueOf(e.getMessage).replaceAll("\\s+", " ")
+          System.err.println(s"[verify] $name failed: $msg")
+          val res = new org.apache.hadoop.fs.Path(s"$outDir/$name")
+          res.getFileSystem(spark.sparkContext.hadoopConfiguration)
+            .delete(res, true)
+          Files.writeString(failures, s"$name\t$msg\n",
+            StandardOpenOption.CREATE, StandardOpenOption.APPEND)
         }
       }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -5,6 +5,7 @@ import graft.functions.Kernel
 import graft.operators.Sessionize
 import graft.sources.MqttParser
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
@@ -58,6 +59,18 @@ case class SinkLine(uuid: Long, msg: String)
   * clusterer shuffles once on time bucket (state bounded by the session
   * gap); the formatters are stateless projections of the emitted
   * clusters. No stage holds corpus-scale state.
+  *
+  * Cost per micro-batch: besides its rows, each batch pays a fixed cost.
+  * It writes the offset and commit logs, commits one state-store version
+  * per partition of each stateful stage, and runs the sink jobs. Each
+  * delivered file costs two batches: the data batch, and the no-data
+  * batch that advances the watermark and is the only one that seals
+  * sessions. `run` keeps that fixed cost to the work there is, by two
+  * rules (see `run` for the reasons):
+  *   - the query's checkpoint files are renamed through the FileSystem
+  *     API, which does not fork `readlink` per rename;
+  *   - a batch with no n ≥ 2 cluster runs no sink job, except the
+  *     query's first.
   */
 object DetectorApp {
 
@@ -189,9 +202,47 @@ object DetectorApp {
     }.toDF("uuid", "msg")
   }
 
+  /** The SQL conf naming the query's checkpoint file manager. */
+  private[streaming] final val CheckpointManagerKey =
+    "spark.sql.streaming.checkpointFileManagerClass"
+
   /** The standing application: file-source wire lines in, the two
     * formatted sink directories out (foreachBatch multicast — the
-    * reference's sink::collection fan-out, O1). */
+    * reference's sink::collection fan-out, O1).
+    *
+    * Two rules keep the fixed cost per micro-batch to the work there is:
+    *
+    *   - Checkpoint renames. The query starts with
+    *     `FileSystemBasedCheckpointFileManager`. Spark's default manager
+    *     goes through Hadoop's FileContext, whose rename calls
+    *     `getFileLinkStatus` on both paths. On the local file system,
+    *     without Hadoop's native library, that forks `readlink` (through
+    *     Hadoop's `Shell`) for every offset-log, commit-log and
+    *     state-file rename. The FileSystem manager renames without it.
+    *     No guarantee changes. On `hdfs:` the FileSystem rename itself
+    *     refuses an existing target, so the rename stays atomic and never
+    *     overwrites. On `file:` both managers check that the target does
+    *     not exist and then rename: Hadoop's FileContext rename there
+    *     (`AbstractFileSystem.renameInternal` without overwrite) is
+    *     check-then-rename as well. The checksum sidecars and Hadoop's
+    *     `.crc` files are written as before. The setting is made on the
+    *     caller's session only around `start()`:
+    *     `StreamExecution` clones the session when the query is made, so
+    *     the query keeps it, while the caller's session, the batch twin
+    *     and later queries do not get it. The file source's own log is
+    *     made by the stream thread after `start()` returns, from the
+    *     caller's session, so it normally keeps the default manager.
+    *   - Sink jobs. Sessions seal only in the no-data batch after each
+    *     delivery, so most data batches emit no n ≥ 2 cluster, and
+    *     writing them costs two parquet jobs of empty files. Each batch
+    *     counts its n ≥ 2 clusters once and writes only when there are
+    *     some, or when it is the query's first batch, so that both sink
+    *     directories exist, with their schema, from the start. The count
+    *     is a full count, not `isEmpty` or `take`: it computes every
+    *     partition of the batch, so every state store commits its
+    *     version; a short-circuiting action may leave partitions
+    *     unread. The first batch skips the count, as its writes compute
+    *     every partition. */
   def run(spark: SparkSession, inDir: String, outDir: String,
           checkpointDir: String,
           trigger: Trigger = Trigger.ProcessingTime("10 seconds"))
@@ -199,18 +250,25 @@ object DetectorApp {
     val lines = spark.readStream
       .schema("topic STRING, payload STRING")
       .json(inDir)
-    composedStream(lines)
+    val writer = composedStream(lines)
       .writeStream.outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch { (batch: Dataset[EmittedGeoCluster], _: Long) =>
+      .foreachBatch { (batch: Dataset[EmittedGeoCluster], batchId: Long) =>
         val cached = batch.persist()
-        mqttLines(cached).write.mode("append").parquet(s"$outDir/mqtt")
-        asciiLines(cached).write.mode("append").parquet(s"$outDir/ascii")
+        if (batchId == 0 || cached.filter(col("n") >= 2).count() > 0) {
+          mqttLines(cached).write.mode("append").parquet(s"$outDir/mqtt")
+          asciiLines(cached).write.mode("append").parquet(s"$outDir/ascii")
+        }
         cached.unpersist()
         ()
       }
-      .start()
+    val prev = spark.conf.getOption(CheckpointManagerKey)
+    spark.conf.set(CheckpointManagerKey,
+      classOf[FileSystemBasedCheckpointFileManager].getName)
+    try writer.start()
+    finally prev.fold(spark.conf.unset(CheckpointManagerKey))(
+      spark.conf.set(CheckpointManagerKey, _))
   }
 
   // ---- the batch twin (driver-checked queries + the parity anchor) ----

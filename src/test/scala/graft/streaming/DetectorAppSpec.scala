@@ -1,8 +1,12 @@
 package graft.streaming
 
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.streaming.checkpointing.{FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** End-to-end parity for the COMPOSED streaming detector application
   * (DetectorApp): the one standing DAG — wire parse → per-station
@@ -27,9 +31,13 @@ class DetectorAppSpec extends AnyFunSuite {
   /** A gate-passing wire line for the sentinel station: ublox cycles the
     * detinfo residues (mask completes at the 6th), tiny time_acc keeps
     * the R6 fold reliable, fix = 1 passes R5. */
-  private def sentinelLine(ublox: Int, tSec: Long): (String, String) = {
+  private def sentinelLine(ublox: Int, tSec: Long): (String, String) =
+    stationLine(SentinelStation, ublox, tSec)
+
+  private def stationLine(station: Long, ublox: Int, tSec: Long)
+      : (String, String) = {
     val f = "%d.%09d".format(tSec, 0)
-    (s"muonpi/data/u$SentinelStation/st0", s"$f $f 10 $ublox 1 1 1")
+    (s"muonpi/data/u$station/st0", s"$f $f 10 $ublox 1 1 1")
   }
 
   /** Drive the composed stream over wire lines, flushing with sentinel
@@ -140,5 +148,131 @@ class DetectorAppSpec extends AnyFunSuite {
       .parquet(s"$outDir/mqtt")
     import org.apache.spark.sql.functions.{col, not}
     assert(mqtt.filter(not(col("msg").contains(sentinelHex))).count() == 0)
+  }
+
+  // ---- the standing application across deliveries and restarts ----
+
+  private val MaxSec = 4000000000L
+
+  /** The sentinel's six mask-completing lines, then two far hits: the
+    * watermark they raise seals every earlier session. */
+  private def sentinelLadder: Seq[(String, String)] =
+    (0 until 6).map(k => sentinelLine(k, MaxSec + k * 100)) ++
+      Seq(sentinelLine(0, MaxSec + 1000000L),
+        sentinelLine(1, MaxSec + 2000000L))
+
+  private def appDirs(): Seq[String] =
+    Seq("detapp_in", "detapp_out", "detapp_ck")
+      .map(Files.createTempDirectory(_).toString)
+
+  private def startApp(in: String, out: String, ck: String): StreamingQuery =
+    DetectorApp.run(spark, in, out, ck, Trigger.ProcessingTime(0))
+
+  /** One delivery: a JSON-lines file moved into the source directory in
+    * one rename, then every batch it causes (the no-data batch too). */
+  private def deliver(q: StreamingQuery, in: String, name: String,
+                      lines: Seq[(String, String)]): Unit = {
+    assert(lines.forall { case (t, p) => !(t + p).exists("\"\\".contains(_)) })
+    val tmp = Files.createTempFile("detapp_file", ".json")
+    Files.write(tmp, lines.map { case (t, p) =>
+      s"""{"topic":"$t","payload":"$p"}""" }.asJava)
+    Files.move(tmp, Paths.get(in, name), StandardCopyOption.ATOMIC_MOVE)
+    q.processAllAvailable()
+  }
+
+  /** A sink's rows without the sentinel's, in order. */
+  private def sinkRows(out: String, sink: String): Seq[(Long, String)] = {
+    val sentinelHex = "%016x".format(SentinelStation)
+    spark.read.schema("uuid BIGINT, msg STRING").parquet(s"$out/$sink")
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+      .filter { case (uuid, msg) =>
+        uuid < MaxSec * 1000000000L && !msg.contains(sentinelHex) }
+      .sorted
+  }
+
+  private def partFiles(out: String): Seq[Int] =
+    Seq("mqtt", "ascii").map(sink =>
+      new java.io.File(s"$out/$sink").list().count(_.startsWith("part-")))
+
+  /** The manager in the query's own (cloned) session; the accessor is
+    * Spark-internal in Scala but public in bytecode. */
+  private def queryManager(q: StreamingQuery): String = {
+    val exec = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+    exec.getClass.getMethod("sparkSessionForStream").invoke(exec)
+      .asInstanceOf[SparkSession].conf.get(DetectorApp.CheckpointManagerKey)
+  }
+
+  test("standing application: the checkpoint manager is scoped to the query") {
+    val key = DetectorApp.CheckpointManagerKey
+    val fsManager = classOf[FileSystemBasedCheckpointFileManager].getName
+    val fcManager = classOf[FileContextBasedCheckpointFileManager].getName
+    assert(spark.conf.getOption(key).isEmpty)
+    val Seq(in, out, ck) = appDirs()
+    val q = startApp(in, out, ck)
+    try {
+      assert(spark.conf.getOption(key).isEmpty)
+      assert(queryManager(q) == fsManager)
+    } finally q.stop()
+    // a value the caller set is restored, not dropped
+    spark.conf.set(key, fcManager)
+    try {
+      val Seq(in2, out2, ck2) = appDirs()
+      val q2 = startApp(in2, out2, ck2)
+      try {
+        assert(spark.conf.get(key) == fcManager)
+        assert(queryManager(q2) == fsManager)
+      } finally q2.stop()
+    } finally spark.conf.unset(key)
+  }
+
+  test("standing application: only batches with clusters write the sinks") {
+    val Seq(in, out, ck) = appDirs()
+    val q = startApp(in, out, ck)
+    try {
+      // the query's first batch writes both sinks, with their schema, even
+      // though its only line is rejected by the parser
+      deliver(q, in, "f00.json", Seq(("muonpi/data/cluster/st0", "x")))
+      val first = partFiles(out)
+      assert(first.forall(_ > 0))
+      // two stations complete their masks; their sixth hits coincide at
+      // tSec, but the watermark (tSec - 30 s) cannot seal that session yet
+      val tSec = 3000000000L
+      deliver(q, in, "f01.json",
+        for (st <- Seq(101L, 202L); k <- 0 until 6)
+          yield stationLine(st, k, tSec - (5 - k) * 100))
+      assert(partFiles(out) == first)
+      assert(sinkRows(out, "ascii").isEmpty && sinkRows(out, "mqtt").isEmpty)
+      // the ladder's no-data batch seals it and writes its rows
+      deliver(q, in, "f02.json", sentinelLadder)
+      assert(partFiles(out).zip(first).forall { case (a, b) => a > b })
+      val uuid = tSec * 1000000000L
+      assert(sinkRows(out, "ascii") == Seq((uuid, "Event: n=2 1/1 V dt=0")))
+      assert(sinkRows(out, "mqtt").map(_._1) == Seq(uuid, uuid))
+    } finally q.stop()
+  }
+
+  test("standing application: a restart loses and repeats no sink row (sf0.01)") {
+    // time-ordered files, so delivery is station-monotone and no hit is late
+    val lines = corpusLines("/root/testdata/sf0.01")
+      .sortBy(_._2.takeWhile(_ != ' '))
+    val files = (lines.grouped((lines.size + 3) / 4).toSeq :+ sentinelLadder)
+      .zipWithIndex
+    def drive(dirs: Seq[String], fs: Seq[(Seq[(String, String)], Int)]) = {
+      val Seq(in, out, ck) = dirs
+      val q = startApp(in, out, ck)
+      try fs.foreach { case (f, i) => deliver(q, in, f"f$i%02d.json", f) }
+      finally q.stop()
+    }
+    val whole = appDirs()
+    drive(whole, files)
+    // stopped after two files, restarted on the same checkpoint and sinks
+    val split = appDirs()
+    drive(split, files.take(2))
+    drive(split, files.drop(2))
+    for (sink <- Seq("mqtt", "ascii")) {
+      val want = sinkRows(whole(1), sink)
+      assert(want.nonEmpty)
+      assert(sinkRows(split(1), sink) == want)
+    }
   }
 }
