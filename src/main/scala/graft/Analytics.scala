@@ -48,10 +48,6 @@ object Analytics {
         "CAST(round(value * 100) AS BIGINT) AS value_c")
     }
 
-  /** Per-type thresholds (n, sv, svv, med2, mad4) — the MODEL the gate
-    * needs, one row per event type. The streaming twin freezes exactly
-    * this table ([[streaming.StreamingOutlierGate]]), the same
-    * train-batch / score-stream split as the NB quality gate. */
   /** Per-type distinct-value histogram — the ONE corpus-sized shuffle
     * the whole outlier/percentile family performs. Persisted per
     * (session, dir): zStats, both median walks, and the percentile
@@ -84,7 +80,9 @@ object Analytics {
       .selectExpr("event_type", s"lo + hi AS $outCol")
   }
 
-  private[graft] def outlierThresholds(s: SparkSession, dir: String)
+  /** Per-type thresholds (n, sv, svv, med2, mad4) — the MODEL the
+    * outlier tests need, one row per event type. */
+  private def outlierThresholds(s: SparkSession, dir: String)
       : DataFrame = ScanCache.get(s, s"outlier-thresholds:$dir") {
     val h = valueHist(s, dir)
     val zStats = h.groupBy("event_type").agg(
@@ -504,7 +502,7 @@ object Analytics {
     * corpus-sized), a 24×types profile aggregate, then a broadcast
     * profile join back — events are touched once. */
   /** (type, day, hour) cell counts — the calendar-grid aggregate both
-    * the anomaly query and the frozen streaming profile reduce. */
+    * the anomaly query and its hour-of-day profile reduce. */
   private def seasonalCells(s: SparkSession, dir: String): DataFrame =
     Tables.events(s, dir).selectExpr("event_type",
       "ts div 86400000000000 AS day",
@@ -512,15 +510,12 @@ object Analytics {
       .groupBy("event_type", "day", "hour").agg(count(lit(1)).as("cnt"))
 
   /** The hour-of-day MODEL: one row per (type, hour) —
-    * (n_cells, Σcnt, Σcnt²). The streaming gate freezes exactly this
-    * table ([[streaming.StreamingSeasonalGate]]), the same train-batch /
-    * score-stream split as the outlier and NB quality gates. Σcnt² is
-    * WIDENED to DECIMAL(38,0) (HUGEINT on the oracle side): per-cell
-    * counts square, so a BIGINT ss overflows once counts pass ~3·10⁹ —
-    * the widened model and the widened z² filter below stay exact up to
-    * per-cell counts of ~10¹⁶ (dev² and tot² below 10³⁸), far beyond
-    * the 100 TB grid. */
-  private[graft] def seasonalProfile(s: SparkSession, dir: String)
+    * (n_cells, Σcnt, Σcnt²). Σcnt² is WIDENED to DECIMAL(38,0)
+    * (HUGEINT on the oracle side): per-cell counts square, so a BIGINT
+    * ss overflows once counts pass ~3·10⁹ — the widened model and the
+    * widened z² filter below stay exact up to per-cell counts of ~10¹⁶
+    * (dev² and tot² below 10³⁸), far beyond the 100 TB grid. */
+  private def seasonalProfile(s: SparkSession, dir: String)
       : DataFrame =
     seasonalCells(s, dir).groupBy("event_type", "hour").agg(
       count(lit(1)).as("n_cells"), sum("cnt").as("tot"),

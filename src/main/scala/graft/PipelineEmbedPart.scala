@@ -963,10 +963,9 @@ private[graft] trait PipelineEmbedPart extends Serializable { this: Pipeline.typ
     * The sketch is built from the RAW token stream: each occurrence
     * increments d=4 (row, bucket) cells, so the corpus collapses onto
     * d·w = 2048 counters with map-side combine — no vocabulary-keyed
-    * shuffle, mergeable by addition across shards/batches (the property
-    * the streaming twin exploits). The exact top-20 panel (one
-    * vocab-keyed count — the shuffle the sketch exists to avoid at
-    * corpus scale) is kept as measured truth: each panel token's
+    * shuffle, mergeable by addition across shards/batches. The exact
+    * top-20 panel (one vocab-keyed count — the shuffle the sketch exists
+    * to avoid at corpus scale) is kept as measured truth: each panel token's
     * estimate is the min of its d cells, `err` the overestimate. CMS
     * never underestimates (est ≥ n by construction, spec-pinned); with
     * ~58k occurrences over 2048 cells the expected collision mass per
@@ -1335,7 +1334,9 @@ private[graft] trait PipelineEmbedPart extends Serializable { this: Pipeline.typ
     // (LEFT join keeps queries the index returned no candidate for)
     // and hits where the method's top-1 equals the true NN.
     val truth = annTruth(s, dir)
-    val tagged = Seq(
+    // The method names come from this one list, so the tagged union
+    // and the method panel cannot drift apart.
+    val results = Seq(
       "lsh_multi" -> annLshMulti(s, dir),
       "ivf" -> annIvf(s, dir),
       "ivf_trained" -> annIvfTrained(s, dir),
@@ -1343,11 +1344,11 @@ private[graft] trait PipelineEmbedPart extends Serializable { this: Pipeline.typ
       "q8_brute" -> annQ8Brute(s, dir),
       "pq_adc" -> annPqAdc(s, dir),
       "ivfpq" -> annIvfPq(s, dir))
+    val tagged = results
       .map { case (m, res) => res.select(lit(m).as("method"),
         col("vec_id"), col("nn_id")) }
       .reduce(_ unionByName _)
-    val methods = Seq("lsh_multi", "ivf", "ivf_trained", "rp_brute",
-      "q8_brute", "pq_adc", "ivfpq").toDF("method")
+    val methods = results.map(_._1).toDF("method")
     truth.crossJoin(broadcast(methods))
       .join(tagged, Seq("method", "vec_id"), "left")
       .groupBy("method")

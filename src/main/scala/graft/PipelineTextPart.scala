@@ -53,9 +53,8 @@ private[graft] trait PipelineTextPart extends Serializable { this: Pipeline.type
     * store doc, or −1 when genuinely new.
     *
     * 100 TB shape: the store's fingerprint table is what a production
-    * run would keep materialized between snapshots (the streaming twin
-    * [[streaming.StreamingDedup]] holds exactly this as state); the
-    * batch-side scan is the only per-snapshot corpus touch. */
+    * run would keep materialized between snapshots; the batch-side scan
+    * is the only per-snapshot corpus touch. */
   /** The incremental-dedup core over (doc_id, text) frames — separated
     * so the spec can drive it with planted duplicates (the real corpus
     * has cross-source exact dups only at sf0.1, where the real-corpus
@@ -976,8 +975,8 @@ private[graft] trait PipelineTextPart extends Serializable { this: Pipeline.type
       .selectExpr("doc_id", "split(text, ' ') AS tk",
         "CAST(substring(source, 4) AS INT) % 4 = 0 AS ref")
     // ScanCached per (session, dir): the token explode and the trained
-    // model serve four query families (quality gate, calibration, the
-    // funnel's stage 4, the frozen streaming gate) — r9 bench showed
+    // model serve three query families (quality gate, calibration, the
+    // funnel's stage 4) — r9 bench showed
     // each re-deriving the corpus token counts
     val tok = ScanCache.get(s, s"nb-tok:$dir") {
       docs.selectExpr("doc_id", "ref", "explode(tk) AS w") }
@@ -1002,21 +1001,6 @@ private[graft] trait PipelineTextPart extends Serializable { this: Pipeline.type
           "- CAST(round(ln((cn + CAST(1 AS DOUBLE)) / (tn + CAST(vocab AS DOUBLE))) " +
           "* CAST(1000000 AS DOUBLE)) AS BIGINT) AS llr") }
     (tok, model, pri)
-  }
-  /** Frozen NB model for the streaming gate: the (word → fixed-point
-    * llr) table plus the prior, collected. Shipping a trained scorer to
-    * ingest workers is how every deployed quality filter works (CCNet
-    * ships its KenLM); the collect is of the MODEL, not the corpus —
-    * deployment caps the vocabulary at the top [[QcGateVocab]] words by
-    * |llr| (the most discriminative ones), the same capped-broadcast
-    * move as decontaminate's eval gram set. Absent words score 0
-    * (neutral) at the gate. */
-  final val QcGateVocab = 1 << 20
-  def nbFrozen(s: SparkSession, dir: String): (Map[String, Long], Long) = {
-    val (_, model, pri) = nbModelParts(s, dir)
-    val m = model.orderBy(abs(col("llr")).desc, col("w")).limit(QcGateVocab)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    (m, pri.collect().head.getLong(0))
   }
   private[graft] def qualityClassifier(s: SparkSession, dir: String): DataFrame = {
     val (tok, model, pri) = nbModelParts(s, dir)
@@ -1300,9 +1284,8 @@ private[graft] trait PipelineTextPart extends Serializable { this: Pipeline.type
     * flags — dup3_frac is reported as a diagnostic, not thresholded).
     * Both calibrated so the rules fire on this corpus (the paper's
     * dup-10-gram rule is vacuously zero on short synthetic documents —
-    * 3-grams carry the same signal here). The streaming mirror is
-    * `StreamingSafetyGate.repetitionFlagged`; change all three
-    * implementations (Spark, oracle SQL, Scala) together.
+    * 3-grams carry the same signal here). Change both implementations
+    * (Spark and the oracle SQL) together.
     *
     * 100 TB shape: both statistics are computed ENTIRELY within the row
     * via higher-order functions — no explode, no shuffle, a pure map over

@@ -492,7 +492,7 @@ private[graft] trait PipelineWebPart extends Serializable { this: Pipeline.type 
       .orderBy("doc_id")
   }
   /** THE COMPOSED WEB-INGEST DAG — the whole round-8 web family as
-    * one query, the CorpusApp/DetectorApp move for the web side:
+    * one query, the DetectorApp move for the web side:
     * documents wrap into full HTML pages (the html_extract fixture,
     * entity-escaped, script/style/comment traps), pack into 16-record
     * per-record-gzip WARC archives (the Common Crawl layout), then the

@@ -666,7 +666,7 @@ object DeltaLog {
   }
 
   /** A file SUBSET of a table as a DataFrame — the scan-building
-    * half of [[read]], shared with the log-tail streaming twin:
+    * half of [[read]], shared with [[tableChanges]]:
     * one pruned scan per partition-value combination, partition
     * columns injected as typed literals (protocol: values live in
     * the log, not the files). Reader-version-3 features applied
