@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Log4j2 tap: collects WARN-with-throwable and ERROR events so a
   * stack trace in the stdout tail ALWAYS has a matching record entry
   * in the bench artifact (r11 verdict #1/#4: a FileStreamSink WARN
@@ -39,32 +37,12 @@ private object BenchLogTap extends
 /** Benchmark main: runs every SparkEntry query at the given scale factor
   * and prints one JSON line with per-query wall seconds.
   * Environment: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS
-  * (default 32 — the driver's local[32] contract). */
+  * (default: the host's core count, see [[GraftSession]]). */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE partition coalescing targets BYTES, which is right for
-      // shuffle-bound stages but collapses tiny-byte CPU-heavy
-      // post-shuffle stages (codec wrap/parse, media decode: ~2 MB of
-      // shard bytes carrying ~100 core-seconds of work) to 1-2 tasks:
-      // the parallelism-first target max(bytes/defaultParallelism,
-      // minPartitionSize) is floored at 1 MB. Lower the floor so the
-      // bytes/parallelism term binds — scale-adaptive by construction
-      // (at production shuffle sizes per-core bytes far exceed 1 MB
-      // and nothing changes; the core count comes from the session,
-      // not a constant). Measured: tar_parse_xz 3.1 → 0.6 s,
-      // video_frame_sample 2.3 → 0.25 s at sf0.1/local[32].
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE", "16k"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession(cpus)
     BenchLogTap.install()
     // one warm scan so JVM/codegen warmup isn't billed to the first query
     SparkEntry.queries.get("q1_agg").foreach(f => f(spark, sfDir).count())
@@ -130,9 +108,7 @@ object Bench {
     // (the first refresh run marked an idle host contended that
     // way). The noise guard likewise tightens to 2× only off the
     // suite-start reading.
-    val cpusN = try math.max(1, cpus.toInt)
-               catch { case _: Throwable => 32 }
-    val loadThreshold = cpusN / 16.0
+    val loadThreshold = cpus / 16.0
     /** One query's bench record — named fields so adding the next
       * one can't silently shift a positional underscore. */
     case class QRes(name: String, secs: Double, ok: Boolean,

@@ -2104,10 +2104,12 @@ private[graft] trait PipelineEmbedPart extends Serializable { this: Pipeline.typ
       |    ELSE -((-(ray.lambda_micro * 1000000)) // tr.trace)
       |    END AS share_ppm
       |FROM v3, ray, tr ORDER BY pos""".stripMargin,
+    // cm2 is MATERIALIZED for the reason cv is (see pcaCovCtes): the
+    // deflated power iteration references it once per round
     "embedding_eig2" -> s"""$pcaCovCtes,
       |$pcaEig1Ctes,
       |vv AS (SELECT CAST(sum(v * v) AS BIGINT) AS vv FROM v3),
-      |cm2 AS (
+      |cm2 AS MATERIALIZED (
       |  SELECT cm.i, cm.j, cm.c - CAST(round(
       |    CAST(ray.lambda_micro * a.v * b.v AS DOUBLE) / vv.vv)
       |    AS BIGINT) AS c
@@ -2138,7 +2140,7 @@ private[graft] trait PipelineEmbedPart extends Serializable { this: Pipeline.typ
     "embedding_project2" -> s"""$pcaCovCtes,
       |$pcaEig1Ctes,
       |vv AS (SELECT CAST(sum(v * v) AS BIGINT) AS vv FROM v3),
-      |cm2 AS (
+      |cm2 AS MATERIALIZED (
       |  SELECT cm.i, cm.j, cm.c - CAST(round(
       |    CAST(ray.lambda_micro * a.v * b.v AS DOUBLE) / vv.vv)
       |    AS BIGINT) AS c

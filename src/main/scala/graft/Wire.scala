@@ -15,8 +15,8 @@ object Wire {
   /** events → synthetic MQTT wire lines. Every 97th event gets a payload
     * starting with '.', every 89th a "cluster" user — both must be
     * rejected by the parser (reference include/source/mqtt.h:218-223,
-    * 391-395). */
-  /** Probe access for ParseProbe (stage-cost tooling). */
+    * 391-395). Also the input of the `DetectorApp` batch twin and of
+    * its spec. */
   private[graft] def wireLinesPublic(s: SparkSession, dir: String): DataFrame =
     wireLines(s, dir)
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,16 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * module: the oracle gate proves SQL parity; these prove the STATISTICS
   * are the ones claimed (plain-Scala z/MAD recompute) and that the ER
   * blocking key loses nothing on this vocabulary. */
-class AnalyticsSpec extends AnyFunSuite {
+class AnalyticsSpec extends AnyFunSuite with LocalSpark {
 
   private val dir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("value_outliers matches a plain-Scala z/MAD recompute") {
     val ev = Tables.events(spark, dir)

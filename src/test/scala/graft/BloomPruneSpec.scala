@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.BloomPrune
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,15 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * SUPERSET of the true-match set (no false negatives, ever), its
   * false-positive rate sits near the (1−e^{−kn/m})^k analytic, and the
   * bitset is partition-order independent. */
-class BloomPruneSpec extends AnyFunSuite {
+class BloomPruneSpec extends AnyFunSuite with LocalSpark {
 
   private val dir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("pruned set ⊇ true matches; FP rate near the analytic") {
     val urgent = Tables.orders(spark, dir)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins EXACT greedy BPE merge semantics (Sennrich et al. 2016,
@@ -10,13 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * string replace this replaced under-merged XYXY runs ('coco',
   * 'murmur') because the first replacement consumed the shared
   * delimiter space. */
-class BpeMergeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BpeMergeSpec extends AnyFunSuite with LocalSpark {
 
   /** Reference greedy merge: scan left to right, merge (x, y) and skip
     * both, continue after the merged token. */

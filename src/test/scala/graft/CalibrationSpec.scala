@@ -1,20 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The NB calibration curve is directionally sound on the driver
   * corpus: bins cover the log-odds range, counts add up to the scored
   * population, and the empirical reference rate rises from the bottom
   * to the top occupied bin. */
-class CalibrationSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CalibrationSpec extends AnyFunSuite with LocalSpark {
 
   test("curve shape and population accounting at sf0.001") {
     val rows = Pipeline.queries("classifier_calibration")(

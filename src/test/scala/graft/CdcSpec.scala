@@ -1,19 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Content-defined chunking pins: the shift-invariance property that
   * justifies CDC over fixed blocking, agreement between a plain-Scala
   * recompute and the query's md5 chain, and the no-cut degenerate. */
-class CdcSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CdcSpec extends AnyFunSuite with LocalSpark {
 
   /** The query's boundary rule in plain Scala: cuts where the 8-byte
     * rolling hash divides 64, chunks between [0, cuts..., len]. */

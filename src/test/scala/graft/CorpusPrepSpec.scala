@@ -1,20 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Corpus-prep operators (retrieval, chunking, packing, composite
   * filter) against the sf0.001 corpus, cross-checked by plain-Scala
   * reimplementations of the same arithmetic. */
-class CorpusPrepSpec extends AnyFunSuite {
+class CorpusPrepSpec extends AnyFunSuite with LocalSpark {
 
   private val dir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private lazy val docs: Seq[(Long, String, String, String)] = {
     import spark.implicits._

@@ -1,18 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Corpus quality / safety operators (Gopher repetition rules, exact
   * substring detection, SemDeDup, decontamination, PII scrub) on crafted
   * fixtures where the expected verdicts are known by construction. */
-class CorpusSafetySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CorpusSafetySpec extends AnyFunSuite with LocalSpark {
 
   /** Write a crafted documents table (and optionally embeddings) to a
     * temp dir shaped like the driver's sf dirs. */

@@ -1,7 +1,6 @@
 package graft
 
 import graft.sources.DetectorLog
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{ArrayType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,13 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * ArrayType(StructType(name, value_s, value_i, value_d, unit, type)),
   * apply the reference's name→type mapping, and fall back to String for
   * unknown parameter names (mqtt.h:260-342). */
-class DetectorLogSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DetectorLogSpec extends AnyFunSuite with LocalSpark {
 
   test("mapping covers the reference's 58 parameters") {
     assert(DetectorLog.typeMapping.size == 58)

@@ -1,16 +1,9 @@
 package graft
 
 import graft.functions.DotProduct
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-class DotProductSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DotProductSpec extends AnyFunSuite with LocalSpark {
 
   test("codegen dot_p equals the portable in-order fold bit-for-bit") {
     DotProduct.register(spark)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,16 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * proves value parity with DuckDB; these pin the graph-theoretic
   * identities and the exact-arithmetic determinism claims that the SQL
   * comparison alone would not distinguish from coincidence. */
-class GraphSpec extends AnyFunSuite {
+class GraphSpec extends AnyFunSuite with LocalSpark {
 
   private val dir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("cell-pruned edge list equals the all-pairs distance filter") {
     val nodes = Tables.events(spark, dir)

@@ -1,16 +1,9 @@
 package graft
 
 import graft.operators.Histograms
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-class HistogramsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class HistogramsSpec extends AnyFunSuite with LocalSpark {
 
   test("save + save + rollup sums bins across snapshots (A8)") {
     import spark.implicits._

@@ -1,16 +1,9 @@
 package graft
 
 import graft.functions.JaccardSorted
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-class JaccardSortedSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class JaccardSortedSpec extends AnyFunSuite with LocalSpark {
 
   test("matches size(intersect)/size(union) on random distinct sets") {
     JaccardSorted.register(spark)

@@ -1,19 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Closed-form pins for the C4/RefinedWeb line-level dedup family:
   * first-occurrence keeper policy, reconstruction order, the empty-doc
   * md5, and the distinct-doc-frequency boilerplate threshold. */
-class LineDedupSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LineDedupSpec extends AnyFunSuite with LocalSpark {
 
   private def fixtureDir(docs: Seq[(Long, String)]): String = {
     import spark.implicits._

@@ -1,20 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Closed-form pins for the training-objective example builders:
   * T5-style span corruption (sentinel numbering, schedule, short tail
   * spans) and the FIM thirds transform (PSM/SPM orders, degenerate
   * one-token docs). */
-class ObjectivePrepSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ObjectivePrepSpec extends AnyFunSuite with LocalSpark {
 
   private def fixtureDir(docs: Seq[(Long, String)]): String = {
     import spark.implicits._

@@ -1,20 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Closed-form and analytic pins for the PCA family: covariance on a
   * crafted two-point corpus, the power iteration's eigenpair on a
   * diagonal matrix, and Rayleigh agreement with a double-precision
   * reference on the driver corpus. */
-class PcaSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PcaSpec extends AnyFunSuite with LocalSpark {
 
   private def fixtureDir(vs: Seq[Array[Float]]): String = {
     import spark.implicits._

@@ -4,7 +4,7 @@ import graft.functions.TextFunctions
 import graft.operators.Multimodal
 import org.scalatest.funsuite.AnyFunSuite
 
-class PipelineSpec extends AnyFunSuite {
+class PipelineSpec extends AnyFunSuite with LocalSpark {
 
   test("language detection on genuine multilingual samples") {
     assert(TextFunctions.detectLang(
@@ -39,11 +39,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("simhash_sig kernel matches the portable fold on random arrays") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     import spark.implicits._
     graft.functions.SimHashSig.register(spark)
     val rnd = new scala.util.Random(20260812L)
@@ -76,11 +71,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("embedding_neardup_lsh: verified subset of the exact pairs") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     val dir = "/root/testdata/sf0.001"
     val exact = Pipeline.queries("embedding_neardup")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
@@ -103,11 +93,6 @@ class PipelineSpec extends AnyFunSuite {
 
   test("embedding_rp: sparse projection preserves cosine within the " +
     "JL budget of 16 dims") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     val dir = "/root/testdata/sf0.001"
     val rows = Pipeline.queries("embedding_rp")(spark, dir)
       .collect()
@@ -138,11 +123,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("embedding_q8: int8 grid costs ~nothing on cosine (unlike RP)") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     val dir = "/root/testdata/sf0.001"
     val rows = Pipeline.queries("embedding_q8")(spark, dir)
       .collect()
@@ -165,11 +145,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("embedding_pq: 64x codes sit between SQ8 and RP on distortion") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     val dir = "/root/testdata/sf0.001"
     val rows = Pipeline.queries("embedding_pq")(spark, dir)
       .collect()
@@ -189,5 +164,17 @@ class PipelineSpec extends AnyFunSuite {
       rows.map(r => (r._3 - mf) * (r._3 - mf)).sum *
         rows.map(r => (r._4 - mq) * (r._4 - mq)).sum)
     assert(corr > 0.2, s"corr(cos_full, cos_pq) = $corr")
+  }
+
+  test("pqCodes assigns only codebook entries that training kept") {
+    // annPqAdc fills the LUT slots of dropped codebook entries with a
+    // 0.0 placeholder: a code pointing at one would corrupt distances
+    val dir = "/root/testdata/sf0.001"
+    val used = Pipeline.pqCodes(spark, dir).select("j", "k").distinct()
+    val missing = used.except(Pipeline.pqCodebooks(spark, dir)
+      .select("j", "k")).collect()
+    assert(used.count() > 0)
+    assert(missing.isEmpty, s"codes without a codebook entry: " +
+      missing.mkString(", "))
   }
 }

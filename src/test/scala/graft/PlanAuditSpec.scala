@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FilterExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Self-enforcing plan audits: the scale-shape claims in SCALE.md as
@@ -16,31 +14,17 @@ import org.scalatest.funsuite.AnyFunSuite
   * (half the audits are about exactly those); AQE re-planning only ever
   * REPLACES an exchange with something cheaper, so this is the worst
   * case. */
-class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  override def afterAll(): Unit = {
-    // leave the shared test session the way other suites expect it
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-  }
+class PlanAuditSpec extends AnyFunSuite with LocalSpark {
 
   private val dir = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // set as RUNTIME confs: getOrCreate may hand back another suite's
-    // session in the shared test JVM, silently dropping builder configs.
-    // AQE off to audit the STATIC plan — AdaptiveSparkPlanExec hides its
-    // children from collect, and AQE only ever replaces exchanges with
-    // cheaper ones at runtime, so the static shape is the worst case.
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", (10L << 20).toString)
-    s
-  }
+  // AQE off (see above; AdaptiveSparkPlanExec also hides its children
+  // from collect) and a fixed 10 MB broadcast threshold, for each test
+  override def withFixture(test: NoArgTest) =
+    withConf("spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> (10L << 20).toString) {
+      super.withFixture(test)
+    }
 
   // executedPlan, not sparkPlan: EnsureRequirements has inserted the
   // exchanges by then, which is what half these audits are about

@@ -1,16 +1,9 @@
 package graft
 
 import graft.functions.PolyHash
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-class PolyHashSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PolyHashSpec extends AnyFunSuite with LocalSpark {
 
   test("byte fold matches the definition") {
     val expected = ((0L * 31 + 'a') * 31 + 'b') % PolyHash.P

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * exact-substring join — a mismatch would silently drop candidate pairs
   * (the verify step only ever removes false positives, never restores
   * false negatives). */
-class PolyHashWindowsSpec extends AnyFunSuite {
+class PolyHashWindowsSpec extends AnyFunSuite with LocalSpark {
 
   private def fold(s: String): Long = PolyHash.hashBytes(s.getBytes("UTF-8"))
 
@@ -35,11 +35,6 @@ class PolyHashWindowsSpec extends AnyFunSuite {
   }
 
   test("SQL registration evaluates through codegen") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     import spark.implicits._
     PolyHash.register(spark)
     PolyHashWindows.register(spark)

@@ -1,19 +1,12 @@
 package graft
 
 import graft.operators.RangeJoin
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Banded point-in-interval join ≡ the naive inequality join, on seeded
   * random data with intervals spanning many buckets, empty intervals,
   * and bucket-boundary points. */
-class RangeJoinSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RangeJoinSpec extends AnyFunSuite with LocalSpark {
 
   test("bucketed range join matches the naive inequality join") {
     import spark.implicits._

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,13 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * src/analysis/detectorstation.cpp:127-135) on a fixture — the synthetic
   * corpus's rates never dip below mean − stddev, so the oracle alone
   * exercises only the 1.0 branch. */
-class RegistryFactorSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RegistryFactorSpec extends AnyFunSuite with LocalSpark {
 
   test("rate-dip factor: dip, no-dip, and null-stddev branches") {
     import spark.implicits._

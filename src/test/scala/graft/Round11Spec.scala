@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Property pins for the round-11 scale tools, on the REAL corpus:
@@ -8,13 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * contract (the COVERAGE claims, asserted rather than prose), and
   * the Bloom panel's sketch laws (no false negatives anywhere, the
   * undersized filter strictly noisier than the right-sized one). */
-class Round11Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round11Spec extends AnyFunSuite with LocalSpark {
 
   private val dir = "/root/testdata/sf0.01"
 

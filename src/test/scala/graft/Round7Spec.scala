@@ -1,20 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Closed-form pins for the round-7 operators: char-distribution
   * entropy (exact values on crafted alphabets), the aHash degenerate
   * case (a uniform image must hash to zero — strict mean threshold),
   * and the skew_report salt recommendation on a hand-built hot key. */
-class Round7Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round7Spec extends AnyFunSuite with LocalSpark {
 
   /** Temp dir with documents.parquet (+ optionally events.parquet)
     * shaped like the driver tables, so the production query functions

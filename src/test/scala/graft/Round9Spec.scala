@@ -1,19 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Closed-form pins for the round-9 loader operators: power-of-two
   * length bucketing with exact padding arithmetic, and the
   * deterministic epoch reshuffle's reproducibility/difference
   * contract. */
-class Round9Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round9Spec extends AnyFunSuite with LocalSpark {
 
   private def fixtureDir(docs: Seq[(Long, String, String)]): String = {
     import spark.implicits._

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the session-stop eviction contract of ScanCache: a JVM that
@@ -8,14 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * not accumulate persisted-plan references from stopped contexts.
   * Safe to stop the shared context here — suites run sequentially in
   * the forked JVM and later suites getOrCreate a fresh one. */
-class ScanCacheSpec extends AnyFunSuite {
+class ScanCacheSpec extends AnyFunSuite with LocalSpark {
 
   test("entries are evicted when the owning context stops") {
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     import spark.implicits._
     val sc = spark.sparkContext
 
@@ -36,10 +30,7 @@ class ScanCacheSpec extends AnyFunSuite {
       "ScanCache still references entries of a stopped SparkContext")
 
     // a fresh context starts clean — no persisted RDDs leak across
-    val fresh = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val fresh = GraftSession(4)
     assert(fresh.sparkContext ne sc)
     assert(fresh.sparkContext.getPersistentRDDs.isEmpty)
   }

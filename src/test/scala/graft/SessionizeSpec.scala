@@ -1,18 +1,11 @@
 package graft
 
 import graft.operators.Sessionize
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The bucketed sessionizer must agree with the trivial global gap rule,
   * including chains of merges across many bucket boundaries. */
-class SessionizeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SessionizeSpec extends AnyFunSuite with LocalSpark {
 
   private def globalClusters(starts: Seq[Long], gap: Long): Map[Long, Long] = {
     // event start -> cluster key (min start of cluster), trivial reference impl

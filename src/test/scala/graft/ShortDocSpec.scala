@@ -1,19 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Short documents (<3 tokens) must produce EMPTY shingle sets, not a
   * descending sequence(1, 0) that makes element_at(tk, 0) throw — and
   * minhash16 over an empty set must be NULL (matching the oracle's
   * list_min over an empty list), never a 16×Long.MaxValue signature. */
-class ShortDocSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ShortDocSpec extends AnyFunSuite with LocalSpark {
 
   private def shingles(text: String): Seq[Long] = {
     import spark.implicits._

@@ -1,17 +1,10 @@
 package graft
 
 import graft.operators.SkewJoin
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class SkewJoinSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SkewJoinSpec extends AnyFunSuite with LocalSpark {
 
   test("salted join equals plain join on heavily skewed keys") {
     import spark.implicits._

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.ParquetRawSource
@@ -11,14 +10,7 @@ import graft.sources.ParquetRawSource
   * strings, dates and micros timestamps via ConvertedType), nulls
   * and codecs; our own ParquetWrite trees too; nested schemas and
   * schema drift reject loudly. */
-class SourcesRawSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SourcesRawSpec extends AnyFunSuite with LocalSpark {
 
   test("Spark-written tree reads back value-exactly, typed") {
     val s = spark

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{ArrowIpc, Avro}
@@ -17,14 +17,8 @@ object SourcesSpec {
     flag: Boolean, blob: Array[Byte])
 }
 
-class SourcesSpec extends AnyFunSuite {
+class SourcesSpec extends AnyFunSuite with LocalSpark {
   import SourcesSpec.{Doc, Sub}
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def tmpDir(tag: String): java.io.File = {
     val d = java.nio.file.Files.createTempDirectory(s"graft_$tag")

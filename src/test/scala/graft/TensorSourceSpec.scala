@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Safetensors
@@ -12,13 +11,7 @@ import graft.sources.{TensorSink, TensorSource}
   * streaming twin equals the batch read, and the loud failures —
   * ragged arrays, NULL cells, rank-3 tensors, mixed-schema trees,
   * row-count disagreement inside a file. */
-class TensorSourceSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TensorSourceSpec extends AnyFunSuite with LocalSpark {
 
   private def tmpDir(tag: String): String = {
     val d = java.nio.file.Files.createTempDirectory(s"graft_$tag")

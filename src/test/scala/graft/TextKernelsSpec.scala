@@ -1,20 +1,13 @@
 package graft
 
 import graft.functions.{DeflateLen, NfcNormalize}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The NFC and deflate kernels: unit semantics, and the
   * compression_ratio query against a plain-Scala recompute (its gate
   * coverage — no SQL twin exists for deflate). */
-class TextKernelsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TextKernelsSpec extends AnyFunSuite with LocalSpark {
 
   private val dir = "/root/testdata/sf0.001"
 

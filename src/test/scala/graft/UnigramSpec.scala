@@ -1,19 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Closed-form pins for the unigram-LM tokenizer family: packed-DP
   * semantics (score first, fewer pieces on ties), vocabulary scoring,
   * and end-to-end segmentation on a crafted corpus. */
-class UnigramSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class UnigramSpec extends AnyFunSuite with LocalSpark {
 
   private def fixtureDir(docs: Seq[(Long, String)]): String = {
     import spark.implicits._

@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.ZOrder
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The Z-order layout's claims, executed: the engine's unrolled bit
@@ -10,15 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * under the z-layout cover a small fraction of the domain area while
   * the insertion-order layout's boxes stay near full-domain width on
   * the non-clustered dimension. */
-class ZOrderSpec extends AnyFunSuite {
+class ZOrderSpec extends AnyFunSuite with LocalSpark {
 
   private val dir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("the SQL bit interleave equals the Scala reference") {
     import spark.implicits._

@@ -1,11 +1,12 @@
 package graft.operators
 
+import graft.LocalSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Exact-rational linear resampling: identity, decimation,
   * interpolation weights, tail clamping, and the WAV-walk integration
   * including malformed streams. */
-class AudioResampleSpec extends AnyFunSuite {
+class AudioResampleSpec extends AnyFunSuite with LocalSpark {
   import Multimodal.resampleLinear
 
   test("same-rate resample is the identity") {
@@ -46,9 +47,6 @@ class AudioResampleSpec extends AnyFunSuite {
   }
 
   test("WAV resample walks real containers and flags malformed ones") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "2").getOrCreate()
     import spark.implicits._
     val samples = Array.tabulate(16)(k => (40 + 5 * k).toByte)
     val good = Multimodal.encodeWavPcm8(8000, samples)

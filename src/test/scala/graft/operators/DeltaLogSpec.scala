@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,13 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * deleted still reads), partitioned tables with typed partition
   * values injected from the log, torn-log and unsupported-protocol
   * rejections, and pushdown surviving the per-partition union. */
-class DeltaLogSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DeltaLogSpec extends AnyFunSuite with LocalSpark {
 
   private def tmpTable(tag: String): String = {
     val d = java.nio.file.Files.createTempDirectory(s"graft_$tag")
@@ -230,10 +224,11 @@ class DeltaLogSpec extends AnyFunSuite {
         new MetadataBuilder().putLong("parquet.field.id", id)
           .build())
     })
-    spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-    spark.createDataFrame(
-      seed(25).toDF("junkA", "junkB", "junkC").rdd, physSchema)
-      .write.parquet(t)
+    withConf("spark.sql.parquet.fieldId.write.enabled" -> "true") {
+      spark.createDataFrame(
+        seed(25).toDF("junkA", "junkB", "junkC").rdd, physSchema)
+        .write.parquet(t)
+    }
     val adds = DeltaLog.listDataFiles(spark, t, Seq.empty)
     def field(log: String, id: Long, tpe: String) =
       s"""{"name":"$log","type":"$tpe","nullable":true,""" +

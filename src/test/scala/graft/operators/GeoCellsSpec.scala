@@ -1,19 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Geo-cell candidate pair generation must equal the all-pairs join +
   * radius filter exactly (it is a conservative superset refined by the
   * same chord-distance filter) while generating far fewer candidates. */
-class GeoCellsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GeoCellsSpec extends AnyFunSuite with LocalSpark {
 
   private def scatter(n: Int, spreadDeg: Double) = {
     val rnd = new scala.util.Random(42)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Hudi MERGE_ON_READ pins: the log-block byte layout (magic,
@@ -10,13 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * delete blocks drop keys, uncommitted appends stay invisible,
   * command blocks roll back their target instant, and compaction
   * advances the slice so superseded logs fall out. */
-class HudiLogSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class HudiLogSpec extends AnyFunSuite with LocalSpark {
 
   private def tmpTable(tag: String): String = {
     val d = java.nio.file.Files.createTempDirectory(s"graft_$tag")

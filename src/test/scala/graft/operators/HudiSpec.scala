@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Hudi COW pins: create→read round trip with spec meta columns,
@@ -11,13 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * torn commit JSON, fileId/instant disagreements, missing base
   * files) errors instead of shrinking the table. MERGE_ON_READ
   * semantics are pinned in HudiLogSpec. */
-class HudiSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class HudiSpec extends AnyFunSuite with LocalSpark {
 
   private def tmpTable(tag: String): String = {
     val d = java.nio.file.Files.createTempDirectory(s"graft_$tag")

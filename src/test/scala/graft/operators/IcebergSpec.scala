@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,13 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * resolution, schema JSON type mapping both ways, delete-manifest
   * and unsupported-type rejections, and pushdown on the final
   * scan. */
-class IcebergSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class IcebergSpec extends AnyFunSuite with LocalSpark {
 
   private def tmpTable(tag: String): String = {
     val d = java.nio.file.Files.createTempDirectory(s"graft_$tag")
@@ -192,8 +186,7 @@ class IcebergSpec extends AnyFunSuite {
   test("time columns flow through the full metadata chain") {
     val s = spark
     // runtime SQL conf: Spark 4.1's TIME type is flag-gated
-    s.conf.set("spark.sql.timeType.enabled", "true")
-    try {
+    withConf("spark.sql.timeType.enabled" -> "true") {
       val df = s.sql("SELECT id, cast(concat('07:0', cast(id % 10 " +
         "as string), ':30.5') as time(6)) AS tod FROM range(12)")
       val t = tmpTable("ice_time")
@@ -206,7 +199,7 @@ class IcebergSpec extends AnyFunSuite {
         "cast(tod as string) AS ts").orderBy("id").collect()
       assert(back(3).getString(1) == "07:03:30.5")
       assert(back.map(_.getString(1)).distinct.length == 10)
-    } finally s.conf.unset("spark.sql.timeType.enabled")
+    }
   }
 
   test("map columns flow through the full metadata chain") {

@@ -1,11 +1,12 @@
 package graft.operators
 
+import graft.LocalSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Typed media metadata extraction: EXIF orientation (JPEG APP1 →
   * embedded TIFF IFD, both byte orders), ID3v2 text frames, and the
   * integer-exact audio frame-energy gate. */
-class MetadataSpec extends AnyFunSuite {
+class MetadataSpec extends AnyFunSuite with LocalSpark {
 
   test("EXIF orientation: all 8 values round-trip through APP1") {
     for (o <- 1 to 8) {
@@ -81,9 +82,6 @@ class MetadataSpec extends AnyFunSuite {
   }
 
   test("frame energy: direct fold, partial final frame, strict threshold") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "2").getOrCreate()
     import spark.implicits._
     // 300 samples → one full frame + one 44-sample frame
     val samples = Array.tabulate(300)(i => ((i * 37) % 256).toByte)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** ORC stripe-data decode pins: REAL Spark-written ORC files across
@@ -10,13 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * PATCHED_BASE) and all four codecs — decoded from raw bytes by
   * [[OrcData]] and compared value-exactly against Spark's own ORC
   * reader. Plus nested rejection and mutation fuzz. */
-class OrcDataSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class OrcDataSpec extends AnyFunSuite with LocalSpark {
 
   private def writeOne(df: org.apache.spark.sql.DataFrame,
       codec: String): Array[Byte] = {
@@ -114,9 +108,9 @@ class OrcDataSpec extends AnyFunSuite {
     val df = (0 until 800).map(i => (i.toLong, s"k${i % 5}"))
       .toDF("id", "txt")
     // force DIRECT_V2 even for low-cardinality strings
-    spark.conf.set("orc.dictionary.key.threshold", "0.0")
-    try compare(writeOne(df, "zstd"))
-    finally spark.conf.unset("orc.dictionary.key.threshold")
+    withConf("orc.dictionary.key.threshold" -> "0.0") {
+      compare(writeOne(df, "zstd"))
+    }
   }
 
   test("differential: timestamp (nanos packing) and decimal") {

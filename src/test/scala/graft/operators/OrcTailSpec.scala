@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** ORC tail pins: REAL files written by Spark's native ORC writer
@@ -10,13 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * codecs; stripe footers list coherent stream directories; row
   * indexes reproduce analytic per-row-group min/max on a sorted
   * unique key; truncation/mutation fuzz never throws. */
-class OrcTailSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class OrcTailSpec extends AnyFunSuite with LocalSpark {
 
   private def tmpDir(tag: String): String = {
     val d = java.nio.file.Files.createTempDirectory(s"graft_$tag")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** From-scratch ORC writer pins: files built by [[OrcWrite]]
@@ -9,13 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * value-exactly through Spark's own ORC reader AND our
   * [[OrcData]] decoder across kinds, nulls, codecs and stripe
   * splits. */
-class OrcWriteSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class OrcWriteSpec extends AnyFunSuite with LocalSpark {
 
   private def mkCols(n: Int): Seq[OrcWrite.WCol] = Seq(
     OrcWrite.WCol("id", "i64", optional = false,
@@ -582,14 +576,15 @@ class OrcWriteSpec extends AnyFunSuite {
       val tmp = java.nio.file.Files.createTempDirectory("graft_oidx")
       val fl = new java.io.File(tmp.toFile, "x.orc")
       java.nio.file.Files.write(fl.toPath, bytes)
-      spark.conf.set("spark.sql.orc.filterPushdown", "true")
-      val df = spark.read.orc(fl.getAbsolutePath)
-      assert(df.filter("id >= 310 AND id < 590").count() == 280,
-        s"$codec id range")
-      assert(df.filter("name = 'doc-00421'").count() == 1)
-      assert(df.filter("score > 440.0").count() == 19)
-      assert(df.filter("id > 100000").count() == 0) // full prune
-      assert(df.count() == n)
+      withConf("spark.sql.orc.filterPushdown" -> "true") {
+        val df = spark.read.orc(fl.getAbsolutePath)
+        assert(df.filter("id >= 310 AND id < 590").count() == 280,
+          s"$codec id range")
+        assert(df.filter("name = 'doc-00421'").count() == 1)
+        assert(df.filter("score > 440.0").count() == 19)
+        assert(df.filter("id > 100000").count() == 0) // full prune
+        assert(df.count() == n)
+      }
       fl.delete(); tmp.toFile.delete()
     }
   }
@@ -695,12 +690,13 @@ class OrcWriteSpec extends AnyFunSuite {
       val tmp = java.nio.file.Files.createTempDirectory("graft_oblm")
       val fl = new java.io.File(tmp.toFile, "x.orc")
       java.nio.file.Files.write(fl.toPath, bytes)
-      spark.conf.set("spark.sql.orc.filterPushdown", "true")
-      val df = spark.read.orc(fl.getAbsolutePath)
-      assert(df.filter("id = 1400").count() == 1, codec) // 200*7
-      assert(df.filter("name = 'host-421.example'").count() == 1)
-      assert(df.filter("id = 1401").count() == 0) // in-range miss
-      assert(df.count() == n)
+      withConf("spark.sql.orc.filterPushdown" -> "true") {
+        val df = spark.read.orc(fl.getAbsolutePath)
+        assert(df.filter("id = 1400").count() == 1, codec) // 200*7
+        assert(df.filter("name = 'host-421.example'").count() == 1)
+        assert(df.filter("id = 1401").count() == 0) // in-range miss
+        assert(df.count() == n)
+      }
       fl.delete(); tmp.toFile.delete()
     }
   }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Parquet data-page decode pins: REAL Spark-written files across
@@ -16,14 +16,8 @@ object ParquetDataSpec {
   final case class Sub(a: Long, b: Option[String])
 }
 
-class ParquetDataSpec extends AnyFunSuite {
+class ParquetDataSpec extends AnyFunSuite with LocalSpark {
   import ParquetDataSpec.Sub
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def writeOne(df: org.apache.spark.sql.DataFrame,
       codec: String, extra: Map[String, String] = Map.empty)
@@ -203,9 +197,10 @@ class ParquetDataSpec extends AnyFunSuite {
       .selectExpr("id",
         "timestamp_micros(cast(id * 98765432109 + id % 997 " +
           "as long)) AS ts")
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
-    val bytes = try writeOne(df, "snappy")
-    finally spark.conf.unset("spark.sql.parquet.outputTimestampType")
+    val bytes = withConf(
+      "spark.sql.parquet.outputTimestampType" -> "INT96") {
+      writeOne(df, "snappy")
+    }
     val (leaves, cols) = ParquetData.decodeFile(bytes).get
     assert(leaves(1).typeId == 3) // really INT96
     // Spark's own reader on the same bytes: the true differential
@@ -436,13 +431,12 @@ class ParquetDataSpec extends AnyFunSuite {
     java.nio.file.Files.write(f.toPath, patched)
     // Spark's VECTORIZED reader lacks BSS; parquet-mr's row reader
     // (the library Spark bundles) is the differential
-    spark.conf.set("spark.sql.parquet.enableVectorizedReader",
-      "false")
-    val viaSpark = try spark.read.parquet(f.getAbsolutePath)
-      .collect().map(r => (r.getLong(0), r.getDouble(1)))
-      .sortBy(_._1).toSeq
-    finally spark.conf
-      .unset("spark.sql.parquet.enableVectorizedReader")
+    val viaSpark = withConf(
+      "spark.sql.parquet.enableVectorizedReader" -> "false") {
+      spark.read.parquet(f.getAbsolutePath)
+        .collect().map(r => (r.getLong(0), r.getDouble(1)))
+        .sortBy(_._1).toSeq
+    }
     f.delete(); tmp.toFile.delete()
     assert(viaSpark == (0 until n).map(i =>
       (i.toLong, i * 0.37 - 9.5)))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Parquet-footer pins: REAL files written by Spark's parquet-mr
@@ -9,13 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * against the thrift compact serializer parquet-mr uses), codec
   * config changes surface, multi-row-group files walk, and
   * truncation/garbage fuzz never throws. */
-class ParquetFooterSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ParquetFooterSpec extends AnyFunSuite with LocalSpark {
 
   private def tmpDir(tag: String): String = {
     val d = java.nio.file.Files.createTempDirectory(s"graft_$tag")
@@ -60,14 +54,12 @@ class ParquetFooterSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     val dir = tmpDir("pqf_z")
-    spark.conf.set("spark.sql.parquet.compression.codec", "zstd")
-    try {
+    withConf("spark.sql.parquet.compression.codec" -> "zstd") {
       // tiny row-group size forces multiple groups in one file
       (0 until 20000).map(i => (i.toLong, "x" * 50))
         .toDF("id", "pad").coalesce(1)
         .write.option("parquet.block.size", 64 * 1024).parquet(dir)
-    } finally spark.conf.set(
-      "spark.sql.parquet.compression.codec", "snappy")
+    }
     val footer = ParquetFooter.parse(onePart(dir)).get
     assert(footer.numRows == 20000)
     assert(footer.rowGroups.length > 1, "expected multiple row groups")

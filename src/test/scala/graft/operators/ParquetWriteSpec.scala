@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** From-scratch parquet WRITER pins: files built by [[ParquetWrite]]
@@ -9,13 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * parquet-mr path, our own [[ParquetData]] page walker, and the
   * [[ParquetFooter]] audit — across all six kinds, nulls, and all
   * three codecs. */
-class ParquetWriteSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ParquetWriteSpec extends AnyFunSuite with LocalSpark {
 
   private def mkCols(n: Int): Seq[ParquetWrite.WCol] = Seq(
     ParquetWrite.WCol("id", "i64", optional = false,
@@ -747,56 +741,55 @@ class ParquetWriteSpec extends AnyFunSuite {
     // Spark's VECTORIZED reader has no BYTE_STREAM_SPLIT decoder;
     // parquet-mr's own row reader (the non-vectorized path) does —
     // that's the independent reader this differential wants
-    spark.conf.set("spark.sql.parquet.enableVectorizedReader",
-      "false")
-    try for ((codec, pv) <- Seq(("uncompressed", 1), ("snappy", 2),
-      ("zstd", 2))) {
-      val bytes = ParquetWrite.build(cols, codec, pageVersion = pv,
-        split = Set("score", "emb"), deltaStr = Set("url", "blob"),
-        rowsPerGroup = 300)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_pbss")
-      val fl = new java.io.File(tmp.toFile, "x.parquet")
-      java.nio.file.Files.write(fl.toPath, bytes)
-      val rows = spark.read.parquet(fl.getAbsolutePath)
-        .collect().sortBy(_.getLong(0))
-      assert(rows.length == n, s"$codec v$pv")
-      (0 until n by 7).foreach { i =>
-        val r = rows(i)
-        assert(Option(r.get(1)) ==
-          (if (i % 9 == 5) None else Some(i * 0.25f - 30f)),
-          s"score at $i ($codec v$pv)")
-        assert(r.getDouble(2) == math.sin(i * 0.1) * 1e3,
-          s"emb at $i")
-        assert(Option(r.get(3)) ==
-          (if (i % 13 == 7) None else Some(urlAt(i))),
-          s"url at $i")
-        assert(r.getAs[Array[Byte]](4).sameElements(blobAt(i)),
-          s"blob at $i")
+    withConf("spark.sql.parquet.enableVectorizedReader" -> "false") {
+      for ((codec, pv) <- Seq(("uncompressed", 1), ("snappy", 2),
+        ("zstd", 2))) {
+        val bytes = ParquetWrite.build(cols, codec, pageVersion = pv,
+          split = Set("score", "emb"), deltaStr = Set("url", "blob"),
+          rowsPerGroup = 300)
+        val tmp = java.nio.file.Files.createTempDirectory("graft_pbss")
+        val fl = new java.io.File(tmp.toFile, "x.parquet")
+        java.nio.file.Files.write(fl.toPath, bytes)
+        val rows = spark.read.parquet(fl.getAbsolutePath)
+          .collect().sortBy(_.getLong(0))
+        assert(rows.length == n, s"$codec v$pv")
+        (0 until n by 7).foreach { i =>
+          val r = rows(i)
+          assert(Option(r.get(1)) ==
+            (if (i % 9 == 5) None else Some(i * 0.25f - 30f)),
+            s"score at $i ($codec v$pv)")
+          assert(r.getDouble(2) == math.sin(i * 0.1) * 1e3,
+            s"emb at $i")
+          assert(Option(r.get(3)) ==
+            (if (i % 13 == 7) None else Some(urlAt(i))),
+            s"url at $i")
+          assert(r.getAs[Array[Byte]](4).sameElements(blobAt(i)),
+            s"blob at $i")
+        }
+        // our own flat walker decodes both new encodings
+        val (_, vals) = ParquetData.decodeFile(bytes)
+          .getOrElse(fail(s"our walker rejected split/deltaStr " +
+            s"($codec v$pv)"))
+        (0 until n by 11).foreach { i =>
+          assert(vals(1)(i) ==
+            (if (i % 9 == 5) None else Some(i * 0.25f - 30f)),
+            s"raw score at $i")
+          assert(vals(2)(i).contains(math.sin(i * 0.1) * 1e3),
+            s"raw emb at $i")
+          // the raw walker surfaces BYTE_ARRAY as bytes
+          assert(vals(3)(i).map {
+            case b: Array[Byte] => new String(b, "UTF-8")
+            case x => x
+          } == (if (i % 13 == 7) None else Some(urlAt(i))),
+            s"raw url at $i")
+          assert(vals(4)(i).exists {
+            case b: Array[Byte] => b.sameElements(blobAt(i))
+            case _ => false
+          }, s"raw blob at $i")
+        }
+        fl.delete(); tmp.toFile.delete()
       }
-      // our own flat walker decodes both new encodings
-      val (_, vals) = ParquetData.decodeFile(bytes)
-        .getOrElse(fail(s"our walker rejected split/deltaStr " +
-          s"($codec v$pv)"))
-      (0 until n by 11).foreach { i =>
-        assert(vals(1)(i) ==
-          (if (i % 9 == 5) None else Some(i * 0.25f - 30f)),
-          s"raw score at $i")
-        assert(vals(2)(i).contains(math.sin(i * 0.1) * 1e3),
-          s"raw emb at $i")
-        // the raw walker surfaces BYTE_ARRAY as bytes
-        assert(vals(3)(i).map {
-          case b: Array[Byte] => new String(b, "UTF-8")
-          case x => x
-        } == (if (i % 13 == 7) None else Some(urlAt(i))),
-          s"raw url at $i")
-        assert(vals(4)(i).exists {
-          case b: Array[Byte] => b.sameElements(blobAt(i))
-          case _ => false
-        }, s"raw blob at $i")
-      }
-      fl.delete(); tmp.toFile.delete()
-    } finally spark.conf.set(
-      "spark.sql.parquet.enableVectorizedReader", "true")
+    }
     // misdeclared encodings fail loud at the boundary
     intercept[IllegalArgumentException](ParquetWrite.build(
       Seq(ParquetWrite.WCol("s", "string", optional = false,

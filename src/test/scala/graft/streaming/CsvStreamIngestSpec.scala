@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,13 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * complete-mode aggregate, and must land exactly the batch
   * csv_ingest counts — the arriving-files deployment shape for
   * messy-delivery corpora. */
-class CsvStreamIngestSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CsvStreamIngestSpec extends AnyFunSuite with LocalSpark {
 
   private val SfDir = "/root/testdata/sf0.001"
 

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.LocalSpark
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.checkpointing.{FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
@@ -14,13 +15,7 @@ import scala.jdk.CollectionConverters._
   * must reproduce the composed batch queries' sink rows on the real
   * corpus. This is the reference's application.cpp wiring under test as
   * a WHOLE, not operator by operator. */
-class DetectorAppSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DetectorAppSpec extends AnyFunSuite with LocalSpark {
 
   private val SentinelStation = 999999L
 
@@ -214,15 +209,14 @@ class DetectorAppSpec extends AnyFunSuite {
       assert(queryManager(q) == fsManager)
     } finally q.stop()
     // a value the caller set is restored, not dropped
-    spark.conf.set(key, fcManager)
-    try {
+    withConf(key -> fcManager) {
       val Seq(in2, out2, ck2) = appDirs()
       val q2 = startApp(in2, out2, ck2)
       try {
         assert(spark.conf.get(key) == fcManager)
         assert(queryManager(q2) == fsManager)
       } finally q2.stop()
-    } finally spark.conf.unset(key)
+    }
   }
 
   test("standing application: only batches with clusters write the sinks") {

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,14 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * StreamingRegistry and StreamingCoincidence and must land exactly the
   * batch folds/sessions. Closes the R1/R7/C5 "spec-only" gap with
   * real-corpus data. */
-class FileStreamParitySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FileStreamParitySpec extends AnyFunSuite with LocalSpark {
 
   private val SfDir = "/root/testdata/sf0.001"
 

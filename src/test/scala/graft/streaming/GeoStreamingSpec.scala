@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSpark
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,13 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * clusterer applies the C1 chord-distance/ToF criterion online (the
   * reference's coincidencefilter next_match) and must reproduce the batch
   * `coincidence_geo` components exactly on the real corpus. */
-class GeoStreamingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GeoStreamingSpec extends AnyFunSuite with LocalSpark {
 
   private val S = 1000000000L
   private val B = 1000L * S

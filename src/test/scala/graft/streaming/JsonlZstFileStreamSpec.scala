@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSpark
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,13 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * `readStream.format("binaryFile")` and flow through the SAME
   * zstd-decode + strict-parse stage as the batch jsonl_zst_files
   * query; stream output must equal the batch walk row-for-row. */
-class JsonlZstFileStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class JsonlZstFileStreamSpec extends AnyFunSuite with LocalSpark {
 
   private val SfDir = "/root/testdata/sf0.001"
 

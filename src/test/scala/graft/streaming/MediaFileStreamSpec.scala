@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSpark
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,13 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * media_ingest_files query — stream output must equal the batch
   * readout row-for-row (the Tar/WarcFileStreamSpec pattern over the
   * full multimodal decode dispatch). */
-class MediaFileStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MediaFileStreamSpec extends AnyFunSuite with LocalSpark {
 
   private val SfDir = "/root/testdata/sf0.001"
 

@@ -1,19 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSpark
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Streaming media gate: crafted decode/quality verdicts (including a
   * progressive JPEG on the stream) plus exact stream/batch parity with
   * the `image_quality_gate` query fixtures on the real sf0.001 corpus. */
-class StreamingMediaGateSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StreamingMediaGateSpec extends AnyFunSuite with LocalSpark {
 
   private val dir = "/root/testdata/sf0.001"
 

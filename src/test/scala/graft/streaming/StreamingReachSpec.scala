@@ -1,9 +1,7 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
-import scala.util.matching.Regex
+import graft.ScalaSource
+import java.nio.file.Paths
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Every top-level object under `src/main/scala/graft/streaming/` must be
@@ -22,30 +20,16 @@ class StreamingReachSpec extends AnyFunSuite {
     // FileStreamParitySpec pin; kept code uses only its case classes.
     "StreamingCoincidence")
 
-  private val literal = ("(?s)//[^\\n]*|/\\*.*?\\*/|\"{3}.*?\"{3}\"*" +
-    "|\"[^\"\\\\]*(?:\\\\.[^\"\\\\]*)*\"|'(?:\\\\.|[^'\\\\\\n])'").r
-  private val splice = """\$\{([^}]*)\}|\$(\w+)""".r
-
-  /** Source with comments and literals blanked, splices kept. */
-  private def code(src: String): String = literal.replaceAllIn(src, m =>
-    if (m.matched.startsWith("/")) " "
-    else Regex.quoteReplacement(splice.findAllMatchIn(m.matched)
-      .map(s => Option(s.group(1)).getOrElse(s.group(2)))
-      .mkString(" ", " ", " ")))
-
   test("the stripper drops comments and literals but keeps splices") {
     val src = "val a = \"B//\" // C\n/* D\n E */ s\"${G(1)} $H\"; '\"'\n" +
       "\"\"\"I\"\"\" x"
-    assert("\\w+".r.findAllIn(code(src)).toSet ==
+    assert("\\w+".r.findAllIn(ScalaSource.code(src)).toSet ==
       Set("val", "a", "s", "G", "1", "H", "x"))
   }
 
   test("every top-level streaming object has a caller in src/main") {
+    val text = ScalaSource.tree("src/main/scala")
     val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), "run from the repository root")
-    val text = Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala"))
-      .map(p => p -> code(new String(Files.readAllBytes(p), UTF_8))).toMap
     val objects = for {
       (p, t) <- text.toSeq if p.getParent == root.resolve("graft/streaming")
       m <- "(?m)^(?:case )?object (\\w+)".r.findAllMatchIn(t)

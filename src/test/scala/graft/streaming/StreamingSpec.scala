@@ -1,18 +1,12 @@
 package graft.streaming
-import org.apache.spark.sql.SparkSession
+import graft.LocalSpark
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Stream/batch parity: the streaming coincidence operator must reproduce
   * the batch gap-sessionization on the same data once the watermark seals
   * the clusters. */
-class StreamingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StreamingSpec extends AnyFunSuite with LocalSpark {
 
   private def runStream(hits: Seq[StreamHit], gapNs: Long): Seq[EmittedCluster] = {
     import spark.implicits._
@@ -294,10 +288,8 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(key ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       val mem = MemoryStream[StationEvent]
       val q = StreamingRegistry.registryStream(mem.toDS(),
           timeout = org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)
@@ -315,11 +307,6 @@ class StreamingSpec extends AnyFunSuite {
         assert(last.nEvents == 3 && last.progress == 8)
         assert(last.status == "reliable")
       } finally q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSpark
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,14 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * machine, and the accrued uptime must equal an independent
   * interval-sweep computation — the reference's trigger→uptime cycle
   * (stationcoincidence.cpp:82-108) closed over real data. */
-class TriggerUptimeIntegrationSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TriggerUptimeIntegrationSpec extends AnyFunSuite with LocalSpark {
 
   private val DayNs = 86400L * 1000000000L
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSpark
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,13 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * through the SAME parse stage as the batch warc_parse_files query —
   * stream output must equal the batch walk row-for-row (the
   * FileStreamParitySpec pattern, extended to binary file sources). */
-class WarcFileStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class WarcFileStreamSpec extends AnyFunSuite with LocalSpark {
 
   private val SfDir = "/root/testdata/sf0.001"
 
