@@ -332,8 +332,8 @@ object Registry {
     * (((mean − current)/stddev + 1)·2 when the current rate dips below
     * mean − stddev, else 1.0); the largest factor is truncated to int64
     * and scales the day's timebase into the dynamic cluster timeout,
-    * clamped to [2 s, 30 min] — the batch form of the value
-    * StreamingCoincidence's dynamicTimeout consumes. */
+    * clamped to [2 s, 30 min]. This stays a batch query: the streaming
+    * clusterer seals on the fixed session gap (Detector.GapNs). */
   /** R10 rate-dip factor column (reference detectorstation.cpp:127-135);
     * the synthetic corpus never dips below mean − stddev, so the branch
     * is pinned by RegistryFactorSpec on a fixture rather than the oracle. */

@@ -31,8 +31,8 @@ case class SinkLine(uuid: Long, msg: String)
   *       reliability fold; flatMapGroupsWithState keyed by station —
   *       the supervision::station state machine)
   *     → geodesic coincidence clustering (C1/C4 criterion;
-  *       StreamingGeoCoincidence, flatMapGroupsWithState keyed by time
-  *       bucket — the coincidence_filter)
+  *       StreamingGeoCoincidence, flatMapGroupsWithState under one
+  *       constant key — the coincidence_filter's one buffer)
   *     → n ≥ 2 fan-out to the O3 MQTT-text and O4 ASCII sink formats
   *       (foreachBatch multicast, the sink::collection).
   *
@@ -56,9 +56,12 @@ case class SinkLine(uuid: Long, msg: String)
   *
   * 100 TB shape: parse is a stateless scan-stage projection; the gate
   * shuffles once on station (state = one tiny struct per station); the
-  * clusterer shuffles once on time bucket (state bounded by the session
-  * gap); the formatters are stateless projections of the emitted
-  * clusters. No stage holds corpus-scale state.
+  * clusterer shuffles once to one key, and the watermark bounds its
+  * state to the sessions opened within the last watermark delay plus
+  * gap; the formatters are stateless projections of the emitted
+  * clusters. No stage holds corpus-scale state. Backfill at corpus scale
+  * is the batch twin's job: its Sessionize pass partitions by time
+  * bucket and merges the bucket boundaries.
   *
   * Cost per micro-batch: besides its rows, each batch pays a fixed cost.
   * It writes the offset and commit logs, commits one state-store version
@@ -150,12 +153,10 @@ object DetectorApp {
 
   /** The composed stream: parse → gate → geodesic clusterer. */
   def composedStream(lines: DataFrame,
-                     gapNs: Long = Detector.GapNs,
-                     bucketNs: Long = Detector.BucketNs,
                      watermarkDelay: String = "30 seconds")
       : Dataset[EmittedGeoCluster] =
     StreamingGeoCoincidence.clusterStream(
-      gateStage(parseStage(lines)), gapNs, bucketNs, watermarkDelay)
+      gateStage(parseStage(lines)), watermarkDelay)
 
   /** O3 MQTT-text formatter over (uuid, n, station, start_ns) member
     * rows — identical string recipe to the batch `l1_mqtt_format`
@@ -242,7 +243,11 @@ object DetectorApp {
     *     partition of the batch, so every state store commits its
     *     version; a short-circuiting action may leave partitions
     *     unread. The first batch skips the count, as its writes compute
-    *     every partition. */
+    *     every partition.
+    *
+    * A checkpoint written while the clusterer was keyed by hour bucket
+    * cannot be resumed: its state key and state schema differ. Start
+    * such a deployment on a new checkpoint directory. */
   def run(spark: SparkSession, inDir: String, outDir: String,
           checkpointDir: String,
           trigger: Trigger = Trigger.ProcessingTime("10 seconds"))

@@ -6,6 +6,9 @@ import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+/** One hit on the stream (event time = startNs, i64 nanos). */
+case class StreamHit(eventId: Long, station: Long, startNs: Long)
+
 /** One clustered hit (station key carries the position — the grid of
   * Geodesic.stationLat/Lon/H derives lat/lon/h deterministically). */
 case class GeoMember(eventId: Long, station: Long, startNs: Long)
@@ -18,16 +21,16 @@ case class OpenGeoComp(members: List[GeoMember])
   * session layer is load-bearing for batch parity — the batch engine
   * evaluates the C1 criterion WITHIN gap-sessions (Geodesic.geoComps), and
   * criterion edges longer than the session gap (Δt ∈ (gap, maxTime]) must
-  * NOT connect events the gap rule separates. */
-case class OpenGeoSession(minStart: Long, maxStart: Long, timeoutNs: Long,
+  * NOT connect events the gap rule separates. It seals once the watermark
+  * passes maxStart + Detector.GapNs. */
+case class OpenGeoSession(minStart: Long, maxStart: Long,
                           comps: List[OpenGeoComp])
 
-/** Keyed state: the open sessions of one time bucket. */
-case class GeoBucketState(sessions: List[OpenGeoSession])
+/** The clusterer's state: every open session of the stream. */
+case class GeoClusterState(sessions: List[OpenGeoSession])
 
-/** An emitted geodesic coincidence component. Members ride along (sorted
-  * by eventId) so bucket-boundary compaction can re-evaluate the criterion
-  * across fragments; singletons ARE emitted for the same reason, and sinks
+/** An emitted geodesic coincidence component, members sorted by eventId
+  * (the sink formatters fan them out). Singletons are emitted too; sinks
   * filter n ≥ 2 exactly as the reference's sinks do. */
 case class EmittedGeoCluster(clusterStart: Long, clusterEnd: Long, n: Long,
                              nStations: Long, conflicting: Boolean,
@@ -40,19 +43,21 @@ case class EmittedGeoCluster(clusterStart: Long, clusterEnd: Long, n: Long,
   * `m_criterion->apply`, joins the first match, and bridge-merges every
   * further match; constructors seal on timeout).
   *
-  * Two-level state per time bucket:
-  *   - gap-sessions (the simple rule of StreamingCoincidence) bound the
-  *     candidate pool and the sealing deadline;
+  * Like the reference's one buffer of open constructors, the state is one
+  * set of open sessions under one constant key, so no session is ever cut
+  * in two. Two levels:
+  *   - gap-sessions bound the candidate pool and seal when the event-time
+  *     watermark passes maxStart + Detector.GapNs;
   *   - within a session, components are built incrementally by scoring
   *     each event against the open components' members with the C1
   *     chord-distance/ToF criterion (positions derived from the station
   *     key) — `addEvent` mirrors the reference's next_match loop
   *     including the transitive bridge-merge.
   *
-  * Sealed output equals the batch `coincidence_geo` components exactly
-  * (GeoStreamingSpec proves it on the sf0.001 corpus); clusters split by
-  * a bucket boundary are restored by [[compactGeoClusters]], which pools
-  * fragment members and re-runs the same session + criterion rules.
+  * The watermark bounds the state: it holds only the sessions opened
+  * within the last watermark delay plus gap. Sealed output equals the
+  * batch `coincidence_geo` components exactly (GeoStreamingSpec proves it
+  * on the sf0.001 corpus).
   */
 object StreamingGeoCoincidence {
 
@@ -64,21 +69,18 @@ object StreamingGeoCoincidence {
       10.0 + ((st / 10) % 10) * 0.03,
       100.0 + (st % 7) * 10.0)
 
-  /** C1 valid-edge test between two members (scaled constants by default,
-    * like the batch operator; reference src/analysis/coincidence.cpp:14-27
-    * — score > 0 ⇔ Δt below the pair's time-of-flight window). */
-  private[streaming] def validEdge(a: GeoMember, b: GeoMember,
-                                   speedMPerNs: Double = Geodesic.SpeedMPerNs,
-                                   minTofNs: Double = Geodesic.MinTofNs,
-                                   maxTimeNs: Long = Geodesic.MaxTimeNs): Boolean = {
+  /** C1 valid-edge test between two members, with the batch operator's
+    * scaled constants (reference src/analysis/coincidence.cpp:14-27 —
+    * score > 0 ⇔ Δt below the pair's time-of-flight window). */
+  private[streaming] def validEdge(a: GeoMember, b: GeoMember): Boolean = {
     val delta = math.abs(a.startNs - b.startNs)
-    if (delta > maxTimeNs) false
+    if (delta > Geodesic.MaxTimeNs) false
     else {
       val (xa, ya, za) = stationEcef(a.station)
       val (xb, yb, zb) = stationEcef(b.station)
       val dx = xa - xb; val dy = ya - yb; val dz = za - zb
       val dist = math.sqrt(dx * dx + dy * dy + dz * dz)
-      delta.toDouble < math.max(dist / speedMPerNs, minTofNs)
+      delta.toDouble < math.max(dist / Geodesic.SpeedMPerNs, Geodesic.MinTofNs)
     }
   }
 
@@ -98,9 +100,8 @@ object StreamingGeoCoincidence {
     * a Δt ∈ (gap, maxTime] edge can connect them), so that rare path
     * rebuilds components from the pooled members. */
   private[streaming] def addEvent(sessions: List[OpenGeoSession],
-                                  e: StreamHit, gapNs: Long,
-                                  crit: (GeoMember, GeoMember) => Boolean)
-      : List[OpenGeoSession] = {
+                                  e: StreamHit): List[OpenGeoSession] = {
+    val gapNs = Detector.GapNs
     val m = GeoMember(e.eventId, e.station, e.startNs)
     val (touching, rest) = sessions.partition(s =>
       e.startNs >= s.minStart - gapNs && e.startNs <= s.maxStart + gapNs)
@@ -108,22 +109,20 @@ object StreamingGeoCoincidence {
       if (touching.size <= 1) {
         val pooled = touching.flatMap(_.comps)
         // next_match over every open constructor; all matches bridge-merge
-        val (matched, others) = pooled.partition(_.members.exists(crit(m, _)))
+        val (matched, others) =
+          pooled.partition(_.members.exists(validEdge(m, _)))
         OpenGeoComp(m :: matched.flatMap(_.members)) :: others
       } else
-        rebuildComps(m :: touching.flatMap(_.comps.flatMap(_.members)), crit)
+        rebuildComps(m :: touching.flatMap(_.comps.flatMap(_.members)))
     OpenGeoSession(
       (e.startNs :: touching.map(_.minStart)).min,
       (e.startNs :: touching.map(_.maxStart)).max,
-      (gapNs :: touching.map(_.timeoutNs)).max,
       comps) :: rest
   }
 
   /** Full criterion union-find over one session's members (the
-    * session-bridge repair path and the compaction path share it). */
-  private def rebuildComps(members: List[GeoMember],
-                           crit: (GeoMember, GeoMember) => Boolean)
-      : List[OpenGeoComp] = {
+    * session-bridge repair path). */
+  private def rebuildComps(members: List[GeoMember]): List[OpenGeoComp] = {
     val hs = members.sortBy(_.eventId).toArray
     val n = hs.length
     val parent = Array.tabulate(n)(identity)
@@ -137,7 +136,7 @@ object StreamingGeoCoincidence {
     while (i < n) {
       var j = i + 1
       while (j < n) {
-        if (crit(hs(i), hs(j))) {
+        if (validEdge(hs(i), hs(j))) {
           val ri = find(i); val rj = find(j)
           if (ri != rj) parent(math.max(ri, rj)) = math.min(ri, rj)
         }
@@ -157,16 +156,12 @@ object StreamingGeoCoincidence {
         c.members.size > nSt, c.members.sortBy(_.eventId))
     }
 
-  /** The streaming query: keyed by time bucket, sessions seal when the
-    * event-time watermark passes maxStart + timeout, each sealed session
+  /** The streaming query: every hit goes to one key, so the open sessions
+    * form one set, as the reference's buffer does; sessions seal when the
+    * event-time watermark passes maxStart + gap, each sealed session
     * emitting its criterion components. */
   def clusterStream(hits: Dataset[StreamHit],
-                    gapNs: Long = Detector.GapNs,
-                    bucketNs: Long = Detector.BucketNs,
-                    watermarkDelay: String = "30 seconds",
-                    speedMPerNs: Double = Geodesic.SpeedMPerNs,
-                    minTofNs: Double = Geodesic.MinTofNs,
-                    maxTimeNs: Long = Geodesic.MaxTimeNs)
+                    watermarkDelay: String = "30 seconds")
       : Dataset[EmittedGeoCluster] = {
     val spark = hits.sparkSession
     import spark.implicits._
@@ -174,92 +169,31 @@ object StreamingGeoCoincidence {
       .withColumn("ts", timestamp_micros(expr("startNs div 1000")))
       .withWatermark("ts", watermarkDelay)
       .as[(Long, Long, Long, java.sql.Timestamp)]
-      .groupByKey { case (_, _, startNs, _) => startNs / bucketNs }
+      .groupByKey(_ => 0L)
       .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(
-        processBucket(gapNs, speedMPerNs, minTofNs, maxTimeNs))
+        GroupStateTimeout.EventTimeTimeout)(step _)
   }
 
-  private def processBucket(gapNs: Long, speedMPerNs: Double,
-                            minTofNs: Double, maxTimeNs: Long)(
-      key: Long,
-      events: Iterator[(Long, Long, Long, java.sql.Timestamp)],
-      state: GroupState[GeoBucketState]): Iterator[EmittedGeoCluster] = {
-    val crit = (a: GeoMember, b: GeoMember) =>
-      validEdge(a, b, speedMPerNs, minTofNs, maxTimeNs)
+  private def step(key: Long,
+                   events: Iterator[(Long, Long, Long, java.sql.Timestamp)],
+                   state: GroupState[GeoClusterState])
+      : Iterator[EmittedGeoCluster] = {
     val wmNs = state.getCurrentWatermarkMs() * 1000000L
     var sessions = state.getOption.map(_.sessions).getOrElse(Nil)
 
     if (!state.hasTimedOut)
       for ((eid, st, startNs, _) <- events)
-        sessions = addEvent(sessions, StreamHit(eid, st, startNs), gapNs, crit)
+        sessions = addEvent(sessions, StreamHit(eid, st, startNs))
 
-    val (closed, open) = sessions.partition(s => s.maxStart + s.timeoutNs < wmNs)
+    val (closed, open) =
+      sessions.partition(_.maxStart + Detector.GapNs < wmNs)
     if (open.isEmpty) state.remove()
     else {
-      state.update(GeoBucketState(open))
-      val deadlineMs = open.map(s => s.maxStart + s.timeoutNs).min / 1000000L + 1
+      state.update(GeoClusterState(open))
+      val deadlineMs = (open.map(_.maxStart).min + Detector.GapNs) / 1000000L + 1
       state.setTimeoutTimestamp(math.max(deadlineMs,
         state.getCurrentWatermarkMs() + 1))
     }
     closed.sortBy(_.minStart).iterator.flatMap(emit)
-  }
-
-  /** Union-find criterion components over one pooled session's members —
-    * the same closure the batch path computes (Geodesic.components),
-    * applied during boundary compaction. */
-  private def componentsOf(members: Seq[GeoMember],
-                           crit: (GeoMember, GeoMember) => Boolean)
-      : Seq[EmittedGeoCluster] = {
-    rebuildComps(members.toList, crit).map { c =>
-      val starts = c.members.map(_.startNs)
-      val nSt = c.members.map(_.station).distinct.size.toLong
-      EmittedGeoCluster(starts.min, starts.max, c.members.size.toLong, nSt,
-        c.members.size > nSt, c.members.sortBy(_.eventId))
-    }
-  }
-
-  /** Bucket-boundary compaction: fragments whose envelopes chain under
-    * the gap rule pool their members, are re-sessionized (gap rule over
-    * the pooled member times), and each restored session re-runs the
-    * criterion union-find — i.e. exactly the batch pipeline applied to
-    * the tiny boundary set. Fragments in singleton groups pass through
-    * untouched (within-bucket output is already exact). */
-  def compactGeoClusters(frags: Seq[EmittedGeoCluster], gapNs: Long,
-                         speedMPerNs: Double = Geodesic.SpeedMPerNs,
-                         minTofNs: Double = Geodesic.MinTofNs,
-                         maxTimeNs: Long = Geodesic.MaxTimeNs)
-      : Seq[EmittedGeoCluster] = {
-    if (frags.isEmpty) return Nil
-    val crit = (a: GeoMember, b: GeoMember) =>
-      validEdge(a, b, speedMPerNs, minTofNs, maxTimeNs)
-    val sorted = frags.sortBy(f => (f.clusterStart, f.clusterEnd))
-    val out = scala.collection.mutable.ArrayBuffer[EmittedGeoCluster]()
-    var group = List(sorted.head)
-    var gMax = sorted.head.clusterEnd
-
-    def flush(): Unit = {
-      if (group.size == 1) out += group.head
-      else {
-        // restore sessions over the pooled members, then components
-        val pooled = group.flatMap(_.members).sortBy(m => (m.startNs, m.eventId))
-        var sess = List.empty[List[GeoMember]]
-        var cur = List(pooled.head)
-        for (m <- pooled.tail) {
-          if (m.startNs - cur.head.startNs > gapNs) { sess ::= cur.reverse; cur = Nil }
-          cur ::= m
-        }
-        sess ::= cur.reverse
-        out ++= sess.reverse.flatMap(componentsOf(_, crit))
-      }
-      ()
-    }
-
-    for (f <- sorted.tail) {
-      if (f.clusterStart - gMax <= gapNs) { group ::= f; gMax = math.max(gMax, f.clusterEnd) }
-      else { flush(); group = List(f); gMax = f.clusterEnd }
-    }
-    flush()
-    out.toSeq
   }
 }

@@ -44,7 +44,7 @@ class DetectorAppSpec extends AnyFunSuite with LocalSpark {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(String, String)]
     val out = DetectorApp.composedStream(mem.toDS().toDF("topic", "payload"),
-      bucketNs = Long.MaxValue / 4, watermarkDelay = "0 seconds")
+      watermarkDelay = "0 seconds")
     val name = s"detapp_$baseSec"
     val q = out.writeStream.outputMode("append")
       .format("memory").queryName(name).start()
@@ -243,6 +243,42 @@ class DetectorAppSpec extends AnyFunSuite with LocalSpark {
       assert(sinkRows(out, "ascii") == Seq((uuid, "Event: n=2 1/1 V dt=0")))
       assert(sinkRows(out, "mqtt").map(_._1) == Seq(uuid, uuid))
     } finally q.stop()
+  }
+
+  test("standing application: a shower across an hour boundary is one cluster") {
+    import spark.implicits._
+    // four stations, each with six detinfo lines (ids 60s+6 .. 60s+11
+    // cover the mask residues 0-5); the sixth completes the mask and is
+    // the station's only gated hit, at the boundary -1.5/-0.5/+0.5/+1.5 s
+    val boundaryNs = 472222L * 3600 * 1000000000L
+    val offsetsMs = Seq(-1500L, -500L, 500L, 1500L)
+    val events = for {
+      ((st, off), s) <- Seq(1001L, 1013L, 1027L, 1042L).zip(offsetsMs)
+        .zipWithIndex
+      k <- 0 until 6
+    } yield (60L * s + 6 + k, st,
+      if (k < 5) boundaryNs - (1000L - 10 * k) * 1000000000L
+      else boundaryNs + off * 1000000L,
+      "event", 1.0)
+    val dir = Files.createTempDirectory("detapp_straddle").toString
+    events.toDF("event_id", "user_id", "ts", "event_type", "value")
+      .write.parquet(s"$dir/events.parquet")
+
+    val Seq(in, out, ck) = appDirs()
+    val q = startApp(in, out, ck)
+    try {
+      deliver(q, in, "f00.json", corpusLines(dir))
+      deliver(q, in, "f01.json", sentinelLadder)
+    } finally q.stop()
+    def batchRows(query: String) =
+      DetectorApp.queries(query)(spark, dir).collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
+    val ascii = sinkRows(out, "ascii")
+    assert(ascii.size == 1, s"fragments: $ascii")
+    assert(ascii == batchRows("detector_dag_ascii"))
+    val mqtt = sinkRows(out, "mqtt")
+    assert(mqtt.size == 4)
+    assert(mqtt == batchRows("detector_dag_mqtt"))
   }
 
   test("standing application: a restart loses and repeats no sink row (sf0.01)") {

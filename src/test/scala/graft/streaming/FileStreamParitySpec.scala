@@ -7,8 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Stream/batch parity driven by the FILE streaming source — the
   * deployment shape (`readStream.parquet` over an arriving directory)
   * rather than MemoryStream: the sf0.001 corpus streams through
-  * StreamingRegistry and StreamingCoincidence and must land exactly the
-  * batch folds/sessions. Closes the R1/R7/C5 "spec-only" gap with
+  * StreamingRegistry and StreamingGeoCoincidence and must land exactly
+  * the batch folds/components. Closes the R1/R7/C5 "spec-only" gap with
   * real-corpus data. */
 class FileStreamParitySpec extends AnyFunSuite with LocalSpark {
 
@@ -73,19 +73,14 @@ class FileStreamParitySpec extends AnyFunSuite with LocalSpark {
   test("C4/C5: file-streamed coincidence clusters equal batch sessions") {
     import spark.implicits._
     val gap = graft.Detector.GapNs
-    val events = graft.Tables.events(spark, SfDir)
-    val hits = events.selectExpr("event_id", "user_id AS station",
-      "ts AS start_ns")
-    val batch = graft.operators.Sessionize.withClusterKey(hits, gap)
-      .groupBy("cluster_key")
-      .agg(min("start_ns").as("s"), max("start_ns").as("e"),
-        count(lit(1)).as("n"))
-      .filter(col("n") >= 2)
-      .as[(Long, Long, Long, Long)].collect()
-      .map { case (_, s, e, n) => (s, e, n) }.toSet
+    val batch = graft.Geodesic.queries("coincidence_geo")(spark, SfDir)
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getBoolean(4))).toSet
 
+    val events = graft.Tables.events(spark, SfDir)
     val src = stageSource()
-    val maxTs = hits.agg(max("start_ns")).as[Long].head()
+    val maxTs = events.agg(max("ts")).as[Long].head()
     def sentinel(id: Long, ts: Long): Unit =
       events.limit(1)
         .withColumn("event_id", lit(id))
@@ -93,12 +88,13 @@ class FileStreamParitySpec extends AnyFunSuite with LocalSpark {
         .withColumn("ts", lit(ts))
         .write.mode("append").parquet(src)
 
+    // same µs truncation as the batch geo query (events.ts is ns parquet)
     val stream = spark.readStream.schema(events.schema).parquet(src)
       .selectExpr("event_id AS eventId", "user_id AS station",
-        "ts AS startNs")
+        "(ts div 1000) * 1000 AS startNs")
       .as[StreamHit]
-    val out = StreamingCoincidence.clusterStream(stream, gap,
-      bucketNs = Long.MaxValue / 4, watermarkDelay = "0 seconds")
+    val out = StreamingGeoCoincidence.clusterStream(stream,
+      watermarkDelay = "0 seconds")
     val q = out.writeStream.outputMode("append")
       .format("memory").queryName("fileclusters").start()
     try {
@@ -109,9 +105,10 @@ class FileStreamParitySpec extends AnyFunSuite with LocalSpark {
       q.processAllAvailable()
       sentinel(-2L, maxTs + gap * 2000)
       q.processAllAvailable()
-      val got = spark.table("fileclusters").as[EmittedCluster].collect()
-        .filter(c => c.n >= 2 && !c.stations.contains(999L))
-        .map(c => (c.clusterStart, c.clusterEnd, c.n)).toSet
+      val got = spark.table("fileclusters").as[EmittedGeoCluster].collect()
+        .filter(c => c.n >= 2 && !c.members.exists(_.station == 999L))
+        .map(c => (c.clusterStart, c.clusterEnd, c.n, c.nStations,
+          c.conflicting)).toSet
       assert(got == batch)
       assert(got.nonEmpty)
     } finally q.stop()

@@ -19,51 +19,45 @@ class GeoStreamingSpec extends AnyFunSuite with LocalSpark {
   // same-station pairs have dist 0 ⇒ the 5 s MinTof floor applies.
 
   test("criterion in addEvent: invalid edge opens a new component") {
-    val crit = (a: GeoMember, b: GeoMember) =>
-      StreamingGeoCoincidence.validEdge(a, b)
-    var ss = StreamingGeoCoincidence.addEvent(Nil, StreamHit(1, 0, B), gap, crit)
+    var ss = StreamingGeoCoincidence.addEvent(Nil, StreamHit(1, 0, B))
     // Δt 25 s > ToF 22.2 s: same gap-session, but criterion-invalid →
     // separate component (the reference opens a new constructor)
-    ss = StreamingGeoCoincidence.addEvent(ss, StreamHit(2, 1, B + 25 * S), gap, crit)
+    ss = StreamingGeoCoincidence.addEvent(ss, StreamHit(2, 1, B + 25 * S))
     assert(ss.size == 1 && ss.head.comps.size == 2)
     // Δt(3,1) = 10 s < 22.2 s valid; Δt(3,2) = 15 s but same station as 2
     // ⇒ MinTof floor 5 s ⇒ invalid: joins event 1's component only
-    ss = StreamingGeoCoincidence.addEvent(ss, StreamHit(3, 1, B + 10 * S), gap, crit)
+    ss = StreamingGeoCoincidence.addEvent(ss, StreamHit(3, 1, B + 10 * S))
     assert(ss.head.comps.size == 2)
     assert(ss.head.comps.map(_.members.map(_.eventId).sorted).toSet ==
       Set(List(1L, 3L), List(2L)))
   }
 
   test("criterion bridge-merge: one event unions two open components") {
-    val crit = (a: GeoMember, b: GeoMember) =>
-      StreamingGeoCoincidence.validEdge(a, b)
-    var ss = StreamingGeoCoincidence.addEvent(Nil, StreamHit(1, 0, B), gap, crit)
-    ss = StreamingGeoCoincidence.addEvent(ss, StreamHit(2, 1, B + 25 * S), gap, crit)
-    ss = StreamingGeoCoincidence.addEvent(ss, StreamHit(3, 1, B + 10 * S), gap, crit)
+    var ss = StreamingGeoCoincidence.addEvent(Nil, StreamHit(1, 0, B))
+    ss = StreamingGeoCoincidence.addEvent(ss, StreamHit(2, 1, B + 25 * S))
+    ss = StreamingGeoCoincidence.addEvent(ss, StreamHit(3, 1, B + 10 * S))
     assert(ss.head.comps.size == 2) // {1,3} and {2}
     // event 4 at station 0, t+20: to 1 — same station, Δt 20 > 5 s floor ⇒
     // invalid; to 2 — Δt 5 s < 22.2 valid; to 3 — Δt 10 s < 22.2 valid →
     // matches BOTH components through different members ⇒ bridge-merge
     // (the reference's erase-and-merge loop)
-    ss = StreamingGeoCoincidence.addEvent(ss, StreamHit(4, 0, B + 20 * S), gap, crit)
+    ss = StreamingGeoCoincidence.addEvent(ss, StreamHit(4, 0, B + 20 * S))
     assert(ss.head.comps.size == 1)
     assert(ss.head.comps.head.members.map(_.eventId).sorted ==
       List(1L, 2L, 3L, 4L))
   }
 
   test("session bridge rebuild: unscored cross-session edge is recovered") {
-    val crit = (a: GeoMember, b: GeoMember) =>
-      StreamingGeoCoincidence.validEdge(a, b)
     // events 1 (st 0, t 0) and 2 (st 3, t 50 s) open two sessions
     // (50 > 30 gap); their edge (Δt 50 s < ToF(0,3) ≈ 66.8 s ⇒ VALID) was
     // never scored. Event 3 (st 4, t 20 s) bridges the sessions; it is
     // valid to 1 (Δt 20 < ToF(0,4) ≈ 89 s) but invalid to 2
     // (Δt 30 > ToF(3,4) ≈ 22.3 s). A naive incremental merge would leave
     // {1,3},{2}; the rebuild must recover the 1–2 edge → one component.
-    var ss = StreamingGeoCoincidence.addEvent(Nil, StreamHit(1, 0, B), gap, crit)
-    ss = StreamingGeoCoincidence.addEvent(ss, StreamHit(2, 3, B + 50 * S), gap, crit)
+    var ss = StreamingGeoCoincidence.addEvent(Nil, StreamHit(1, 0, B))
+    ss = StreamingGeoCoincidence.addEvent(ss, StreamHit(2, 3, B + 50 * S))
     assert(ss.size == 2)
-    ss = StreamingGeoCoincidence.addEvent(ss, StreamHit(3, 4, B + 20 * S), gap, crit)
+    ss = StreamingGeoCoincidence.addEvent(ss, StreamHit(3, 4, B + 20 * S))
     assert(ss.size == 1)
     assert(ss.head.comps.map(_.members.map(_.eventId).sorted).toSet ==
       Set(List(1L, 2L, 3L)))
@@ -86,14 +80,13 @@ class GeoStreamingSpec extends AnyFunSuite with LocalSpark {
       .map { case (id, st, t) => StreamHit(id, st, t) }.toSeq
   }
 
-  private def runGeoStream(rows: Seq[StreamHit], bucketNs: Long)
-      : Seq[EmittedGeoCluster] = {
+  private def runGeoStream(rows: Seq[StreamHit]): Seq[EmittedGeoCluster] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[StreamHit]
     val out = StreamingGeoCoincidence.clusterStream(mem.toDS(),
-      gapNs = gap, bucketNs = bucketNs, watermarkDelay = "0 seconds")
-    val name = s"geoparity_$bucketNs"
+      watermarkDelay = "0 seconds")
+    val name = "geoparity"
     val q = out.writeStream.outputMode("append")
       .format("memory").queryName(name).start()
     try {
@@ -111,7 +104,7 @@ class GeoStreamingSpec extends AnyFunSuite with LocalSpark {
   test("stream/batch geodesic parity on the real sf0.001 corpus") {
     val dir = "/root/testdata/sf0.001"
     val batch = batchGeo(dir)
-    val got = runGeoStream(corpusHits(dir), bucketNs = Long.MaxValue / 4)
+    val got = runGeoStream(corpusHits(dir))
       .filter(_.n >= 2)
       .map(c => (c.clusterStart, c.clusterEnd, c.n, c.nStations,
         c.conflicting)).toSet
@@ -126,7 +119,6 @@ class GeoStreamingSpec extends AnyFunSuite with LocalSpark {
     val mem = MemoryStream[StreamHit]
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[EmittedGeoCluster]()
     def start() = StreamingGeoCoincidence.clusterStream(mem.toDS(),
-        gapNs = gap, bucketNs = Long.MaxValue / 4,
         watermarkDelay = "0 seconds")
       .writeStream.outputMode("append")
       .option("checkpointLocation", ckpt)
@@ -159,21 +151,5 @@ class GeoStreamingSpec extends AnyFunSuite with LocalSpark {
       assert(got.map(c => (c.n, c.members.map(_.eventId).sorted)).toSeq ==
         Seq((3L, List(1L, 2L, 3L))))
     } finally q2.stop()
-  }
-
-  test("bucket-boundary compaction restores batch geodesic components") {
-    val dir = "/root/testdata/sf0.001"
-    val batch = batchGeo(dir)
-    // 90-second buckets deliberately split sessions at boundaries
-    val frags = runGeoStream(corpusHits(dir), bucketNs = 3 * gap)
-    val compacted = StreamingGeoCoincidence.compactGeoClusters(frags, gap)
-      .filter(_.n >= 2)
-      .map(c => (c.clusterStart, c.clusterEnd, c.n, c.nStations,
-        c.conflicting)).toSet
-    assert(compacted == batch)
-    // the fragments alone must NOT already match — the pass does real work
-    assert(frags.filter(_.n >= 2)
-      .map(c => (c.clusterStart, c.clusterEnd, c.n, c.nStations,
-        c.conflicting)).toSet != batch)
   }
 }

@@ -15,10 +15,7 @@ class StreamingReachSpec extends AnyFunSuite {
   private val allowed = Set(
     // ROADMAP direction 1 merges these detector-domain twins into the gate.
     "StreamingDetInfo", "StreamingLogBag", "StreamingPairUptime",
-    "StreamingSummary",
-    // Its static gap-session clusterer is what StreamingSpec and
-    // FileStreamParitySpec pin; kept code uses only its case classes.
-    "StreamingCoincidence")
+    "StreamingSummary")
 
   test("the stripper drops comments and literals but keeps splices") {
     val src = "val a = \"B//\" // C\n/* D\n E */ s\"${G(1)} $H\"; '\"'\n" +

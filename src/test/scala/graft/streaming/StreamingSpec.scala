@@ -3,103 +3,42 @@ import graft.LocalSpark
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Stream/batch parity: the streaming coincidence operator must reproduce
-  * the batch gap-sessionization on the same data once the watermark seals
-  * the clusters. */
+/** The streaming detector-domain operators: the geodesic clusterer under
+  * out-of-order arrival and sink fan-out, the station registry, the S4/S5
+  * collectors, the pair-uptime fold and the watermarked summary. */
 class StreamingSpec extends AnyFunSuite with LocalSpark {
-
-  private def runStream(hits: Seq[StreamHit], gapNs: Long): Seq[EmittedCluster] = {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[StreamHit]
-    val out = StreamingCoincidence.clusterStream(mem.toDS(), gapNs,
-      bucketNs = 1000000000000L, watermarkDelay = "0 seconds")
-    val q = out.writeStream.outputMode("append")
-      .format("memory").queryName("clusters").start()
-    try {
-      mem.addData(hits)
-      q.processAllAvailable()
-      // sentinel far in the future advances the watermark → flush all
-      mem.addData(StreamHit(999999L, 999L, hits.map(_.startNs).max + gapNs * 1000))
-      q.processAllAvailable()
-      // one more empty-ish batch so event-time timeouts fire post-watermark
-      mem.addData(StreamHit(999998L, 999L, hits.map(_.startNs).max + gapNs * 2000))
-      q.processAllAvailable()
-      spark.table("clusters").as[EmittedCluster].collect().toSeq
-        .filter(c => c.n >= 2 && c.stations.head != 999L) // sink filter; drop sentinels
-    } finally q.stop()
-  }
 
   private val S = 1000000000L // 1 s in ns (watermarks are ms-granular)
   // Fixtures sit well above epoch 0: the stateful op drops rows with
   // ts <= watermark, and the initial watermark is 0.
   private val B = 1000L * S
 
-  test("streaming clusters match batch gap sessions (in-order arrival)") {
-    val gap = 10L * S
-    // clusters: {0,5,12} (chain), {40,45}, {100} (seconds, offset by B)
-    val hits = Seq(
-      StreamHit(1, 10, B), StreamHit(2, 11, B + 5 * S), StreamHit(3, 10, B + 12 * S),
-      StreamHit(4, 12, B + 40 * S), StreamHit(5, 13, B + 45 * S),
-      StreamHit(6, 14, B + 100 * S))
-    val got = runStream(hits, gap).sortBy(_.clusterStart)
-    assert(got.map(c => (c.clusterStart, c.clusterEnd, c.n)) ==
-      Seq((B, B + 12 * S, 3L), (B + 40 * S, B + 45 * S, 2L)))
-    // conflicting: station 10 appears twice in the first cluster
-    assert(got.head.conflicting && got.head.nStations == 2)
-    assert(!got(1).conflicting)
-  }
-
   test("out-of-order arrival: bridging event merges two open clusters") {
-    val gap = 10L * S
-    // B and B+20s open separately; B+10s arrives later and bridges them
-    val hits = Seq(
-      StreamHit(1, 1, B), StreamHit(2, 2, B + 20 * S), StreamHit(3, 3, B + 10 * S),
-      StreamHit(4, 4, B + 200 * S))
-    val got = runStream(hits, gap).sortBy(_.clusterStart)
-    assert(got.map(c => (c.clusterStart, c.clusterEnd, c.n, c.nStations)) ==
-      Seq((B, B + 20 * S, 3L, 3L)))
-  }
-
-  test("T1 feedback: grown per-cluster timeout delays sealing (only-grow)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val gap = 10L * S
     val mem = MemoryStream[StreamHit]
-    val out = StreamingCoincidence.clusterStream(mem.toDS(), gap,
-      bucketNs = 1000000000000L, watermarkDelay = "0 seconds",
-      dynamicTimeout = true, rateFactor = 10.0)
+    // the 60 s watermark delay keeps the late bridge inside the watermark
+    val out = StreamingGeoCoincidence.clusterStream(mem.toDS(),
+      watermarkDelay = "60 seconds")
     val q = out.writeStream.outputMode("append")
-      .format("memory").queryName("dynclusters").start()
+      .format("memory").queryName("bridged").start()
     try {
-      // one cluster; batch spread 5 s → timebase sample 5 s ×10 = 50 s
-      mem.addData(StreamHit(1, 10, B), StreamHit(2, 11, B + 5 * S))
+      // B and B+50s (stations 0 and 3, ToF ≈ 66.8 s) open two sessions:
+      // 50 s exceeds the 30 s gap
+      mem.addData(StreamHit(1, 0, B), StreamHit(2, 3, B + 50 * S))
       q.processAllAvailable()
-      mem.addData(StreamHit(9001, 999, B + 30 * S)) // wm B+5 → B+30
+      // B+20s (station 4) arrives a batch later and bridges them
+      mem.addData(StreamHit(3, 4, B + 20 * S))
       q.processAllAvailable()
-      // wm settles at B+40: past the static deadline (maxStart+gap = B+15)
-      // but short of the grown one (B+5+50) — the cluster must stay open
-      mem.addData(StreamHit(9002, 999, B + 40 * S))
+      mem.addData(StreamHit(-1L, 999L, B + 100000 * S))
       q.processAllAvailable()
-      assert(spark.table("dynclusters").as[EmittedCluster].collect()
-        .count(c => c.n >= 2 && !c.stations.contains(999L)) == 0)
-      mem.addData(StreamHit(9003, 999, B + 200 * S)) // wm → past B+55
+      mem.addData(StreamHit(-2L, 999L, B + 200000 * S))
       q.processAllAvailable()
-      val got = spark.table("dynclusters").as[EmittedCluster].collect()
-        .filter(c => c.n >= 2 && !c.stations.contains(999L))
-      assert(got.map(c => (c.clusterStart, c.clusterEnd, c.n)).toSeq ==
-        Seq((B, B + 5 * S, 2L)))
+      val got = spark.table("bridged").as[EmittedGeoCluster].collect()
+        .filter(c => c.n >= 2 && !c.members.exists(_.station == 999L))
+      assert(got.map(c => (c.clusterStart, c.clusterEnd, c.n, c.nStations))
+        .toSeq == Seq((B, B + 50 * S, 3L, 3L)))
     } finally q.stop()
-
-    // only-grow: merging under a smaller current sample keeps the timeout
-    val held = StreamingCoincidence.addEvent(
-      List(OpenCluster(B, B + 5 * S, List(10L), List(1L), 50L * S)),
-      StreamHit(2, 11, B + 6 * S), gap, dynNs = 20L * S)
-    assert(held.head.timeoutNs == 50L * S)
-    // clamp ladder: huge spread → base capped at 120 s, ×10 → 1200 s
-    assert(StreamingCoincidence.dynTimeout(700L * S, 10.0, gap) == 1200L * S)
-    // tiny spread at factor 1 clamps to TimeoutMin, then the gap floor wins
-    assert(StreamingCoincidence.dynTimeout(S / 10, 1.0, gap) == gap)
   }
 
   test("S4 abort: partial detinfo group resets after the 5 s window") {
@@ -346,61 +285,19 @@ class StreamingSpec extends AnyFunSuite with LocalSpark {
     assert(s.status == "unreliable" && s.reason == "time_accuracy")
   }
 
-  test("stream/batch parity on the real sf0.001 events table") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val gap = graft.Detector.GapNs
-    // batch canonical clusters (n >= 2) over the same hit set
-    val hits = graft.Tables.events(spark, "/root/testdata/sf0.001")
-      .selectExpr("event_id", "user_id AS station", "ts AS start_ns")
-    val batch = graft.operators.Sessionize
-      .withClusterKey(hits, gap)
-      .groupBy("cluster_key")
-      .agg(org.apache.spark.sql.functions.min("start_ns").as("s"),
-        org.apache.spark.sql.functions.max("start_ns").as("e"),
-        org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("n"))
-      .filter(org.apache.spark.sql.functions.col("n") >= 2)
-      .as[(Long, Long, Long, Long)].collect()
-      .map { case (_, st, en, n) => (st, en, n) }.toSet
-
-    val rows = hits.as[(Long, Long, Long)].collect()
-      .map { case (id, st, t) => StreamHit(id, st, t) }.toSeq
-    val mem = MemoryStream[StreamHit]
-    // one giant bucket: parity check isolates the clustering rule itself
-    val out = StreamingCoincidence.clusterStream(mem.toDS(), gap,
-      bucketNs = Long.MaxValue / 4, watermarkDelay = "0 seconds")
-    val q = out.writeStream.outputMode("append")
-      .format("memory").queryName("parity").start()
-    try {
-      mem.addData(rows)
-      q.processAllAvailable()
-      mem.addData(StreamHit(-1L, 999L, rows.map(_.startNs).max + gap * 1000))
-      q.processAllAvailable()
-      mem.addData(StreamHit(-2L, 999L, rows.map(_.startNs).max + gap * 2000))
-      q.processAllAvailable()
-      val got = spark.table("parity").as[EmittedCluster].collect()
-        .filter(c => c.n >= 2 && !c.stations.contains(999L))
-        .map(c => (c.clusterStart, c.clusterEnd, c.n)).toSet
-      assert(got == batch)
-      assert(got.nonEmpty)
-    } finally q.stop()
-  }
-
   test("foreachBatch fan-out: one cluster stream to two sinks (O1)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val gap = 10L * S
     val dir = java.nio.file.Files.createTempDirectory("fanout").toString
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     val mem = MemoryStream[StreamHit]
-    val out = StreamingCoincidence.clusterStream(mem.toDS(), gap,
-      bucketNs = 1000000000000L, watermarkDelay = "0 seconds")
+    val out = StreamingGeoCoincidence.clusterStream(mem.toDS(),
+      watermarkDelay = "0 seconds")
     // the reference multicasts each record to N sinks (sink::collection);
     // Spark shape: one foreachBatch writing to both a parquet sink and an
     // in-memory accumulator
     val q = out.writeStream.outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[EmittedCluster], _: Long) =>
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[EmittedGeoCluster], _: Long) =>
         val cached = batch.cache()
         cached.write.mode("append").parquet(dir)
         cached.collect().filter(_.n >= 2).foreach(c => seen.add(c.n))
@@ -416,7 +313,7 @@ class StreamingSpec extends AnyFunSuite with LocalSpark {
       q.processAllAvailable()
       mem.addData(StreamHit(5, 9, B + 200000 * S))
       q.processAllAvailable()
-      val fromParquet = spark.read.parquet(dir).as[EmittedCluster].collect()
+      val fromParquet = spark.read.parquet(dir).as[EmittedGeoCluster].collect()
       assert(fromParquet.filter(_.n >= 2).map(_.n).toSeq == Seq(2L))
       assert(seen.contains(2L))
     } finally q.stop()
@@ -430,50 +327,6 @@ class StreamingSpec extends AnyFunSuite with LocalSpark {
     assert(livenessStatus(270000L, "reliable") == Some("offline"))
     assert(livenessStatus(48L * 3600 * 1000 - 1, "x") == Some("offline"))
     assert(livenessStatus(48L * 3600 * 1000, "x") == None) // deleted
-  }
-
-  test("boundary compaction: tiny buckets + compact == batch sessions (real data)") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val gap = graft.Detector.GapNs
-    val hits = graft.Tables.events(spark, "/root/testdata/sf0.001")
-      .selectExpr("event_id", "user_id AS station", "ts AS start_ns")
-    val batch = graft.operators.Sessionize
-      .withClusterKey(hits, gap)
-      .groupBy("cluster_key")
-      .agg(org.apache.spark.sql.functions.min("start_ns").as("s"),
-        org.apache.spark.sql.functions.max("start_ns").as("e"),
-        org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("n"))
-      .filter(org.apache.spark.sql.functions.col("n") >= 2)
-      .as[(Long, Long, Long, Long)].collect()
-      .map { case (_, st, en, n) => (st, en, n) }.toSet
-
-    val rows = hits.as[(Long, Long, Long)].collect()
-      .map { case (id, st, t) => StreamHit(id, st, t) }.toSeq
-    val mem = MemoryStream[StreamHit]
-    // 90-second buckets deliberately SPLIT many clusters at boundaries
-    val out = StreamingCoincidence.clusterStream(mem.toDS(), gap,
-      bucketNs = 3 * gap, watermarkDelay = "0 seconds")
-    val q = out.writeStream.outputMode("append")
-      .format("memory").queryName("frags").start()
-    try {
-      mem.addData(rows)
-      q.processAllAvailable()
-      mem.addData(StreamHit(-1L, 999L, rows.map(_.startNs).max + gap * 1000))
-      q.processAllAvailable()
-      mem.addData(StreamHit(-2L, 999L, rows.map(_.startNs).max + gap * 2000))
-      q.processAllAvailable()
-      val frags = spark.table("frags").as[EmittedCluster].collect()
-        .filter(c => !c.stations.contains(999L))
-      val compacted = StreamingCoincidence.compactClusters(frags.toSeq, gap)
-        .filter(_.n >= 2)
-        .map(c => (c.clusterStart, c.clusterEnd, c.n)).toSet
-      assert(compacted == batch)
-      // and the fragments alone (pre-compaction) do NOT match — the pass matters
-      assert(frags.filter(_.n >= 2)
-        .map(c => (c.clusterStart, c.clusterEnd, c.n)).toSet != batch)
-    } finally q.stop()
   }
 
   test("watermarked windowed aggregation matches batch grouping (R11 stream)") {
