@@ -69,16 +69,10 @@ object ArrowIpc {
   private final class Fb(val b: Array[Byte], val base: Int, val end: Int) {
     def ok(pos: Int, n: Int): Boolean = pos >= base && pos + n <= end
     def u8(pos: Int): Int = b(pos) & 0xff
-    def i16(pos: Int): Int = (u8(pos) | (u8(pos + 1) << 8)).toShort.toInt
-    def u16(pos: Int): Int = u8(pos) | (u8(pos + 1) << 8)
-    def i32(pos: Int): Int =
-      u8(pos) | (u8(pos + 1) << 8) | (u8(pos + 2) << 16) | (u8(pos + 3) << 24)
-    def i64(pos: Int): Long = {
-      var v = 0L
-      var i = 0
-      while (i < 8) { v |= (b(pos + i) & 0xffL) << (8 * i); i += 1 }
-      v
-    }
+    def i16(pos: Int): Int = Bytes.le16(b, pos).toShort.toInt
+    def u16(pos: Int): Int = Bytes.le16(b, pos)
+    def i32(pos: Int): Int = Bytes.le32(b, pos)
+    def i64(pos: Int): Long = Bytes.le64(b, pos)
     /** Root table position, or -1. */
     def root(): Int = {
       if (!ok(base, 4)) return -1
@@ -423,13 +417,13 @@ object ArrowIpc {
         // stream may simply end after the last batch (no EOS)
         done = true
       } else {
-        val cont = le32(b, p)
+        val cont = Bytes.le32u(b, p)
         if (cont != 0xffffffffL) {
           // legacy pre-continuation encoding is not supported; but a
           // 0 word here is the EOS of old streams
           if (cont == 0) { p += 4; done = true } else return None
         } else {
-          val metaLen = le32(b, p + 4).toInt
+          val metaLen = Bytes.le32u(b, p + 4).toInt
           if (metaLen == 0) { p += 8; done = true }
           else {
             if (metaLen < 0 || p + 8 + metaLen > end) return None
@@ -510,10 +504,6 @@ object ArrowIpc {
     None
   }
 
-  private def le32(b: Array[Byte], o: Int): Long =
-    (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-      ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
-
   /** Decode one RecordBatch body into rows. Nodes and buffers are
     * consumed depth-first in schema order (the spec's flattened
     * layout); each column — scalar or nested — yields a positional
@@ -569,7 +559,7 @@ object ArrowIpc {
       if (codec < 0 || len == 0)
         return Some(new BufV(body, bodyOff + off.toInt, len))
       if (len < 8) return None
-      val uncomp = fbI64(body, bodyOff + off.toInt)
+      val uncomp = Bytes.le64(body, bodyOff + off.toInt)
       if (uncomp == -1L) // spec: -1 marks a buffer stored uncompressed
         return Some(new BufV(body, bodyOff + off.toInt + 8, len - 8))
       if (uncomp < 0 || uncomp > (1L << 26)) return None
@@ -635,14 +625,14 @@ object ArrowIpc {
           val tid = tb.arr(tb.base + i).toInt
           if (tid < 0 || tid > 127 || tid2child(tid) < 0) return None
           if (dense) {
-            val o = fbI32(offB.arr, offB.base + 4 * i)
+            val o = Bytes.le32(offB.arr, offB.base + 4 * i)
             if (o < 0 || o >= kidLen(tid2child(tid))) return None
           }
           i += 1
         }
         return mk { (i: Int) =>
           val ci = tid2child(tb.arr(tb.base + i).toInt)
-          val j = if (dense) fbI32(offB.arr, offB.base + 4 * i) else i
+          val j = if (dense) Bytes.le32(offB.arr, offB.base + 4 * i) else i
           kidAcc(ci)(j)
         }
       }
@@ -666,11 +656,11 @@ object ArrowIpc {
         def idxAt(i: Int): Long = bits match {
           case 8  => if (signed) arr(base + i).toLong
                      else (arr(base + i) & 0xff).toLong
-          case 16 => if (signed) fbI16(arr, base + 2 * i).toLong
-                     else (fbI16(arr, base + 2 * i) & 0xffff).toLong
-          case 32 => if (signed) fbI32(arr, base + 4 * i).toLong
-                     else fbI32(arr, base + 4 * i) & 0xffffffffL
-          case _  => fbI64(arr, base + 8 * i)
+          case 16 => if (signed) Bytes.le16(arr, base + 2 * i).toShort.toLong
+                     else Bytes.le16(arr, base + 2 * i).toLong
+          case 32 => if (signed) Bytes.le32(arr, base + 4 * i).toLong
+                     else Bytes.le32(arr, base + 4 * i) & 0xffffffffL
+          case _  => Bytes.le64(arr, base + 8 * i)
         }
         var i = 0
         while (i < m) {
@@ -686,8 +676,8 @@ object ArrowIpc {
       }
       // 32- vs 64-bit offset reads share one shape
       def offAt(b: BufV, w: Int, i: Int): Long =
-        if (w == 4) le32(b.arr, b.base + 4 * i)
-        else fbI64(b.arr, b.base + 8 * i)
+        if (w == 4) Bytes.le32u(b.arr, b.base + 4 * i)
+        else Bytes.le64(b.arr, b.base + 8 * i)
       c.tag match {
         case "utf8" | "binary" | "large_utf8" | "large_binary" =>
           val w = if (c.tag.startsWith("large")) 8 else 4
@@ -801,15 +791,15 @@ object ArrowIpc {
                 ((arr(base + (i >> 3)) >>> (i & 7)) & 1) != 0
               case "int8"  => arr(base + i)
               case "uint8" => (arr(base + i) & 0xff).toShort
-              case "int16" => fbI16(arr, base + 2 * i)
-              case "uint16" => (fbI16(arr, base + 2 * i) & 0xffff)
+              case "int16" => Bytes.le16(arr, base + 2 * i).toShort
+              case "uint16" => Bytes.le16(arr, base + 2 * i)
               case "int32" | "date32" | "time32_s" | "time32_ms" =>
-                fbI32(arr, base + 4 * i)
-              case "uint32" => fbI32(arr, base + 4 * i) & 0xffffffffL
+                Bytes.le32(arr, base + 4 * i)
+              case "uint32" => Bytes.le32(arr, base + 4 * i) & 0xffffffffL
               case "float32" =>
-                java.lang.Float.intBitsToFloat(fbI32(arr, base + 4 * i))
+                java.lang.Float.intBitsToFloat(Bytes.le32(arr, base + 4 * i))
               case "float64" =>
-                java.lang.Double.longBitsToDouble(fbI64(arr, base + 8 * i))
+                java.lang.Double.longBitsToDouble(Bytes.le64(arr, base + 8 * i))
               case t if t.startsWith("fixed_binary_") =>
                 java.util.Arrays.copyOfRange(arr,
                   base + width * i, base + width * (i + 1))
@@ -824,7 +814,7 @@ object ArrowIpc {
                 new java.math.BigDecimal(
                   new java.math.BigInteger(be), scale)
               case _ => // int64/uint64 + the 8-byte temporals, raw
-                fbI64(arr, base + 8 * i)
+                Bytes.le64(arr, base + 8 * i)
             })
           }
       }
@@ -833,18 +823,6 @@ object ArrowIpc {
       readVecLen(c, want).map(_._1)
     val accessors = cols.map(c => readVec(c, n).getOrElse(return None))
     Some(Seq.tabulate(n.toInt)(i => accessors.map(_(i))))
-  }
-
-  private def fbI16(b: Array[Byte], o: Int): Short =
-    ((b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)).toShort
-  private def fbI32(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8) | ((b(o + 2) & 0xff) << 16) |
-      ((b(o + 3) & 0xff) << 24)
-  private def fbI64(b: Array[Byte], o: Int): Long = {
-    var v = 0L
-    var i = 0
-    while (i < 8) { v |= (b(o + i) & 0xffL) << (8 * i); i += 1 }
-    v
   }
 
   // ---------------------------------------------------------------

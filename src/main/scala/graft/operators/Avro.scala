@@ -125,46 +125,22 @@ object Avro {
   // Binary primitives (Avro "Binary Encoding")
   // ---------------------------------------------------------------
 
-  private def zigzag(v: Long): Long = (v << 1) ^ (v >> 63)
-  private def unzigzag(v: Long): Long = (v >>> 1) ^ -(v & 1)
-
   private def writeVarLong(out: java.io.ByteArrayOutputStream,
-      value: Long): Unit = {
-    var v = zigzag(value)
-    while ((v & ~0x7fL) != 0) { out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-    out.write(v.toInt)
-  }
+      value: Long): Unit = Bytes.putVarint(out, Bytes.zigzag(value))
 
-  /** Mutable cursor over the input; `ok` latches false on any
-    * malformation and every read checks it. */
-  private final class Cursor(val b: Array[Byte]) {
-    var p = 0
-    var ok = true
-    def readLong(): Long = {
-      var v = 0L
-      var shift = 0
-      var cont = true
-      while (cont && ok) {
-        if (p >= b.length || shift > 63) { ok = false; cont = false }
-        else {
-          val x = b(p) & 0xff
-          p += 1
-          v |= (x & 0x7fL) << shift
-          shift += 7
-          cont = (x & 0x80) != 0
-        }
-      }
-      unzigzag(v)
-    }
+  /** [[Bytes.Cursor]] with Avro's zigzag longs, byte strings and fixed
+    * runs; `ok` latches false on any malformation. */
+  private final class Cursor(bytes: Array[Byte]) extends Bytes.Cursor(bytes) {
+    def readLong(): Long = Bytes.unzigzag(varint())
     def readBytes(max: Int): Array[Byte] = {
       val n = readLong()
-      if (!ok || n < 0 || n > max || p + n > b.length) { ok = false
+      if (!ok || n < 0 || n > max || p + n > b.length) { fail()
         Array.emptyByteArray }
       else { val r = java.util.Arrays.copyOfRange(b, p, p + n.toInt)
         p += n.toInt; r }
     }
     def readFixed(n: Int): Array[Byte] =
-      if (!ok || p + n > b.length) { ok = false; Array.emptyByteArray }
+      if (!ok || p + n > b.length) { fail(); Array.emptyByteArray }
       else { val r = java.util.Arrays.copyOfRange(b, p, p + n); p += n; r }
   }
 
@@ -240,10 +216,10 @@ object Avro {
     case "long" => writeVarLong(out, v.asInstanceOf[Long])
     case "float" =>
       val bits = java.lang.Float.floatToIntBits(v.asInstanceOf[Float])
-      (0 until 4).foreach(i => out.write((bits >>> (8 * i)) & 0xff))
+      Bytes.putLe32(out, bits)
     case "double" =>
       val bits = java.lang.Double.doubleToLongBits(v.asInstanceOf[Double])
-      (0 until 8).foreach(i => out.write(((bits >>> (8 * i)) & 0xff).toInt))
+      Bytes.putLe64(out, bits)
     case "bytes" =>
       val b = v.asInstanceOf[Array[Byte]]
       writeVarLong(out, b.length.toLong); out.write(b, 0, b.length)
@@ -260,7 +236,7 @@ object Avro {
     * also terminates on cursor failure, so runaway counts cannot
     * spin past the input. */
   private def readNValue(c: Cursor, tpe: NType): Any = tpe match {
-    case _: NUnion => c.ok = false // only legal via readPos
+    case _: NUnion => c.fail() // only legal via readPos
     case NPrim(p) => readValue(c, p)
     case NLogical("fixed", _, _, _, size) => c.readFixed(size)
     case NLogical(p, _, _, _, _) => readValue(c, p)
@@ -271,7 +247,7 @@ object Avro {
       while (c.ok && n != 0) {
         val cnt = if (n < 0) { c.readLong(); -n } else n
         total += cnt
-        if (cnt < 0 || total > (1 << 24)) { c.ok = false; n = 0 }
+        if (cnt < 0 || total > (1 << 24)) { c.fail(); n = 0 }
         else {
           var i = 0L
           while (c.ok && i < cnt) {
@@ -289,7 +265,7 @@ object Avro {
       while (c.ok && n != 0) {
         val cnt = if (n < 0) { c.readLong(); -n } else n
         total += cnt
-        if (cnt < 0 || total > (1 << 24)) { c.ok = false; n = 0 }
+        if (cnt < 0 || total > (1 << 24)) { c.fail(); n = 0 }
         else {
           var i = 0L
           while (c.ok && i < cnt) {
@@ -303,7 +279,7 @@ object Avro {
       out.result()
     case NEnum(_, symbols) =>
       val idx = c.readLong()
-      if (idx < 0 || idx >= symbols.length) { c.ok = false; "" }
+      if (idx < 0 || idx >= symbols.length) { c.fail(); "" }
       else symbols(idx.toInt)
     case NFixed(_, size) => c.readFixed(size)
     case NRec(_, fields) =>
@@ -311,7 +287,7 @@ object Avro {
         if (f.nullable) c.readLong() match {
           case 0 => None
           case 1 => Some(readNValue(c, f.tpe))
-          case _ => c.ok = false; None
+          case _ => c.fail(); None
         } else Some(readNValue(c, f.tpe))
       }: Row
   }
@@ -321,22 +297,20 @@ object Avro {
       val b = c.readFixed(1); c.ok && b.nonEmpty && b(0) == 1
     case "int" =>
       val v = c.readLong()
-      if (v < Int.MinValue || v > Int.MaxValue) { c.ok = false; 0 }
+      if (v < Int.MinValue || v > Int.MaxValue) { c.fail(); 0 }
       else v.toInt
     case "long" => c.readLong()
     case "float" =>
       val b = c.readFixed(4)
       if (!c.ok) 0f
-      else java.lang.Float.intBitsToFloat(
-        (0 until 4).map(i => (b(i) & 0xff) << (8 * i)).sum)
+      else java.lang.Float.intBitsToFloat(Bytes.le32(b, 0))
     case "double" =>
       val b = c.readFixed(8)
       if (!c.ok) 0d
-      else java.lang.Double.longBitsToDouble(
-        (0 until 8).map(i => (b(i) & 0xffL) << (8 * i)).sum)
+      else java.lang.Double.longBitsToDouble(Bytes.le64(b, 0))
     case "bytes" => c.readBytes(1 << 28)
     case "string" => new String(c.readBytes(1 << 28), "UTF-8")
-    case _ => c.ok = false
+    case _ => c.fail()
   }
 
   // ---------------------------------------------------------------
@@ -467,12 +441,12 @@ object Avro {
     if (nullable) c.readLong() match {
       case 0 => None
       case 1 => Some(readNValue(c, tpe))
-      case _ => c.ok = false; None
+      case _ => c.fail(); None
     } else tpe match {
       case u: NUnion =>
         val idx = c.readLong()
         if (!c.ok || idx < 0 || idx >= u.branches.length) {
-          c.ok = false; None
+          c.fail(); None
         } else u.branches(idx.toInt) match {
           case None => None
           case Some(t) => Some(readNValue(c, t))
@@ -883,10 +857,7 @@ object Avro {
               val cc = new java.util.zip.CRC32
               cc.update(dec, 0, dec.length)
               val o = body0.length - 4
-              val want =
-                ((body0(o) & 0xffL) << 24) | ((body0(o + 1) & 0xffL) << 16) |
-                ((body0(o + 2) & 0xffL) << 8) | (body0(o + 3) & 0xffL)
-              cc.getValue == want && dec.length <= (1 << 28)
+              cc.getValue == Bytes.be32u(body0, o) && dec.length <= (1 << 28)
             }
       }
       val blockSync = c.readFixed(16)

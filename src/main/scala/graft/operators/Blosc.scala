@@ -60,17 +60,6 @@ object Blosc {
   private final val MaxSplits = 16
   private final val MinBufferSize = 128
 
-  private def u32(d: Array[Byte], o: Int): Long =
-    (d(o) & 0xffL) | ((d(o + 1) & 0xffL) << 8) |
-      ((d(o + 2) & 0xffL) << 16) | ((d(o + 3) & 0xffL) << 24)
-
-  private def putU32(out: java.io.ByteArrayOutputStream, v: Long)
-      : Unit = {
-    out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-    out.write(((v >> 16) & 0xff).toInt)
-    out.write(((v >> 24) & 0xff).toInt)
-  }
-
   // ---------------------------------------------------------------
   // Byte shuffle (block scope)
   // ---------------------------------------------------------------
@@ -193,9 +182,9 @@ object Blosc {
     val dontSplit = (flags & 0x10) != 0
     val code = (flags >>> 5) & 0x07
     val typesize = { val t = frame(3) & 0xff; if (t == 0) 256 else t }
-    val nbytes = u32(frame, 4)
-    val blocksize = u32(frame, 8)
-    val cbytes = u32(frame, 12)
+    val nbytes = Bytes.le32u(frame, 4)
+    val blocksize = Bytes.le32u(frame, 8)
+    val cbytes = Bytes.le32u(frame, 12)
     if (nbytes < 0 || nbytes > maxOut) return None
     if (cbytes != frame.length) return None
     if (memcpy) {
@@ -221,13 +210,13 @@ object Blosc {
         else 1
       if (bsize % nsplits != 0) return None
       val neblock = bsize / nsplits
-      var p = u32(frame, 16 + 4 * b)
+      var p = Bytes.le32u(frame, 16 + 4 * b)
       if (p < 16 || p > frame.length) return None
       val block = new Array[Byte](bsize)
       var s = 0
       while (s < nsplits) {
         if (p + 4 > frame.length) return None
-        val cb = u32(frame, p.toInt)
+        val cb = Bytes.le32u(frame, p.toInt)
         p += 4
         if (cb <= 0 || p + cb > frame.length) return None
         val plain: Array[Byte] =
@@ -299,10 +288,10 @@ object Blosc {
           (s + 1) * neblock)
         val comp = innerCompress(cname, plain, level)
         if (comp.length >= neblock) { // stored
-          putU32(out, neblock.toLong)
+          Bytes.putLe32(out, neblock.toLong)
           out.write(plain, 0, plain.length)
         } else {
-          putU32(out, comp.length.toLong)
+          Bytes.putLe32(out, comp.length.toLong)
           out.write(comp, 0, comp.length)
         }
       }
@@ -317,10 +306,10 @@ object Blosc {
       out.write(2); out.write(1)
       out.write(0x02 | (code << 5))
       out.write(typesize & 0xff)
-      putU32(out, data.length.toLong)
-      putU32(out, math.min(blocksize, math.max(data.length, 1))
+      Bytes.putLe32(out, data.length.toLong)
+      Bytes.putLe32(out, math.min(blocksize, math.max(data.length, 1))
         .toLong)
-      putU32(out, data.length + 16L)
+      Bytes.putLe32(out, data.length + 16L)
       out.write(data, 0, data.length)
       return out.toByteArray
     }
@@ -328,11 +317,11 @@ object Blosc {
     out.write(2); out.write(1)
     out.write(flags0)
     out.write(typesize & 0xff)
-    putU32(out, data.length.toLong)
-    putU32(out, blocksize.toLong)
-    putU32(out, frameLen.toLong)
+    Bytes.putLe32(out, data.length.toLong)
+    Bytes.putLe32(out, blocksize.toLong)
+    Bytes.putLe32(out, frameLen.toLong)
     var off = 16 + 4 * nblocks
-    blockPayloads.foreach { p => putU32(out, off.toLong)
+    blockPayloads.foreach { p => Bytes.putLe32(out, off.toLong)
       off += p.length }
     blockPayloads.foreach(p => out.write(p, 0, p.length))
     out.toByteArray

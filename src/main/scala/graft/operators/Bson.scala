@@ -68,16 +68,6 @@ object Bson {
     out.toByteArray
   }
 
-  private def le32(out: java.io.ByteArrayOutputStream, v: Int): Unit = {
-    out.write(v & 0xff); out.write((v >> 8) & 0xff)
-    out.write((v >> 16) & 0xff); out.write((v >> 24) & 0xff)
-  }
-
-  private def le64(out: java.io.ByteArrayOutputStream, v: Long): Unit = {
-    var i = 0
-    while (i < 8) { out.write(((v >>> (8 * i)) & 0xff).toInt); i += 1 }
-  }
-
   private def cstring(out: java.io.ByteArrayOutputStream,
       s: String): Unit = {
     val b = s.getBytes("UTF-8")
@@ -88,7 +78,7 @@ object Bson {
   private def bstring(out: java.io.ByteArrayOutputStream,
       s: String): Unit = {
     val b = s.getBytes("UTF-8")
-    le32(out, b.length + 1)
+    Bytes.putLe32(out, b.length + 1)
     out.write(b, 0, b.length); out.write(0)
   }
 
@@ -97,7 +87,7 @@ object Bson {
     require(depth <= MaxDepth, "bson nesting too deep")
     val body = new java.io.ByteArrayOutputStream(64)
     kvs.foreach { case (k, v) => encElem(body, k, v, depth) }
-    le32(out, 4 + body.size() + 1)
+    Bytes.putLe32(out, 4 + body.size() + 1)
     body.writeTo(out)
     out.write(0)
   }
@@ -106,7 +96,7 @@ object Bson {
       v: Bs, depth: Int): Unit = v match {
     case BsDouble(d) =>
       out.write(0x01); cstring(out, k)
-      le64(out, java.lang.Double.doubleToLongBits(d))
+      Bytes.putLe64(out, java.lang.Double.doubleToLongBits(d))
     case BsStr(s) => out.write(0x02); cstring(out, k); bstring(out, s)
     case BsDoc(kvs) =>
       out.write(0x03); cstring(out, k); encDoc(out, kvs, depth + 1)
@@ -117,7 +107,7 @@ object Bson {
     case BsBin(st, data) =>
       require(st >= 0 && st <= 255, "binary subtype")
       out.write(0x05); cstring(out, k)
-      le32(out, data.length); out.write(st)
+      Bytes.putLe32(out, data.length); out.write(st)
       out.write(data, 0, data.length)
     case BsUndef => out.write(0x06); cstring(out, k)
     case BsObjectId(b) =>
@@ -126,15 +116,15 @@ object Bson {
     case BsBool(b) =>
       out.write(0x08); cstring(out, k); out.write(if (b) 1 else 0)
     case BsDateTime(ms) =>
-      out.write(0x09); cstring(out, k); le64(out, ms)
+      out.write(0x09); cstring(out, k); Bytes.putLe64(out, ms)
     case BsNull => out.write(0x0a); cstring(out, k)
     case BsRegex(p, o) =>
       out.write(0x0b); cstring(out, k); cstring(out, p); cstring(out, o)
     case BsCode(s) => out.write(0x0d); cstring(out, k); bstring(out, s)
-    case BsInt32(i) => out.write(0x10); cstring(out, k); le32(out, i)
+    case BsInt32(i) => out.write(0x10); cstring(out, k); Bytes.putLe32(out, i)
     case BsTimestamp(raw) =>
-      out.write(0x11); cstring(out, k); le64(out, raw)
-    case BsInt64(l) => out.write(0x12); cstring(out, k); le64(out, l)
+      out.write(0x11); cstring(out, k); Bytes.putLe64(out, raw)
+    case BsInt64(l) => out.write(0x12); cstring(out, k); Bytes.putLe64(out, l)
     case BsDecimal128(b) =>
       require(b.length == 16, "decimal128 is 16 bytes")
       out.write(0x13); cstring(out, k); out.write(b, 0, 16)
@@ -146,30 +136,13 @@ object Bson {
   // Decode
   // ---------------------------------------------------------------
 
-  private final class Cur(val data: Array[Byte]) {
-    var p = 0
-    var ok = true
+  private final class Cur(data: Array[Byte]) extends Bytes.Cursor(data) {
     var elems = 0
-    def u8(): Int =
-      if (p >= data.length) { ok = false; 0 }
-      else { val b = data(p) & 0xff; p += 1; b }
-    def i32(): Int = {
-      var v = 0
-      var i = 0
-      while (i < 4 && ok) { v |= u8() << (8 * i); i += 1 }
-      v
-    }
-    def i64(): Long = {
-      var v = 0L
-      var i = 0
-      while (i < 8 && ok) { v |= u8().toLong << (8 * i); i += 1 }
-      v
-    }
     def take(n: Int): Array[Byte] =
-      if (n < 0 || n > data.length - p) { ok = false; Array.emptyByteArray }
-      else { val r = java.util.Arrays.copyOfRange(data, p, p + n)
+      if (n < 0 || n > end - p) { fail(); Array.emptyByteArray }
+      else { val r = java.util.Arrays.copyOfRange(b, p, p + n)
         p += n; r }
-    def budget(): Unit = { elems += 1; if (elems > MaxElems) ok = false }
+    def budget(): Unit = { elems += 1; if (elems > MaxElems) fail() }
   }
 
   /** Strict single-document decode: exact consumption, None on any
@@ -188,7 +161,7 @@ object Bson {
     while (c.ok && c.p < data.length) {
       doc(c, 0) match {
         case Some(kvs) => out += BsDoc(kvs)
-        case None => c.ok = false
+        case None => c.fail()
       }
     }
     if (c.ok) Some(out.result()) else None
@@ -199,59 +172,59 @@ object Bson {
     val dec = java.nio.charset.StandardCharsets.UTF_8.newDecoder()
     try Some(dec.decode(java.nio.ByteBuffer.wrap(b)).toString)
     catch { case _: java.nio.charset.CharacterCodingException =>
-      c.ok = false; None }
+      c.fail(); None }
   }
 
   private def cstr(c: Cur): Option[String] = {
     val st = c.p
-    while (c.p < c.data.length && c.data(c.p) != 0) c.p += 1
-    if (c.p >= c.data.length) { c.ok = false; return None }
-    val r = utf8(java.util.Arrays.copyOfRange(c.data, st, c.p), c)
+    while (c.p < c.b.length && c.b(c.p) != 0) c.p += 1
+    if (c.p >= c.b.length) { c.fail(); return None }
+    val r = utf8(java.util.Arrays.copyOfRange(c.b, st, c.p), c)
     c.p += 1 // NUL
     r
   }
 
   private def bstr(c: Cur): Option[String] = {
-    val len = c.i32()
-    if (!c.ok || len < 1 || len > c.data.length - c.p) {
-      c.ok = false; return None }
+    val len = c.le32()
+    if (!c.ok || len < 1 || len > c.b.length - c.p) {
+      c.fail(); return None }
     val b = c.take(len - 1)
-    if (!c.ok || c.u8() != 0) { c.ok = false; return None }
+    if (!c.ok || c.u8() != 0) { c.fail(); return None }
     // spec: the counted span must hold NO embedded NUL (it would
     // desync readers that trust the cstring form)
-    if (b.contains(0.toByte)) { c.ok = false; return None }
+    if (b.contains(0.toByte)) { c.fail(); return None }
     utf8(b, c)
   }
 
   private def doc(c: Cur, depth: Int): Option[Seq[(String, Bs)]] = {
-    if (depth > MaxDepth) { c.ok = false; return None }
+    if (depth > MaxDepth) { c.fail(); return None }
     val start = c.p
-    val total = c.i32()
-    if (!c.ok || total < 5 || total > c.data.length - start) {
-      c.ok = false; return None }
+    val total = c.le32()
+    if (!c.ok || total < 5 || total > c.b.length - start) {
+      c.fail(); return None }
     val end = start + total
     val kvs = Seq.newBuilder[(String, Bs)]
     var done = false
     while (c.ok && !done) {
-      if (c.p >= end) { c.ok = false; return None }
+      if (c.p >= end) { c.fail(); return None }
       val t = c.u8()
       if (t == 0) done = true
       else {
         c.budget()
-        val k = cstr(c).getOrElse { c.ok = false; return None }
+        val k = cstr(c).getOrElse { c.fail(); return None }
         val v: Bs = t match {
-          case 0x01 => BsDouble(java.lang.Double.longBitsToDouble(c.i64()))
+          case 0x01 => BsDouble(java.lang.Double.longBitsToDouble(c.le64()))
           case 0x02 => BsStr(bstr(c).getOrElse(return None))
           case 0x03 => BsDoc(doc(c, depth + 1).getOrElse(return None))
           case 0x04 =>
             val inner = doc(c, depth + 1).getOrElse(return None)
             // canonical array keys: "0".."n-1" in order
             inner.zipWithIndex.foreach { case ((ik, _), i) =>
-              if (ik != i.toString) { c.ok = false; return None } }
+              if (ik != i.toString) { c.fail(); return None } }
             BsArr(inner.map(_._2))
           case 0x05 =>
-            val len = c.i32()
-            if (!c.ok || len < 0) { c.ok = false; return None }
+            val len = c.le32()
+            if (!c.ok || len < 0) { c.fail(); return None }
             val st = c.u8()
             BsBin(st, c.take(len))
           case 0x06 => BsUndef
@@ -259,28 +232,28 @@ object Bson {
           case 0x08 => c.u8() match {
             case 0 => BsBool(false)
             case 1 => BsBool(true)
-            case _ => c.ok = false; return None
+            case _ => c.fail(); return None
           }
-          case 0x09 => BsDateTime(c.i64())
+          case 0x09 => BsDateTime(c.le64())
           case 0x0a => BsNull
           case 0x0b =>
             val p0 = cstr(c).getOrElse(return None)
             val o = cstr(c).getOrElse(return None)
             BsRegex(p0, o)
           case 0x0d => BsCode(bstr(c).getOrElse(return None))
-          case 0x10 => BsInt32(c.i32())
-          case 0x11 => BsTimestamp(c.i64())
-          case 0x12 => BsInt64(c.i64())
+          case 0x10 => BsInt32(c.le32())
+          case 0x11 => BsTimestamp(c.le64())
+          case 0x12 => BsInt64(c.le64())
           case 0x13 => BsDecimal128(c.take(16))
           case 0x7f => BsMaxKey
           case 0xff => BsMinKey
-          case _ => c.ok = false; return None // 0x0c/0x0e/0x0f, unknown
+          case _ => c.fail(); return None // 0x0c/0x0e/0x0f, unknown
         }
         if (!c.ok) return None
         kvs += ((k, v))
       }
     }
-    if (!c.ok || c.p != end) { c.ok = false; return None }
+    if (!c.ok || c.p != end) { c.fail(); return None }
     Some(kvs.result())
   }
 }

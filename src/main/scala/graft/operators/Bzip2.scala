@@ -38,75 +38,11 @@ object Bzip2 {
     b.length >= 4 && b(0) == 'B' && b(1) == 'Z' && b(2) == 'h' &&
       b(3) >= '1' && b(3) <= '9'
 
-  // ---------------------------------------------------------------
-  // bzip2's CRC-32: MSB-first, poly 0x04c11db7, init/final 0xffffffff
-  // ---------------------------------------------------------------
-
-  private val CrcTable: Array[Int] = {
-    val t = new Array[Int](256)
-    var i = 0
-    while (i < 256) {
-      var c = i << 24
-      var k = 0
-      while (k < 8) {
-        c = if ((c & 0x80000000) != 0) (c << 1) ^ 0x04c11db7 else c << 1
-        k += 1
-      }
-      t(i) = c
-      i += 1
-    }
-    t
-  }
-
+  /** bzip2's CRC-32: MSB-first, init and xorout 0xffffffff. */
   private final class Crc {
     private var v = 0xffffffff
-    def update(b: Byte): Unit =
-      v = (v << 8) ^ CrcTable(((v >>> 24) ^ (b & 0xff)) & 0xff)
+    def update(b: Byte): Unit = v = Bytes.crc32Msb(v, b)
     def value: Int = ~v
-  }
-
-  // ---------------------------------------------------------------
-  // MSB-first bit I/O (continuous across blocks, per the format)
-  // ---------------------------------------------------------------
-
-  private final class BitWriter {
-    private val out = new java.io.ByteArrayOutputStream()
-    private var acc = 0L
-    private var n = 0
-    def put(bits: Int, value: Long): Unit = {
-      acc = (acc << bits) | (value & ((1L << bits) - 1))
-      n += bits
-      while (n >= 8) { out.write(((acc >>> (n - 8)) & 0xff).toInt); n -= 8 }
-    }
-    def bytes(): Array[Byte] = {
-      if (n > 0) { out.write(((acc << (8 - n)) & 0xff).toInt); n = 0 }
-      out.toByteArray
-    }
-  }
-
-  private final class BitReader(b: Array[Byte], start: Int) {
-    var ok = true
-    private var pos = start * 8L
-    private val end = b.length * 8L
-    def fail(): Unit = ok = false
-    /** Byte offset of the next unread byte (ceil). */
-    def bytePos: Int = ((pos + 7) >>> 3).toInt
-    def bits(n: Int): Int = {
-      if (!ok || pos + n > end) { ok = false; 0 }
-      else {
-        var v = 0
-        var i = 0
-        while (i < n) {
-          val byteI = (pos >>> 3).toInt
-          val bitI = 7 - (pos & 7).toInt
-          v = (v << 1) | ((b(byteI) >>> bitI) & 1)
-          pos += 1
-          i += 1
-        }
-        v
-      }
-    }
-    def bit(): Int = bits(1)
   }
 
   // ---------------------------------------------------------------
@@ -141,7 +77,7 @@ object Bzip2 {
       out: java.io.ByteArrayOutputStream, maxOut: Int): Option[Int] = {
     val level = data(off + 3) - '0'
     val blockMax = level * 100000
-    val r = new BitReader(data, off + 4)
+    val r = new Bytes.BitReader(data, off + 4)
     var combined = 0
     var done = false
     while (!done && r.ok) {
@@ -154,7 +90,7 @@ object Bzip2 {
       } else if (magic != 0x314159265359L) return None
       else {
         val blockCrc = ((r.bits(16).toLong << 16) | r.bits(16)).toInt
-        if (r.bit() != 0) return None // randomised: deprecated, reject
+        if (r.bits(1) != 0) return None // randomised: deprecated, reject
         val origPtr = r.bits(24)
         // used-symbol map
         val used = new Array[Boolean](256)
@@ -185,7 +121,7 @@ object Bzip2 {
         i = 0
         while (i < nSelectors && r.ok) {
           var j = 0
-          while (r.ok && r.bit() == 1) { j += 1; if (j >= nGroups) r.fail() }
+          while (r.ok && r.bits(1) == 1) { j += 1; if (j >= nGroups) r.fail() }
           if (r.ok) {
             val v = selMtf(j)
             while (j > 0) { selMtf(j) = selMtf(j - 1); j -= 1 }
@@ -204,8 +140,8 @@ object Bzip2 {
             var more = true
             while (more && r.ok) {
               if (cur < 1 || cur > 20) r.fail()
-              else if (r.bit() == 0) more = false
-              else cur += (if (r.bit() == 0) 1 else -1)
+              else if (r.bits(1) == 0) more = false
+              else cur += (if (r.bits(1) == 0) 1 else -1)
             }
             lens(g)(s) = cur
             s += 1
@@ -237,7 +173,7 @@ object Bzip2 {
           var v = r.bits(len)
           while (r.ok && (len > 23 || v > t.limit(len))) {
             len += 1
-            if (len > 23) r.fail() else v = (v << 1) | r.bit()
+            if (len > 23) r.fail() else v = (v << 1) | r.bits(1)
           }
           if (!r.ok) eob else t.perm(v - t.base(len))
         }
@@ -328,7 +264,7 @@ object Bzip2 {
         combined = ((combined << 1) | (combined >>> 31)) ^ blockCrc
       }
     }
-    if (done && r.ok) Some(r.bytePos) else None
+    if (done && r.ok) Some(((r.bitPos + 7) >>> 3).toInt) else None
   }
 
   /** bzip2's canonical Huffman decode table: symbols permuted by
@@ -378,8 +314,8 @@ object Bzip2 {
     require(level >= 1 && level <= 9)
     require(data.length <= (1 << 26), "bzip2 encode bomb guard")
     val blockMax = level * 100000 - 20 // slack for RLE1 worst case
-    val w = new BitWriter
-    w.put(8, 'B'); w.put(8, 'Z'); w.put(8, 'h'); w.put(8, '0' + level)
+    val w = new Bytes.BitWriter
+    w.write('B', 8); w.write('Z', 8); w.write('h', 8); w.write('0' + level, 8)
     var combined = 0
     var off = 0
     // an empty input emits header + footer only (combined CRC 0),
@@ -413,12 +349,12 @@ object Bzip2 {
       writeBlock(w, rle.toByteArray, crc.value)
       combined = ((combined << 1) | (combined >>> 31)) ^ crc.value
     }
-    w.put(24, 0x177245L); w.put(24, 0x385090L)
-    w.put(16, (combined >>> 16) & 0xffff); w.put(16, combined & 0xffff)
-    w.bytes()
+    w.write(0x177245L, 24); w.write(0x385090L, 24)
+    w.write((combined >>> 16) & 0xffff, 16); w.write(combined & 0xffff, 16)
+    w.toByteArray
   }
 
-  private def writeBlock(w: BitWriter, block: Array[Byte], crc: Int): Unit = {
+  private def writeBlock(w: Bytes.BitWriter, block: Array[Byte], crc: Int): Unit = {
     val n = block.length
     // BWT by prefix-doubling over rotations
     val sa = rotationSort(block)
@@ -475,10 +411,10 @@ object Bzip2 {
     val (codes, codeLens) = canonicalCodes(lens)
     val nSelectors = (syms.length + 49) / 50
     // block header
-    w.put(24, 0x314159); w.put(24, 0x265359)
-    w.put(16, (crc >>> 16) & 0xffff); w.put(16, crc & 0xffff)
-    w.put(1, 0) // not randomised
-    w.put(24, origPtr)
+    w.write(0x314159, 24); w.write(0x265359, 24)
+    w.write((crc >>> 16) & 0xffff, 16); w.write(crc & 0xffff, 16)
+    w.write(0, 1) // not randomised
+    w.write(origPtr, 24)
     // symbol map
     var hi = 0
     i = 0
@@ -486,7 +422,7 @@ object Bzip2 {
       if ((0 until 16).exists(j => used(16 * i + j))) hi |= 1 << (15 - i)
       i += 1
     }
-    w.put(16, hi)
+    w.write(hi, 16)
     i = 0
     while (i < 16) {
       if (((hi >>> (15 - i)) & 1) != 0) {
@@ -496,31 +432,31 @@ object Bzip2 {
           if (used(16 * i + j)) lo |= 1 << (15 - j)
           j += 1
         }
-        w.put(16, lo)
+        w.write(lo, 16)
       }
       i += 1
     }
-    w.put(3, 2) // nGroups = 2 (spec minimum)
-    w.put(15, nSelectors)
+    w.write(2, 3) // nGroups = 2 (spec minimum)
+    w.write(nSelectors, 15)
     i = 0
-    while (i < nSelectors) { w.put(1, 0); i += 1 } // all group 0 (MTF 0)
+    while (i < nSelectors) { w.write(0, 1); i += 1 } // all group 0 (MTF 0)
     // two identical delta-coded length tables
     var g = 0
     while (g < 2) {
       var cur = lens(0)
-      w.put(5, cur)
+      w.write(cur, 5)
       var s = 0
       while (s < alphaSize) {
         val want = lens(s)
-        while (cur < want) { w.put(2, 2); cur += 1 } // 10 = increment
-        while (cur > want) { w.put(2, 3); cur -= 1 } // 11 = decrement
-        w.put(1, 0)
+        while (cur < want) { w.write(2, 2); cur += 1 } // 10 = increment
+        while (cur > want) { w.write(3, 2); cur -= 1 } // 11 = decrement
+        w.write(0, 1)
         s += 1
       }
       g += 1
     }
     // symbols
-    syms.foreach(s => w.put(codeLens(s), codes(s)))
+    syms.foreach(s => w.write(codes(s), codeLens(s)))
   }
 
   /** Rotation sort by prefix doubling: ranks over the block, doubled

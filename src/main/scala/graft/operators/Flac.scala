@@ -25,58 +25,23 @@ import scala.collection.mutable.ArrayBuffer
   * (both CRCs make single-bit corruption detectable). */
 object Flac {
 
-  // ── bit I/O (MSB-first, the FLAC order) ─────────────────────────
+  // ── Rice unary codes over the MSB-first bit I/O ────────────────
 
-  private final class BitWriter {
-    private val out = new java.io.ByteArrayOutputStream()
-    private var cur = 0
-    private var nbits = 0
-    def u(v: Long, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        cur = (cur << 1) | (((v >>> i) & 1L).toInt)
-        nbits += 1
-        if (nbits == 8) { out.write(cur); cur = 0; nbits = 0 }
-        i -= 1
-      }
-    }
-    def unary(q: Int): Unit = { var i = 0; while (i < q) { u(0, 1); i += 1 }; u(1, 1) }
-    def alignByte(): Unit = if (nbits > 0) u(0, 8 - nbits)
-    def bytePos: Int = out.size()
-    def result(): Array[Byte] = { alignByte(); out.toByteArray }
+  private def writeUnary(w: Bytes.BitWriter, q: Int): Unit = {
+    var left = q
+    while (left >= 32) { w.write(0, 32); left -= 32 }
+    w.write(1, left + 1)
   }
 
-  private final class BitReader(data: Array[Byte], start: Int) {
-    var pos: Long = start.toLong * 8
-    var fail = false
-    def bytePos: Int = (pos / 8).toInt
-    def aligned: Boolean = pos % 8 == 0
-    def u(n: Int): Long = {
-      if (fail || pos + n > data.length.toLong * 8) { fail = true; return 0 }
-      var v = 0L
-      var i = 0
-      while (i < n) {
-        val p = pos + i
-        v = (v << 1) |
-          ((data((p >> 3).toInt) >> (7 - (p & 7).toInt)) & 1)
-        i += 1
-      }
-      pos += n
-      v
+  /** Count zeros to the first one bit. −1 on overrun. */
+  private def readUnary(r: Bytes.BitReader): Int = {
+    var q = 0
+    while (r.read(1) == 0) {
+      if (!r.ok) return -1
+      q += 1
+      if (q > (1 << 24)) { r.fail(); return -1 } // runaway guard
     }
-    /** Unary: count zeros to the first one bit. −1 on overrun. */
-    def unary(): Int = {
-      var q = 0
-      while (true) {
-        if (fail || pos >= data.length.toLong * 8) { fail = true; return -1 }
-        val bit = (data((pos >> 3).toInt) >> (7 - (pos & 7).toInt)) & 1
-        pos += 1
-        if (bit == 1) return q
-        q += 1
-        if (q > (1 << 24)) { fail = true; return -1 } // runaway guard
-      }
-      -1
-    }
+    q
   }
 
   // ── CRCs (bitwise from the polynomials — no tables) ─────────────
@@ -117,34 +82,34 @@ object Flac {
 
   // ── UTF-8-style coded numbers (frame index) ─────────────────────
 
-  private def writeUtf8Num(bw: BitWriter, v: Long): Unit = {
-    if (v < 0x80) { bw.u(v, 8); return }
+  private def writeUtf8Num(bw: Bytes.BitWriter, v: Long): Unit = {
+    if (v < 0x80) { bw.write(v, 8); return }
     // t total bytes carry 5t+1 payload bits (lead: t ones, a zero,
     // 7−t data bits; then t−1 continuation bytes of 6 bits)
     var t = 2
     while (t < 7 && v >= (1L << (5 * t + 1))) t += 1
     val lead = ((0xff << (8 - t)) & 0xff).toLong | (v >>> (6 * (t - 1)))
-    bw.u(lead, 8)
+    bw.write(lead, 8)
     var i = t - 2
     while (i >= 0) {
-      bw.u(0x80L | ((v >>> (6 * i)) & 0x3f), 8)
+      bw.write(0x80L | ((v >>> (6 * i)) & 0x3f), 8)
       i -= 1
     }
   }
 
-  private def readUtf8Num(r: BitReader): Long = {
-    val b0 = r.u(8)
-    if (r.fail) return -1
+  private def readUtf8Num(r: Bytes.BitReader): Long = {
+    val b0 = r.read(8)
+    if (!r.ok) return -1
     if ((b0 & 0x80) == 0) return b0
     var ones = 0
     var mask = 0x80
     while (ones < 8 && (b0 & mask) != 0) { ones += 1; mask >>= 1 }
-    if (ones < 2 || ones > 7) { r.fail = true; return -1 }
+    if (ones < 2 || ones > 7) { r.fail(); return -1 }
     var v = b0 & ((1 << (8 - ones - 1)) - 1).toLong
     var i = 1
     while (i < ones) {
-      val bc = r.u(8)
-      if (r.fail || (bc & 0xc0) != 0x80) { r.fail = true; return -1 }
+      val bc = r.read(8)
+      if (!r.ok || (bc & 0xc0) != 0x80) { r.fail(); return -1 }
       v = (v << 6) | (bc & 0x3f)
       i += 1
     }
@@ -162,9 +127,6 @@ object Flac {
       case _ => 4L * s(n - 1) - 6L * s(n - 2) + 4L * s(n - 3) - s(n - 4)
     }
 
-  private def zigzag(v: Long): Long = if (v >= 0) v << 1 else (-v << 1) - 1
-  private def unzigzag(u: Long): Long = if ((u & 1) == 0) u >>> 1 else -((u + 1) >>> 1)
-
   // ── encode ──────────────────────────────────────────────────────
 
   final val BlockSize = 4096
@@ -172,7 +134,7 @@ object Flac {
   private def riceCost(res: Array[Long], k: Int): Long = {
     var bits = 0L
     var i = 0
-    while (i < res.length) { bits += (zigzag(res(i)) >>> k) + 1 + k; i += 1 }
+    while (i < res.length) { bits += (Bytes.zigzag(res(i)) >>> k) + 1 + k; i += 1 }
     bits
   }
 
@@ -213,18 +175,18 @@ object Flac {
     val out = new java.io.ByteArrayOutputStream()
     out.write("fLaC".getBytes("US-ASCII"))
     // STREAMINFO: last-metadata flag set, type 0, length 34
-    val si = new BitWriter
-    si.u(BlockSize, 16); si.u(BlockSize, 16) // min/max blocksize
-    si.u(0, 24); si.u(0, 24)                 // min/max framesize: unknown
-    si.u(sampleRate, 20)
-    si.u(0, 3)  // channels − 1 (mono)
-    si.u(15, 5) // bits per sample − 1 (16)
-    si.u(samples.length.toLong, 36)
+    val si = new Bytes.BitWriter
+    si.write(BlockSize, 16); si.write(BlockSize, 16) // min/max blocksize
+    si.write(0, 24); si.write(0, 24)                 // min/max framesize: unknown
+    si.write(sampleRate, 20)
+    si.write(0, 3)  // channels − 1 (mono)
+    si.write(15, 5) // bits per sample − 1 (16)
+    si.write(samples.length.toLong, 36)
     // MD5 of the UNENCODED audio (16-bit little-endian stream) — the
     // end-to-end integrity signature decoders verify after decode
     val md5 = sampleMd5(samples)
-    md5.foreach(b => si.u(b & 0xffL, 8))
-    val siB = si.result()
+    md5.foreach(b => si.write(b & 0xffL, 8))
+    val siB = si.toByteArray
     out.write(0x80); out.write(0); out.write(0); out.write(siB.length)
     out.write(siB)
     var at = 0
@@ -242,44 +204,44 @@ object Flac {
   private def encodeFrame(sampleRate: Int, blk: Array[Int],
                           frameIdx: Long): Array[Byte] = {
     val n = blk.length
-    val bw = new BitWriter
-    bw.u(0x3ffe, 14) // sync
-    bw.u(0, 1)       // reserved
-    bw.u(0, 1)       // fixed blocking: number is the FRAME index
+    val bw = new Bytes.BitWriter
+    bw.write(0x3ffe, 14) // sync
+    bw.write(0, 1)       // reserved
+    bw.write(0, 1)       // fixed blocking: number is the FRAME index
     // blocksize: 4096 → code 12; short tails → 16-bit explicit (7)
     val bsCode = if (n == BlockSize) 12 else 7
-    bw.u(bsCode, 4)
-    bw.u(0, 4)  // sample rate: from STREAMINFO
-    bw.u(0, 4)  // channel assignment: mono
-    bw.u(4, 3)  // sample size: 16-bit
-    bw.u(0, 1)  // reserved
+    bw.write(bsCode, 4)
+    bw.write(0, 4)  // sample rate: from STREAMINFO
+    bw.write(0, 4)  // channel assignment: mono
+    bw.write(4, 3)  // sample size: 16-bit
+    bw.write(0, 1)  // reserved
     writeUtf8Num(bw, frameIdx)
-    if (bsCode == 7) bw.u(n - 1, 16)
+    if (bsCode == 7) bw.write(n - 1, 16)
     // header CRC-8 over the bytes so far (the bit stream is byte-
     // aligned here: 32 fixed bits + whole UTF-8 bytes + optional 16)
-    val headBytes = bw.result() // snapshot; rebuild the writer below
-    val bw2 = new BitWriter
-    headBytes.foreach(b => bw2.u(b & 0xffL, 8))
-    bw2.u(crc8(headBytes, 0, headBytes.length), 8)
+    val headBytes = bw.toByteArray // snapshot; rebuild the writer below
+    val bw2 = new Bytes.BitWriter
+    headBytes.foreach(b => bw2.write(b & 0xffL, 8))
+    bw2.write(crc8(headBytes, 0, headBytes.length), 8)
     // subframe: pick the cheapest representation
     val candidates = ArrayBuffer.empty[(Long, () => Unit)]
     def writeRice(res: Array[Long], k: Int): Unit = {
-      bw2.u(0, 2) // rice method 4-bit
-      bw2.u(0, 4) // partition order 0
-      bw2.u(k, 4)
+      bw2.write(0, 2) // rice method 4-bit
+      bw2.write(0, 4) // partition order 0
+      bw2.write(k, 4)
       var i = 0
       while (i < res.length) {
-        val z = zigzag(res(i))
-        bw2.unary((z >>> k).toInt)
+        val z = Bytes.zigzag(res(i))
+        writeUnary(bw2, (z >>> k).toInt)
         var b = k - 1
-        while (b >= 0) { bw2.u((z >>> b) & 1, 1); b -= 1 }
+        while (b >= 0) { bw2.write((z >>> b) & 1, 1); b -= 1 }
         i += 1
       }
     }
     if (n > 0 && blk.forall(_ == blk(0)))
       candidates += ((16L, () => {
-        bw2.u(0, 1); bw2.u(0, 6); bw2.u(0, 1) // CONSTANT, no wasted bits
-        bw2.u(blk(0).toLong & 0xffff, 16)
+        bw2.write(0, 1); bw2.write(0, 6); bw2.write(0, 1) // CONSTANT, no wasted bits
+        bw2.write(blk(0).toLong & 0xffff, 16)
       }))
     else {
       for (order <- 0 to 2 if n > order) {
@@ -292,21 +254,20 @@ object Flac {
         val k = bestRiceK(res)
         val cost = 16L * order + 2 + 4 + 4 + riceCost(res, k)
         candidates += ((cost, () => {
-          bw2.u(0, 1); bw2.u(8 + order, 6); bw2.u(0, 1) // FIXED(order)
+          bw2.write(0, 1); bw2.write(8 + order, 6); bw2.write(0, 1) // FIXED(order)
           var w = 0
-          while (w < order) { bw2.u(blk(w).toLong & 0xffff, 16); w += 1 }
+          while (w < order) { bw2.write(blk(w).toLong & 0xffff, 16); w += 1 }
           writeRice(res, k)
         }))
       }
       candidates += ((16L * n, () => {
-        bw2.u(0, 1); bw2.u(1, 6); bw2.u(0, 1) // VERBATIM
+        bw2.write(0, 1); bw2.write(1, 6); bw2.write(0, 1) // VERBATIM
         var i = 0
-        while (i < n) { bw2.u(blk(i).toLong & 0xffff, 16); i += 1 }
+        while (i < n) { bw2.write(blk(i).toLong & 0xffff, 16); i += 1 }
       }))
     }
     candidates.minBy(_._1)._2()
-    bw2.alignByte()
-    val noCrc = bw2.result()
+    val noCrc = bw2.toByteArray
     val outB = new java.io.ByteArrayOutputStream()
     outB.write(noCrc, 0, noCrc.length)
     val c16 = crc16(noCrc, 0, noCrc.length)
@@ -339,13 +300,13 @@ object Flac {
       if (p + 4 + len > data.length) return None
       if (typ == 0) {
         if (len != 34) return None
-        val r = new BitReader(data, p + 4)
-        r.u(16); r.u(16); r.u(24); r.u(24)
-        val rate = r.u(20).toInt
-        val ch = r.u(3).toInt + 1
-        val bits = r.u(5).toInt + 1
-        val total = r.u(36)
-        if (r.fail) return None
+        val r = new Bytes.BitReader(data, p + 4)
+        r.read(16); r.read(16); r.read(24); r.read(24)
+        val rate = r.read(20).toInt
+        val ch = r.read(3).toInt + 1
+        val bits = r.read(5).toInt + 1
+        val total = r.read(36)
+        if (!r.ok) return None
         info = FlacInfo(rate, ch, bits, total)
         md5 = java.util.Arrays.copyOfRange(data, p + 4 + 18, p + 4 + 34)
       }
@@ -370,16 +331,16 @@ object Flac {
 
   private def decodeFrame(data: Array[Byte], start: Int, info: FlacInfo,
                           out: ArrayBuffer[Int]): Option[Int] = {
-    val r = new BitReader(data, start)
-    if (r.u(14) != 0x3ffe) return None
-    if (r.u(1) != 0) return None
-    val variable = r.u(1) == 1
+    val r = new Bytes.BitReader(data, start)
+    if (r.read(14) != 0x3ffe) return None
+    if (r.read(1) != 0) return None
+    val variable = r.read(1) == 1
     if (variable) return None // subset: fixed blocking only
-    val bsCode = r.u(4).toInt
-    val srCode = r.u(4).toInt
-    val chan = r.u(4).toInt
-    val ssCode = r.u(3).toInt
-    if (r.u(1) != 0 || r.fail) return None
+    val bsCode = r.read(4).toInt
+    val srCode = r.read(4).toInt
+    val chan = r.read(4).toInt
+    val ssCode = r.read(3).toInt
+    if (r.read(1) != 0 || !r.ok) return None
     if (chan != 0) return None // mono
     val bits = ssCode match {
       case 0 => info.bits
@@ -392,33 +353,33 @@ object Flac {
     }
     if (bits != 16) return None
     readUtf8Num(r)
-    if (r.fail) return None
+    if (!r.ok) return None
     val blockSize = bsCode match {
       case 1 => 192
       case c if c >= 2 && c <= 5 => 576 << (c - 2)
-      case 6 => r.u(8).toInt + 1
-      case 7 => r.u(16).toInt + 1
+      case 6 => r.read(8).toInt + 1
+      case 7 => r.read(16).toInt + 1
       case c if c >= 8 => 256 << (c - 8)
       case _ => return None
     }
     srCode match { // explicit rates consume header bits
-      case 12 => r.u(8)
-      case 13 | 14 => r.u(16)
+      case 12 => r.read(8)
+      case 13 | 14 => r.read(16)
       case 15 => return None // invalid
       case _ => ()
     }
-    if (r.fail || blockSize <= 0 || blockSize > (1 << 16)) return None
+    if (!r.ok || blockSize <= 0 || blockSize > (1 << 16)) return None
     // CRC-8 covers the header bytes up to here (reader is aligned)
-    if (!r.aligned) return None
-    val headLen = r.bytePos - start
-    val storedCrc8 = r.u(8).toInt
-    if (r.fail || storedCrc8 != crc8(data, start, headLen)) return None
+    if (r.bitPos % 8 != 0) return None
+    val headLen = (r.bitPos / 8).toInt - start
+    val storedCrc8 = r.read(8).toInt
+    if (!r.ok || storedCrc8 != crc8(data, start, headLen)) return None
     // subframe (mono: exactly one)
-    if (r.u(1) != 0) return None
-    val sfType = r.u(6).toInt
+    if (r.read(1) != 0) return None
+    val sfType = r.read(6).toInt
     var wasted = 0
-    if (r.u(1) == 1) { wasted = r.unary() + 1; if (r.fail) return None }
-    if (r.fail) return None
+    if (r.read(1) == 1) { wasted = readUnary(r) + 1; if (!r.ok) return None }
+    if (!r.ok) return None
     val eb = bits - wasted
     if (eb <= 0 || eb > 16) return None
     val blk = new Array[Int](blockSize)
@@ -427,12 +388,12 @@ object Flac {
       ((v << sh) >> sh).toInt
     }
     def readResiduals(order: Int): Boolean = {
-      val method = r.u(2).toInt
+      val method = r.read(2).toInt
       if (method > 1) return false
       val pbits = if (method == 0) 4 else 5
       val escape = if (method == 0) 0xf else 0x1f
-      val pOrder = r.u(4).toInt
-      if (r.fail) return false
+      val pOrder = r.read(4).toInt
+      if (!r.ok) return false
       val nPart = 1 << pOrder
       if (blockSize % nPart != 0) return false
       var part = 0
@@ -440,42 +401,42 @@ object Flac {
       while (part < nPart) {
         val cnt = (blockSize >> pOrder) - (if (part == 0) order else 0)
         if (cnt < 0) return false
-        val param = r.u(pbits).toInt
-        if (r.fail) return false
+        val param = r.read(pbits).toInt
+        if (!r.ok) return false
         if (param == escape) {
-          val raw = r.u(5).toInt
+          val raw = r.read(5).toInt
           var i = 0
           while (i < cnt) {
-            val v = if (raw == 0) 0L else r.u(raw)
+            val v = if (raw == 0) 0L else r.read(raw)
             blk(idx) = sext(v, math.max(raw, 1)); idx += 1; i += 1
           }
         } else {
           var i = 0
           while (i < cnt) {
-            val q = r.unary()
+            val q = readUnary(r)
             if (q < 0) return false
-            val rem = if (param == 0) 0L else r.u(param)
-            blk(idx) = unzigzag((q.toLong << param) | rem).toInt
+            val rem = if (param == 0) 0L else r.read(param)
+            blk(idx) = Bytes.unzigzag((q.toLong << param) | rem).toInt
             idx += 1; i += 1
           }
         }
-        if (r.fail) return false
+        if (!r.ok) return false
         part += 1
       }
       true
     }
     sfType match {
       case 0 => // CONSTANT
-        val v = sext(r.u(eb), eb)
+        val v = sext(r.read(eb), eb)
         java.util.Arrays.fill(blk, v)
       case 1 => // VERBATIM
         var i = 0
-        while (i < blockSize) { blk(i) = sext(r.u(eb), eb); i += 1 }
+        while (i < blockSize) { blk(i) = sext(r.read(eb), eb); i += 1 }
       case t if t >= 8 && t <= 12 => // FIXED order 0..4
         val order = t - 8
         if (order > blockSize) return None
         var i = 0
-        while (i < order) { blk(i) = sext(r.u(eb), eb); i += 1 }
+        while (i < order) { blk(i) = sext(r.read(eb), eb); i += 1 }
         if (!readResiduals(order)) return None
         i = order
         while (i < blockSize) {
@@ -486,15 +447,15 @@ object Flac {
         val order = t - 31
         if (order > blockSize) return None
         var i = 0
-        while (i < order) { blk(i) = sext(r.u(eb), eb); i += 1 }
-        val precision = r.u(4).toInt + 1
+        while (i < order) { blk(i) = sext(r.read(eb), eb); i += 1 }
+        val precision = r.read(4).toInt + 1
         if (precision == 16) return None // 1111 is invalid per spec
-        val shift = sext(r.u(5), 5)
+        val shift = sext(r.read(5), 5)
         if (shift < 0) return None
         val coef = new Array[Long](order)
         i = 0
-        while (i < order) { coef(i) = sext(r.u(precision), precision); i += 1 }
-        if (r.fail) return None
+        while (i < order) { coef(i) = sext(r.read(precision), precision); i += 1 }
+        if (!r.ok) return None
         if (!readResiduals(order)) return None
         i = order
         while (i < blockSize) {
@@ -506,12 +467,12 @@ object Flac {
         }
       case _ => return None
     }
-    if (r.fail) return None
+    if (!r.ok) return None
     // frame CRC-16 after byte alignment
-    if (!r.aligned) r.u((8 - (r.pos % 8)).toInt)
-    val frameLen = r.bytePos - start
-    val stored16 = r.u(16).toInt
-    if (r.fail || stored16 != crc16(data, start, frameLen)) return None
+    if (r.bitPos % 8 != 0) r.read((8 - (r.bitPos % 8)).toInt)
+    val frameLen = (r.bitPos / 8).toInt - start
+    val stored16 = r.read(16).toInt
+    if (!r.ok || stored16 != crc16(data, start, frameLen)) return None
     if (wasted > 0) {
       var i = 0
       while (i < blockSize) { blk(i) = blk(i) << wasted; i += 1 }
@@ -520,6 +481,6 @@ object Flac {
     while (i < blockSize && out.size < info.totalSamples) {
       out += blk(i); i += 1
     }
-    Some(r.bytePos)
+    Some((r.bitPos / 8).toInt)
   }
 }

@@ -141,41 +141,37 @@ object Gguf {
     require(tensors.map(_.name).distinct.length == tensors.length,
       "duplicate tensor name")
     val out = new java.io.ByteArrayOutputStream(1024)
-    def u32(v: Long): Unit = { var i = 0
-      while (i < 4) { out.write(((v >>> (8 * i)) & 0xff).toInt); i += 1 } }
-    def u64(v: Long): Unit = { var i = 0
-      while (i < 8) { out.write(((v >>> (8 * i)) & 0xff).toInt); i += 1 } }
     def gstr(s: String): Unit = {
       val b = s.getBytes("UTF-8")
-      u64(b.length.toLong); out.write(b, 0, b.length)
+      Bytes.putLe64(out, b.length.toLong); out.write(b, 0, b.length)
     }
     def value(v: Gv): Unit = v match {
       case GvU8(x) => out.write(x & 0xff)
       case GvI8(x) => out.write(x & 0xff)
       case GvU16(x) => out.write(x & 0xff); out.write((x >> 8) & 0xff)
       case GvI16(x) => out.write(x & 0xff); out.write((x >> 8) & 0xff)
-      case GvU32(x) => u32(x)
-      case GvI32(x) => u32(x.toLong)
-      case GvF32(x) => u32(java.lang.Float.floatToIntBits(x).toLong)
+      case GvU32(x) => Bytes.putLe32(out, x)
+      case GvI32(x) => Bytes.putLe32(out, x.toLong)
+      case GvF32(x) => Bytes.putLe32(out, java.lang.Float.floatToIntBits(x).toLong)
       case GvBool(x) => out.write(if (x) 1 else 0)
       case GvStr(x) => gstr(x)
       case GvArr(tpe, vs) =>
-        u32(tpe.toLong); u64(vs.length.toLong)
+        Bytes.putLe32(out, tpe.toLong); Bytes.putLe64(out, vs.length.toLong)
         vs.foreach { e =>
           require(typeOf(e) == tpe, "heterogeneous gguf array")
           require(tpe != 9, "nested gguf arrays")
           value(e)
         }
-      case GvU64(x) => u64(x)
-      case GvI64(x) => u64(x)
-      case GvF64(x) => u64(java.lang.Double.doubleToLongBits(x))
+      case GvU64(x) => Bytes.putLe64(out, x)
+      case GvI64(x) => Bytes.putLe64(out, x)
+      case GvF64(x) => Bytes.putLe64(out, java.lang.Double.doubleToLongBits(x))
     }
     out.write("GGUF".getBytes("ASCII"))
-    u32(3L)
-    u64(tensors.length.toLong)
-    u64(metadata.length.toLong)
+    Bytes.putLe32(out, 3L)
+    Bytes.putLe64(out, tensors.length.toLong)
+    Bytes.putLe64(out, metadata.length.toLong)
     metadata.foreach { case (k, v) =>
-      gstr(k); u32(typeOf(v).toLong); value(v)
+      gstr(k); Bytes.putLe32(out, typeOf(v).toLong); value(v)
     }
     var off = 0L
     val offsets = tensors.map { t =>
@@ -192,10 +188,10 @@ object Gguf {
     }
     tensors.zip(offsets).foreach { case (t, o) =>
       gstr(t.name)
-      u32(t.dims.length.toLong)
-      t.dims.foreach(u64)
-      u32(TypeIds(t.tpe).toLong)
-      u64(o)
+      Bytes.putLe32(out, t.dims.length.toLong)
+      t.dims.foreach(Bytes.putLe64(out, _))
+      Bytes.putLe32(out, TypeIds(t.tpe).toLong)
+      Bytes.putLe64(out, o)
     }
     // pad to alignment, then the data section (each tensor padded
     // up to the next alignment boundary, except after the last)
@@ -215,25 +211,10 @@ object Gguf {
   // Parse
   // ---------------------------------------------------------------
 
-  private final class Cur(val data: Array[Byte]) {
-    var p = 0
-    var ok = true
-    def u8(): Int =
-      if (p >= data.length) { ok = false; 0 }
-      else { val b = data(p) & 0xff; p += 1; b }
-    def u32(): Long = {
-      var v = 0L; var i = 0
-      while (i < 4 && ok) { v |= u8().toLong << (8 * i); i += 1 }
-      v
-    }
-    def u64(): Long = {
-      var v = 0L; var i = 0
-      while (i < 8 && ok) { v |= u8().toLong << (8 * i); i += 1 }
-      v
-    }
+  private final class Cur(data: Array[Byte]) extends Bytes.Cursor(data) {
     def take(n: Long): Array[Byte] =
-      if (n < 0 || n > data.length - p) { ok = false; Array.emptyByteArray }
-      else { val r = java.util.Arrays.copyOfRange(data, p, p + n.toInt)
+      if (n < 0 || n > end - p) { fail(); Array.emptyByteArray }
+      else { val r = java.util.Arrays.copyOfRange(b, p, p + n.toInt)
         p += n.toInt; r }
   }
 
@@ -243,21 +224,21 @@ object Gguf {
     val c = new Cur(data)
     if (!new String(c.take(4), "ASCII").equals("GGUF") || !c.ok)
       return None
-    if (c.u32() != 3L) return None // v1/v2 use 32-bit counts — reject
-    val nTensors = c.u64()
-    val nKv = c.u64()
+    if (c.le32u() != 3L) return None // v1/v2 use 32-bit counts — reject
+    val nTensors = c.le64()
+    val nKv = c.le64()
     if (!c.ok || nTensors < 0 || nTensors > MaxCount ||
       nKv < 0 || nKv > MaxCount) return None
 
     def gstr(): Option[String] = {
-      val n = c.u64()
-      if (!c.ok || n < 0 || n > MaxStr) { c.ok = false; return None }
+      val n = c.le64()
+      if (!c.ok || n < 0 || n > MaxStr) { c.fail(); return None }
       val b = c.take(n)
       if (!c.ok) return None
       val dec = java.nio.charset.StandardCharsets.UTF_8.newDecoder()
       try Some(dec.decode(java.nio.ByteBuffer.wrap(b)).toString)
       catch { case _: java.nio.charset.CharacterCodingException =>
-        c.ok = false; None }
+        c.fail(); None }
     }
 
     def value(tpe: Int, depth: Int): Option[Gv] = {
@@ -267,37 +248,37 @@ object Gguf {
         case 1 => Some(GvI8(c.u8().toByte.toInt))
         case 2 => Some(GvU16((c.u8() | (c.u8() << 8)) & 0xffff))
         case 3 => Some(GvI16((c.u8() | (c.u8() << 8)).toShort.toInt))
-        case 4 => Some(GvU32(c.u32()))
-        case 5 => Some(GvI32(c.u32().toInt))
+        case 4 => Some(GvU32(c.le32u()))
+        case 5 => Some(GvI32(c.le32u().toInt))
         case 6 => Some(GvF32(java.lang.Float.intBitsToFloat(
-          c.u32().toInt)))
+          c.le32u().toInt)))
         case 7 => c.u8() match {
           case 0 => Some(GvBool(false))
           case 1 => Some(GvBool(true))
-          case _ => c.ok = false; None
+          case _ => c.fail(); None
         }
         case 8 => gstr().map(GvStr)
         case 9 =>
-          if (depth > 0) { c.ok = false; return None } // one level
-          val et = c.u32().toInt
-          val n = c.u64()
+          if (depth > 0) { c.fail(); return None } // one level
+          val et = c.le32u().toInt
+          val n = c.le64()
           if (!c.ok || n < 0 || n > MaxCount || et == 9) {
-            c.ok = false; return None }
+            c.fail(); return None }
           val vs = Seq.newBuilder[Gv]
           var i = 0L
           while (c.ok && i < n) {
             value(et, depth + 1) match {
               case Some(x) => vs += x
-              case None => c.ok = false
+              case None => c.fail()
             }
             i += 1
           }
           if (c.ok) Some(GvArr(et, vs.result())) else None
-        case 10 => Some(GvU64(c.u64()))
-        case 11 => Some(GvI64(c.u64()))
+        case 10 => Some(GvU64(c.le64()))
+        case 11 => Some(GvI64(c.le64()))
         case 12 => Some(GvF64(java.lang.Double.longBitsToDouble(
-          c.u64())))
-        case _ => c.ok = false; None
+          c.le64())))
+        case _ => c.fail(); None
       }
     }
 
@@ -306,16 +287,16 @@ object Gguf {
     var i = 0L
     while (c.ok && i < nKv) {
       val k = gstr().getOrElse(return None)
-      val t = c.u32().toInt
+      val t = c.le32u().toInt
       value(t, 0) match {
         case Some(v) =>
           if (k == "general.alignment") v match {
             case GvU32(a) if a > 0 && (a & (a - 1)) == 0 =>
               alignment = a
-            case _ => c.ok = false
+            case _ => c.fail()
           }
           kvs += ((k, v))
-        case None => c.ok = false
+        case None => c.fail()
       }
       i += 1
     }
@@ -327,20 +308,20 @@ object Gguf {
     i = 0L
     while (c.ok && i < nTensors) {
       val name = gstr().getOrElse(return None)
-      val nd = c.u32()
+      val nd = c.le32u()
       if (!c.ok || nd < 1 || nd > 8) return None
-      val dims = (0L until nd).map(_ => c.u64())
+      val dims = (0L until nd).map(_ => c.le64())
       if (!c.ok || dims.exists(_ <= 0)) return None
       var elems = 1L
       dims.foreach { d =>
         elems *= d
-        if (elems > MaxElems) { c.ok = false } }
+        if (elems > MaxElems) { c.fail() } }
       if (!c.ok) return None
-      val tid = c.u32().toInt
-      val tag = TypeTags.getOrElse(tid, { c.ok = false; return None })
-      val off = c.u64()
+      val tid = c.le32u().toInt
+      val tag = TypeTags.getOrElse(tid, { c.fail(); return None })
+      val off = c.le64()
       if (!c.ok || off < 0 || off % alignment != 0) return None
-      val sz = byteSize(tag, elems).getOrElse { c.ok = false
+      val sz = byteSize(tag, elems).getOrElse { c.fail()
         return None }
       infos += Info(name, dims, tag, off, sz)
       i += 1

@@ -21,21 +21,11 @@ object H264 {
 
   // ── bit I/O over RBSP payloads ──────────────────────────────────
 
-  private final class BitReader(data: Array[Byte]) {
-    private var pos = 0
-    private var bit = 0
-    def u(n: Int): Int = {
-      var v = 0
-      var k = 0
-      while (k < n) {
-        if (pos >= data.length) return -1
-        v = (v << 1) | ((data(pos) >> (7 - bit)) & 1)
-        bit += 1
-        if (bit == 8) { bit = 0; pos += 1 }
-        k += 1
-      }
-      v
-    }
+  /** H.264 reads over the shared MSB-first reader: −1 (se:
+    * Int.MinValue) once the reader has run out. */
+  private final class RbspReader(data: Array[Byte]) {
+    private val r = new Bytes.BitReader(data)
+    def u(n: Int): Int = { val v = r.bits(n); if (r.ok) v else -1 }
     /** Exp-Golomb ue(v): countLeadingZeroBits zeros, a 1, then that
       * many info bits; value = 2^k − 1 + info. */
     def ue(): Int = {
@@ -64,30 +54,17 @@ object H264 {
       * boundary (§7.3.5: the bits MUST be zero; a set bit is a
       * malformed stream). Returns false on a non-zero pad bit. */
     def alignZero(): Boolean = {
-      var ok = true
-      while (bit != 0 && pos < data.length) ok &= (u(1) == 0)
-      ok && pos <= data.length
+      val pad = ((8 - r.bitPos % 8) % 8).toInt
+      r.read(pad) == 0 && r.ok
     }
     /** One raw byte at a byte-aligned position (I_PCM samples);
       * −1 past the end. */
-    def byte(): Int =
-      if (bit != 0 || pos >= data.length) -1
-      else { val v = data(pos) & 0xff; pos += 1; v }
+    def byte(): Int = if (r.bitPos % 8 != 0) -1 else u(8)
   }
 
-  private final class BitWriter {
-    private val buf = collection.mutable.ArrayBuffer.empty[Byte]
-    private var acc = 0
-    private var nb = 0
-    def u(v: Int, bits: Int): Unit = {
-      var k = bits - 1
-      while (k >= 0) {
-        acc = (acc << 1) | ((v >> k) & 1)
-        nb += 1
-        if (nb == 8) { buf += acc.toByte; acc = 0; nb = 0 }
-        k -= 1
-      }
-    }
+  private final class RbspWriter {
+    private val w = new Bytes.BitWriter
+    def u(v: Int, bits: Int): Unit = w.write(v, bits)
     def ue(v: Int): Unit = {
       val code = v + 1
       val bits = 32 - Integer.numberOfLeadingZeros(code)
@@ -97,13 +74,9 @@ object H264 {
     def se(v: Int): Unit = ue(if (v > 0) 2 * v - 1 else -2 * v)
     /** pcm_alignment_zero_bit emission: zero-pad to a byte boundary
       * (NOT the rbsp stop bit — I_PCM samples follow). */
-    def alignZero(): Unit = while (nb != 0) u(0, 1)
+    def alignZero(): Unit = w.align()
     /** rbsp_trailing_bits: stop bit + zero pad to a byte boundary. */
-    def trailing(): Array[Byte] = {
-      u(1, 1)
-      if (nb > 0) { buf += (acc << (8 - nb)).toByte; acc = 0; nb = 0 }
-      buf.toArray
-    }
+    def trailing(): Array[Byte] = { u(1, 1); w.toByteArray }
   }
 
   // ── emulation prevention (§7.3.1 / §7.4.1) ──────────────────────
@@ -150,7 +123,7 @@ object H264 {
     val mbH = (height + 15) / 16
     val cropR = (mbW * 16 - width) / 2
     val cropB = (mbH * 16 - height) / 2
-    val w = new BitWriter
+    val w = new RbspWriter
     w.u(66, 8)          // profile_idc: baseline
     w.u(0, 8)           // constraint flags + reserved
     w.u(30, 8)          // level_idc 3.0
@@ -173,7 +146,7 @@ object H264 {
   /** Parse an SPS RBSP to (width, height); (−1, −1) on malformed
     * input. */
   private[operators] def parseSps(rbsp: Array[Byte]): (Int, Int) = {
-    val r = new BitReader(rbsp)
+    val r = new RbspReader(rbsp)
     val profile = r.u(8)
     r.u(8) // constraint flags
     r.u(8) // level
@@ -239,7 +212,7 @@ object H264 {
 
   /** Minimal PPS (entropy_coding = CAVLC, no extras). */
   def buildPps(): Array[Byte] = {
-    val w = new BitWriter
+    val w = new RbspWriter
     w.ue(0); w.ue(0) // pps id, sps id
     w.u(0, 1)        // entropy_coding_mode_flag: CAVLC
     w.u(0, 1)        // bottom_field_pic_order_in_frame_present
@@ -316,7 +289,7 @@ object H264 {
   def buildIPcmSlice(wMbs: Int, hMbs: Int, luma: Int => Int,
       cb: (Int, Int) => Int, cr: (Int, Int) => Int): Array[Byte] = {
     require(wMbs > 0 && hMbs > 0)
-    val w = new BitWriter
+    val w = new RbspWriter
     w.ue(0)      // first_mb_in_slice
     w.ue(7)      // slice_type: I (all slices of the picture are I)
     w.ue(0)      // pic_parameter_set_id
@@ -377,7 +350,7 @@ object H264 {
     val y = new Array[Byte](w * h)
     val cbP = new Array[Byte]((w / 2) * (h / 2))
     val crP = new Array[Byte]((w / 2) * (h / 2))
-    val r = new BitReader(idr)
+    val r = new RbspReader(idr)
     // slice header, mirroring buildIPcmSlice's field schedule
     if (r.ue() != 0) return None            // first_mb_in_slice
     val st = r.ue()                         // slice_type ∈ {2, 7}: I

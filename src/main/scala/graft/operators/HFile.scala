@@ -52,15 +52,6 @@ object HFile {
 
   final case class Cell(row: Array[Byte], value: Array[Byte])
 
-  private def be16(b: Array[Byte], o: Int): Int =
-    ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
-  private def be32(b: Array[Byte], o: Int): Int =
-    ((b(o) & 0xff) << 24) | ((b(o + 1) & 0xff) << 16) |
-      ((b(o + 2) & 0xff) << 8) | (b(o + 3) & 0xff)
-  private def be64(b: Array[Byte], o: Int): Long =
-    ((be32(b, o).toLong & 0xffffffffL) << 32) |
-      (be32(b, o + 4).toLong & 0xffffffffL)
-
   /** Hadoop WritableUtils vint/vlong: one byte for -112..127;
     * otherwise a length/sign prefix byte then big-endian bytes. */
   private def readVLong(b: Array[Byte], o: Int): Option[(Long, Int)] = {
@@ -106,11 +97,11 @@ object HFile {
     // LONG arithmetic throughout: crafted 0x7fffffff-class sizes
     // must fail the bounds checks, not wrap into throws (the
     // None-on-malformation contract every parser here keeps)
-    val onDiskNoHdr = be32(b, off + 8).toLong
-    val uncompNoHdr = be32(b, off + 12)
+    val onDiskNoHdr = Bytes.be32(b, off + 8).toLong
+    val uncompNoHdr = Bytes.be32(b, off + 12)
     val checksumType = b(off + 24) & 0xff
-    val bytesPerChecksum = be32(b, off + 25).toLong
-    val onDiskDataWithHdr = be32(b, off + 29).toLong
+    val bytesPerChecksum = Bytes.be32(b, off + 25).toLong
+    val onDiskDataWithHdr = Bytes.be32(b, off + 29).toLong
     if (onDiskNoHdr < 0 || uncompNoHdr < 0 ||
       onDiskDataWithHdr < HeaderSize) return None
     val end = off + HeaderSize + onDiskNoHdr
@@ -135,7 +126,7 @@ object HFile {
         }
         crc.update(b, cs.toInt, (ce - cs).toInt)
         if (crc.getValue.toInt !=
-          be32(b, (off + onDiskDataWithHdr + 4 * c).toInt))
+          Bytes.be32(b, (off + onDiskDataWithHdr + 4 * c).toInt))
           return None
         c += 1
       }
@@ -208,7 +199,7 @@ object HFile {
   /** All cells of an HFile, in file (key) order. */
   def parse(data: Array[Byte]): Option[Seq[Cell]] = {
     if (data.length < 16) return None
-    val ver = be32(data, data.length - 4)
+    val ver = Bytes.be32(data, data.length - 4)
     val major = ver & 0x00ffffff
     if (major < 2 || major > 3) return None
     // locate the trailer by magic within the final 4 KiB
@@ -272,8 +263,8 @@ object HFile {
     var e = 0L
     while (e < dataIndexCount) {
       if (p + 12 > idx.length) return None
-      val off = be64(idx, p)
-      val sz = be32(idx, p + 8)
+      val off = Bytes.be64(idx, p)
+      val sz = Bytes.be32(idx, p + 8)
       p += 12
       val (klen, used) = readVLong(idx, p).getOrElse(return None)
       if (klen < 0 || p + used + klen > idx.length) return None
@@ -296,7 +287,7 @@ object HFile {
         val (blk, _) = readBlock(data, off.toInt, magic,
           codec == 1L).getOrElse(return None)
         if (blk.length < 8) return None
-        val n = be32(blk, 0)
+        val n = Bytes.be32(blk, 0)
         if (n < 1 || n > (1 << 20)) return None
         total += n
         if (total > (1L << 20)) return None
@@ -306,10 +297,10 @@ object HFile {
         if (entBase > blk.length) return None
         var k = 0
         while (k < n) {
-          val eo = be32(blk, 4 + 4 * k)
+          val eo = Bytes.be32(blk, 4 + 4 * k)
           val at = entBase + eo
           if (eo < 0 || at + 12 > blk.length) return None
-          next += ((be64(blk, at.toInt), be32(blk, at.toInt + 8)))
+          next += ((Bytes.be64(blk, at.toInt), Bytes.be32(blk, at.toInt + 8)))
           k += 1
         }
       }
@@ -324,11 +315,11 @@ object HFile {
       var q = 0
       while (q < blk.length) {
         if (q + 8 > blk.length) return None
-        val klen = be32(blk, q)
-        val vlen = be32(blk, q + 4)
+        val klen = Bytes.be32(blk, q)
+        val vlen = Bytes.be32(blk, q + 4)
         if (klen < 11 || vlen < 0 ||
           q + 8 + klen + vlen > blk.length) return None
-        val rowLen = be16(blk, q + 8)
+        val rowLen = Bytes.be16(blk, q + 8)
         if (2 + rowLen + 1 > klen - 9) return None
         val row = java.util.Arrays.copyOfRange(blk, q + 10,
           q + 10 + rowLen)
@@ -369,14 +360,12 @@ object HFile {
       (onDiskDataWithHdr + bytesPerChecksum - 1) / bytesPerChecksum
     val hdr = new java.io.ByteArrayOutputStream(HeaderSize)
     hdr.write(magic, 0, 8)
-    def i32(v: Int): Unit = (3 to 0 by -1).foreach(k =>
-      hdr.write((v >> (8 * k)) & 0xff))
-    i32(body.length + 4 * nChunks) // onDiskSizeWithoutHeader
-    i32(payload.length) // uncompressedSizeWithoutHeader
+    Bytes.putBe32(hdr, body.length + 4 * nChunks) // onDiskSizeWithoutHeader
+    Bytes.putBe32(hdr, payload.length) // uncompressedSizeWithoutHeader
     (7 to 0 by -1).foreach(_ => hdr.write(0xff)) // prevOffset -1
     hdr.write(2) // checksum type CRC32C
-    i32(bytesPerChecksum)
-    i32(onDiskDataWithHdr)
+    Bytes.putBe32(hdr, bytesPerChecksum)
+    Bytes.putBe32(hdr, onDiskDataWithHdr)
     val withHdr = hdr.toByteArray ++ body
     require(withHdr.length == onDiskDataWithHdr)
     buf.write(withHdr, 0, withHdr.length)
@@ -387,7 +376,7 @@ object HFile {
       val crc = new java.util.zip.CRC32C()
       crc.update(withHdr, cs, ce - cs)
       val v = crc.getValue.toInt
-      (3 to 0 by -1).foreach(k => buf.write((v >> (8 * k)) & 0xff))
+      Bytes.putBe32(buf, v)
       c += 1
     }
     start
@@ -421,9 +410,7 @@ object HFile {
       val klen = 2 + row.length + 1 + 8 + 1 // no family/qualifier
       val out = new java.io.ByteArrayOutputStream(
         8 + klen + value.length)
-      def i32(v: Int): Unit = (3 to 0 by -1).foreach(k =>
-        out.write((v >> (8 * k)) & 0xff))
-      i32(klen); i32(value.length)
+      Bytes.putBe32(out, klen); Bytes.putBe32(out, value.length)
       out.write((row.length >> 8) & 0xff)
       out.write(row.length & 0xff)
       out.write(row, 0, row.length)
@@ -456,7 +443,7 @@ object HFile {
       if (firstKey == null) {
         // the index key = the cell's KEY bytes (row-length..type)
         firstKey = java.util.Arrays.copyOfRange(cb, 8,
-          8 + (be32(cb, 0)))
+          8 + (Bytes.be32(cb, 0)))
       }
       cur.write(cb, 0, cb.length)
       entryCount += 1
@@ -471,18 +458,15 @@ object HFile {
       if (indexLevels == 1) idxEntries
       else idxEntries.grouped(leafIndexCap).toSeq.map { g =>
         val lp = new java.io.ByteArrayOutputStream(256)
-        def i32(v: Int): Unit = (3 to 0 by -1).foreach(k =>
-          lp.write((v >> (8 * k)) & 0xff))
-        i32(g.length)
+        Bytes.putBe32(lp, g.length)
         var rel = 0
         g.foreach { e =>
-          i32(rel); rel += 12 + e.firstKey.length
+          Bytes.putBe32(lp, rel); rel += 12 + e.firstKey.length
         }
-        i32(rel) // the (n+1)-th secondary offset: total bytes
+        Bytes.putBe32(lp, rel) // the (n+1)-th secondary offset: total bytes
         g.foreach { e =>
-          (7 to 0 by -1).foreach(k =>
-            lp.write(((e.off >> (8 * k)) & 0xff).toInt))
-          i32(e.size)
+          Bytes.putBe64(lp, e.off)
+          Bytes.putBe32(lp, e.size)
           lp.write(e.firstKey, 0, e.firstKey.length)
         }
         val off = writeBlockTo(buf, LeafIdxMagic, lp.toByteArray, gz)
@@ -491,10 +475,8 @@ object HFile {
     val loadOnOpen = buf.size().toLong
     val idxPayload = new java.io.ByteArrayOutputStream(256)
     rootEntries.foreach { e =>
-      (7 to 0 by -1).foreach(k =>
-        idxPayload.write(((e.off >> (8 * k)) & 0xff).toInt))
-      (3 to 0 by -1).foreach(k =>
-        idxPayload.write((e.size >> (8 * k)) & 0xff))
+      Bytes.putBe64(idxPayload, e.off)
+      Bytes.putBe32(idxPayload, e.size)
       writeVLong(idxPayload, e.firstKey.length.toLong)
       idxPayload.write(e.firstKey, 0, e.firstKey.length)
     }
@@ -507,21 +489,21 @@ object HFile {
     t.write(TrailerMagic, 0, 8)
     t.write(PbMagic, 0, 4)
     val proto = new java.io.ByteArrayOutputStream(64)
-    import Protobuf.{writeTag, writeVarint}
-    writeTag(proto, 1, 0); writeVarint(proto, fileInfoOffset)
-    writeTag(proto, 2, 0); writeVarint(proto, loadOnOpen)
+    import Protobuf.writeTag
+    writeTag(proto, 1, 0); Bytes.putVarint(proto, fileInfoOffset)
+    writeTag(proto, 2, 0); Bytes.putVarint(proto, loadOnOpen)
     writeTag(proto, 5, 0)
-    writeVarint(proto, rootEntries.length.toLong)
-    writeTag(proto, 6, 0); writeVarint(proto, 0L) // meta index
-    writeTag(proto, 7, 0); writeVarint(proto, entryCount)
+    Bytes.putVarint(proto, rootEntries.length.toLong)
+    writeTag(proto, 6, 0); Bytes.putVarint(proto, 0L) // meta index
+    writeTag(proto, 7, 0); Bytes.putVarint(proto, entryCount)
     writeTag(proto, 8, 0)
-    writeVarint(proto, indexLevels.toLong)
+    Bytes.putVarint(proto, indexLevels.toLong)
     writeTag(proto, 9, 0)
-    writeVarint(proto, math.max(firstDataOff, 0L))
+    Bytes.putVarint(proto, math.max(firstDataOff, 0L))
     writeTag(proto, 10, 0)
-    writeVarint(proto, math.max(lastDataOff, 0L))
+    Bytes.putVarint(proto, math.max(lastDataOff, 0L))
     writeTag(proto, 12, 0)
-    writeVarint(proto, if (gz) 1L else 2L) // GZ / NONE
+    Bytes.putVarint(proto, if (gz) 1L else 2L) // GZ / NONE
     val pb = proto.toByteArray
     t.write(pb, 0, pb.length)
     while (t.size() < TrailerSize - 4) t.write(0)

@@ -55,25 +55,6 @@ object Hdf5 {
       arr: Npy.Arr)
 
   // ---------------------------------------------------------------
-  // Byte helpers
-  // ---------------------------------------------------------------
-
-  private def u16(d: Array[Byte], o: Int): Int =
-    (d(o) & 0xff) | ((d(o + 1) & 0xff) << 8)
-  private def u32(d: Array[Byte], o: Int): Long = {
-    var v = 0L
-    var i = 0
-    while (i < 4) { v |= (d(o + i) & 0xffL) << (8 * i); i += 1 }
-    v
-  }
-  private def u64(d: Array[Byte], o: Int): Long = {
-    var v = 0L
-    var i = 0
-    while (i < 8) { v |= (d(o + i) & 0xffL) << (8 * i); i += 1 }
-    v
-  }
-
-  // ---------------------------------------------------------------
   // Reader
   // ---------------------------------------------------------------
 
@@ -100,12 +81,9 @@ object Hdf5 {
     var p = off
     var rem = len
     while (rem > 12) {
-      a += (d(p) & 0xff) | ((d(p + 1) & 0xff) << 8) |
-        ((d(p + 2) & 0xff) << 16) | ((d(p + 3) & 0xff) << 24)
-      b += (d(p + 4) & 0xff) | ((d(p + 5) & 0xff) << 8) |
-        ((d(p + 6) & 0xff) << 16) | ((d(p + 7) & 0xff) << 24)
-      c += (d(p + 8) & 0xff) | ((d(p + 9) & 0xff) << 8) |
-        ((d(p + 10) & 0xff) << 16) | ((d(p + 11) & 0xff) << 24)
+      a += Bytes.le32(d, p)
+      b += Bytes.le32(d, p + 4)
+      c += Bytes.le32(d, p + 8)
       // mix
       a -= c; a ^= rot(c, 4); c += b
       b -= a; b ^= rot(a, 6); a += c
@@ -201,7 +179,7 @@ object Hdf5 {
     if (nameLen < 1 || nameLen > 4096 ||
       p + nameLen + 8 > end) return None
     val name = new String(d, p, nameLen.toInt, "UTF-8")
-    Some((name, u64(d, p + nameLen.toInt)))
+    Some((name, Bytes.le64(d, p + nameLen.toInt)))
   }
 
   /** One message body shared by the v1 and v2 framers; returns
@@ -224,7 +202,7 @@ object Hdf5 {
           case _ => return false
         }
         if (off + rank * 8 > end) return false
-        acc.dims = (0 until rank).map(i => u64(d, off + 8 * i))
+        acc.dims = (0 until rank).map(i => Bytes.le64(d, off + 8 * i))
       case 0x0003 => // datatype
         if (mSize < 8) return false
         val cv = d(body) & 0xff
@@ -232,7 +210,7 @@ object Hdf5 {
         val clazz = cv & 0xf
         if (ver < 1 || ver > 3) return false
         val bits0 = d(body + 1) & 0xff
-        val size = u32(d, body + 4).toInt
+        val size = Bytes.le32u(d, body + 4).toInt
         val big = (bits0 & 1) == 1
         clazz match {
           case 0 => // fixed-point
@@ -261,21 +239,21 @@ object Hdf5 {
         val clazz = d(body + 1) & 0xff
         clazz match {
           case 0 => // compact (same fields in v3 and v4)
-            val sz = u16(d, body + 2)
+            val sz = Bytes.le16(d, body + 2)
             if (body + 4 + sz > end) return false
             acc.layout = Some(Layout(0, 0L, sz.toLong, Seq.empty,
               java.util.Arrays.copyOfRange(d, body + 4,
                 body + 4 + sz)))
           case 1 => // contiguous (same fields)
-            acc.layout = Some(Layout(1, u64(d, body + 2),
-              u64(d, body + 10), Seq.empty, null))
+            acc.layout = Some(Layout(1, Bytes.le64(d, body + 2),
+              Bytes.le64(d, body + 10), Seq.empty, null))
           case 2 if ver == 3 => // chunked, v1-btree indexed
             val dimensionality = d(body + 2) & 0xff
-            val bt = u64(d, body + 3)
+            val bt = Bytes.le64(d, body + 3)
             val nd = dimensionality - 1
             if (nd < 0 || nd > MaxRank) return false
             val cd = (0 until nd).map(i =>
-              u32(d, body + 11 + 4 * i).toInt)
+              Bytes.le32u(d, body + 11 + 4 * i).toInt)
             // last u32 is the element size; cross-checked later
             acc.layout = Some(Layout(2, bt, 0L, cd, null))
           case 2 => // v4 chunked: flags, dims, chunk-index type
@@ -308,31 +286,31 @@ object Hdf5 {
                 var filteredSize = 0L
                 if ((flags & 0x02) != 0) { // filtered single chunk
                   if (p + 12 > end) return false
-                  filteredSize = u64(d, p)
+                  filteredSize = Bytes.le64(d, p)
                   p += 8 + 4 // size + filter mask
                 }
                 if (p + 8 > end) return false
-                acc.layout = Some(Layout(2, u64(d, p), filteredSize,
+                acc.layout = Some(Layout(2, Bytes.le64(d, p), filteredSize,
                   cd, null, chunkIndex = 1))
               case 2 => // implicit: chunks contiguous, unfiltered
                 if (p + 8 > end) return false
-                acc.layout = Some(Layout(2, u64(d, p), 0L, cd, null,
+                acc.layout = Some(Layout(2, Bytes.le64(d, p), 0L, cd, null,
                   chunkIndex = 2))
               case 3 => // fixed array: page bits byte + header addr
                 if (p + 9 > end) return false
-                acc.layout = Some(Layout(2, u64(d, p + 1), 0L, cd,
+                acc.layout = Some(Layout(2, Bytes.le64(d, p + 1), 0L, cd,
                   null, chunkIndex = 3))
               case 4 => // extensible array (one unlimited dim):
                 // max bits, index elems, min ptrs, min elems,
                 // page bits — all live in the EAHD too; the
                 // header is authoritative on read
                 if (p + 13 > end) return false
-                acc.layout = Some(Layout(2, u64(d, p + 5), 0L, cd,
+                acc.layout = Some(Layout(2, Bytes.le64(d, p + 5), 0L, cd,
                   null, chunkIndex = 4))
               case 5 => // v2 b-tree (several unlimited dims):
                 // node size(4) + split(1) + merge(1) + addr
                 if (p + 14 > end) return false
-                acc.layout = Some(Layout(2, u64(d, p + 6), 0L, cd,
+                acc.layout = Some(Layout(2, Bytes.le64(d, p + 6), 0L, cd,
                   null, chunkIndex = 5))
               case _ => return false // unknown index: reject
             }
@@ -347,19 +325,19 @@ object Hdf5 {
         var i = 0
         while (i < nf) {
           if (fp + 4 > end) return false
-          val fid = u16(d, fp)
+          val fid = Bytes.le16(d, fp)
           fp += 2
           val nameLen =
             if (ver == 1 || fid >= 256) {
               if (fp + 2 > end) return false
-              val n0 = u16(d, fp); fp += 2; n0
+              val n0 = Bytes.le16(d, fp); fp += 2; n0
             } else 0
           if (fp + 4 > end) return false
-          val nValues = u16(d, fp + 2)
+          val nValues = Bytes.le16(d, fp + 2)
           fp += 4
           if (fp + nameLen + 4 * nValues > end) return false
           val values = (0 until nValues).map(j =>
-            u32(d, fp + nameLen + 4 * j))
+            Bytes.le32u(d, fp + nameLen + 4 * j))
           // deflate, shuffle and fletcher32 decode for real;
           // szip/nbit/scaleoffset would mis-read → reject
           if (fid == 1 || fid == 2 || fid == 3)
@@ -371,19 +349,19 @@ object Hdf5 {
         }
       case 0x0011 => // symbol table (v1 group)
         if (mSize < 16) return false
-        acc.group = Some((u64(d, body), u64(d, body + 8)))
+        acc.group = Some((Bytes.le64(d, body), Bytes.le64(d, body + 8)))
       case 0x0002 => // link info (v2 group marker)
         if (mSize < 2) return false
         val flags = d(body + 1) & 0xff
         var p = body + 2
         if ((flags & 0x01) != 0) p += 8 // max creation index
         if (p + 16 > end) return false
-        val fheap = u64(d, p)
+        val fheap = Bytes.le64(d, p)
         if (fheap != Undef) {
           // DENSE link storage (late r14): the links live as
           // fractal-heap objects indexed by a name-order v2
           // b-tree — walk the index, resolve each heap id
-          val nameBt = u64(d, p + 8)
+          val nameBt = Bytes.le64(d, p + 8)
           val ls = denseLinks(d, fheap, nameBt)
             .getOrElse(return false)
           ls.foreach(acc.links += _)
@@ -406,9 +384,9 @@ object Hdf5 {
     val d = r.d
     val base = addr.toInt
     if ((d(base) & 0xff) != 1) return None // header version 1
-    val nMsgs = u16(d, base + 2)
+    val nMsgs = Bytes.le16(d, base + 2)
     if (nMsgs > 4096) return None
-    val hdrSize = u32(d, base + 8)
+    val hdrSize = Bytes.le32u(d, base + 8)
     val acc = new MsgAcc
 
     // message blocks: (start, length); continuations append
@@ -423,13 +401,13 @@ object Hdf5 {
       val end = (bStart + bLen).toInt
       while (p + 8 <= end && seen < nMsgs) {
         guard += 1
-        val mType = u16(d, p)
-        val mSize = u16(d, p + 2)
+        val mType = Bytes.le16(d, p)
+        val mSize = Bytes.le16(d, p + 2)
         val body = p + 8
         if (body + mSize > end) return None
         if (mType == 0x0010) { // continuation (framer-specific)
           if (mSize < 16) return None
-          blocks = (u64(d, body), u64(d, body + 8)) :: blocks
+          blocks = (Bytes.le64(d, body), Bytes.le64(d, body + 8)) :: blocks
         } else if (!handleMsg(d, mType, body, mSize, end, acc))
           return None
         seen += 1
@@ -474,20 +452,20 @@ object Hdf5 {
       val (cs, ce, ckBase) = chunks.head
       chunks = chunks.tail
       val want = lookup3(d, ckBase, ce - ckBase)
-      if (u32(d, ce) != want) return None // chunk checksum
+      if (Bytes.le32u(d, ce) != want) return None // chunk checksum
       var q = cs
       val msgHdr = if (trackOrder) 6 else 4
       while (q + msgHdr <= ce) {
         guard += 1
         val mType = d(q) & 0xff
-        val mSize = u16(d, q + 1)
+        val mSize = Bytes.le16(d, q + 1)
         // byte 3 = message flags; +2 creation order if tracked
         val body = q + msgHdr
         if (body + mSize > ce) return None
         if (mType == 0x10) { // continuation → OCHK block
           if (mSize < 16) return None
-          val off = u64(d, body)
-          val len = u64(d, body + 8)
+          val off = Bytes.le64(d, body)
+          val len = Bytes.le64(d, body + 8)
           if (len < 12 || !r.check(off, len)) return None
           val ob = off.toInt
           if (d(ob) != 'O' || d(ob + 1) != 'C' || d(ob + 2) != 'H' ||
@@ -558,11 +536,8 @@ object Hdf5 {
         if (cur.length < 4) return None
         val n = cur.length - 4
         val want = fletcher32(cur, 0, n)
-        val le = (cur(n) & 0xffL) | ((cur(n + 1) & 0xffL) << 8) |
-          ((cur(n + 2) & 0xffL) << 16) | ((cur(n + 3) & 0xffL) << 24)
-        val be = (cur(n + 3) & 0xffL) | ((cur(n + 2) & 0xffL) << 8) |
-          ((cur(n + 1) & 0xffL) << 16) | ((cur(n) & 0xffL) << 24)
-        if (want != le && want != be) return None
+        if (want != Bytes.le32u(cur, n) && want != Bytes.be32u(cur, n))
+          return None
         cur = java.util.Arrays.copyOfRange(cur, 0, n)
       case (1, _) => // deflate: everything inside is size-preserving
         cur = inflate(cur, 0, cur.length, chunkBytes)
@@ -585,8 +560,8 @@ object Hdf5 {
     val h = heapAddr.toInt
     if (d(h) != 'H' || d(h + 1) != 'E' || d(h + 2) != 'A' ||
       d(h + 3) != 'P') return None
-    val dataAddr = u64(d, h + 24)
-    val segSize = u64(d, h + 8)
+    val dataAddr = Bytes.le64(d, h + 24)
+    val segSize = Bytes.le64(d, h + 8)
     if (offset < 0 || offset >= segSize ||
       !r.check(dataAddr + offset, 1)) return None
     var p = (dataAddr + offset).toInt
@@ -612,7 +587,7 @@ object Hdf5 {
       d(b + 3) != 'E') return None
     if ((d(b + 4) & 0xff) != 0) return None // node type 0 = group
     val level = d(b + 5) & 0xff
-    val n = u16(d, b + 6)
+    val n = Bytes.le16(d, b + 6)
     if (n > 4096) return None
     val out = Seq.newBuilder[(Long, Long)]
     // layout: 2k+1 keys interleaved with 2k children:
@@ -621,7 +596,7 @@ object Hdf5 {
     var i = 0
     while (i < n) {
       if (!r.check(p.toLong, 16)) return None
-      val child = u64(d, p)
+      val child = Bytes.le64(d, p)
       if (level > 0) {
         out ++= groupEntries(r, child, heapAddr, seen)
           .getOrElse(return None)
@@ -631,13 +606,13 @@ object Hdf5 {
         val s = child.toInt
         if (d(s) != 'S' || d(s + 1) != 'N' || d(s + 2) != 'O' ||
           d(s + 3) != 'D') return None
-        val nSyms = u16(d, s + 6)
+        val nSyms = Bytes.le16(d, s + 6)
         if (nSyms > 4096 || !r.check(child + 8, nSyms * 40L))
           return None
         var j = 0
         while (j < nSyms) {
           val e = s + 8 + j * 40
-          out += ((u64(d, e), u64(d, e + 8)))
+          out += ((Bytes.le64(d, e), Bytes.le64(d, e + 8)))
           j += 1
         }
       }
@@ -661,7 +636,7 @@ object Hdf5 {
       d(b + 3) != 'E') return None
     if ((d(b + 4) & 0xff) != 1) return None // node type 1 = chunks
     val level = d(b + 5) & 0xff
-    val n = u16(d, b + 6)
+    val n = Bytes.le16(d, b + 6)
     if (n > 65536) return None
     val keySize = 8 + 8 * (rank + 1) // size+mask + (rank+1) offsets
     val out = Seq.newBuilder[(Seq[Long], Int, Long, Long)]
@@ -669,10 +644,10 @@ object Hdf5 {
     var i = 0
     while (i < n) {
       if (!r.check(p.toLong, keySize.toLong + 8)) return None
-      val size = u32(d, p).toInt
-      val mask = u32(d, p + 4)
-      val offs = (0 until rank).map(k => u64(d, p + 8 + 8 * k))
-      val child = u64(d, p + keySize)
+      val size = Bytes.le32u(d, p).toInt
+      val mask = Bytes.le32u(d, p + 4)
+      val offs = (0 until rank).map(k => Bytes.le64(d, p + 8 + 8 * k))
+      val child = Bytes.le64(d, p + keySize)
       if (level > 0)
         out ++= chunkEntries(r, child, rank, seen)
           .getOrElse(return None)
@@ -751,9 +726,9 @@ object Hdf5 {
     if (clientId != (if (filtered) 1 else 0)) return None
     val entrySize = d(h + 6) & 0xff
     val pageBits = d(h + 7) & 0xff
-    val maxEntries = u64(d, h + 8)
-    val dbAddr = u64(d, h + 16)
-    if (u32(d, h + 24) != lookup3(d, h, 24)) return None
+    val maxEntries = Bytes.le64(d, h + 8)
+    val dbAddr = Bytes.le64(d, h + 16)
+    if (Bytes.le32u(d, h + 24) != lookup3(d, h, 24)) return None
     val nChunks = grid.product
     if (maxEntries != nChunks) return None
     if (nChunks > (1L << 22)) return None // crafted-grid bomb
@@ -778,13 +753,13 @@ object Hdf5 {
       d(b + 3) != 'B') return None
     if ((d(b + 4) & 0xff) != 0) return None
     if ((d(b + 5) & 0xff) != clientId) return None
-    if (u64(d, b + 6) != hdrAddr) return None
+    if (Bytes.le64(d, b + 6) != hdrAddr) return None
     if (!paged) {
-      if (u32(d, (dbAddr + dbLen - 4).toInt) !=
+      if (Bytes.le32u(d, (dbAddr + dbLen - 4).toInt) !=
         lookup3(d, b, (dbLen - 4).toInt)) return None
     } else {
       // prefix (incl. bitmask) carries its own checksum
-      if (u32(d, (dbAddr + preLen).toInt) !=
+      if (Bytes.le32u(d, (dbAddr + preLen).toInt) !=
         lookup3(d, b, preLen.toInt)) return None
     }
     // page base offsets + lazy per-page checksum verification
@@ -811,7 +786,7 @@ object Hdf5 {
         if (pageOk(p) == 0) {
           val pLen = math.min(pageElems,
             maxEntries - p.toLong * pageElems) * entrySize
-          if (u32(d, (pageBase(p) + pLen).toInt) !=
+          if (Bytes.le32u(d, (pageBase(p) + pLen).toInt) !=
             lookup3(d, pageBase(p).toInt, pLen.toInt)) return None
           pageOk(p) = 1
         }
@@ -824,7 +799,7 @@ object Hdf5 {
       val eOpt = entryAt(i).getOrElse(return None)
       if (eOpt >= 0) {
         val e = eOpt
-        val addr = u64(d, e)
+        val addr = Bytes.le64(d, e)
         if (addr != Undef) {
           val (stored, mask) =
             if (clientId == 1) {
@@ -833,7 +808,7 @@ object Hdf5 {
               var j = 0
               while (j < szBytes) { sz |= (d(e + 8 + j) & 0xffL) <<
                 (8 * j); j += 1 }
-              (sz.toInt, u32(d, e + 8 + szBytes))
+              (sz.toInt, Bytes.le32u(d, e + 8 + szBytes))
             } else (chunkBytes, 0L)
           out += ((offs(i.toInt), stored, mask, addr))
         }
@@ -879,8 +854,8 @@ object Hdf5 {
     val pageBits = d(h + 11) & 0xff
     // 6 × u64 stats skipped (reader derives everything), then the
     // index block address
-    val iblkAddr = u64(d, h + 60)
-    if (u32(d, h + 68) != lookup3(d, h, 68)) return None
+    val iblkAddr = Bytes.le64(d, h + 60)
+    if (Bytes.le32u(d, h + 68) != lookup3(d, h, 68)) return None
     if (elemSize < 8 || elemSize > 32) return None
     if (maxBits < 1 || maxBits > 64) return None
     if (minElems < 1 || !isPow2(minElems)) return None
@@ -913,15 +888,15 @@ object Hdf5 {
       d(ib + 3) != 'B') return None
     if ((d(ib + 4) & 0xff) != 0 ||
       (d(ib + 5) & 0xff) != clientId) return None
-    if (u64(d, ib + 6) != hdrAddr) return None
-    if (u32(d, (iblkAddr + iblkLen - 4).toInt) !=
+    if (Bytes.le64(d, ib + 6) != hdrAddr) return None
+    if (Bytes.le32u(d, (iblkAddr + iblkLen - 4).toInt) !=
       lookup3(d, ib, (iblkLen - 4).toInt)) return None
     val elemsOff = ib + 14
     val dblkAddrsOff = elemsOff + idxBlkElems * elemSize
     val sblkAddrsOff = dblkAddrsOff + ndblkAddrs.toInt * 8
     val pageElems = 1L << pageBits
     def decodeElem(at: Int): Option[(Long, Int, Long)] = {
-      val addr = u64(d, at)
+      val addr = Bytes.le64(d, at)
       if (addr == Undef) None
       else if (clientId == 1) {
         val szBytes = elemSize - 12
@@ -929,7 +904,7 @@ object Hdf5 {
         var j = 0
         while (j < szBytes) {
           sz |= (d(at + 8 + j) & 0xffL) << (8 * j); j += 1 }
-        Some((addr, sz.toInt, u32(d, at + 8 + szBytes)))
+        Some((addr, sz.toInt, Bytes.le32u(d, at + 8 + szBytes)))
       } else Some((addr, chunkBytes, 0L))
     }
     // SECONDARY blocks ("EASB", r14): super block s ≥ iblkNsblks
@@ -947,7 +922,7 @@ object Hdf5 {
       sblkCache.get(s).map(Some(_)).getOrElse {
         val slot = s - iblkNsblks
         if (slot < 0 || slot >= nsblkAddrs) return None
-        val addr = u64(d, sblkAddrsOff + slot * 8)
+        val addr = Bytes.le64(d, sblkAddrsOff + slot * 8)
         if (addr == Undef) {
           sblkCache(s) = None
           return Some(None)
@@ -964,13 +939,13 @@ object Hdf5 {
           d(b + 3) != 'B') return None
         if ((d(b + 4) & 0xff) != 0 ||
           (d(b + 5) & 0xff) != clientId) return None
-        if (u64(d, b + 6) != hdrAddr) return None
+        if (Bytes.le64(d, b + 6) != hdrAddr) return None
         var off = 0L
         var j = 0
         while (j < arrOffSize) {
           off |= (d(b + 14 + j) & 0xffL) << (8 * j); j += 1 }
         if (off != sblkStartIdx(s) + idxBlkElems) return None
-        if (u32(d, (addr + len - 4).toInt) !=
+        if (Bytes.le32u(d, (addr + len - 4).toInt) !=
           lookup3(d, b, (len - 4).toInt)) return None
         val bmpOff = b + 14 + arrOffSize
         val info = SblkInfo(bmpOff + bmpBytes.toInt, bmpOff,
@@ -991,7 +966,7 @@ object Hdf5 {
         s: Int): Option[Dblk] = dblkCache.getOrElseUpdate(dbIdx, {
       val (addr, sbInfo) =
         if (dbIdx < ndblkAddrs)
-          (u64(d, dblkAddrsOff + dbIdx.toInt * 8), null)
+          (Bytes.le64(d, dblkAddrsOff + dbIdx.toInt * 8), null)
         else {
           val sb = sblock(s).getOrElse(return None) match {
             case None => return Some(DbAbsent) // whole sblock absent
@@ -999,7 +974,7 @@ object Hdf5 {
           }
           val slot = dbIdx - sblkStartDblk(s)
           if (slot < 0 || slot >= sb.ndblks) return None
-          (u64(d, sb.dblkOff + slot.toInt * 8), sb)
+          (Bytes.le64(d, sb.dblkOff + slot.toInt * 8), sb)
         }
       if (addr == Undef) Some(DbAbsent)
       else if (nelmts > pageElems) {
@@ -1013,13 +988,13 @@ object Hdf5 {
           d(b + 3) != 'B') return None
         if ((d(b + 4) & 0xff) != 0 ||
           (d(b + 5) & 0xff) != clientId) return None
-        if (u64(d, b + 6) != hdrAddr) return None
+        if (Bytes.le64(d, b + 6) != hdrAddr) return None
         var off = 0L
         var j = 0
         while (j < arrOffSize) {
           off |= (d(b + 14 + j) & 0xffL) << (8 * j); j += 1 }
         if (off != startAbs) return None
-        if (u32(d, (addr + preLen).toInt) !=
+        if (Bytes.le32u(d, (addr + preLen).toInt) !=
           lookup3(d, b, preLen.toInt)) return None
         val npages = nelmts / pageElems
         val pagesLen = npages * (pageElems * elemSize + 4L)
@@ -1034,13 +1009,13 @@ object Hdf5 {
           d(b + 3) != 'B') return None
         if ((d(b + 4) & 0xff) != 0 ||
           (d(b + 5) & 0xff) != clientId) return None
-        if (u64(d, b + 6) != hdrAddr) return None
+        if (Bytes.le64(d, b + 6) != hdrAddr) return None
         var off = 0L
         var j = 0
         while (j < arrOffSize) {
           off |= (d(b + 14 + j) & 0xffL) << (8 * j); j += 1 }
         if (off != startAbs) return None
-        if (u32(d, (addr + len - 4).toInt) !=
+        if (Bytes.le32u(d, (addr + len - 4).toInt) !=
           lookup3(d, b, (len - 4).toInt)) return None
         Some(DbFlat(b + 14 + arrOffSize))
       }
@@ -1059,7 +1034,7 @@ object Hdf5 {
         val pLen = pageElems * elemSize
         val at = db.addr + page * (pLen + 4L)
         if (!r.check(at, pLen + 4)) return None
-        if (u32(d, (at + pLen).toInt) !=
+        if (Bytes.le32u(d, (at + pLen).toInt) !=
           lookup3(d, at.toInt, pLen.toInt)) return None
         Some(at.toInt)
       })
@@ -1124,13 +1099,13 @@ object Hdf5 {
       d(h + 3) != 'D') return None
     if ((d(h + 4) & 0xff) != 0) return None // version
     if ((d(h + 5) & 0xff) != recType) return None
-    val nodeSize = u32(d, h + 6)
+    val nodeSize = Bytes.le32u(d, h + 6)
     val recSize = (d(h + 10) & 0xff) | ((d(h + 11) & 0xff) << 8)
     val depth = (d(h + 12) & 0xff) | ((d(h + 13) & 0xff) << 8)
-    val rootAddr = u64(d, h + 16)
+    val rootAddr = Bytes.le64(d, h + 16)
     val rootNrec = (d(h + 24) & 0xff) | ((d(h + 25) & 0xff) << 8)
-    val totalNrec = u64(d, h + 26)
-    if (u32(d, h + 34) != lookup3(d, h, 34)) return None
+    val totalNrec = Bytes.le64(d, h + 26)
+    if (Bytes.le32u(d, h + 34) != lookup3(d, h, 34)) return None
     if (nodeSize < 64 || nodeSize > (1 << 24)) return None
     if (depth > 16) return None
     if (recSize != expRecSize) return None
@@ -1165,7 +1140,7 @@ object Hdf5 {
           d(b + 3) != 'F') return false
         if ((d(b + 4) & 0xff) != 0 ||
           (d(b + 5) & 0xff) != recType) return false
-        if (u32(d, (addr + used).toInt) !=
+        if (Bytes.le32u(d, (addr + used).toInt) !=
           lookup3(d, b, used.toInt)) return false
         var i = 0
         while (i < nrec) {
@@ -1186,13 +1161,13 @@ object Hdf5 {
           d(b + 3) != 'N') return false
         if ((d(b + 4) & 0xff) != 0 ||
           (d(b + 5) & 0xff) != recType) return false
-        if (u32(d, (addr + used).toInt) !=
+        if (Bytes.le32u(d, (addr + used).toInt) !=
           lookup3(d, b, used.toInt)) return false
         val ptrs0 = b + 6 + nrec * recSize
         var i = 0
         while (i <= nrec) {
           val p0 = ptrs0 + i * ptrSize
-          val cAddr = u64(d, p0)
+          val cAddr = Bytes.le64(d, p0)
           var cNrec = 0L
           var j = 0
           while (j < maxNrecSize) {
@@ -1234,19 +1209,19 @@ object Hdf5 {
     if (d(h) != 'F' || d(h + 1) != 'R' || d(h + 2) != 'H' ||
       d(h + 3) != 'P') return None
     if ((d(h + 4) & 0xff) != 0) return None // version
-    val idLen = u16(d, h + 5)
-    val ioFilterLen = u16(d, h + 7)
+    val idLen = Bytes.le16(d, h + 5)
+    val ioFilterLen = Bytes.le16(d, h + 7)
     if (ioFilterLen != 0) return None // link heaps never filter
     val flags = d(h + 9) & 0xff
-    val maxObj = u32(d, h + 10)
-    val nManaged = u64(d, h + 14 + 8 * 7)
-    val tblWidth = u16(d, h + 110)
-    val startSize = u64(d, h + 112)
-    val maxDirect = u64(d, h + 120)
-    val maxHeapBits = u16(d, h + 128)
-    val rootAddr = u64(d, h + 132)
-    val curRows = u16(d, h + 140)
-    if (u32(d, h + 142) != lookup3(d, h, 142)) return None
+    val maxObj = Bytes.le32u(d, h + 10)
+    val nManaged = Bytes.le64(d, h + 14 + 8 * 7)
+    val tblWidth = Bytes.le16(d, h + 110)
+    val startSize = Bytes.le64(d, h + 112)
+    val maxDirect = Bytes.le64(d, h + 120)
+    val maxHeapBits = Bytes.le16(d, h + 128)
+    val rootAddr = Bytes.le64(d, h + 132)
+    val curRows = Bytes.le16(d, h + 140)
+    if (Bytes.le32u(d, h + 142) != lookup3(d, h, 142)) return None
     if (tblWidth < 1 || tblWidth > 1024) return None
     if (startSize < 256 || maxDirect < startSize ||
       maxDirect > (1L << 24) ||
@@ -1275,7 +1250,7 @@ object Hdf5 {
       if (d(b) != 'F' || d(b + 1) != 'H' || d(b + 2) != 'D' ||
         d(b + 3) != 'B') return false
       if ((d(b + 4) & 0xff) != 0) return false
-      if (u64(d, b + 5) != fheapAddr) return false
+      if (Bytes.le64(d, b + 5) != fheapAddr) return false
       var off = 0L
       var j = 0
       while (j < offBytes) {
@@ -1285,7 +1260,7 @@ object Hdf5 {
         val copy = java.util.Arrays.copyOfRange(d, b,
           b + size.toInt)
         val ckAt = 13 + offBytes
-        val stored = u32(d, b + ckAt)
+        val stored = Bytes.le32u(d, b + ckAt)
         java.util.Arrays.fill(copy, ckAt, ckAt + 4, 0.toByte)
         if (stored != lookup3(copy, 0, copy.length)) return false
       }
@@ -1319,13 +1294,13 @@ object Hdf5 {
         if (d(ib) != 'F' || d(ib + 1) != 'H' || d(ib + 2) != 'I' ||
           d(ib + 3) != 'B') return None
         if ((d(ib + 4) & 0xff) != 0) return None
-        if (u64(d, ib + 5) != fheapAddr) return None
+        if (Bytes.le64(d, ib + 5) != fheapAddr) return None
         var j = 0
         var bOff = 0L
         while (j < offBytes) {
           bOff |= (d(ib + 13 + j) & 0xffL) << (8 * j); j += 1 }
         if (bOff != 0L) return None
-        if (u32(d, (rootAddr + used).toInt) !=
+        if (Bytes.le32u(d, (rootAddr + used).toInt) !=
           lookup3(d, ib, used.toInt)) return None
         var rowStart = 0L
         var row = 0
@@ -1333,7 +1308,7 @@ object Hdf5 {
           val sz = rowSize(row)
           var c = 0
           while (c < tblWidth) {
-            val a = u64(d, ib + ibPrefix + (row * tblWidth + c) * 8)
+            val a = Bytes.le64(d, ib + ibPrefix + (row * tblWidth + c) * 8)
             if (a != Undef) {
               val off = rowStart + c * sz
               if (!checkDirect(a, off, sz)) return None
@@ -1398,14 +1373,14 @@ object Hdf5 {
     if ((d(h + 4) & 0xff) != 0) return None // version
     val recType = d(h + 5) & 0xff
     if (recType != (if (filtered) 11 else 10)) return None
-    val nodeSize = u32(d, h + 6)
+    val nodeSize = Bytes.le32u(d, h + 6)
     val recSize = (d(h + 10) & 0xff) | ((d(h + 11) & 0xff) << 8)
     val depth = (d(h + 12) & 0xff) | ((d(h + 13) & 0xff) << 8)
     // split(1) + merge(1) percents — replay-irrelevant
-    val rootAddr = u64(d, h + 16)
+    val rootAddr = Bytes.le64(d, h + 16)
     val rootNrec = (d(h + 24) & 0xff) | ((d(h + 25) & 0xff) << 8)
-    val totalNrec = u64(d, h + 26)
-    if (u32(d, h + 34) != lookup3(d, h, 34)) return None
+    val totalNrec = Bytes.le64(d, h + 26)
+    if (Bytes.le32u(d, h + 34) != lookup3(d, h, 34)) return None
     if (nodeSize < 64 || nodeSize > (1 << 24)) return None
     if (depth > 16) return None
     val minRec = 8 + 8 * rank
@@ -1434,18 +1409,18 @@ object Hdf5 {
     val out = Seq.newBuilder[(Seq[Long], Int, Long, Long)]
     var seen = 0L
     def record(at: Int): Boolean = {
-      val addr = u64(d, at)
+      val addr = Bytes.le64(d, at)
       val (stored, mask, offBase) =
         if (filtered) {
           var sz = 0L
           var j = 0
           while (j < szBytes) {
             sz |= (d(at + 8 + j) & 0xffL) << (8 * j); j += 1 }
-          (sz.toInt, u32(d, at + 8 + szBytes),
+          (sz.toInt, Bytes.le32u(d, at + 8 + szBytes),
             at + 8 + szBytes + 4)
         } else (chunkBytes, 0L, at + 8)
       val offs = (0 until rank).map { k =>
-        val scaled = u64(d, offBase + k * 8)
+        val scaled = Bytes.le64(d, offBase + k * 8)
         if (scaled < 0 || scaled > Long.MaxValue / cd(k))
           return false
         scaled * cd(k)
@@ -1466,7 +1441,7 @@ object Hdf5 {
           d(b + 3) != 'F') return false
         if ((d(b + 4) & 0xff) != 0 ||
           (d(b + 5) & 0xff) != recType) return false
-        if (u32(d, (addr + used).toInt) !=
+        if (Bytes.le32u(d, (addr + used).toInt) !=
           lookup3(d, b, used.toInt)) return false
         var i = 0
         while (i < nrec) {
@@ -1485,13 +1460,13 @@ object Hdf5 {
           d(b + 3) != 'N') return false
         if ((d(b + 4) & 0xff) != 0 ||
           (d(b + 5) & 0xff) != recType) return false
-        if (u32(d, (addr + used).toInt) !=
+        if (Bytes.le32u(d, (addr + used).toInt) !=
           lookup3(d, b, used.toInt)) return false
         val ptrs0 = b + 6 + nrec * recSize
         var i = 0
         while (i <= nrec) {
           val p0 = ptrs0 + i * ptrSize
-          val cAddr = u64(d, p0)
+          val cAddr = Bytes.le64(d, p0)
           var cNrec = 0L
           var j = 0
           while (j < maxNrecSize) {
@@ -1672,14 +1647,14 @@ object Hdf5 {
         if ((data(13) & 0xff) != 8 || (data(14) & 0xff) != 8)
           return None // 8-byte offsets/lengths only
         // root symbol table entry at offset 56, oha 8 bytes in
-        u64(data, 56 + 8)
+        Bytes.le64(data, 56 + 8)
       case 2 | 3 =>
         // v2/v3: fixed 48-byte layout, lookup3-checksummed; the
         // root is addressed by OBJECT HEADER directly
         if ((data(9) & 0xff) != 8 || (data(10) & 0xff) != 8)
           return None
-        if (u32(data, 44) != lookup3(data, 0, 44)) return None
-        u64(data, 36)
+        if (Bytes.le32u(data, 44) != lookup3(data, 0, 44)) return None
+        Bytes.le64(data, 36)
       case _ => return None // v1 (never written by libhdf5) rejects
     }
     val out = Seq.newBuilder[Dataset]
@@ -1752,11 +1727,6 @@ object Hdf5 {
     private def pad8(): Unit =
       while (buf.size() % 8 != 0) buf.write(0)
     private def w8(v: Int): Unit = buf.write(v & 0xff)
-    private def w16(v: Int): Unit = { w8(v); w8(v >> 8) }
-    private def w32(v: Long): Unit = { var i = 0
-      while (i < 4) { w8(((v >>> (8 * i)) & 0xff).toInt); i += 1 } }
-    private def w64(v: Long): Unit = { var i = 0
-      while (i < 8) { w8(((v >>> (8 * i)) & 0xff).toInt); i += 1 } }
     /** Build one file: datasets under the root group. */
     def build(datasets: Seq[WDataset]): Array[Byte] = {
       require(datasets.nonEmpty, "empty file")
@@ -1767,19 +1737,19 @@ object Hdf5 {
       buf.write(Sig, 0, 8)
       w8(0); w8(0); w8(0); w8(0); w8(0) // versions + reserved
       w8(8); w8(8); w8(0)               // offset/length sizes
-      w16(4); w16(16)                   // leaf k, internal k
-      w32(0L)                           // consistency flags
-      w64(0L)                           // base address
-      w64(Undef)                        // free space
+      Bytes.putLe16(buf, 4); Bytes.putLe16(buf, 16)                   // leaf k, internal k
+      Bytes.putLe32(buf, 0L)                           // consistency flags
+      Bytes.putLe64(buf, 0L)                           // base address
+      Bytes.putLe64(buf, Undef)                        // free space
       val eofAt = pos
-      w64(0L)                           // end of file (patched)
-      w64(Undef)                        // driver info
+      Bytes.putLe64(buf, 0L)                           // end of file (patched)
+      Bytes.putLe64(buf, Undef)                        // driver info
       // root symbol table entry
-      w64(0L)                           // link name offset
+      Bytes.putLe64(buf, 0L)                           // link name offset
       val rootOhaAt = pos
-      w64(0L)                           // object header addr (patched)
-      w32(0L); w32(0L)                  // cache type 0 + reserved
-      w64(0L); w64(0L)                  // scratch
+      Bytes.putLe64(buf, 0L)                           // object header addr (patched)
+      Bytes.putLe32(buf, 0L); Bytes.putLe32(buf, 0L)                  // cache type 0 + reserved
+      Bytes.putLe64(buf, 0L); Bytes.putLe64(buf, 0L)                  // scratch
       val patches = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
 
       // ---- local heap with the names ----
@@ -1799,10 +1769,10 @@ object Hdf5 {
       }
       buf.write("HEAP".getBytes, 0, 4)
       w8(0); w8(0); w8(0); w8(0)
-      w64(heapData.size().toLong)        // data segment size
-      w64(Undef)                         // free list head: none
+      Bytes.putLe64(buf, heapData.size().toLong)        // data segment size
+      Bytes.putLe64(buf, Undef)                         // free list head: none
       val heapDataAddrAt = pos
-      w64(0L)                            // data segment addr (patch)
+      Bytes.putLe64(buf, 0L)                            // data segment addr (patch)
       pad8()
       val heapDataAddr = pos
       patches += ((heapDataAddrAt, heapDataAddr))
@@ -1819,12 +1789,12 @@ object Hdf5 {
       val snodAddr = pos
       buf.write("SNOD".getBytes, 0, 4)
       w8(1); w8(0)
-      w16(sorted.length)
+      Bytes.putLe16(buf, sorted.length)
       sorted.indices.foreach { i =>
-        w64(nameOffs(i))     // link name offset in heap
-        w64(childOhas(i))    // object header address
-        w32(0L); w32(0L)     // cache type + reserved
-        w64(0L); w64(0L)     // scratch
+        Bytes.putLe64(buf, nameOffs(i))     // link name offset in heap
+        Bytes.putLe64(buf, childOhas(i))    // object header address
+        Bytes.putLe32(buf, 0L); Bytes.putLe32(buf, 0L)     // cache type + reserved
+        Bytes.putLe64(buf, 0L); Bytes.putLe64(buf, 0L)     // scratch
       }
       pad8()
 
@@ -1832,35 +1802,29 @@ object Hdf5 {
       val btAddr = pos
       buf.write("TREE".getBytes, 0, 4)
       w8(0); w8(0)           // type 0, level 0
-      w16(1)                 // one child
-      w64(Undef); w64(Undef) // siblings
-      w64(0L)                // key0: lowest name offset
-      w64(snodAddr)          // child
-      w64(nameOffs.last)     // key1
+      Bytes.putLe16(buf, 1)                 // one child
+      Bytes.putLe64(buf, Undef); Bytes.putLe64(buf, Undef) // siblings
+      Bytes.putLe64(buf, 0L)                // key0: lowest name offset
+      Bytes.putLe64(buf, snodAddr)          // child
+      Bytes.putLe64(buf, nameOffs.last)     // key1
       pad8()
 
       // ---- root group object header ----
       val rootOha = pos
       patches += ((rootOhaAt, rootOha))
       w8(1); w8(0)
-      w16(1)                 // one message
-      w32(1L)                // ref count
-      w32(24L)               // header size (one sym-table message)
-      w32(0L)                // pad to 8-align message start
-      w16(0x0011); w16(16); w8(0); w8(0); w8(0); w8(0)
-      w64(btAddr); w64(heapAddr)
+      Bytes.putLe16(buf, 1)                 // one message
+      Bytes.putLe32(buf, 1L)                // ref count
+      Bytes.putLe32(buf, 24L)               // header size (one sym-table message)
+      Bytes.putLe32(buf, 0L)                // pad to 8-align message start
+      Bytes.putLe16(buf, 0x0011); Bytes.putLe16(buf, 16); w8(0); w8(0); w8(0); w8(0)
+      Bytes.putLe64(buf, btAddr); Bytes.putLe64(buf, heapAddr)
 
       patches += ((eofAt, pos))
 
       // apply patches
       val out = buf.toByteArray
-      patches.foreach { case (at, v) =>
-        var i = 0
-        while (i < 8) {
-          out(at.toInt + i) = ((v >>> (8 * i)) & 0xff).toByte
-          i += 1
-        }
-      }
+      patches.foreach { case (at, v) => Bytes.setLe64(out, at.toInt, v) }
       out
     }
 
@@ -1958,9 +1922,7 @@ object Hdf5 {
             if (ds.fletcher) {
               val body = co.toByteArray
               val ck = fletcher32(body, 0, body.length)
-              var i = 0
-              while (i < 4) { co.write(((ck >>> (8 * i)) & 0xff)
-                .toInt); i += 1 }
+              Bytes.putLe32(co, ck)
             }
             pad8()
             val addr = pos
@@ -1982,18 +1944,18 @@ object Hdf5 {
         buf.write("TREE".getBytes, 0, 4)
         w8(1)                    // node type 1
         w8(0)                    // leaf
-        w16(entries.length)
-        w64(Undef); w64(Undef)
+        Bytes.putLe16(buf, entries.length)
+        Bytes.putLe64(buf, Undef); Bytes.putLe64(buf, Undef)
         entries.foreach { case (offs, stored, addr) =>
-          w32(stored.toLong); w32(0L)
-          offs.foreach(w64)
-          w64(0L)                // element-dim offset (always 0)
-          w64(addr)
+          Bytes.putLe32(buf, stored.toLong); Bytes.putLe32(buf, 0L)
+          offs.foreach(Bytes.putLe64(buf, _))
+          Bytes.putLe64(buf, 0L)                // element-dim offset (always 0)
+          Bytes.putLe64(buf, addr)
         }
         // final key
-        w32(0L); w32(0L)
-        ds.dims.foreach(w64)
-        w64(0L)
+        Bytes.putLe32(buf, 0L); Bytes.putLe32(buf, 0L)
+        ds.dims.foreach(Bytes.putLe64(buf, _))
+        Bytes.putLe64(buf, 0L)
         pad8()
       }
 
@@ -2007,11 +1969,7 @@ object Hdf5 {
       val dsp = new java.io.ByteArrayOutputStream()
       dsp.write(1); dsp.write(rank); dsp.write(0); dsp.write(0)
       dsp.write(0); dsp.write(0); dsp.write(0); dsp.write(0)
-      ds.dims.foreach { x =>
-        var i = 0
-        while (i < 8) { dsp.write(((x >>> (8 * i)) & 0xff).toInt)
-          i += 1 }
-      }
+      ds.dims.foreach(Bytes.putLe64(dsp, _))
       msgs += ((0x0001, dsp.toByteArray))
       // datatype
       val big = false
@@ -2036,30 +1994,18 @@ object Hdf5 {
       lay.write(3)
       if (ds.compact) {
         lay.write(0)
-        lay.write(ds.data.length & 0xff)
-        lay.write((ds.data.length >> 8) & 0xff)
+        Bytes.putLe16(lay, ds.data.length)
         lay.write(ds.data, 0, ds.data.length)
       } else if (!chunked) {
         lay.write(1)
-        var i = 0
-        while (i < 8) { lay.write(((dataAddr >>> (8 * i)) & 0xff)
-          .toInt); i += 1 }
-        val dlen = ds.data.length.toLong
-        i = 0
-        while (i < 8) { lay.write(((dlen >>> (8 * i)) & 0xff).toInt)
-          i += 1 }
+        Bytes.putLe64(lay, dataAddr)
+        Bytes.putLe64(lay, ds.data.length)
       } else {
         lay.write(2)
         lay.write(rank + 1)
-        var i = 0
-        while (i < 8) { lay.write(((chunkBt >>> (8 * i)) & 0xff)
-          .toInt); i += 1 }
-        ds.chunkDims.foreach { c =>
-          i = 0
-          while (i < 4) { lay.write(((c >>> (8 * i)) & 0xff)); i += 1 }
-        }
-        i = 0
-        while (i < 4) { lay.write(((sz >>> (8 * i)) & 0xff)); i += 1 }
+        Bytes.putLe64(lay, chunkBt)
+        ds.chunkDims.foreach(Bytes.putLe32(lay, _))
+        Bytes.putLe32(lay, sz)
       }
       msgs += ((0x0008, lay.toByteArray))
       if (chunked) {
@@ -2067,16 +2013,11 @@ object Hdf5 {
         // (fletcher32) — the h5py arrangement
         val fp = new java.io.ByteArrayOutputStream()
         def entry(fid: Int, flags: Int, values: Seq[Int]): Unit = {
-          fp.write(fid & 0xff); fp.write((fid >> 8) & 0xff)
+          Bytes.putLe16(fp, fid)
           fp.write(0); fp.write(0)           // name length 0
-          fp.write(flags & 0xff); fp.write((flags >> 8) & 0xff)
-          fp.write(values.length & 0xff)
-          fp.write((values.length >> 8) & 0xff)
-          values.foreach { v =>
-            var i = 0
-            while (i < 4) { fp.write((v >>> (8 * i)) & 0xff)
-              i += 1 }
-          }
+          Bytes.putLe16(fp, flags)
+          Bytes.putLe16(fp, values.length)
+          values.foreach(Bytes.putLe32(fp, _))
           if (values.length % 2 == 1) { // pad to even values
             fp.write(0); fp.write(0); fp.write(0); fp.write(0)
           }
@@ -2094,12 +2035,12 @@ object Hdf5 {
       val bodySize = msgs.map { case (_, m) =>
         8 + ((m.length + 7) / 8) * 8 }.sum
       w8(1); w8(0)
-      w16(msgs.length)
-      w32(1L)
-      w32(bodySize.toLong)
-      w32(0L)
+      Bytes.putLe16(buf, msgs.length)
+      Bytes.putLe32(buf, 1L)
+      Bytes.putLe32(buf, bodySize.toLong)
+      Bytes.putLe32(buf, 0L)
       msgs.foreach { case (t, m) =>
-        w16(t); w16(m.length); w8(0); w8(0); w8(0); w8(0)
+        Bytes.putLe16(buf, t); Bytes.putLe16(buf, m.length); w8(0); w8(0); w8(0); w8(0)
         buf.write(m, 0, m.length)
         while (buf.size() % 8 != 0) buf.write(0)
       }
@@ -2194,16 +2135,6 @@ object Hdf5 {
     val buf = new java.io.ByteArrayOutputStream(4096)
     (0 until 48).foreach(_ => buf.write(0)) // superblock slot
     def pos: Long = buf.size().toLong
-    def w64b(b: java.io.ByteArrayOutputStream, v: Long): Unit = {
-      var i = 0
-      while (i < 8) { b.write(((v >>> (8 * i)) & 0xff).toInt)
-        i += 1 } }
-    def w32b(b: java.io.ByteArrayOutputStream, v: Long): Unit = {
-      var i = 0
-      while (i < 4) { b.write(((v >>> (8 * i)) & 0xff).toInt)
-        i += 1 } }
-    def w16b(b: java.io.ByteArrayOutputStream, v: Int): Unit = {
-      b.write(v & 0xff); b.write((v >> 8) & 0xff) }
 
     /** Emit one OHDR object header; returns its address. */
     def ohdr(msgs: Seq[(Int, Array[Byte])]): Long = {
@@ -2213,17 +2144,17 @@ object Hdf5 {
       h.write(2)
       h.write(0x02) // flags: 4-byte chunk-0 size, nothing else
       val msgBytes = msgs.map { case (_, m) => 4 + m.length }.sum
-      w32b(h, msgBytes.toLong)
+      Bytes.putLe32(h, msgBytes.toLong)
       msgs.foreach { case (t, m) =>
         h.write(t & 0xff)
-        w16b(h, m.length)
+        Bytes.putLe16(h, m.length)
         h.write(0) // message flags
         h.write(m, 0, m.length)
       }
       val hb = h.toByteArray
       val ck = lookup3(hb, 0, hb.length)
       buf.write(hb, 0, hb.length)
-      w32b(buf, ck)
+      Bytes.putLe32(buf, ck)
       addr
     }
 
@@ -2241,7 +2172,7 @@ object Hdf5 {
       // dataspace v2
       val dsp = new java.io.ByteArrayOutputStream()
       dsp.write(2); dsp.write(rank); dsp.write(0); dsp.write(1)
-      ds.dims.foreach(w64b(dsp, _))
+      ds.dims.foreach(Bytes.putLe64(dsp, _))
       msgs += ((0x0001, dsp.toByteArray))
       // datatype (same rendering as the classic writer)
       val dt = new java.io.ByteArrayOutputStream()
@@ -2263,7 +2194,7 @@ object Hdf5 {
       if (ds.compact) {
         val lay = new java.io.ByteArrayOutputStream()
         lay.write(4); lay.write(0)
-        w16b(lay, ds.data.length)
+        Bytes.putLe16(lay, ds.data.length)
         lay.write(ds.data, 0, ds.data.length)
         msgs += ((0x0008, lay.toByteArray))
       } else if (!chunked) {
@@ -2271,8 +2202,8 @@ object Hdf5 {
         buf.write(ds.data, 0, ds.data.length)
         val lay = new java.io.ByteArrayOutputStream()
         lay.write(4); lay.write(1)
-        w64b(lay, dataAddr)
-        w64b(lay, ds.data.length.toLong)
+        Bytes.putLe64(lay, dataAddr)
+        Bytes.putLe64(lay, ds.data.length.toLong)
         msgs += ((0x0008, lay.toByteArray))
       } else {
         // chunks: shuffle→deflate→fletcher per the knobs, then the
@@ -2296,7 +2227,7 @@ object Hdf5 {
           if (ds.fletcher) {
             val body = co.toByteArray
             val ck = fletcher32(body, 0, body.length)
-            w32b(co, ck)
+            Bytes.putLe32(co, ck)
           }
           val cb = co.toByteArray
           val addr = pos
@@ -2309,7 +2240,7 @@ object Hdf5 {
         lay.write(0)         // flags
         lay.write(rank)      // dimensionality
         lay.write(8)         // dim encode length
-        cd.foreach(c => w64b(lay, c.toLong))
+        cd.foreach(c => Bytes.putLe64(lay, c.toLong))
         ds.chunkIndexKind match {
           case 3 =>
             // FADB then FAHD (both addresses known up front);
@@ -2335,19 +2266,19 @@ object Hdf5 {
             val db = new java.io.ByteArrayOutputStream()
             db.write('F'); db.write('A'); db.write('D'); db.write('B')
             db.write(0); db.write(1) // version, client 1 (filtered)
-            w64b(db, fahdAddr)
+            Bytes.putLe64(db, fahdAddr)
             def entryBytes(b: java.io.ByteArrayOutputStream,
                 i: Long): Unit = {
               val (addr, stored) = entries(i.toInt)
-              w64b(b, addr)
-              w32b(b, stored.toLong)
-              w32b(b, 0L) // filter mask
+              Bytes.putLe64(b, addr)
+              Bytes.putLe32(b, stored.toLong)
+              Bytes.putLe32(b, 0L) // filter mask
             }
             if (!paged) {
               (0L until n).foreach(entryBytes(db, _))
               val dbb = db.toByteArray
               buf.write(dbb, 0, dbb.length)
-              w32b(buf, lookup3(dbb, 0, dbb.length))
+              Bytes.putLe32(buf, lookup3(dbb, 0, dbb.length))
             } else {
               // page-init bitmask: every page written (MSB-first)
               val bmp = new Array[Byte](bmpBytes)
@@ -2357,7 +2288,7 @@ object Hdf5 {
               db.write(bmp, 0, bmp.length)
               val dbb = db.toByteArray
               buf.write(dbb, 0, dbb.length)
-              w32b(buf, lookup3(dbb, 0, dbb.length))
+              Bytes.putLe32(buf, lookup3(dbb, 0, dbb.length))
               var p = 0
               while (p < npages) {
                 val lo = p.toLong * pageElems
@@ -2366,7 +2297,7 @@ object Hdf5 {
                 (lo until hi).foreach(entryBytes(pg, _))
                 val pgb = pg.toByteArray
                 buf.write(pgb, 0, pgb.length)
-                w32b(buf, lookup3(pgb, 0, pgb.length))
+                Bytes.putLe32(buf, lookup3(pgb, 0, pgb.length))
                 p += 1
               }
             }
@@ -2374,15 +2305,15 @@ object Hdf5 {
             hd.write('F'); hd.write('A'); hd.write('H'); hd.write('D')
             hd.write(0); hd.write(1)
             hd.write(entrySize); hd.write(faPageBits)
-            w64b(hd, n)
-            w64b(hd, dbAddr)
+            Bytes.putLe64(hd, n)
+            Bytes.putLe64(hd, dbAddr)
             val hdb = hd.toByteArray
             require(fahdAddr == pos, "fixed-array layout math")
             buf.write(hdb, 0, hdb.length)
-            w32b(buf, lookup3(hdb, 0, hdb.length))
+            Bytes.putLe32(buf, lookup3(hdb, 0, hdb.length))
             lay.write(3)  // fixed array index
             lay.write(faPageBits)
-            w64b(lay, fahdAddr)
+            Bytes.putLe64(lay, fahdAddr)
           case 4 =>
             // extensible array: data blocks, secondary blocks,
             // index block, header — addresses computed up front
@@ -2463,9 +2394,9 @@ object Hdf5 {
                 idx: Long): Unit =
               if (idx < n) {
                 val (addr, stored) = entries(idx.toInt)
-                w64b(b, addr); w32b(b, stored.toLong); w32b(b, 0L)
+                Bytes.putLe64(b, addr); Bytes.putLe32(b, stored.toLong); Bytes.putLe32(b, 0L)
               } else {
-                w64b(b, Undef); w32b(b, 0L); w32b(b, 0L)
+                Bytes.putLe64(b, Undef); Bytes.putLe32(b, 0L); Bytes.putLe32(b, 0L)
               }
             val dbAddrByIdx =
               scala.collection.mutable.Map[Int, Long]()
@@ -2475,7 +2406,7 @@ object Hdf5 {
               val b = new java.io.ByteArrayOutputStream()
               b.write('E'); b.write('A'); b.write('D'); b.write('B')
               b.write(0); b.write(1)
-              w64b(b, eahdAddr)
+              Bytes.putLe64(b, eahdAddr)
               var j = 0
               while (j < arrOffSize) {
                 b.write(((dbk.startAbs >>> (8 * j)) & 0xff).toInt)
@@ -2486,7 +2417,7 @@ object Hdf5 {
                 // follow, each with a checksum of its elements
                 val bb = b.toByteArray
                 buf.write(bb, 0, bb.length)
-                w32b(buf, lookup3(bb, 0, bb.length))
+                Bytes.putLe32(buf, lookup3(bb, 0, bb.length))
                 var page = 0L
                 while (page < dbk.nel / pageElems) {
                   val pb = new java.io.ByteArrayOutputStream()
@@ -2494,7 +2425,7 @@ object Hdf5 {
                     dbk.startAbs + page * pageElems + e))
                   val pbb = pb.toByteArray
                   buf.write(pbb, 0, pbb.length)
-                  w32b(buf, lookup3(pbb, 0, pbb.length))
+                  Bytes.putLe32(buf, lookup3(pbb, 0, pbb.length))
                   page += 1
                 }
               } else {
@@ -2502,7 +2433,7 @@ object Hdf5 {
                   elemBytes(b, dbk.startAbs + e))
                 val bb = b.toByteArray
                 buf.write(bb, 0, bb.length)
-                w32b(buf, lookup3(bb, 0, bb.length))
+                Bytes.putLe32(buf, lookup3(bb, 0, bb.length))
               }
               wrote += dblkLen(dbk)
             }
@@ -2518,7 +2449,7 @@ object Hdf5 {
               val b = new java.io.ByteArrayOutputStream()
               b.write('E'); b.write('A'); b.write('S'); b.write('B')
               b.write(0); b.write(1)
-              w64b(b, eahdAddr)
+              Bytes.putLe64(b, eahdAddr)
               val off0 = sblkStartIdx(s) + idxElems
               var j = 0
               while (j < arrOffSize) {
@@ -2541,29 +2472,29 @@ object Hdf5 {
                 b.write(bmp, 0, bmp.length)
               }
               (0 until ndblks).foreach { k =>
-                w64b(b, dbAddrByIdx.getOrElse(
+                Bytes.putLe64(b, dbAddrByIdx.getOrElse(
                   sblkStartDblk(s).toInt + k, Undef))
               }
               val bb = b.toByteArray
               require(bb.length + 4L == sblkLen(s))
               buf.write(bb, 0, bb.length)
-              w32b(buf, lookup3(bb, 0, bb.length))
+              Bytes.putLe32(buf, lookup3(bb, 0, bb.length))
             }
             // index block
             val ib = new java.io.ByteArrayOutputStream()
             ib.write('E'); ib.write('A'); ib.write('I'); ib.write('B')
             ib.write(0); ib.write(1)
-            w64b(ib, eahdAddr)
+            Bytes.putLe64(ib, eahdAddr)
             (0 until idxElems).foreach(e => elemBytes(ib, e.toLong))
             (0 until ndblkAddrs).foreach(k =>
-              w64b(ib, dbAddrByIdx.getOrElse(k, Undef)))
+              Bytes.putLe64(ib, dbAddrByIdx.getOrElse(k, Undef)))
             (0 until nsblkAddrs).foreach(slot =>
-              w64b(ib, sbAddrByS.getOrElse(iblkNsblks + slot,
+              Bytes.putLe64(ib, sbAddrByS.getOrElse(iblkNsblks + slot,
                 Undef)))
             val ibb = ib.toByteArray
             require(iblkAddr == pos && ibb.length + 4L == iblkLen)
             buf.write(ibb, 0, ibb.length)
-            w32b(buf, lookup3(ibb, 0, ibb.length))
+            Bytes.putLe32(buf, lookup3(ibb, 0, ibb.length))
             // header
             val hd = new java.io.ByteArrayOutputStream()
             hd.write('E'); hd.write('A'); hd.write('H'); hd.write('D')
@@ -2571,22 +2502,22 @@ object Hdf5 {
             hd.write(elemSize); hd.write(maxBits)
             hd.write(idxElems); hd.write(minElems)
             hd.write(minPtrs); hd.write(pageBits)
-            w64b(hd, sblks.length.toLong) // secondary blocks
-            w64b(hd, sblks.map(sblkLen).sum) // secondary block bytes
-            w64b(hd, dbs.size.toLong)
-            w64b(hd, dbs.values.map(dblkLen).sum)
-            w64b(hd, n.toLong) // max index set
-            w64b(hd, n.toLong) // elements
-            w64b(hd, iblkAddr)
+            Bytes.putLe64(hd, sblks.length.toLong) // secondary blocks
+            Bytes.putLe64(hd, sblks.map(sblkLen).sum) // secondary block bytes
+            Bytes.putLe64(hd, dbs.size.toLong)
+            Bytes.putLe64(hd, dbs.values.map(dblkLen).sum)
+            Bytes.putLe64(hd, n.toLong) // max index set
+            Bytes.putLe64(hd, n.toLong) // elements
+            Bytes.putLe64(hd, iblkAddr)
             val hdb = hd.toByteArray
             require(eahdAddr == pos)
             buf.write(hdb, 0, hdb.length)
-            w32b(buf, lookup3(hdb, 0, hdb.length))
+            Bytes.putLe32(buf, lookup3(hdb, 0, hdb.length))
             lay.write(4) // extensible array index
             lay.write(maxBits); lay.write(idxElems)
             lay.write(minPtrs); lay.write(minElems)
             lay.write(pageBits)
-            w64b(lay, eahdAddr)
+            Bytes.putLe64(lay, eahdAddr)
           case 5 =>
             // v2 b-tree: leaves, then the root (leaf or internal),
             // then BTHD
@@ -2601,11 +2532,11 @@ object Hdf5 {
             def writeRecord(b: java.io.ByteArrayOutputStream,
                 rec: ((Long, Int), Seq[Long])): Unit = {
               val ((addr, stored), offs) = rec
-              w64b(b, addr)
-              w32b(b, stored.toLong)
-              w32b(b, 0L) // filter mask
+              Bytes.putLe64(b, addr)
+              Bytes.putLe32(b, stored.toLong)
+              Bytes.putLe32(b, 0L) // filter mask
               offs.zipWithIndex.foreach { case (o, k) =>
-                w64b(b, o / cd(k)) } // SCALED offsets
+                Bytes.putLe64(b, o / cd(k)) } // SCALED offsets
             }
             def writeLeaf(rs: Seq[((Long, Int), Seq[Long])])
                 : Long = {
@@ -2616,7 +2547,7 @@ object Hdf5 {
               rs.foreach(writeRecord(b, _))
               val bb = b.toByteArray
               buf.write(bb, 0, bb.length)
-              w32b(buf, lookup3(bb, 0, bb.length))
+              Bytes.putLe32(buf, lookup3(bb, 0, bb.length))
               addr
             }
             val (rootAddr, rootNrec, depth) =
@@ -2648,34 +2579,34 @@ object Hdf5 {
                 b.write(0); b.write(11)
                 seps.result().foreach(s => writeRecord(b, recs(s)))
                 leaves.result().foreach { case (la, cnt, _) =>
-                  w64b(b, la)
+                  Bytes.putLe64(b, la)
                   var j = 0
                   while (j < maxNrecSize) {
                     b.write(((cnt >>> (8 * j)) & 0xff)); j += 1 }
                 }
                 val bb = b.toByteArray
                 buf.write(bb, 0, bb.length)
-                w32b(buf, lookup3(bb, 0, bb.length))
+                Bytes.putLe32(buf, lookup3(bb, 0, bb.length))
                 (ra, k - 1, 1)
               }
             val bthdAddr = pos
             val hd = new java.io.ByteArrayOutputStream()
             hd.write('B'); hd.write('T'); hd.write('H'); hd.write('D')
             hd.write(0); hd.write(11)
-            w32b(hd, nodeSize.toLong)
-            w16b(hd, recSize)
-            w16b(hd, depth)
+            Bytes.putLe32(hd, nodeSize.toLong)
+            Bytes.putLe16(hd, recSize)
+            Bytes.putLe16(hd, depth)
             hd.write(100); hd.write(40) // split/merge percents
-            w64b(hd, rootAddr)
-            w16b(hd, rootNrec)
-            w64b(hd, n.toLong)
+            Bytes.putLe64(hd, rootAddr)
+            Bytes.putLe16(hd, rootNrec)
+            Bytes.putLe64(hd, n.toLong)
             val hdb = hd.toByteArray
             buf.write(hdb, 0, hdb.length)
-            w32b(buf, lookup3(hdb, 0, hdb.length))
+            Bytes.putLe32(buf, lookup3(hdb, 0, hdb.length))
             lay.write(5) // v2 b-tree index
-            w32b(lay, nodeSize.toLong)
+            Bytes.putLe32(lay, nodeSize.toLong)
             lay.write(100); lay.write(40)
-            w64b(lay, bthdAddr)
+            Bytes.putLe64(lay, bthdAddr)
           case other =>
             sys.error(s"unsupported chunk index kind $other")
         }
@@ -2686,10 +2617,10 @@ object Hdf5 {
           (if (ds.fletcher) 1 else 0)
         fp.write(2); fp.write(nf)
         def fentry(fid: Int, values: Seq[Int]): Unit = {
-          w16b(fp, fid)
-          w16b(fp, 0) // flags
-          w16b(fp, values.length)
-          values.foreach(v => w32b(fp, v.toLong))
+          Bytes.putLe16(fp, fid)
+          Bytes.putLe16(fp, 0) // flags
+          Bytes.putLe16(fp, values.length)
+          values.foreach(v => Bytes.putLe32(fp, v.toLong))
         }
         if (ds.shuffle) fentry(2, Seq(isz))
         fentry(1, Seq(6))
@@ -2712,7 +2643,7 @@ object Hdf5 {
       lk.write(0)    // flags: 1-byte name length, hard link
       lk.write(nb.length)
       lk.write(nb, 0, nb.length)
-      w64b(lk, oha)
+      Bytes.putLe64(lk, oha)
       lk.toByteArray
     }
     val rootMsgs = scala.collection.mutable.ArrayBuffer[
@@ -2720,7 +2651,7 @@ object Hdf5 {
     if (!denseLinks) {
       val li = new java.io.ByteArrayOutputStream()
       li.write(0); li.write(0)
-      w64b(li, Undef); w64b(li, Undef)
+      Bytes.putLe64(li, Undef); Bytes.putLe64(li, Undef)
       rootMsgs += ((0x0002, li.toByteArray))
       rootMsgs += ((0x000a, Array[Byte](0, 0)))
       children.foreach { case (name, oha) =>
@@ -2741,9 +2672,9 @@ object Hdf5 {
       val db = new java.io.ByteArrayOutputStream(blockSize)
       db.write('F'); db.write('H'); db.write('D'); db.write('B')
       db.write(0) // version
-      w64b(db, hdrAddr)
+      Bytes.putLe64(db, hdrAddr)
       (0 until offBytes).foreach(_ => db.write(0)) // block offset 0
-      w32b(db, 0L) // checksum slot (patched below)
+      Bytes.putLe32(db, 0L) // checksum slot (patched below)
       // (heap offset, length) per object, objects packed in order
       val ids = bodies.map { b =>
         val off = db.size().toLong
@@ -2762,31 +2693,31 @@ object Hdf5 {
       val fh = new java.io.ByteArrayOutputStream(160)
       fh.write('F'); fh.write('R'); fh.write('H'); fh.write('P')
       fh.write(0) // version
-      w16b(fh, 1 + offBytes + lenBytes) // heap id length (7)
-      w16b(fh, 0) // io filter encoded length
+      Bytes.putLe16(fh, 1 + offBytes + lenBytes) // heap id length (7)
+      Bytes.putLe16(fh, 0) // io filter encoded length
       fh.write(0x02) // flags: direct blocks checksummed
-      w32b(fh, 4096L) // max size of managed objects
-      w64b(fh, 0L) // next huge id
-      w64b(fh, Undef) // huge-object b-tree
-      w64b(fh, blockSize.toLong - total) // free space
-      w64b(fh, Undef) // free-space manager
-      w64b(fh, blockSize.toLong) // managed space
-      w64b(fh, blockSize.toLong) // allocated managed space
-      w64b(fh, blockSize.toLong) // direct-block iterator offset
-      w64b(fh, bodies.length.toLong) // managed objects
-      w64b(fh, 0L); w64b(fh, 0L) // huge size / count
-      w64b(fh, 0L); w64b(fh, 0L) // tiny size / count
-      w16b(fh, 4) // table width
-      w64b(fh, blockSize.toLong) // starting block size
-      w64b(fh, 65536L) // max direct block size
-      w16b(fh, 32) // max heap size (bits)
-      w16b(fh, 1) // starting # rows in root indirect block
-      w64b(fh, dblockAddr) // root block (direct: curRows == 0)
-      w16b(fh, 0) // current # rows
+      Bytes.putLe32(fh, 4096L) // max size of managed objects
+      Bytes.putLe64(fh, 0L) // next huge id
+      Bytes.putLe64(fh, Undef) // huge-object b-tree
+      Bytes.putLe64(fh, blockSize.toLong - total) // free space
+      Bytes.putLe64(fh, Undef) // free-space manager
+      Bytes.putLe64(fh, blockSize.toLong) // managed space
+      Bytes.putLe64(fh, blockSize.toLong) // allocated managed space
+      Bytes.putLe64(fh, blockSize.toLong) // direct-block iterator offset
+      Bytes.putLe64(fh, bodies.length.toLong) // managed objects
+      Bytes.putLe64(fh, 0L); Bytes.putLe64(fh, 0L) // huge size / count
+      Bytes.putLe64(fh, 0L); Bytes.putLe64(fh, 0L) // tiny size / count
+      Bytes.putLe16(fh, 4) // table width
+      Bytes.putLe64(fh, blockSize.toLong) // starting block size
+      Bytes.putLe64(fh, 65536L) // max direct block size
+      Bytes.putLe16(fh, 32) // max heap size (bits)
+      Bytes.putLe16(fh, 1) // starting # rows in root indirect block
+      Bytes.putLe64(fh, dblockAddr) // root block (direct: curRows == 0)
+      Bytes.putLe16(fh, 0) // current # rows
       val fhb = fh.toByteArray
       require(hdrAddr == pos)
       buf.write(fhb, 0, fhb.length)
-      w32b(buf, lookup3(fhb, 0, fhb.length))
+      Bytes.putLe32(buf, lookup3(fhb, 0, fhb.length))
       // --- name-index v2 b-tree (record type 5) ---
       val recSize = 4 + 1 + offBytes + lenBytes // hash + heap id
       val nodeSize = 512
@@ -2795,7 +2726,7 @@ object Hdf5 {
       val recs = children.zip(ids).map { case ((name, _), (o, l)) =>
         val nb = name.getBytes("UTF-8")
         val rb = new java.io.ByteArrayOutputStream(recSize)
-        w32b(rb, lookup3(nb, 0, nb.length)) // name hash
+        Bytes.putLe32(rb, lookup3(nb, 0, nb.length)) // name hash
         rb.write(0) // managed heap id, version 0
         var j = 0
         while (j < offBytes) {
@@ -2804,7 +2735,7 @@ object Hdf5 {
         while (j < lenBytes) {
           rb.write(((l >>> (8 * j)) & 0xff).toInt); j += 1 }
         rb.toByteArray
-      }.sortBy(rb => u32(rb, 0)) // hash order — the tree's key
+      }.sortBy(rb => Bytes.le32u(rb, 0)) // hash order — the tree's key
       def writeLeaf5(rs: Seq[Array[Byte]]): Long = {
         val addr = pos
         val b = new java.io.ByteArrayOutputStream()
@@ -2813,7 +2744,7 @@ object Hdf5 {
         rs.foreach(rb => b.write(rb, 0, rb.length))
         val bb = b.toByteArray
         buf.write(bb, 0, bb.length)
-        w32b(buf, lookup3(bb, 0, bb.length))
+        Bytes.putLe32(buf, lookup3(bb, 0, bb.length))
         addr
       }
       val n = recs.length
@@ -2845,34 +2776,34 @@ object Hdf5 {
           b.write(0); b.write(5)
           seps.result().foreach(s => b.write(recs(s), 0, recSize))
           leaves.result().foreach { case (la, cnt) =>
-            w64b(b, la)
+            Bytes.putLe64(b, la)
             var j = 0
             while (j < maxNrecSize) {
               b.write((cnt >>> (8 * j)) & 0xff); j += 1 }
           }
           val bb = b.toByteArray
           buf.write(bb, 0, bb.length)
-          w32b(buf, lookup3(bb, 0, bb.length))
+          Bytes.putLe32(buf, lookup3(bb, 0, bb.length))
           (ra, k - 1, 1)
         }
       val bthdAddr = pos
       val hd = new java.io.ByteArrayOutputStream()
       hd.write('B'); hd.write('T'); hd.write('H'); hd.write('D')
       hd.write(0); hd.write(5)
-      w32b(hd, nodeSize.toLong)
-      w16b(hd, recSize)
-      w16b(hd, depth)
+      Bytes.putLe32(hd, nodeSize.toLong)
+      Bytes.putLe16(hd, recSize)
+      Bytes.putLe16(hd, depth)
       hd.write(100); hd.write(40) // split/merge percents
-      w64b(hd, rootAddr)
-      w16b(hd, rootNrec)
-      w64b(hd, n.toLong)
+      Bytes.putLe64(hd, rootAddr)
+      Bytes.putLe16(hd, rootNrec)
+      Bytes.putLe64(hd, n.toLong)
       val hdb = hd.toByteArray
       buf.write(hdb, 0, hdb.length)
-      w32b(buf, lookup3(hdb, 0, hdb.length))
+      Bytes.putLe32(buf, lookup3(hdb, 0, hdb.length))
       // --- link info pointing at heap + name index ---
       val li = new java.io.ByteArrayOutputStream()
       li.write(0); li.write(0)
-      w64b(li, hdrAddr); w64b(li, bthdAddr)
+      Bytes.putLe64(li, hdrAddr); Bytes.putLe64(li, bthdAddr)
       rootMsgs += ((0x0002, li.toByteArray))
       rootMsgs += ((0x000a, Array[Byte](0, 0)))
     }
@@ -2882,17 +2813,12 @@ object Hdf5 {
     val out = buf.toByteArray
     System.arraycopy(Sig, 0, out, 0, 8)
     out(8) = 3; out(9) = 8; out(10) = 8; out(11) = 0
-    def put64(at: Int, v: Long): Unit = { var i = 0
-      while (i < 8) { out(at + i) = ((v >>> (8 * i)) & 0xff).toByte
-        i += 1 } }
-    put64(12, 0L)               // base address
-    put64(20, Undef)            // superblock extension
-    put64(28, out.length.toLong) // EOF
-    put64(36, rootOha)
+    Bytes.setLe64(out, 12, 0L)               // base address
+    Bytes.setLe64(out, 20, Undef)            // superblock extension
+    Bytes.setLe64(out, 28, out.length.toLong) // EOF
+    Bytes.setLe64(out, 36, rootOha)
     val ck = lookup3(out, 0, 44)
-    var i = 0
-    while (i < 4) { out(44 + i) = ((ck >>> (8 * i)) & 0xff).toByte
-      i += 1 }
+    Bytes.setLe32(out, 44, ck)
     out
   }
 }

@@ -131,13 +131,6 @@ object HudiLog {
   // Parser
   // ---------------------------------------------------------------
 
-  private def be32(b: Array[Byte], p: Int): Int =
-    ((b(p) & 0xff) << 24) | ((b(p + 1) & 0xff) << 16) |
-      ((b(p + 2) & 0xff) << 8) | (b(p + 3) & 0xff)
-
-  private def be64(b: Array[Byte], p: Int): Long =
-    ((be32(b, p) & 0xffffffffL) << 32) | (be32(b, p + 4) & 0xffffffffL)
-
   private def magicAt(b: Array[Byte], p: Int): Boolean =
     p + 6 <= b.length && (0 until 6).forall(i => b(p + i) == Magic(i))
 
@@ -152,14 +145,14 @@ object HudiLog {
       : Option[(Map[Int, String], Int)] = {
     var p = p0
     if (p + 4 > limit) return None
-    val n = be32(b, p); p += 4
+    val n = Bytes.be32(b, p); p += 4
     if (n < 0 || n > 64) return None
     val m = Map.newBuilder[Int, String]
     var i = 0
     while (i < n) {
       if (p + 8 > limit) return None
-      val k = be32(b, p)
-      val len = be32(b, p + 4)
+      val k = Bytes.be32(b, p)
+      val len = Bytes.be32(b, p + 4)
       p += 8
       if (len < 0 || len > (1 << 24) || p + len > limit) return None
       m += (k -> new String(b, p, len, "UTF-8"))
@@ -175,25 +168,25 @@ object HudiLog {
       : Option[(Block, Int)] = {
     var p = start + 6
     if (p + 8 > b.length) return None
-    val inner = be64(b, p); p += 8
+    val inner = Bytes.be64(b, p); p += 8
     // version(4)+type(4)+hdrCount(4)+contentLen(8)+ftrCount(4)+total(8)
     if (inner < 32 || inner > b.length - p) return None
     val end = p + inner.toInt // exclusive end of this block
-    val version = be32(b, p)
-    val tpe = be32(b, p + 4)
+    val version = Bytes.be32(b, p)
+    val tpe = Bytes.be32(b, p + 4)
     p += 8
     if (version != 1 || tpe < 0 || tpe > 6) return None
     val (hdr, p1) = parseMeta(b, p, end).getOrElse(return None)
     p = p1
     if (p + 8 > end) return None
-    val clen = be64(b, p); p += 8
+    val clen = Bytes.be64(b, p); p += 8
     if (clen < 0 || clen > end - p) return None
     val content = java.util.Arrays.copyOfRange(b, p, p + clen.toInt)
     p += clen.toInt
     val (ftr, p2) = parseMeta(b, p, end).getOrElse(return None)
     p = p2
     if (p + 8 != end) return None
-    val total = be64(b, p)
+    val total = Bytes.be64(b, p)
     if (total != 6L + 8L + inner) return None
     Some((Block(tpe, hdr, ftr, content), end))
   }
@@ -244,8 +237,8 @@ object HudiLog {
   def parseAvroDataContent(content: Array[Byte])
       : Option[Seq[Array[Byte]]] = {
     if (content.length < 8) return None
-    val version = be32(content, 0)
-    val n = be32(content, 4)
+    val version = Bytes.be32(content, 0)
+    val n = Bytes.be32(content, 4)
     if (version < 2 || version > 10 || n < 0 || n > (1 << 24))
       return None
     var p = 8
@@ -253,7 +246,7 @@ object HudiLog {
     var i = 0
     while (i < n) {
       if (p + 4 > content.length) return None
-      val len = be32(content, p); p += 4
+      val len = Bytes.be32(content, p); p += 4
       if (len < 0 || len > content.length - p) return None
       out += java.util.Arrays.copyOfRange(content, p, p + len)
       p += len
@@ -267,36 +260,16 @@ object HudiLog {
   // codec so the unverifiable orderingVal union can reject loudly.
   // ---------------------------------------------------------------
 
-  private def zigzag(v: Long): Long = (v << 1) ^ (v >> 63)
-
   private def writeVar(out: java.io.ByteArrayOutputStream,
-      value: Long): Unit = {
-    var v = zigzag(value)
-    while ((v & ~0x7fL) != 0) {
-      out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7
-    }
-    out.write(v.toInt)
-  }
+      value: Long): Unit = Bytes.putVarint(out, Bytes.zigzag(value))
 
-  private final class VarCursor(val b: Array[Byte]) {
-    var p = 0
-    var ok = true
-    def readLong(): Long = {
-      var v = 0L; var shift = 0; var cont = true
-      while (cont && ok) {
-        if (p >= b.length || shift > 63) { ok = false; cont = false }
-        else {
-          val x = b(p) & 0xff; p += 1
-          v |= (x & 0x7fL) << shift; shift += 7
-          cont = (x & 0x80) != 0
-        }
-      }
-      (v >>> 1) ^ -(v & 1)
-    }
+  private final class VarCursor(bytes: Array[Byte])
+      extends Bytes.Cursor(bytes) {
+    def readLong(): Long = Bytes.unzigzag(varint())
     def readStr(): String = {
       val n = readLong()
       if (!ok || n < 0 || n > (1 << 24) || p + n > b.length) {
-        ok = false; ""
+        fail(); ""
       } else { val s = new String(b, p, n.toInt, "UTF-8"); p += n.toInt; s }
     }
   }
@@ -335,8 +308,8 @@ object HudiLog {
   def parseDeleteContent(content: Array[Byte])
       : Option[Seq[(String, String)]] = {
     if (content.length < 8) return None
-    val version = be32(content, 0)
-    val len = be32(content, 4)
+    val version = Bytes.be32(content, 0)
+    val len = Bytes.be32(content, 4)
     if (version < 2 || version > 10 || len < 0 ||
       len != content.length - 8) return None
     val c = new VarCursor(
@@ -353,16 +326,16 @@ object HudiLog {
         val key = c.readLong() match {
           case 0 => "" // null recordKey: legal but useless; keep ""
           case 1 => c.readStr()
-          case _ => c.ok = false; ""
+          case _ => c.fail(); ""
         }
         val part = c.readLong() match {
           case 0 => ""
           case 1 => c.readStr()
-          case _ => c.ok = false; ""
+          case _ => c.fail(); ""
         }
         c.readLong() match {
           case 0 => // orderingVal: null — the only decodable branch
-          case _ => c.ok = false
+          case _ => c.fail()
         }
         if (c.ok) out += ((part, key))
         i += 1

@@ -108,8 +108,7 @@ object Iceberg {
     val n4 = data.length & ~3
     var i = 0
     while (i < n4) {
-      var k = (data(i) & 0xff) | ((data(i + 1) & 0xff) << 8) |
-        ((data(i + 2) & 0xff) << 16) | ((data(i + 3) & 0xff) << 24)
+      var k = Bytes.le32(data, i)
       k *= c1; k = Integer.rotateLeft(k, 15); k *= c2
       h ^= k; h = Integer.rotateLeft(h, 13); h = h * 5 + 0xe6546b64
       i += 4
@@ -133,10 +132,7 @@ object Iceberg {
   def bucketHash(v: Any): Int = v match {
     case i: Int => bucketHash(i.toLong)
     case l: Long =>
-      val b = new Array[Byte](8)
-      var i = 0
-      while (i < 8) { b(i) = ((l >>> (8 * i)) & 0xff).toByte; i += 1 }
-      murmur3(b)
+      murmur3(singleValueBytes(l))
     case s: String => murmur3(s.getBytes("UTF-8"))
     case b: Array[Byte] => murmur3(b)
     case other => sys.error(s"bucket transform over $other")
@@ -488,15 +484,9 @@ object Iceberg {
     * value — the form `field_summary` bounds are stored in. */
   def singleValueBytes(v: Any): Array[Byte] = v match {
     case i: Int =>
-      val b = new Array[Byte](4)
-      var k = 0
-      while (k < 4) { b(k) = ((i >>> (8 * k)) & 0xff).toByte; k += 1 }
-      b
+      val b = new Array[Byte](4); Bytes.setLe32(b, 0, i); b
     case l: Long =>
-      val b = new Array[Byte](8)
-      var k = 0
-      while (k < 8) { b(k) = ((l >>> (8 * k)) & 0xff).toByte; k += 1 }
-      b
+      val b = new Array[Byte](8); Bytes.setLe64(b, 0, l); b
     case st: String => st.getBytes("UTF-8")
     case other => sys.error(s"single-value serialization of $other")
   }

@@ -188,18 +188,17 @@ object Jpeg {
                            qsel: Seq[Int], restartInterval: Int): Unit = {
     val nc = samp.length
     def u8(v: Int): Unit = out.write(v & 0xff)
-    def u16(v: Int): Unit = { u8(v >> 8); u8(v) }
     def marker(m: Int): Unit = { u8(0xFF); u8(m) }
     marker(0xD8) // SOI
-    marker(0xE0); u16(16) // APP0/JFIF
+    marker(0xE0); Bytes.putBe16(out, 16) // APP0/JFIF
     out.write("JFIF".getBytes("US-ASCII")); u8(0)
-    u8(1); u8(1); u8(0); u16(1); u16(1); u8(0); u8(0)
+    u8(1); u8(1); u8(0); Bytes.putBe16(out, 1); Bytes.putBe16(out, 1); u8(0); u8(0)
     for ((q, tq) <- quant.zipWithIndex) { // DQT, 8-bit precision
-      marker(0xDB); u16(67); u8(tq)
+      marker(0xDB); Bytes.putBe16(out, 67); u8(tq)
       q.foreach(u8)
     }
-    marker(sofMarker); u16(8 + 3 * nc); u8(8)
-    u16(h); u16(w); u8(nc)
+    marker(sofMarker); Bytes.putBe16(out, 8 + 3 * nc); u8(8)
+    Bytes.putBe16(out, h); Bytes.putBe16(out, w); u8(nc)
     for (c <- 0 until nc) {
       u8(c + 1); u8((samp(c)._1 << 4) | samp(c)._2); u8(qsel(c))
     }
@@ -208,10 +207,10 @@ object Jpeg {
     for ((cls, id, bits, vals) <- Seq(
       (0, 0, dcBits, dcVals), (1, 0, acBits, acVals),
       (0, 1, dcBits, dcVals), (1, 1, acBits, acVals))) {
-      marker(0xC4); u16(19 + vals.length); u8((cls << 4) | id)
+      marker(0xC4); Bytes.putBe16(out, 19 + vals.length); u8((cls << 4) | id)
       bits.foreach(u8); vals.foreach(u8)
     }
-    if (restartInterval > 0) { marker(0xDD); u16(4); u16(restartInterval) }
+    if (restartInterval > 0) { marker(0xDD); Bytes.putBe16(out, 4); Bytes.putBe16(out, restartInterval) }
   }
 
   // ---- baseline encoder ------------------------------------------------
@@ -236,10 +235,9 @@ object Jpeg {
     val nc = samp.length
     val out = new java.io.ByteArrayOutputStream()
     def u8(v: Int): Unit = out.write(v & 0xff)
-    def u16(v: Int): Unit = { u8(v >> 8); u8(v) }
     def marker(m: Int): Unit = { u8(0xFF); u8(m) }
     writeHeaders(out, 0xC0, w, h, samp, quant, qsel, restartInterval)
-    marker(0xDA); u16(6 + 2 * nc); u8(nc) // SOS
+    marker(0xDA); Bytes.putBe16(out, 6 + 2 * nc); u8(nc) // SOS
     for (c <- 0 until nc) {
       val t = if (c == 0) 0 else 1
       u8(c + 1); u8((t << 4) | t)
@@ -336,7 +334,6 @@ object Jpeg {
     }
     val out = new java.io.ByteArrayOutputStream()
     def u8(v: Int): Unit = out.write(v & 0xff)
-    def u16(v: Int): Unit = { u8(v >> 8); u8(v) }
     def marker(m: Int): Unit = { u8(0xFF); u8(m) }
     writeHeaders(out, 0xC2, w, h, samp, quant, qsel, 0)
     for (scan <- scans) {
@@ -344,7 +341,7 @@ object Jpeg {
       require(ss >= 0 && se <= 63 && ss <= se)
       require(if (ss == 0) se == 0 else sc.length == 1,
         "progressive: DC alone; AC single-component")
-      marker(0xDA); u16(6 + 2 * sc.length); u8(sc.length)
+      marker(0xDA); Bytes.putBe16(out, 6 + 2 * sc.length); u8(sc.length)
       for (c <- sc) {
         val t = if (c == 0) 0 else 1
         u8(c + 1); u8((t << 4) | t)

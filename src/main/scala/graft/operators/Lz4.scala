@@ -29,10 +29,6 @@ object Lz4 {
   private final val P4 = 0x27D4EB2F // 668265263
   private final val P5 = 0x165667B1 // 374761393
 
-  private def rd32(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8) |
-      ((b(o + 2) & 0xff) << 16) | ((b(o + 3) & 0xff) << 24)
-
   /** xxHash32 over `b[off, off+len)` — the frame format's checksum.
     * Pure Int arithmetic; wraparound is the spec's mod-2³²
     * behaviour. */
@@ -47,10 +43,10 @@ object Lz4 {
         var a4 = seed - P1
         val limit = end - 16
         while (p <= limit) {
-          a1 = Integer.rotateLeft(a1 + rd32(b, p) * P2, 13) * P1
-          a2 = Integer.rotateLeft(a2 + rd32(b, p + 4) * P2, 13) * P1
-          a3 = Integer.rotateLeft(a3 + rd32(b, p + 8) * P2, 13) * P1
-          a4 = Integer.rotateLeft(a4 + rd32(b, p + 12) * P2, 13) * P1
+          a1 = Integer.rotateLeft(a1 + Bytes.le32(b, p) * P2, 13) * P1
+          a2 = Integer.rotateLeft(a2 + Bytes.le32(b, p + 4) * P2, 13) * P1
+          a3 = Integer.rotateLeft(a3 + Bytes.le32(b, p + 8) * P2, 13) * P1
+          a4 = Integer.rotateLeft(a4 + Bytes.le32(b, p + 12) * P2, 13) * P1
           p += 16
         }
         Integer.rotateLeft(a1, 1) + Integer.rotateLeft(a2, 7) +
@@ -58,7 +54,7 @@ object Lz4 {
       } else seed + P5
     h += len
     while (p + 4 <= end) {
-      h = Integer.rotateLeft(h + rd32(b, p) * P3, 17) * P4
+      h = Integer.rotateLeft(h + Bytes.le32(b, p) * P3, 17) * P4
       p += 4
     }
     while (p < end) {
@@ -110,7 +106,7 @@ object Lz4 {
     if (n < 13) { emitLast(0); return out.toByteArray }
     val table = new Array[Int](1 << 16)
     java.util.Arrays.fill(table, -1)
-    def hash(p: Int): Int = ((rd32(src, p) * P1) >>> 16) & 0xffff
+    def hash(p: Int): Int = ((Bytes.le32(src, p) * P1) >>> 16) & 0xffff
     var anchor = 0
     var i = 0
     val mfLimit = n - 12 // last match starts >= 12 bytes before end
@@ -120,7 +116,7 @@ object Lz4 {
       val cand = table(h)
       table(h) = i
       if (cand >= 0 && i - cand <= 0xffff &&
-          rd32(src, cand) == rd32(src, i)) {
+          Bytes.le32(src, cand) == Bytes.le32(src, i)) {
         var m = 4
         while (i + m < matchEndMax && src(cand + m) == src(i + m)) m += 1
         emit(anchor, i, i - cand, m)
@@ -187,15 +183,10 @@ object Lz4 {
 
   /** Frame magic sniff (`.lz4` files, `.tar.lz4` shards). */
   def isLz4(b: Array[Byte]): Boolean =
-    b.length >= 4 && rd32(b, 0) == FrameMagic
+    b.length >= 4 && Bytes.le32(b, 0) == FrameMagic
 
   private final val BlockMax = Array(0, 0, 0, 0,
     1 << 16, 1 << 18, 1 << 20, 1 << 22) // BD block-maxsize table
-
-  private def le32(out: java.io.ByteArrayOutputStream, v: Int): Unit = {
-    out.write(v & 0xff); out.write((v >>> 8) & 0xff)
-    out.write((v >>> 16) & 0xff); out.write((v >>> 24) & 0xff)
-  }
 
   /** One independent-blocks frame: 64 KiB blocks, content size and
     * content checksum present, no block checksums (the lz4 CLI
@@ -203,16 +194,12 @@ object Lz4 {
     * does not shrink (the spec's highest-bit-set escape). */
   def frameCompress(data: Array[Byte]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(data.length / 2 + 64)
-    le32(out, FrameMagic)
+    Bytes.putLe32(out, FrameMagic)
     val hdr = new Array[Byte](10)
     hdr(0) = ((1 << 6) | (1 << 5) | (1 << 3) | (1 << 2)).toByte // FLG:
     // version 01, B.Indep, C.Size, C.Checksum
     hdr(1) = (4 << 4).toByte // BD: 64 KiB block max
-    var i = 0
-    while (i < 8) { // content size u64 LE
-      hdr(2 + i) = ((data.length.toLong >>> (8 * i)) & 0xff).toByte
-      i += 1
-    }
+    Bytes.setLe64(hdr, 2, data.length) // content size u64 LE
     out.write(hdr, 0, 10)
     out.write((xxh32(hdr, 0, 10, 0) >>> 8) & 0xff) // HC
     var p = 0
@@ -220,12 +207,12 @@ object Lz4 {
       val len = math.min(1 << 16, data.length - p)
       val chunk = java.util.Arrays.copyOfRange(data, p, p + len)
       val comp = compressBlock(chunk)
-      if (comp.length < len) { le32(out, comp.length); out.write(comp) }
-      else { le32(out, len | 0x80000000); out.write(chunk) } // stored
+      if (comp.length < len) { Bytes.putLe32(out, comp.length); out.write(comp) }
+      else { Bytes.putLe32(out, len | 0x80000000); out.write(chunk) } // stored
       p += len
     }
-    le32(out, 0) // EndMark
-    le32(out, xxh32(data, 0, data.length, 0)) // content checksum
+    Bytes.putLe32(out, 0) // EndMark
+    Bytes.putLe32(out, xxh32(data, 0, data.length, 0)) // content checksum
     out.toByteArray
   }
 
@@ -237,7 +224,7 @@ object Lz4 {
     * surfaces naturally as an offset error), optional fields in any
     * combination. Never throws. */
   def frameDecompress(data: Array[Byte]): Option[Array[Byte]] = {
-    if (data.length < 7 || rd32(data, 0) != FrameMagic) return None
+    if (data.length < 7 || Bytes.le32(data, 0) != FrameMagic) return None
     val flg = data(4) & 0xff
     if ((flg >>> 6) != 1) return None // version must be 01
     if ((flg & 0x02) != 0) return None // reserved bit
@@ -252,8 +239,7 @@ object Lz4 {
     var contentSize = -1L
     if (hasSize) {
       if (p + 8 > data.length) return None
-      contentSize = (0 until 8)
-        .map(i => (data(p + i) & 0xffL) << (8 * i)).sum
+      contentSize = Bytes.le64(data, p)
       p += 8
     }
     if (hasDict) p += 4 // dict-ID noted; blocks that need it fail below
@@ -266,7 +252,7 @@ object Lz4 {
     var done = false
     while (!done) {
       if (p + 4 > data.length) return None
-      val word = rd32(data, p)
+      val word = Bytes.le32(data, p)
       p += 4
       if (word == 0) done = true
       else {
@@ -275,7 +261,7 @@ object Lz4 {
         if (blen > bmax || p + blen > data.length) return None
         if (blockChecksum) {
           if (p + blen + 4 > data.length) return None
-          if (rd32(data, p + blen) != xxh32(data, p, blen, 0)) return None
+          if (Bytes.le32(data, p + blen) != xxh32(data, p, blen, 0)) return None
         }
         if (stored) out.write(data, p, blen)
         else {
@@ -291,7 +277,7 @@ object Lz4 {
     if (contentSize >= 0 && res.length != contentSize) return None
     if (contentChecksum) {
       if (p + 4 > data.length) return None
-      if (rd32(data, p) != xxh32(res, 0, res.length, 0)) return None
+      if (Bytes.le32(data, p) != xxh32(res, 0, res.length, 0)) return None
     }
     Some(res)
   }

@@ -15,9 +15,7 @@ private[operators] object Lz77 {
   final val MinMatch = 4
 
   def hash4(b: Array[Byte], i: Int, hashLog: Int): Int = {
-    val v = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) |
-      ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
-    (v * -1640531535) >>> (32 - hashLog)
+    (Bytes.le32(b, i) * -1640531535) >>> (32 - hashLog)
   }
 
   /** Probe the chain for the best match at `i` and INSERT i into

@@ -19,41 +19,10 @@ package graft.operators
   * reproduces bit-identically. */
 object MpegAudio {
 
-  private final class BitWriter {
-    private val buf = collection.mutable.ArrayBuffer.empty[Byte]
-    private var acc = 0
-    private var nb = 0
-    def write(v: Int, bits: Int): Unit = {
-      var k = bits - 1
-      while (k >= 0) {
-        acc = (acc << 1) | ((v >> k) & 1)
-        nb += 1
-        if (nb == 8) { buf += acc.toByte; acc = 0; nb = 0 }
-        k -= 1
-      }
-    }
-    def toArray(padTo: Int): Array[Byte] = {
-      if (nb > 0) { buf += (acc << (8 - nb)).toByte; acc = 0; nb = 0 }
-      while (buf.length < padTo) buf += 0
-      buf.toArray
-    }
-  }
-
-  private final class BitReader(data: Array[Byte], var pos: Int,
-      val end: Int) {
-    private var bit = 0
-    def read(bits: Int): Int = {
-      var v = 0
-      var k = 0
-      while (k < bits) {
-        if (pos >= end) return -1
-        v = (v << 1) | ((data(pos) >> (7 - bit)) & 1)
-        bit += 1
-        if (bit == 8) { bit = 0; pos += 1 }
-        k += 1
-      }
-      v
-    }
+  /** The frame's bits, zero-padded to `padTo` bytes. */
+  private def paddedFrame(w: Bytes.BitWriter, padTo: Int): Array[Byte] = {
+    val b = w.toByteArray
+    java.util.Arrays.copyOf(b, b.length max padTo)
   }
 
   /** 32000 Hz mono, 64 kbps → 24 four-byte slots = 96-byte frames. */
@@ -66,7 +35,7 @@ object MpegAudio {
   def encodeFrame(allocs: Array[Int], scf: Array[Int],
       codes: Array[Array[Int]]): Array[Byte] = {
     require(allocs.length == 32)
-    val w = new BitWriter
+    val w = new Bytes.BitWriter
     w.write(0xFFF, 12) // sync
     w.write(1, 1)      // MPEG1
     w.write(3, 2)      // Layer I
@@ -80,7 +49,7 @@ object MpegAudio {
     for (sb <- 0 until 32; if allocs(sb) > 0) w.write(scf(sb), 6)
     for (s <- 0 until 12; sb <- 0 until 32; if allocs(sb) > 0)
       w.write(codes(sb)(s), allocs(sb) + 1)
-    w.toArray(FrameBytes)
+    paddedFrame(w, FrameBytes)
   }
 
   /** Decoded facts of one frame: active subbands, the raw-code sum,
@@ -155,7 +124,7 @@ object MpegAudio {
   def encodeFrameL2(allocIdx: Array[Int], scfsi: Array[Int],
       scf: Array[Array[Int]], samples: Array[Array[Int]]): Array[Byte] = {
     require(allocIdx.length == L2SbLimit)
-    val w = new BitWriter
+    val w = new Bytes.BitWriter
     w.write(0xFFF, 12) // sync
     w.write(1, 1)      // MPEG1
     w.write(2, 2)      // Layer II
@@ -186,7 +155,7 @@ object MpegAudio {
         w.write(s0, nb); w.write(s1, nb); w.write(s2, nb)
       }
     }
-    w.toArray(L2FrameBytes)
+    paddedFrame(w, L2FrameBytes)
   }
 
   /** Decoded facts of one Layer II frame — the Layer I readout plus
@@ -213,8 +182,7 @@ object MpegAudio {
     var p = 0
     var ok = true
     while (ok && p + 4 <= data.length) {
-      val h = ((data(p) & 0xff) << 24) | ((data(p + 1) & 0xff) << 16) |
-        ((data(p + 2) & 0xff) << 8) | (data(p + 3) & 0xff)
+      val h = Bytes.be32(data, p)
       val sync = (h >>> 20) == 0xFFF
       val version = (h >>> 19) & 1
       val layer = (h >>> 17) & 3
@@ -229,38 +197,38 @@ object MpegAudio {
           SampleRates(srIdx)
         if (p + frameBytes > data.length) ok = false
         else {
-          val r = new BitReader(data, p + 4, p + frameBytes)
+          val r = new Bytes.BitReader(data, p + 4, p + frameBytes)
           val steps = Array.tabulate(L2SbLimit) { sb =>
-            val idx = r.read(l2Nbal(sb))
-            if (idx < 0) -1 else l2Steps(sb, idx)
+            val idx = r.bits(l2Nbal(sb))
+            if (!r.ok) -1 else l2Steps(sb, idx)
           }
           if (steps.exists(_ < 0)) ok = false
           else {
             val scfsi = Array.fill(L2SbLimit)(0)
             for (sb <- 0 until L2SbLimit if steps(sb) > 0)
-              scfsi(sb) = r.read(2)
+              scfsi(sb) = r.bits(2)
             // effective per-part scalefactor index (parts = granule/4)
             val scfEff = Array.ofDim[Int](L2SbLimit, 3)
-            var trunc = scfsi.exists(_ < 0)
+            var trunc = !r.ok
             for (sb <- 0 until L2SbLimit if steps(sb) > 0) scfsi(sb) match {
               case 0 =>
-                val a = r.read(6); val b = r.read(6); val c = r.read(6)
-                if (c < 0) trunc = true
+                val a = r.bits(6); val b = r.bits(6); val c = r.bits(6)
+                if (!r.ok) trunc = true
                 else { scfEff(sb)(0) = a; scfEff(sb)(1) = b
                   scfEff(sb)(2) = c }
               case 1 =>
-                val a = r.read(6); val c = r.read(6)
-                if (c < 0) trunc = true
+                val a = r.bits(6); val c = r.bits(6)
+                if (!r.ok) trunc = true
                 else { scfEff(sb)(0) = a; scfEff(sb)(1) = a
                   scfEff(sb)(2) = c }
               case 2 =>
-                val a = r.read(6)
-                if (a < 0) trunc = true
+                val a = r.bits(6)
+                if (!r.ok) trunc = true
                 else { scfEff(sb)(0) = a; scfEff(sb)(1) = a
                   scfEff(sb)(2) = a }
               case _ =>
-                val a = r.read(6); val b = r.read(6)
-                if (b < 0) trunc = true
+                val a = r.bits(6); val b = r.bits(6)
+                if (!r.ok) trunc = true
                 else { scfEff(sb)(0) = a; scfEff(sb)(1) = b
                   scfEff(sb)(2) = b }
             }
@@ -273,15 +241,15 @@ object MpegAudio {
               val part = gr / 4
               val cs =
                 if (l2Grouped(m)) {
-                  val cw = r.read(l2CodeBits(m))
-                  if (cw < 0) { trunc = true; Array.empty[Int] }
+                  val cw = r.bits(l2CodeBits(m))
+                  if (!r.ok) { trunc = true; Array.empty[Int] }
                   else { nGrouped += 1
                     Array(cw % m, (cw / m) % m, cw / (m * m)) }
                 } else {
                   val nb = l2SampleBits(m)
-                  val a = r.read(nb); val b = r.read(nb)
-                  val c = r.read(nb)
-                  if (c < 0) { trunc = true; Array.empty[Int] }
+                  val a = r.bits(nb); val b = r.bits(nb)
+                  val c = r.bits(nb)
+                  if (!r.ok) { trunc = true; Array.empty[Int] }
                   else Array(a, b, c)
                 }
               if (!trunc) {
@@ -320,27 +288,26 @@ object MpegAudio {
     var p = 0
     var ok = true
     while (ok && p + 4 <= data.length) {
-      val h = ((data(p) & 0xff) << 24) | ((data(p + 1) & 0xff) << 16) |
-        ((data(p + 2) & 0xff) << 8) | (data(p + 3) & 0xff)
+      val h = Bytes.be32(data, p)
       val sync = (h >>> 20) == 0xFFF
       val version = (h >>> 19) & 1
       val layer = (h >>> 17) & 3
       if (!sync || version != 1 || layer != 3 ||
         p + FrameBytes > data.length) ok = false
       else {
-        val r = new BitReader(data, p + 4, p + FrameBytes)
-        val allocs = Array.fill(32)(r.read(4))
-        if (allocs.exists(a => a < 0 || a == 15)) ok = false
+        val r = new Bytes.BitReader(data, p + 4, p + FrameBytes)
+        val allocs = Array.fill(32)(r.bits(4))
+        if (!r.ok || allocs.contains(15)) ok = false
         else {
           val scf = Array.fill(32)(0)
-          for (sb <- 0 until 32 if allocs(sb) > 0) scf(sb) = r.read(6)
+          for (sb <- 0 until 32 if allocs(sb) > 0) scf(sb) = r.bits(6)
           var sum = 0L
           var amp = 0L
           var trunc = false
           for (s <- 0 until 12; sb <- 0 until 32 if allocs(sb) > 0) {
             val nb = allocs(sb) + 1
-            val c = r.read(nb)
-            if (c < 0 || scf(sb) < 0) trunc = true
+            val c = r.bits(nb)
+            if (!r.ok) trunc = true
             else {
               sum += c
               val p2 = (1 << nb).toDouble

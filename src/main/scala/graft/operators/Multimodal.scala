@@ -1213,9 +1213,8 @@ object Multimodal {
     require(w > 0 && h > 0 && nFrames > 0)
     val out = new java.io.ByteArrayOutputStream()
     def u8(v: Int): Unit = out.write(v & 0xff)
-    def u16(v: Int): Unit = { u8(v); u8(v >> 8) } // little-endian
     out.write("GIF89a".getBytes("US-ASCII"))
-    u16(w); u16(h)
+    Bytes.putLe16(out, w); Bytes.putLe16(out, h)
     u8(0x80 | 7) // GCT present, 256 entries
     u8(0); u8(0) // background index, aspect
     for (ci <- 0 until 256) {
@@ -1225,13 +1224,13 @@ object Multimodal {
     for (f <- 0 until nFrames) {
       u8(0x21); u8(0xF9); u8(4) // GCE
       u8(1 << 2) // disposal 1 (do not dispose), no transparency
-      u16(delayOf(f))
+      Bytes.putLe16(out, delayOf(f))
       u8(0); u8(0) // transparent index, terminator
       val (ix, iy, iw, ih) =
         if (rectOf == null) (0, 0, w, h) else rectOf(f)
       require(ix + iw <= w && iy + ih <= h && iw > 0 && ih > 0)
       u8(0x2C)
-      u16(ix); u16(iy); u16(iw); u16(ih)
+      Bytes.putLe16(out, ix); Bytes.putLe16(out, iy); Bytes.putLe16(out, iw); Bytes.putLe16(out, ih)
       val inter = interlaceFrame(f)
       u8(if (inter) 0x40 else 0)
       // frame pixels in storage (interlace) order
@@ -2229,11 +2228,9 @@ object Multimodal {
           val big = data(t0) == 'M' && data(t0 + 1) == 'M'
           if (!little && !big) return None
           def u16(o: Int): Int =
-            if (little) (data(o) & 0xff) | ((data(o + 1) & 0xff) << 8)
-            else ((data(o) & 0xff) << 8) | (data(o + 1) & 0xff)
+            if (little) Bytes.le16(data, o) else Bytes.be16(data, o)
           def u32(o: Int): Long =
-            if (little) (u16(o).toLong | (u16(o + 2).toLong << 16))
-            else ((u16(o).toLong << 16) | u16(o + 2).toLong)
+            if (little) Bytes.le32u(data, o) else Bytes.be32u(data, o)
           if (u16(t0 + 2) != 42) return None
           val ifd = t0 + u32(t0 + 4).toInt
           if (ifd + 2 > i + 2 + len) return None
@@ -2269,8 +2266,7 @@ object Multimodal {
       val payload = text.getBytes("ISO-8859-1")
       body.write(id.getBytes("US-ASCII"))
       val sz = 1 + payload.length
-      body.write((sz >> 24) & 0xff); body.write((sz >> 16) & 0xff)
-      body.write((sz >> 8) & 0xff); body.write(sz & 0xff)
+      Bytes.putBe32(body, sz)
       body.write(0); body.write(0) // frame flags
       body.write(0)                // encoding: ISO-8859-1
       body.write(payload)
@@ -2301,8 +2297,7 @@ object Multimodal {
     val out = Map.newBuilder[String, String]
     while (i + 10 <= end && data(i) != 0) {
       val id = new String(data, i, 4, "US-ASCII")
-      val sz = ((data(i + 4) & 0xff) << 24) | ((data(i + 5) & 0xff) << 16) |
-        ((data(i + 6) & 0xff) << 8) | (data(i + 7) & 0xff)
+      val sz = Bytes.be32(data, i + 4)
       if (sz < 1 || i + 10 + sz > end) return out.result()
       if (id.startsWith("T") && data(i + 10) == 0)
         out += id -> new String(data, i + 11, sz - 1, "ISO-8859-1")
@@ -2619,12 +2614,11 @@ object Multimodal {
     def u8(o: Int): Int = data(o) & 0xff
     if (tag(0) != "RIFF" || tag(8) != "WEBP") return None
     val riffEnd = math.min(data.length.toLong,
-      8L + (u8(4) | (u8(5) << 8) | (u8(6) << 16) | (u8(7) << 24))).toInt
+      8L + Bytes.le32(data, 4)).toInt
     var off = 12
     while (off + 8 <= riffEnd) {
       val id = tag(off)
-      val len = u8(off + 4) | (u8(off + 5) << 8) | (u8(off + 6) << 16) |
-        (u8(off + 7) << 24)
+      val len = Bytes.le32(data, off + 4)
       if (len < 0 || off + 8 + len > riffEnd) return None
       val p = off + 8
       id match {
@@ -2632,13 +2626,12 @@ object Multimodal {
           if ((u8(p) & 1) != 0) return None // inter frame: no dims
           if (u8(p + 3) != 0x9D || u8(p + 4) != 0x01 ||
             u8(p + 5) != 0x2A) return None
-          val w = (u8(p + 6) | (u8(p + 7) << 8)) & 0x3FFF
-          val h = (u8(p + 8) | (u8(p + 9) << 8)) & 0x3FFF
+          val w = Bytes.le16(data, p + 6) & 0x3FFF
+          val h = Bytes.le16(data, p + 8) & 0x3FFF
           return if (w > 0 && h > 0) Some((w, h)) else None
         case "VP8L" if len >= 5 =>
           if (u8(p) != 0x2F) return None
-          val bits = u8(p + 1) | (u8(p + 2) << 8) | (u8(p + 3) << 16) |
-            (u8(p + 4) << 24)
+          val bits = Bytes.le32(data, p + 1)
           return Some((1 + (bits & 0x3FFF), 1 + ((bits >> 14) & 0x3FFF)))
         case "VP8X" if len >= 10 =>
           val w = 1 + (u8(p + 4) | (u8(p + 5) << 8) | (u8(p + 6) << 16))
@@ -2910,8 +2903,6 @@ object Multimodal {
                      frames: Seq[Array[Byte]]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     def u8(v: Int): Unit = out.write(v & 0xff)
-    def u16(v: Int): Unit = { u8(v); u8(v >> 8) } // little-endian
-    def u32(v: Int): Unit = { u16(v); u16(v >> 16) }
     def fourcc(s: String): Unit = out.write(s.getBytes("US-ASCII"))
     val moviSize = 4 + frames.map(f => 8 + f.length + (f.length & 1)).sum
     val avihSize = 56
@@ -2920,25 +2911,25 @@ object Multimodal {
     val strlSize = 4 + 8 + strhSize + 8 + strfSize
     val hdrlSize = 4 + 8 + avihSize + 8 + strlSize
     val riffSize = 4 + 8 + hdrlSize + 8 + moviSize
-    fourcc("RIFF"); u32(riffSize); fourcc("AVI ")
-    fourcc("LIST"); u32(hdrlSize); fourcc("hdrl")
-    fourcc("avih"); u32(avihSize)
-    u32(usPerFrame); u32(0); u32(0); u32(0)
-    u32(frames.length); u32(0); u32(1); u32(0)
-    u32(w); u32(h); u32(0); u32(0); u32(0); u32(0)
-    fourcc("LIST"); u32(strlSize); fourcc("strl")
-    fourcc("strh"); u32(strhSize)
+    fourcc("RIFF"); Bytes.putLe32(out, riffSize); fourcc("AVI ")
+    fourcc("LIST"); Bytes.putLe32(out, hdrlSize); fourcc("hdrl")
+    fourcc("avih"); Bytes.putLe32(out, avihSize)
+    Bytes.putLe32(out, usPerFrame); Bytes.putLe32(out, 0); Bytes.putLe32(out, 0); Bytes.putLe32(out, 0)
+    Bytes.putLe32(out, frames.length); Bytes.putLe32(out, 0); Bytes.putLe32(out, 1); Bytes.putLe32(out, 0)
+    Bytes.putLe32(out, w); Bytes.putLe32(out, h); Bytes.putLe32(out, 0); Bytes.putLe32(out, 0); Bytes.putLe32(out, 0); Bytes.putLe32(out, 0)
+    fourcc("LIST"); Bytes.putLe32(out, strlSize); fourcc("strl")
+    fourcc("strh"); Bytes.putLe32(out, strhSize)
     fourcc("vids"); fourcc("MJPG")
-    u32(0); u16(0); u16(0); u32(0)
-    u32(usPerFrame); u32(1000000) // dwScale/dwRate = frame period
-    u32(0); u32(frames.length); u32(0); u32(-1); u32(0)
-    u16(0); u16(0); u16(w); u16(h) // rcFrame
-    fourcc("strf"); u32(strfSize)
-    u32(40); u32(w); u32(h); u16(1); u16(24)
-    fourcc("MJPG"); u32(w * h * 3); u32(0); u32(0); u32(0); u32(0)
-    fourcc("LIST"); u32(moviSize); fourcc("movi")
+    Bytes.putLe32(out, 0); Bytes.putLe16(out, 0); Bytes.putLe16(out, 0); Bytes.putLe32(out, 0)
+    Bytes.putLe32(out, usPerFrame); Bytes.putLe32(out, 1000000) // dwScale/dwRate = frame period
+    Bytes.putLe32(out, 0); Bytes.putLe32(out, frames.length); Bytes.putLe32(out, 0); Bytes.putLe32(out, -1); Bytes.putLe32(out, 0)
+    Bytes.putLe16(out, 0); Bytes.putLe16(out, 0); Bytes.putLe16(out, w); Bytes.putLe16(out, h) // rcFrame
+    fourcc("strf"); Bytes.putLe32(out, strfSize)
+    Bytes.putLe32(out, 40); Bytes.putLe32(out, w); Bytes.putLe32(out, h); Bytes.putLe16(out, 1); Bytes.putLe16(out, 24)
+    fourcc("MJPG"); Bytes.putLe32(out, w * h * 3); Bytes.putLe32(out, 0); Bytes.putLe32(out, 0); Bytes.putLe32(out, 0); Bytes.putLe32(out, 0)
+    fourcc("LIST"); Bytes.putLe32(out, moviSize); fourcc("movi")
     frames.foreach { f =>
-      fourcc("00dc"); u32(f.length); out.write(f, 0, f.length)
+      fourcc("00dc"); Bytes.putLe32(out, f.length); out.write(f, 0, f.length)
       if ((f.length & 1) != 0) u8(0) // RIFF chunks are word-aligned
     }
     out.toByteArray
@@ -3202,15 +3193,6 @@ object Multimodal {
       SceneRow(mediaId, si, a.toLong * usPerFrame / 1000L,
         b.toLong * usPerFrame / 1000L)
     }.toSeq
-  }
-
-  /** Partition-parallel shot detection: one map pass, binary column
-    * in, one summary row out — no shuffle, JPEG-decode bound like
-    * [[sampleVideoFrames]]. */
-  def extractShotCuts(rows: Dataset[MediaRow],
-                      threshold: Long): Dataset[ShotCuts] = {
-    import rows.sparkSession.implicits._
-    rows.mapPartitions(_.map(r => aviShotCuts(r.media_id, r.data, threshold)))
   }
 
   /** Partition-parallel video frame sampling: one flatMap pass, binary

@@ -159,8 +159,7 @@ object Npy {
     } else {
       val h2 = padded(12)
       out.write(2); out.write(0)
-      var i = 0
-      while (i < 4) { out.write((h2.length >> (8 * i)) & 0xff); i += 1 }
+      Bytes.putLe32(out, h2.length)
       out.write(h2)
     }
     out.write(data)

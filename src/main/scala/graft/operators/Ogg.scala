@@ -22,33 +22,11 @@ object Ogg {
                            bos: Boolean, eos: Boolean, continued: Boolean,
                            nSegs: Int, payloadLen: Int)
 
-  /** CRC table generated at class init from the polynomial — still
-    * closed-form (no transcribed constants beyond the poly itself);
-    * the bitwise single-step form lives in OggSpec as the
-    * independent cross-check. ~8× the byte rate of bit-at-a-time,
-    * which matters: the bench's Ogg pass CRCs hundreds of MB. */
-  private val CrcTable: Array[Long] = Array.tabulate(256) { n =>
-    var c = n.toLong << 24
-    var k = 0
-    while (k < 8) {
-      c = if ((c & 0x80000000L) != 0) ((c << 1) ^ 0x04C11DB7L) & 0xffffffffL
-          else (c << 1) & 0xffffffffL
-      k += 1
-    }
-    c
-  }
-
-  /** Ogg CRC-32: poly 0x04C11DB7, init 0, not reflected, xorout 0. */
-  def crc32(b: Array[Byte], from: Int, len: Int): Long = {
-    var crc = 0L
-    var i = from
-    while (i < from + len) {
-      crc = ((crc << 8) & 0xffffffffL) ^
-        CrcTable((((crc >> 24) ^ (b(i) & 0xffL)) & 0xff).toInt)
-      i += 1
-    }
-    crc
-  }
+  /** Ogg CRC-32: poly 0x04C11DB7, init 0, not reflected, xorout 0.
+    * The bitwise single-step form lives in OggSpec as the independent
+    * cross-check. */
+  def crc32(b: Array[Byte], from: Int, len: Int): Long =
+    Bytes.crc32Msb(0, b, from, len) & 0xffffffffL
 
   private def buildPage(serial: Long, seqNo: Long, granule: Long,
                         headerType: Int,
@@ -57,25 +35,16 @@ object Ogg {
     out.write("OggS".getBytes("US-ASCII"))
     out.write(0) // version
     out.write(headerType)
-    var g = granule
-    var i = 0
-    while (i < 8) { out.write((g & 0xff).toInt); g >>= 8; i += 1 }
-    def u32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-    }
-    u32(serial)
-    u32(seqNo)
-    u32(0) // CRC placeholder
+    Bytes.putLe64(out, granule)
+    Bytes.putLe32(out, serial)
+    Bytes.putLe32(out, seqNo)
+    Bytes.putLe32(out, 0) // CRC placeholder
     out.write(lacing.length)
     lacing.foreach(out.write)
     out.write(payload, 0, payload.length)
     val page = out.toByteArray
     val crc = crc32(page, 0, page.length)
-    page(22) = (crc & 0xff).toByte
-    page(23) = ((crc >> 8) & 0xff).toByte
-    page(24) = ((crc >> 16) & 0xff).toByte
-    page(25) = ((crc >> 24) & 0xff).toByte
+    Bytes.setLe32(page, 22, crc)
     page
   }
 
@@ -135,17 +104,10 @@ object Ogg {
         data(p + 3) == 'S' && data(p + 4) == 0)) ok = false
       else {
         val headerType = data(p + 5) & 0xff
-        var granule = 0L
-        var i = 7
-        while (i >= 0) {
-          granule = (granule << 8) | (data(p + 6 + i) & 0xffL); i -= 1
-        }
-        def u32(at: Int): Long =
-          (data(at) & 0xffL) | ((data(at + 1) & 0xffL) << 8) |
-            ((data(at + 2) & 0xffL) << 16) | ((data(at + 3) & 0xffL) << 24)
-        val serial = u32(p + 14)
-        val seqNo = u32(p + 18)
-        val storedCrc = u32(p + 22)
+        val granule = Bytes.le64(data, p + 6)
+        val serial = Bytes.le32u(data, p + 14)
+        val seqNo = Bytes.le32u(data, p + 18)
+        val storedCrc = Bytes.le32u(data, p + 22)
         val nSegs = data(p + 26) & 0xff
         if (p + 27 + nSegs > data.length) ok = false
         else {
@@ -218,17 +180,13 @@ object Ogg {
     * vendor string + KEY=value entries, all lengths 32-bit LE). */
   def buildOpusTags(vendor: String, tags: Seq[String]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    def u32(v: Int): Unit = {
-      out.write(v & 0xff); out.write((v >> 8) & 0xff)
-      out.write((v >> 16) & 0xff); out.write((v >> 24) & 0xff)
-    }
     out.write("OpusTags".getBytes("US-ASCII"))
     val vb = vendor.getBytes("UTF-8")
-    u32(vb.length); out.write(vb)
-    u32(tags.length)
+    Bytes.putLe32(out, vb.length); out.write(vb)
+    Bytes.putLe32(out, tags.length)
     tags.foreach { t =>
       val tb = t.getBytes("UTF-8")
-      u32(tb.length); out.write(tb)
+      Bytes.putLe32(out, tb.length); out.write(tb)
     }
     out.toByteArray
   }
@@ -239,12 +197,8 @@ object Ogg {
   def parseOpusTags(pkt: Array[Byte]): Option[(String, Seq[String])] = {
     if (pkt.length < 16) return None
     if (new String(pkt, 0, 8, "US-ASCII") != "OpusTags") return None
-    val b = java.nio.ByteBuffer.wrap(pkt)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
     var p = 8
-    def u32(): Long = {
-      val v = b.getInt(p).toLong & 0xffffffffL; p += 4; v
-    }
+    def u32(): Long = { val v = Bytes.le32u(pkt, p); p += 4; v }
     if (p + 4 > pkt.length) return None
     val vl = u32()
     if (vl > pkt.length - p) return None

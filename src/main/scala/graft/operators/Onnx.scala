@@ -46,7 +46,7 @@ package graft.operators
   * gate query (external storage rotating in). */
 object Onnx {
 
-  import Protobuf.{Cursor, writeVarint, writeTag, writeLen}
+  import Protobuf.{Cursor, writeTag, writeLen}
 
   /** data_type → bytes per element (the supported set). */
   val ItemSize: Map[Int, Int] = Map(
@@ -89,8 +89,8 @@ object Onnx {
     require(t.data.length.toLong == t.elems * isz,
       s"tensor ${t.name}: ${t.data.length} bytes for ${t.elems}")
     val out = new java.io.ByteArrayOutputStream(t.data.length + 64)
-    t.dims.foreach { d => writeTag(out, 1, 0); writeVarint(out, d) }
-    writeTag(out, 2, 0); writeVarint(out, t.dataType.toLong)
+    t.dims.foreach { d => writeTag(out, 1, 0); Bytes.putVarint(out, d) }
+    writeTag(out, 2, 0); Bytes.putVarint(out, t.dataType.toLong)
     strField(out, 8, t.name)
     val bb = java.nio.ByteBuffer.wrap(t.data)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
@@ -100,21 +100,18 @@ object Onnx {
       case 1 => // float_data, packed fixed32
         val body = new java.io.ByteArrayOutputStream(t.data.length)
         (0 until t.elems.toInt).foreach { i =>
-          val bits = bb.getInt(i * 4)
-          body.write(bits & 0xff); body.write((bits >> 8) & 0xff)
-          body.write((bits >> 16) & 0xff)
-          body.write((bits >> 24) & 0xff)
+          Bytes.putLe32(body, bb.getInt(i * 4))
         }
         writeLen(out, 4, body.toByteArray)
       case 6 => // int32_data, packed varints
         val body = new java.io.ByteArrayOutputStream()
         (0 until t.elems.toInt).foreach(i =>
-          writeVarint(body, bb.getInt(i * 4).toLong))
+          Bytes.putVarint(body, bb.getInt(i * 4).toLong))
         writeLen(out, 5, body.toByteArray)
       case 7 => // int64_data, packed varints
         val body = new java.io.ByteArrayOutputStream()
         (0 until t.elems.toInt).foreach(i =>
-          writeVarint(body, bb.getLong(i * 8)))
+          Bytes.putVarint(body, bb.getLong(i * 8)))
         writeLen(out, 7, body.toByteArray)
       case 11 => // double_data, packed fixed64
         val body = new java.io.ByteArrayOutputStream(t.data.length)
@@ -163,13 +160,13 @@ object Onnx {
     m.inputs.foreach(n => writeLen(g, 11, buildValueInfo(n)))
     m.outputs.foreach(n => writeLen(g, 12, buildValueInfo(n)))
     val out = new java.io.ByteArrayOutputStream(g.size() + 128)
-    writeTag(out, 1, 0); writeVarint(out, m.irVersion)
+    writeTag(out, 1, 0); Bytes.putVarint(out, m.irVersion)
     strField(out, 2, m.producer)
     writeLen(out, 7, g.toByteArray)
     m.opsets.foreach { case (domain, version) =>
       val op = new java.io.ByteArrayOutputStream(16)
       if (domain.nonEmpty) strField(op, 1, domain)
-      writeTag(op, 2, 0); writeVarint(op, version)
+      writeTag(op, 2, 0); Bytes.putVarint(op, version)
       writeLen(out, 8, op.toByteArray)
     }
     out.toByteArray
@@ -222,7 +219,7 @@ object Onnx {
       field match {
         case 1 => repeated(c, wire, dims, (x: Cursor) => x.varint())
         case 2 => dataType = c.varint().toInt
-        case 4 => repeated(c, wire, floats, (x: Cursor) => x.fixed32())
+        case 4 => repeated(c, wire, floats, (x: Cursor) => x.le32())
         case 5 => repeated(c, wire, i32s,
           (x: Cursor) => x.varint().toInt)
         case 7 => repeated(c, wire, i64s, (x: Cursor) => x.varint())
@@ -231,7 +228,7 @@ object Onnx {
           val s = c.lenSlice()
           if (!c.ok) return None
           raw = java.util.Arrays.copyOfRange(s.b, s.p, s.end)
-        case 10 => repeated(c, wire, f64s, (x: Cursor) => x.fixed64())
+        case 10 => repeated(c, wire, f64s, (x: Cursor) => x.le64())
         case 13 => // external_data: StringStringEntryProto pairs
           val s = c.lenSlice()
           if (!c.ok) return None
@@ -320,8 +317,8 @@ object Onnx {
     require(ItemSize.contains(t.dataType),
       s"tensor ${t.name}: data_type ${t.dataType}")
     val out = new java.io.ByteArrayOutputStream(128)
-    t.dims.foreach { d => writeTag(out, 1, 0); writeVarint(out, d) }
-    writeTag(out, 2, 0); writeVarint(out, t.dataType.toLong)
+    t.dims.foreach { d => writeTag(out, 1, 0); Bytes.putVarint(out, d) }
+    writeTag(out, 2, 0); Bytes.putVarint(out, t.dataType.toLong)
     strField(out, 8, t.name)
     def entry(k: String, v: String): Unit = {
       val e = new java.io.ByteArrayOutputStream()
@@ -332,7 +329,7 @@ object Onnx {
     entry("location", location)
     entry("offset", offset.toString)
     entry("length", t.data.length.toString)
-    writeTag(out, 14, 0); writeVarint(out, 1L) // EXTERNAL
+    writeTag(out, 14, 0); Bytes.putVarint(out, 1L) // EXTERNAL
     out.toByteArray
   }
 

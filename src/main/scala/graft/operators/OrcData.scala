@@ -106,30 +106,6 @@ object OrcData {
   // Integer runs
   // ---------------------------------------------------------------
 
-  private def zz(v: Long): Long = (v >>> 1) ^ -(v & 1)
-
-  /** Base-128 varint (unsigned). */
-  private final class VarCur(val b: Array[Byte]) {
-    var p = 0
-    var ok = true
-    def varint(): Long = {
-      var v = 0L
-      var shift = 0
-      var done = false
-      while (ok && !done) {
-        if (p >= b.length || shift > 63) { ok = false; done = true }
-        else {
-          val x = b(p) & 0xff
-          p += 1
-          v |= (x & 0x7fL) << shift
-          shift += 7
-          done = (x & 0x80) == 0
-        }
-      }
-      v
-    }
-  }
-
   /** RLEv1: run = header 0..127 (run of header+3, next byte signed
     * delta, then base varint), literal = 128..255 (256-header
     * varints). */
@@ -137,7 +113,7 @@ object OrcData {
       : Option[Array[Long]] = {
     if (count < 0 || count > MaxValues) return None
     val out = new Array[Long](count)
-    val c = new VarCur(b)
+    val c = new Bytes.Cursor(b)
     var n = 0
     while (n < count) {
       if (!c.ok || c.p >= b.length) return None
@@ -150,7 +126,7 @@ object OrcData {
         c.p += 1
         val raw = c.varint()
         if (!c.ok) return None
-        var v = if (signed) zz(raw) else raw
+        var v = if (signed) Bytes.unzigzag(raw) else raw
         var i = 0
         while (i < run) { out(n) = v; n += 1; v += delta; i += 1 }
       } else {
@@ -160,7 +136,7 @@ object OrcData {
         while (i < lit) {
           val raw = c.varint()
           if (!c.ok) return None
-          out(n) = if (signed) zz(raw) else raw
+          out(n) = if (signed) Bytes.unzigzag(raw) else raw
           n += 1
           i += 1
         }
@@ -249,7 +225,7 @@ object OrcData {
           var i = 0
           while (i < w) { v = (v << 8) | (b(p + i) & 0xffL); i += 1 }
           p += w
-          val sv = if (signed) zz(v) else v
+          val sv = if (signed) Bytes.unzigzag(v) else v
           i = 0
           while (i < rep) { out(n) = sv; n += 1; i += 1 }
         case 1 => // DIRECT
@@ -261,7 +237,7 @@ object OrcData {
           p = unpackMsb(b, p, w, len, out, n).getOrElse(return None)
           if (signed) {
             var i = n
-            while (i < n + len) { out(i) = zz(out(i)); i += 1 }
+            while (i < n + len) { out(i) = Bytes.unzigzag(out(i)); i += 1 }
           }
           n += len
         case 2 => // PATCHED_BASE
@@ -323,12 +299,12 @@ object OrcData {
           val len = (((h0 & 1) << 8) | (b(p) & 0xff)) + 1
           p += 1
           if (n + len > count) return None
-          val c = new VarCur(b)
+          val c = new Bytes.Cursor(b)
           c.p = p
           val baseRaw = c.varint()
           if (!c.ok) return None
-          val base = if (signed) zz(baseRaw) else baseRaw
-          val deltaBase = zz(c.varint()) // always signed
+          val base = if (signed) Bytes.unzigzag(baseRaw) else baseRaw
+          val deltaBase = Bytes.unzigzag(c.varint()) // always signed
           if (!c.ok) return None
           p = c.p
           out(n) = base
@@ -370,17 +346,6 @@ object OrcData {
     * 3 int, 4 long, 5 float, 6 double, 7 string, 8 binary, 15 date,
     * 16 varchar, 17 char. */
   // flatLeaves lives below, as the flat-only view over columnShapes.
-
-  private def le32(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8) |
-      ((b(o + 2) & 0xff) << 16) | ((b(o + 3) & 0xff) << 24)
-
-  private def le64(b: Array[Byte], o: Int): Long = {
-    var v = 0L
-    var i = 0
-    while (i < 8) { v |= (b(o + i) & 0xffL) << (8 * i); i += 1 }
-    v
-  }
 
   /** Decode one column of one stripe. */
   private def decodeStripeColumn(data: Array[Byte], tail: Tail,
@@ -434,12 +399,12 @@ object OrcData {
         val d = streamBytes(1).getOrElse(return None)
         if (d.length < 4L * nNonNull) return None
         Some(assemble(i =>
-          java.lang.Float.intBitsToFloat(le32(d, 4 * i))))
+          java.lang.Float.intBitsToFloat(Bytes.le32(d, 4 * i))))
       case 6 => // double
         val d = streamBytes(1).getOrElse(return None)
         if (d.length < 8L * nNonNull) return None
         Some(assemble(i =>
-          java.lang.Double.longBitsToDouble(le64(d, 8 * i))))
+          java.lang.Double.longBitsToDouble(Bytes.le64(d, 8 * i))))
       case 9 => // timestamp: DATA = seconds rel 2015-01-01 (signed
         // runs), SECONDARY = nanos with the trailing-zero packing.
         // Non-UTC writer timezones reject honestly (the base epoch
@@ -482,13 +447,13 @@ object OrcData {
         val sb = streamBytes(5).getOrElse(return None)
         val scales = intRun(sb, nNonNull, signed = true, encKind)
           .getOrElse(return None)
-        val c = new VarCur(d)
+        val c = new Bytes.Cursor(d)
         val unscaled = new Array[Long](nNonNull)
         var i = 0
         while (i < nNonNull) {
           val raw = c.varint()
           if (!c.ok) return None
-          unscaled(i) = zz(raw)
+          unscaled(i) = Bytes.unzigzag(raw)
           i += 1
         }
         if (scales.exists(s => s < 0 || s > 38)) return None

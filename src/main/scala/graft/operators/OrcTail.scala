@@ -180,8 +180,6 @@ object OrcTail {
   // the orc-format descriptor)
   // ---------------------------------------------------------------
 
-  private def zz(v: Long): Long = (v >>> 1) ^ -(v & 1)
-
   private def utf8(b: Array[Byte]): Option[String] = {
     val dec = java.nio.charset.StandardCharsets.UTF_8.newDecoder()
     try Some(dec.decode(java.nio.ByteBuffer.wrap(b)).toString)
@@ -220,9 +218,9 @@ object OrcTail {
           while (s.hasMore) {
             val t = s.varint()
             ((t >>> 3).toInt, (t & 7).toInt) match {
-              case (1, 0) => mn = Some(zz(s.varint()))
-              case (2, 0) => mx = Some(zz(s.varint()))
-              case (3, 0) => sm = Some(zz(s.varint()))
+              case (1, 0) => mn = Some(Bytes.unzigzag(s.varint()))
+              case (2, 0) => mx = Some(Bytes.unzigzag(s.varint()))
+              case (3, 0) => sm = Some(Bytes.unzigzag(s.varint()))
               case (_, w) => s.skip(w)
             }
           }
@@ -234,7 +232,7 @@ object OrcTail {
           while (s.hasMore) {
             val t = s.varint()
             def d(): Double =
-              java.lang.Double.longBitsToDouble(s.fixed64())
+              java.lang.Double.longBitsToDouble(s.le64())
             ((t >>> 3).toInt, (t & 7).toInt) match {
               case (1, 1) => mn = Some(d())
               case (2, 1) => mx = Some(d())
@@ -254,7 +252,7 @@ object OrcTail {
                 mn = utf8(slice(s)); if (mn.isEmpty) s.fail()
               case (2, 2) =>
                 mx = utf8(slice(s)); if (mx.isEmpty) s.fail()
-              case (3, 0) => sm = Some(zz(s.varint()))
+              case (3, 0) => sm = Some(Bytes.unzigzag(s.varint()))
               case (_, w) => s.skip(w)
             }
           }
@@ -697,7 +695,7 @@ object OrcTail {
               } else s.fail()
             case (2, 1) => // legacy fixed64 bitset entries
               if (bits == null) bits = Array.empty
-              bits = bits :+ s.fixed64()
+              bits = bits :+ s.le64()
             case (_, w) => s.skip(w)
           }
         }

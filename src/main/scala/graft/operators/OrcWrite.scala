@@ -151,13 +151,6 @@ object OrcWrite {
   private def intRleV1(vals: Seq[Long], signed: Boolean)
       : Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(vals.length + 8)
-    def varint(v0: Long): Unit = {
-      var v = v0
-      while ((v & ~0x7fL) != 0) {
-        out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7
-      }
-      out.write(v.toInt)
-    }
     var i = 0
     while (i < vals.length) {
       val n = math.min(128, vals.length - i)
@@ -165,7 +158,7 @@ object OrcWrite {
       var j = 0
       while (j < n) {
         val v = vals(i + j)
-        varint(if (signed) (v << 1) ^ (v >> 63) else v)
+        Bytes.putVarint(out, if (signed) Bytes.zigzag(v) else v)
         j += 1
       }
       i += n
@@ -200,8 +193,6 @@ object OrcWrite {
       case 64 => 31
       case other => sys.error(s"unencodable width $other")
     }
-
-  private def zigzag(v: Long): Long = (v << 1) ^ (v >> 63)
 
   /** PATCHED_BASE encode for one ≤512-value segment (late r14 —
     * completing RLEv2 sub-encoding symmetry with [[OrcData]]):
@@ -308,14 +299,7 @@ object OrcWrite {
   private[graft] def intRleV2(vals: Seq[Long], signed: Boolean)
       : Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(vals.length + 16)
-    def varint(v0: Long): Unit = {
-      var v = v0
-      while ((v & ~0x7fL) != 0) {
-        out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7
-      }
-      out.write(v.toInt)
-    }
-    def enc(v: Long): Long = if (signed) zigzag(v) else v
+    def enc(v: Long): Long = if (signed) Bytes.zigzag(v) else v
     def bitsNeeded(v: Long): Int =
       math.max(1, 64 - java.lang.Long.numberOfLeadingZeros(v))
     def packMsb(xs: Seq[Long], w: Int): Unit = {
@@ -360,8 +344,8 @@ object OrcWrite {
           if (left - len == 1) len -= 1
           out.write(0xc0 | (((len - 1) >> 8) & 1))
           out.write((len - 1) & 0xff)
-          varint(enc(vals(i))) // base (stream signedness)
-          varint(zigzag(0L)) // delta base, always signed
+          Bytes.putVarint(out, enc(vals(i))) // base (stream signedness)
+          Bytes.putVarint(out, Bytes.zigzag(0L)) // delta base, always signed
           left -= len
         }
         i = j
@@ -470,10 +454,10 @@ object OrcWrite {
   // Protobuf messages (orc_proto.proto field numbers)
   // ---------------------------------------------------------------
 
-  import Protobuf.{writeVarint, writeTag, writeLen}
+  import Protobuf.{writeTag, writeLen}
 
   private def vfield(b: java.io.ByteArrayOutputStream, id: Int,
-      v: Long): Unit = { writeTag(b, id, 0); writeVarint(b, v) }
+      v: Long): Unit = { writeTag(b, id, 0); Bytes.putVarint(b, v) }
   private def sfield(b: java.io.ByteArrayOutputStream, id: Int,
       s: Array[Byte]): Unit = writeLen(b, id, s)
 
@@ -690,11 +674,8 @@ object OrcWrite {
               val bd = v.asInstanceOf[java.math.BigDecimal]
               require(bd.scale == scale,
                 s"decimal scale drift in $colName")
-              var z = zigzag(bd.unscaledValue.longValueExact)
-              while ((z & ~0x7fL) != 0) {
-                data.write(((z & 0x7f) | 0x80).toInt); z >>>= 7
-              }
-              data.write(z.toInt)
+              Bytes.putVarint(data,
+                Bytes.zigzag(bd.unscaledValue.longValueExact))
             }
             streams += ((1, col, section(codecId, data.toByteArray)))
             streams += ((5, col, section(codecId, intRun(
@@ -704,9 +685,7 @@ object OrcWrite {
             nn.foreach { v =>
               val bits = java.lang.Float
                 .floatToIntBits(v.asInstanceOf[Float])
-              var k = 0
-              while (k < 4) {
-                b.write((bits >>> (8 * k)) & 0xff); k += 1 }
+              Bytes.putLe32(b, bits)
             }
             streams += ((1, col, section(codecId, b.toByteArray)))
           case "f64" =>
@@ -714,9 +693,7 @@ object OrcWrite {
             nn.foreach { v =>
               val bits = java.lang.Double
                 .doubleToLongBits(v.asInstanceOf[Double])
-              var k = 0
-              while (k < 8) {
-                b.write(((bits >>> (8 * k)) & 0xff).toInt); k += 1 }
+              Bytes.putLe64(b, bits)
             }
             streams += ((1, col, section(codecId, b.toByteArray)))
           case "string" if useDict =>
@@ -879,7 +856,7 @@ object OrcWrite {
               val st = new java.io.ByteArrayOutputStream()
               def sint(id: Int, v: Long): Unit = {
                 writeTag(st, id, 0)
-                writeVarint(st, (v << 1) ^ (v >> 63))
+                Bytes.putVarint(st, Bytes.zigzag(v))
               }
               sint(1, vs.min); sint(2, vs.max)
               try {
@@ -899,11 +876,7 @@ object OrcWrite {
                 def dbl(id: Int, v: Double): Unit = {
                   writeTag(st, id, 1)
                   val bits = java.lang.Double.doubleToLongBits(v)
-                  var k = 0
-                  while (k < 8) {
-                    st.write(((bits >>> (8 * k)) & 0xff).toInt)
-                    k += 1
-                  }
+                  Bytes.putLe64(st, bits)
                 }
                 dbl(1, vs.min); dbl(2, vs.max); dbl(3, vs.sum)
                 sfield(cs, 3, st.toByteArray) // DoubleStatistics
@@ -928,13 +901,13 @@ object OrcWrite {
               sfield(st, 1, mn)
               sfield(st, 2, mx)
               writeTag(st, 3, 0)
-              writeVarint(st, (sum << 1) ^ (sum >> 63))
+              Bytes.putVarint(st, Bytes.zigzag(sum))
               sfield(cs, 4, st.toByteArray) // StringStatistics
             case "boolean" =>
               val trues = nn.count(_.asInstanceOf[Boolean]).toLong
               val st = new java.io.ByteArrayOutputStream()
               val packed = new java.io.ByteArrayOutputStream()
-              writeVarint(packed, trues)
+              Bytes.putVarint(packed, trues)
               sfield(st, 1, packed.toByteArray) // packed uint64
               sfield(cs, 5, st.toByteArray) // BucketStatistics
             case DecimalKind(_, _) =>
@@ -953,8 +926,7 @@ object OrcWrite {
               val st = new java.io.ByteArrayOutputStream()
               def sint32(id: Int, v: Int): Unit = {
                 writeTag(st, id, 0)
-                writeVarint(st, ((v << 1) ^ (v >> 31)).toLong
-                  & 0xffffffffL)
+                Bytes.putVarint(st, Bytes.zigzag(v) & 0xffffffffL)
               }
               sint32(1, vs.min); sint32(2, vs.max)
               sfield(cs, 7, st.toByteArray) // DateStatistics
@@ -965,7 +937,7 @@ object OrcWrite {
               }.sum
               val st = new java.io.ByteArrayOutputStream()
               writeTag(st, 1, 0)
-              writeVarint(st, (sum << 1) ^ (sum >> 63))
+              Bytes.putVarint(st, Bytes.zigzag(sum))
               sfield(cs, 8, st.toByteArray) // BinaryStatistics
             case "ts" =>
               val ms = nn.map(v => Math.floorDiv(
@@ -973,7 +945,7 @@ object OrcWrite {
               val st = new java.io.ByteArrayOutputStream()
               def sint(id: Int, v: Long): Unit = {
                 writeTag(st, id, 0)
-                writeVarint(st, (v << 1) ^ (v >> 63))
+                Bytes.putVarint(st, Bytes.zigzag(v))
               }
               sint(3, ms.min); sint(4, ms.max) // minimum/maximumUtc
               sfield(cs, 9, st.toByteArray) // TimestampStatistics
@@ -982,7 +954,7 @@ object OrcWrite {
           val colHasNull = ss.exists(st =>
             st._1 == 0 && st._2 == colId)
           writeTag(cs, 10, 0)
-          writeVarint(cs, if (colHasNull) 1L else 0L)
+          Bytes.putVarint(cs, if (colHasNull) 1L else 0L)
           val entry = new java.io.ByteArrayOutputStream()
           sfield(entry, 2, cs.toByteArray) // RowIndexEntry.statistics
           val ri = new java.io.ByteArrayOutputStream()
@@ -1174,8 +1146,8 @@ object OrcWrite {
     vfield(ps, 1, fBytes.length.toLong)
     vfield(ps, 2, codecId.toLong)
     vfield(ps, 3, BlockSize.toLong)
-    writeTag(ps, 4, 0); writeVarint(ps, 0L) // version 0
-    writeTag(ps, 4, 0); writeVarint(ps, 12L) // .12
+    writeTag(ps, 4, 0); Bytes.putVarint(ps, 0L) // version 0
+    writeTag(ps, 4, 0); Bytes.putVarint(ps, 12L) // .12
     vfield(ps, 5, 0L) // metadataLength
     vfield(ps, 6, 1L) // writerVersion
     sfield(ps, 8000, "ORC".getBytes("UTF-8"))

@@ -73,11 +73,8 @@ object ParquetData {
     * is NOT a timestamp should stay raw). */
   def int96ToMicros(b: Array[Byte]): Option[Long] = {
     if (b.length != 12) return None
-    var nanos = 0L
-    var i = 0
-    while (i < 8) { nanos |= (b(i) & 0xffL) << (8 * i); i += 1 }
-    val julian = (b(8) & 0xff) | ((b(9) & 0xff) << 8) |
-      ((b(10) & 0xff) << 16) | ((b(11) & 0xff) << 24)
+    val nanos = Bytes.le64(b, 0)
+    val julian = Bytes.le32(b, 8)
     if (nanos < 0 || nanos >= 86400L * 1000000000L) return None
     if (julian < 2440588 - 4000000 || julian > 2440588 + 4000000)
       return None
@@ -318,17 +315,14 @@ object ParquetData {
         val out = new Array[Byte](uncomp)
         var p = 0
         var d = 0
-        def be32(o: Int): Int = ((raw(o) & 0xff) << 24) |
-          ((raw(o + 1) & 0xff) << 16) | ((raw(o + 2) & 0xff) << 8) |
-          (raw(o + 3) & 0xff)
         while (p < raw.length) {
           if (p + 4 > raw.length) return None
-          val orig = be32(p); p += 4
+          val orig = Bytes.be32(raw, p); p += 4
           if (orig < 0 || d + orig > uncomp) return None
           var produced = 0
           while (produced < orig) {
             if (p + 4 > raw.length) return None
-            val clen = be32(p); p += 4
+            val clen = Bytes.be32(raw, p); p += 4
             if (clen <= 0 || p + clen > raw.length) return None
             val tmp = new Array[Byte](orig - produced)
             val n = Lz4.decompressBlock(raw, p, clen, tmp)
@@ -351,17 +345,6 @@ object ParquetData {
   // RLE / bit-packed hybrid (Encodings.md §RLE)
   // ---------------------------------------------------------------
 
-  private def le32(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8) |
-      ((b(o + 2) & 0xff) << 16) | ((b(o + 3) & 0xff) << 24)
-
-  private def le64(b: Array[Byte], o: Int): Long = {
-    var v = 0L
-    var i = 0
-    while (i < 8) { v |= (b(o + i) & 0xffL) << (8 * i); i += 1 }
-    v
-  }
-
   /** Decode `count` values from the hybrid stream in
     * [off, off+len); trailing bit-packed padding is legal. None on
     * any overrun. */
@@ -371,24 +354,15 @@ object ParquetData {
       count > MaxValues) return None
     val out = new Array[Int](count)
     if (bitWidth == 0) return Some(out) // all zero
-    var p = off
     val end = off + len
     if (end > b.length) return None
+    val c = new Bytes.Cursor(b, off, end)
     var n = 0
     val byteW = (bitWidth + 7) / 8
     while (n < count) {
-      // unsigned LEB128 header
-      var hdr = 0L
-      var shift = 0
-      var done = false
-      while (!done) {
-        if (p >= end || shift > 35) return None
-        val x = b(p) & 0xff
-        p += 1
-        hdr |= (x & 0x7fL) << shift
-        shift += 7
-        done = (x & 0x80) == 0
-      }
+      val hdr = c.varint(6)
+      if (!c.ok) return None
+      val p = c.p
       if ((hdr & 1) == 0) { // RLE run
         val run = hdr >>> 1
         if (run <= 0 || run > MaxValues || p + byteW > end)
@@ -396,7 +370,7 @@ object ParquetData {
         var v = 0
         var i = 0
         while (i < byteW) { v |= (b(p + i) & 0xff) << (8 * i); i += 1 }
-        p += byteW
+        c.p += byteW
         if (n + run > count) return None
         var k = 0L
         while (k < run) { out(n) = v; n += 1; k += 1 }
@@ -424,7 +398,7 @@ object ParquetData {
           n += 1
           k += 1
         }
-        p += nbytes
+        c.p += nbytes
       }
     }
     Some(out)
@@ -440,56 +414,38 @@ object ParquetData {
     * (the parquet-mr layout the spec describes). */
   private def deltaBinaryPacked(b: Array[Byte], off: Int, limit: Int,
       expect: Int): Option[(Array[Long], Int)] = {
-    var p = off
-    var ok = true
-    def varint(): Long = {
-      var v = 0L
-      var shift = 0
-      var done = false
-      while (ok && !done) {
-        if (p >= limit || shift > 63) { ok = false; done = true }
-        else {
-          val x = b(p) & 0xff
-          p += 1
-          v |= (x & 0x7fL) << shift
-          shift += 7
-          done = (x & 0x80) == 0
-        }
-      }
-      v
-    }
-    def zz(): Long = { val v = varint(); (v >>> 1) ^ -(v & 1) }
-    val blockSize = varint()
-    val numMini = varint()
-    val total = varint()
-    val first = zz()
-    if (!ok || blockSize <= 0 || blockSize > (1 << 20) ||
+    val c = new Bytes.Cursor(b, off, limit)
+    val blockSize = c.varint()
+    val numMini = c.varint()
+    val total = c.varint()
+    val first = Bytes.unzigzag(c.varint())
+    if (!c.ok || blockSize <= 0 || blockSize > (1 << 20) ||
       numMini <= 0 || numMini > 512 ||
       blockSize % (numMini * 32) != 0) return None
     if (total != expect || total > MaxValues) return None
     val miniSize = (blockSize / numMini).toInt
     val out = new Array[Long](total.toInt)
-    if (total == 0) return Some((out, p - off))
+    if (total == 0) return Some((out, c.p - off))
     out(0) = first
     var n = 1
     var prev = first
     while (n < total) {
-      val minDelta = zz()
-      if (!ok || p + numMini > limit) return None
+      val minDelta = Bytes.unzigzag(c.varint())
+      if (!c.ok || c.p + numMini > limit) return None
       val widths = new Array[Int](numMini.toInt)
       var w = 0
       while (w < numMini) {
-        widths(w) = b(p) & 0xff
+        widths(w) = b(c.p) & 0xff
         if (widths(w) > 64) return None
-        p += 1
+        c.p += 1
         w += 1
       }
       var mb = 0
       while (mb < numMini && n < total) {
         val bw = widths(mb)
         val nbytes = miniSize * bw / 8
-        if (p + nbytes > limit) return None
-        var bitPos = p.toLong * 8
+        if (c.p + nbytes > limit) return None
+        var bitPos = c.p.toLong * 8
         var i = 0
         while (i < miniSize && n < total) {
           var v = 0L
@@ -508,11 +464,11 @@ object ParquetData {
           n += 1
           i += 1
         }
-        p += nbytes
+        c.p += nbytes
         mb += 1
       }
     }
-    Some((out, p - off))
+    Some((out, c.p - off))
   }
 
   /** DELTA_LENGTH_BYTE_ARRAY: delta-packed lengths + concatenated
@@ -576,10 +532,10 @@ object ParquetData {
         Some((out, nbytes))
       case 1 => // INT32
         if (off + 4L * n > limit) return None
-        Some(((0 until n).map(i => le32(b, off + 4 * i)), 4 * n))
+        Some(((0 until n).map(i => Bytes.le32(b, off + 4 * i)), 4 * n))
       case 2 => // INT64
         if (off + 8L * n > limit) return None
-        Some(((0 until n).map(i => le64(b, off + 8 * i)), 8 * n))
+        Some(((0 until n).map(i => Bytes.le64(b, off + 8 * i)), 8 * n))
       case 3 => // INT96 (legacy timestamps): raw 12 bytes
         if (off + 12L * n > limit) return None
         Some(((0 until n).map(i => java.util.Arrays.copyOfRange(
@@ -587,12 +543,12 @@ object ParquetData {
       case 4 => // FLOAT
         if (off + 4L * n > limit) return None
         Some(((0 until n).map(i =>
-          java.lang.Float.intBitsToFloat(le32(b, off + 4 * i))),
+          java.lang.Float.intBitsToFloat(Bytes.le32(b, off + 4 * i))),
           4 * n))
       case 5 => // DOUBLE
         if (off + 8L * n > limit) return None
         Some(((0 until n).map(i =>
-          java.lang.Double.longBitsToDouble(le64(b, off + 8 * i))),
+          java.lang.Double.longBitsToDouble(Bytes.le64(b, off + 8 * i))),
           8 * n))
       case 6 => // BYTE_ARRAY: u32 length + bytes
         var p = off
@@ -600,7 +556,7 @@ object ParquetData {
         var i = 0
         while (i < n) {
           if (p + 4 > limit) return None
-          val len = le32(b, p)
+          val len = Bytes.le32(b, p)
           p += 4
           // Long compare: a crafted huge length must not wrap the
           // Int bounds check into a copyOfRange throw
@@ -679,7 +635,7 @@ object ParquetData {
           idx.toIndexedSeq.map(dict)
         case 3 => // RLE (booleans): u32 length prefix
           if (leaf.typeId != 0 || pos0 + 4 > limit) return false
-          val len = le32(bytes, pos0)
+          val len = Bytes.le32(bytes, pos0)
           if (len < 0 || pos0 + 4 + len > limit) return false
           val bits = rleHybrid(bytes, pos0 + 4, len, 1, nNonNull)
             .getOrElse(return false)
@@ -758,7 +714,7 @@ object ParquetData {
           var pos = 0
           def levels(width: Int, into: Array[Int]): Boolean = {
             if (pos + 4 > bytes.length) return false
-            val len = le32(bytes, pos)
+            val len = Bytes.le32(bytes, pos)
             pos += 4
             if (len < 0 || pos + len > bytes.length) return false
             val d = rleHybrid(bytes, pos, len, width, h.numValues)

@@ -103,33 +103,9 @@ object ParquetFooter {
   private final val MaxDepth = 32
   private final val MaxItems = 1 << 20
 
-  private[operators] final class TCompact(val b: Array[Byte],
-      var p: Int, val end: Int) {
-    var ok = true
-    def fail(): Unit = ok = false
-
-    def u8(): Int =
-      if (!ok || p >= end) { fail(); 0 }
-      else { val v = b(p) & 0xff; p += 1; v }
-
-    def varint(): Long = {
-      var shift = 0
-      var v = 0L
-      var done = false
-      while (ok && !done) {
-        if (p >= end || shift >= 70) { fail(); done = true }
-        else {
-          val x = b(p) & 0xff
-          p += 1
-          v |= (x & 0x7fL) << shift
-          shift += 7
-          done = (x & 0x80) == 0
-        }
-      }
-      if (ok) v else 0L
-    }
-
-    def zigzag(): Long = { val v = varint(); (v >>> 1) ^ -(v & 1) }
+  private[operators] final class TCompact(bytes: Array[Byte],
+      start: Int, limit: Int) extends Bytes.Cursor(bytes, start, limit) {
+    def zigzag(): Long = Bytes.unzigzag(varint())
 
     def binary(): Array[Byte] = {
       val n = varint()
@@ -339,10 +315,7 @@ object ParquetFooter {
       data(o) == 'P' && data(o + 1) == 'A' && data(o + 2) == 'R' &&
         data(o + 3) == '1'
     if (!magicAt(0) || !magicAt(data.length - 4)) return None
-    val len = (data(data.length - 8) & 0xff) |
-      ((data(data.length - 7) & 0xff) << 8) |
-      ((data(data.length - 6) & 0xff) << 16) |
-      ((data(data.length - 5) & 0xff) << 24)
+    val len = Bytes.le32(data, data.length - 8)
     if (len <= 0 || len > data.length - 12) return None
     val start = data.length - 8 - len
     val c = new TCompact(data, start, start + len)
@@ -526,11 +499,7 @@ object ParquetFooter {
   /** PLAIN-encoded INT64 page bound → value (LE, 8 bytes). */
   def boundI64(b: Array[Byte]): Option[Long] =
     if (b.length != 8) None
-    else {
-      var v = 0L; var i = 0
-      while (i < 8) { v |= (b(i) & 0xffL) << (8 * i); i += 1 }
-      Some(v)
-    }
+    else Some(Bytes.le64(b, 0))
 
   /** PLAIN-encoded DOUBLE page bound → value. */
   def boundF64(b: Array[Byte]): Option[Double] =
@@ -560,9 +529,7 @@ object ParquetFooter {
       var i = 0
       while (i < 8) {
         val base = block * 32 + i * 4
-        val w = (bits(base) & 0xff) | ((bits(base + 1) & 0xff) << 8) |
-          ((bits(base + 2) & 0xff) << 16) |
-          ((bits(base + 3) & 0xff) << 24)
+        val w = Bytes.le32(bits, base)
         val bit = (key * BloomSalt(i)) >>> 27
         if ((w & (1 << bit)) == 0) return false
         i += 1
@@ -575,8 +542,7 @@ object ParquetFooter {
     * little-endian bytes through xxHash64 seed 0). */
   def bloomHashLong(v: Long): Long = {
     val b = new Array[Byte](8)
-    var i = 0
-    while (i < 8) { b(i) = ((v >>> (8 * i)) & 0xff).toByte; i += 1 }
+    Bytes.setLe64(b, 0, v)
     Zstd.xxh64(b, 0, 8)
   }
 

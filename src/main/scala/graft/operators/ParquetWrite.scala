@@ -133,17 +133,6 @@ object ParquetWrite {
 
   private[graft] val DecimalKind = """decimal\((\d+),(\d+)\)""".r
 
-  /** Unsigned LEB128 — the one varint writer every encoder here
-    * shares (thrift compact, RLE headers, DELTA block headers). */
-  private def writeUvarint(out: java.io.ByteArrayOutputStream,
-      v0: Long): Unit = {
-    var v = v0
-    while ((v & ~0x7fL) != 0) {
-      out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7
-    }
-    out.write(v.toInt)
-  }
-
   private def physType(kind: String): Int = kind match {
     case "boolean" => 0
     case "i32" | "date" => 1
@@ -169,8 +158,8 @@ object ParquetWrite {
     val out = new java.io.ByteArrayOutputStream(256)
     private var stack: List[Int] = List(0)
 
-    def varint(v0: Long): Unit = writeUvarint(out, v0)
-    private def zig(v: Long): Unit = varint((v << 1) ^ (v >> 63))
+    def varint(v0: Long): Unit = Bytes.putVarint(out, v0)
+    private def zig(v: Long): Unit = varint(Bytes.zigzag(v))
 
     def fieldBegin(id: Int, tpe: Int): Unit = {
       val delta = id - stack.head
@@ -212,11 +201,6 @@ object ParquetWrite {
   // ---------------------------------------------------------------
   // Value + level encoders
   // ---------------------------------------------------------------
-
-  private def w32(b: java.io.ByteArrayOutputStream, v: Long): Unit = {
-    var i = 0
-    while (i < 4) { b.write(((v >>> (8 * i)) & 0xff).toInt); i += 1 }
-  }
 
   /** The RLE / bit-packed hybrid (parquet-format Encodings.md):
     * values buffer in 8-value groups; a run of ≥ 8 identical
@@ -265,11 +249,7 @@ object ParquetWrite {
     }
     def writeRle(): Unit = {
       endBitPacked()
-      var v = repeat.toLong << 1
-      while ((v & ~0x7fL) != 0) {
-        out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7
-      }
-      out.write(v.toInt)
+      Bytes.putVarint(out, repeat.toLong << 1)
       var i = 0
       while (i < valBytes) {
         out.write((prev >>> (8 * i)) & 0xff); i += 1
@@ -315,8 +295,8 @@ object ParquetWrite {
   private[graft] def deltaBinaryPackedEnc(vals: Seq[Long],
       bits32: Boolean = false): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(vals.length)
-    def varint(v0: Long): Unit = writeUvarint(out, v0)
-    def zig(v: Long): Unit = varint((v << 1) ^ (v >> 63))
+    def varint(v0: Long): Unit = Bytes.putVarint(out, v0)
+    def zig(v: Long): Unit = varint(Bytes.zigzag(v))
     varint(128L); varint(4L); varint(vals.length.toLong)
     zig(if (vals.isEmpty) 0L else vals.head)
     var i = 1
@@ -491,8 +471,7 @@ object ParquetWrite {
       case "i32" | "date" =>
         val b = new Array[Byte](4)
         val x = v.asInstanceOf[Int]
-        var i = 0
-        while (i < 4) { b(i) = ((x >>> (8 * i)) & 0xff).toByte; i += 1 }
+        Bytes.setLe32(b, 0, x)
         Some(Zstd.xxh64(b, 0, 4))
       case "i64" | "ts" =>
         Some(ParquetFooter.bloomHashLong(v.asInstanceOf[Long]))
@@ -508,8 +487,7 @@ object ParquetWrite {
         val b = new Array[Byte](4)
         val x = java.lang.Float.floatToIntBits(
           if (f == 0f) 0f else f)
-        var i = 0
-        while (i < 4) { b(i) = ((x >>> (8 * i)) & 0xff).toByte; i += 1 }
+        Bytes.setLe32(b, 0, x)
         Some(Zstd.xxh64(b, 0, 4))
       case "f64" =>
         val d = v.asInstanceOf[Double]
@@ -526,7 +504,7 @@ object ParquetWrite {
 
   private def u32Prefixed(b: Array[Byte]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(b.length + 4)
-    w32(out, b.length.toLong)
+    Bytes.putLe32(out, b.length.toLong)
     out.write(b, 0, b.length)
     out.toByteArray
   }
@@ -551,13 +529,11 @@ object ParquetWrite {
         }
         if (n > 0) b.write(acc)
       case "i32" | "date" =>
-        vals.foreach(v => w32(b, v.asInstanceOf[Int].toLong))
+        vals.foreach(v => Bytes.putLe32(b, v.asInstanceOf[Int].toLong))
       case "i64" | "ts" =>
         vals.foreach { v =>
           val l = v.asInstanceOf[Long]
-          var i = 0
-          while (i < 8) {
-            b.write(((l >>> (8 * i)) & 0xff).toInt); i += 1 }
+          Bytes.putLe64(b, l)
         }
       case DecimalKind(_, sStr) =>
         val scale = sStr.toInt
@@ -565,31 +541,27 @@ object ParquetWrite {
           val bd = v.asInstanceOf[java.math.BigDecimal]
           require(bd.scale == scale, s"decimal scale drift: $bd")
           val l = bd.unscaledValue.longValueExact
-          var i = 0
-          while (i < 8) {
-            b.write(((l >>> (8 * i)) & 0xff).toInt); i += 1 }
+          Bytes.putLe64(b, l)
         }
       case "f32" =>
-        vals.foreach(v => w32(b,
+        vals.foreach(v => Bytes.putLe32(b,
           java.lang.Float.floatToIntBits(v.asInstanceOf[Float])
             .toLong & 0xffffffffL))
       case "f64" =>
         vals.foreach { v =>
           val l = java.lang.Double
             .doubleToLongBits(v.asInstanceOf[Double])
-          var i = 0
-          while (i < 8) {
-            b.write(((l >>> (8 * i)) & 0xff).toInt); i += 1 }
+          Bytes.putLe64(b, l)
         }
       case "string" =>
         vals.foreach { v =>
           val s = v.asInstanceOf[String].getBytes("UTF-8")
-          w32(b, s.length.toLong); b.write(s, 0, s.length)
+          Bytes.putLe32(b, s.length.toLong); b.write(s, 0, s.length)
         }
       case "binary" =>
         vals.foreach { v =>
           val s = v.asInstanceOf[Array[Byte]]
-          w32(b, s.length.toLong); b.write(s, 0, s.length)
+          Bytes.putLe32(b, s.length.toLong); b.write(s, 0, s.length)
         }
       case k => sys.error(s"unsupported column kind $k")
     }
@@ -642,11 +614,11 @@ object ParquetWrite {
       : Option[(Array[Byte], Array[Byte], Long)] = {
     if (pc.maxRep != 0 || pc.path.length != 1) return None
     val nulls = pc.col.rows.toLong - pc.present.length
-    def le32(v: Int): Array[Byte] =
-      Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-        ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-    def le64(v: Long): Array[Byte] =
-      Array.tabulate(8)(k => ((v >>> (8 * k)) & 0xff).toByte)
+    def le(put: java.io.ByteArrayOutputStream => Unit): Array[Byte] = {
+      val o = new java.io.ByteArrayOutputStream(8); put(o); o.toByteArray
+    }
+    def le32(v: Int): Array[Byte] = le(Bytes.putLe32(_, v))
+    def le64(v: Long): Array[Byte] = le(Bytes.putLe64(_, v))
     if (pc.present.isEmpty)
       return Some((Array.emptyByteArray, Array.emptyByteArray, nulls))
     pc.kind match {
@@ -1182,10 +1154,7 @@ object ParquetWrite {
                   case f: Float if f == 0f =>
                     val b = new Array[Byte](4)
                     val x = java.lang.Float.floatToIntBits(-0f)
-                    var i = 0
-                    while (i < 4) {
-                      b(i) = ((x >>> (8 * i)) & 0xff).toByte; i += 1
-                    }
+                    Bytes.setLe32(b, 0, x)
                     hs += Zstd.xxh64(b, 0, 4)
                   case d: Double if d == 0d =>
                     hs += ParquetFooter.bloomHashLong(
@@ -1251,7 +1220,7 @@ object ParquetWrite {
             w.varint(mx.length.toLong); w.out.write(mx, 0, mx.length)
             w.i32(4, 0L) // boundary_order UNORDERED
             w.listBegin(5, 6, 1) // null_counts (i64 elements)
-            w.varint((nullCount << 1) ^ (nullCount >> 63)) // zigzag
+            w.varint(Bytes.zigzag(nullCount))
             w.stop()
             val bytes = w.bytes
             val off = buf.size().toLong
@@ -1446,7 +1415,7 @@ object ParquetWrite {
     f.stop()
     val fb = f.bytes
     buf.write(fb, 0, fb.length)
-    w32(buf, fb.length.toLong)
+    Bytes.putLe32(buf, fb.length.toLong)
     buf.write('P'); buf.write('A'); buf.write('R'); buf.write('1')
     buf.toByteArray
   }

@@ -43,68 +43,22 @@ object Protobuf {
   // Wire primitives
   // ---------------------------------------------------------------
 
-  private[operators] def writeVarint(out: java.io.ByteArrayOutputStream,
-      value: Long): Unit = {
-    var v = value
-    while ((v & ~0x7fL) != 0) { out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-    out.write(v.toInt)
-  }
-
   private[operators] def writeTag(out: java.io.ByteArrayOutputStream,
       field: Int, wire: Int): Unit =
-    writeVarint(out, (field.toLong << 3) | wire)
+    Bytes.putVarint(out, (field.toLong << 3) | wire)
 
   private[operators] def writeLen(out: java.io.ByteArrayOutputStream,
       field: Int, payload: Array[Byte]): Unit = {
     writeTag(out, field, 2)
-    writeVarint(out, payload.length.toLong)
+    Bytes.putVarint(out, payload.length.toLong)
     out.write(payload)
   }
 
-  /** Mutable cursor; `ok` latches false on any malformation and
-    * every read checks it (the [[Avro]] idiom). */
-  private[operators] final class Cursor(val b: Array[Byte], var p: Int,
-      val end: Int) {
-    var ok = true
-    def fail(): Unit = ok = false
+  /** [[Bytes.Cursor]] with the protobuf wire reads (the [[Avro]]
+    * idiom: `ok` latches false on any malformation). */
+  private[operators] final class Cursor(bytes: Array[Byte], start: Int,
+      limit: Int) extends Bytes.Cursor(bytes, start, limit) {
     def hasMore: Boolean = ok && p < end
-
-    /** Base-128 varint, at most 10 bytes (the 64-bit ceiling). */
-    def varint(): Long = {
-      var shift = 0
-      var v = 0L
-      var done = false
-      while (ok && !done) {
-        if (p >= end || shift >= 70) { fail(); done = true }
-        else {
-          val x = b(p) & 0xff
-          p += 1
-          v |= (x & 0x7fL) << shift
-          shift += 7
-          done = (x & 0x80) == 0
-        }
-      }
-      if (ok) v else 0L
-    }
-
-    def fixed32(): Int = {
-      if (p + 4 > end) { fail(); 0 }
-      else {
-        val v = (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8) |
-          ((b(p + 2) & 0xff) << 16) | ((b(p + 3) & 0xff) << 24)
-        p += 4; v
-      }
-    }
-
-    def fixed64(): Long = {
-      if (p + 8 > end) { fail(); 0L }
-      else {
-        var v = 0L
-        var i = 0
-        while (i < 8) { v |= (b(p + i) & 0xffL) << (8 * i); i += 1 }
-        p += 8; v
-      }
-    }
 
     /** A LEN payload as a sub-cursor (no copy). */
     def lenSlice(): Cursor = {
@@ -116,9 +70,9 @@ object Protobuf {
     /** Skip one value of the given wire type. */
     def skip(wire: Int): Unit = wire match {
       case 0 => varint(): Unit
-      case 1 => fixed64(): Unit
+      case 1 => le64(): Unit
       case 2 => lenSlice(): Unit
-      case 5 => fixed32(): Unit
+      case 5 => le32(): Unit
       case _ => fail() // groups (3/4) and anything undefined
     }
   }
@@ -154,17 +108,13 @@ object Protobuf {
       case FloatVals(vs) => // FloatList{packed float value=1} @ field 2
         val fl = new java.io.ByteArrayOutputStream()
         val packed = new java.io.ByteArrayOutputStream()
-        vs.foreach { f =>
-          val bits = java.lang.Float.floatToIntBits(f)
-          var i = 0
-          while (i < 4) { packed.write((bits >>> (8 * i)) & 0xff); i += 1 }
-        }
+        vs.foreach(f => Bytes.putLe32(packed, java.lang.Float.floatToIntBits(f)))
         writeLen(fl, 1, packed.toByteArray)
         writeLen(kind, 2, fl.toByteArray)
       case IntVals(vs) => // Int64List{packed int64 value=1} @ field 3
         val il = new java.io.ByteArrayOutputStream()
         val packed = new java.io.ByteArrayOutputStream()
-        vs.foreach(writeVarint(packed, _))
+        vs.foreach(Bytes.putVarint(packed, _))
         writeLen(il, 1, packed.toByteArray)
         writeLen(kind, 3, il.toByteArray)
     }
@@ -309,10 +259,10 @@ object Protobuf {
         if (field == 1 && wire == 2) { // packed
           val s = c.lenSlice()
           if ((s.end - s.p) % 4 != 0) { c.fail(); s.fail() }
-          while (s.hasMore) vs += java.lang.Float.intBitsToFloat(s.fixed32())
+          while (s.hasMore) vs += java.lang.Float.intBitsToFloat(s.le32())
           if (!s.ok) c.fail()
         } else if (field == 1 && wire == 5) { // unpacked element
-          vs += java.lang.Float.intBitsToFloat(c.fixed32())
+          vs += java.lang.Float.intBitsToFloat(c.le32())
         } else c.skip(wire)
       }
     }

@@ -49,9 +49,7 @@ object Puffin {
     val lz4Footer = (b(flagsAt) & 1) != 0
     if ((b(flagsAt) & 0xfe) != 0 || b(flagsAt + 1) != 0 ||
       b(flagsAt + 2) != 0 || b(flagsAt + 3) != 0) return None
-    var sz = 0L
-    (0 until 4).foreach(k =>
-      sz |= (b(flagsAt - 4 + k) & 0xffL) << (8 * k))
+    val sz = Bytes.le32u(b, flagsAt - 4)
     if (sz < 2 || sz > b.length - 20) return None
     val payloadAt = flagsAt - 4 - sz.toInt
     if (!magicAt(b, payloadAt - 4)) return None
@@ -123,8 +121,7 @@ object Puffin {
       if (lz4Footer) Lz4.frameCompress(json) else json
     out.write(Magic, 0, 4)
     out.write(payload, 0, payload.length)
-    (0 until 4).foreach(k =>
-      out.write((payload.length >> (8 * k)) & 0xff))
+    Bytes.putLe32(out, payload.length)
     out.write(if (lz4Footer) 1 else 0) // flags
     (0 until 3).foreach(_ => out.write(0))
     out.write(Magic, 0, 4)
@@ -137,16 +134,14 @@ object Puffin {
     val vec = Roaring.serializePortable64(positions)
     val out = new java.io.ByteArrayOutputStream(vec.length + 12)
     val inner = 4 + vec.length // magic + vector
-    (3 to 0 by -1).foreach(k =>
-      out.write((inner >> (8 * k)) & 0xff)) // u32 BE
+    Bytes.putBe32(out, inner)
     out.write(DvMagic, 0, 4)
     out.write(vec, 0, vec.length)
     val crc = new java.util.zip.CRC32()
     crc.update(DvMagic, 0, 4)
     crc.update(vec, 0, vec.length)
     val c = crc.getValue
-    (3 to 0 by -1).foreach(k =>
-      out.write(((c >> (8 * k)) & 0xff).toInt)) // u32 BE
+    Bytes.putBe32(out, c)
     out.toByteArray
   }
 

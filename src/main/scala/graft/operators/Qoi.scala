@@ -32,11 +32,7 @@ object Qoi {
     require(rgb.length == w * h * 3)
     val out = new java.io.ByteArrayOutputStream(rgb.length / 2 + 32)
     out.write('q'); out.write('o'); out.write('i'); out.write('f')
-    def be32(v: Int): Unit = {
-      out.write((v >>> 24) & 0xff); out.write((v >>> 16) & 0xff)
-      out.write((v >>> 8) & 0xff); out.write(v & 0xff)
-    }
-    be32(w); be32(h)
+    Bytes.putBe32(out, w); Bytes.putBe32(out, h)
     out.write(3) // channels
     out.write(1) // linear
     val idx = new Array[Int](64) // packed 0xAARRGGBB
@@ -92,11 +88,8 @@ object Qoi {
     * end marker, or trailing bytes. */
   def decode(data: Array[Byte]): Option[(Int, Int, Array[Byte])] = {
     if (data.length < 14 + 8 || !isQoi(data)) return None
-    def be32(o: Int): Long =
-      ((data(o) & 0xffL) << 24) | ((data(o + 1) & 0xffL) << 16) |
-        ((data(o + 2) & 0xffL) << 8) | (data(o + 3) & 0xffL)
-    val w = be32(4)
-    val h = be32(8)
+    val w = Bytes.be32u(data, 4)
+    val h = Bytes.be32u(data, 8)
     val channels = data(12) & 0xff
     val colorspace = data(13) & 0xff
     if (w < 1 || h < 1 || w * h > (1L << 24)) return None

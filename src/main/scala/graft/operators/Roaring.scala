@@ -54,23 +54,15 @@ object Roaring {
   // Portable 32-bit bitmap
   // ---------------------------------------------------------------
 
-  private final class Cur(val d: Array[Byte], var p: Int) {
-    var ok = true
-    def u8(): Int =
-      if (p >= d.length) { ok = false; 0 }
-      else { val v = d(p) & 0xff; p += 1; v }
-    def u16(): Int = { val a = u8(); a | (u8() << 8) }
-    def u32(): Long = { val a = u16().toLong
-      a | (u16().toLong << 16) }
-    def u64(): Long = { val a = u32(); a | (u32() << 32) }
-  }
+  private final class Cur(d: Array[Byte], start: Int)
+      extends Bytes.Cursor(d, start, d.length)
 
   /** Parse one portable bitmap starting at `off`; returns the
     * bitmap and the byte length consumed. */
   def parse(data: Array[Byte], off: Int = 0)
       : Option[(Bitmap, Int)] = {
     val c = new Cur(data, off)
-    val cookie = c.u32()
+    val cookie = c.le32u()
     if (!c.ok) return None
     val (size, runFlags): (Int, Array[Boolean]) =
       if ((cookie & 0xffff) == CookieRuns) {
@@ -79,13 +71,13 @@ object Roaring {
         val flags = new Array[Boolean](n)
         var i = 0
         while (i < n) {
-          val b = if (i % 8 == 0) c.u8() else (c.d(c.p - 1) & 0xff)
+          val b = if (i % 8 == 0) c.u8() else (c.b(c.p - 1) & 0xff)
           flags(i) = ((b >>> (i % 8)) & 1) == 1
           i += 1
         }
         (n, flags)
       } else if (cookie == CookieNoRuns) {
-        val n = c.u32()
+        val n = c.le32u()
         if (n < 0 || n > 65536) return None
         (n.toInt, new Array[Boolean](n.toInt))
       } else return None
@@ -94,8 +86,8 @@ object Roaring {
     val cards = new Array[Int](size)
     var i = 0
     while (i < size) {
-      keys(i) = c.u16()
-      cards(i) = c.u16() + 1
+      keys(i) = c.le16()
+      cards(i) = c.le16() + 1
       if (i > 0 && keys(i) <= keys(i - 1)) return None // key order
       i += 1
     }
@@ -104,7 +96,7 @@ object Roaring {
     // sequential walk (they must match, per spec, container order).
     val hasOffsets = cookie == CookieNoRuns ||
       size >= NoOffsetThreshold
-    if (hasOffsets) { var j = 0; while (j < size) { c.u32(): Unit
+    if (hasOffsets) { var j = 0; while (j < size) { c.le32u(): Unit
       j += 1 } }
     if (!c.ok) return None
     val out = Array.newBuilder[Long]
@@ -112,13 +104,13 @@ object Roaring {
     while (i < size) {
       val base = keys(i).toLong << 16
       if (runFlags(i)) {
-        val nRuns = c.u16()
+        val nRuns = c.le16()
         if (!c.ok) return None
         var r = 0
         var prevEnd = -1L
         while (r < nRuns) {
-          val start = c.u16()
-          val len = c.u16()
+          val start = c.le16()
+          val len = c.le16()
           if (!c.ok) return None
           if (start <= prevEnd) return None // overlapping runs
           var v = start
@@ -130,7 +122,7 @@ object Roaring {
         var j = 0
         var prev = -1
         while (j < cards(i)) {
-          val v = c.u16()
+          val v = c.le16()
           if (!c.ok) return None
           if (v <= prev) return None // sorted distinct
           out += base | v
@@ -140,7 +132,7 @@ object Roaring {
       } else { // bitmap container: 1024 u64 LE
         var w = 0
         while (w < 1024) {
-          val word = c.u64()
+          val word = c.le64()
           if (!c.ok) return None
           var b = 0
           while (b < 64) {
@@ -185,31 +177,23 @@ object Roaring {
     }
     val gs = groups.result()
     val out = new java.io.ByteArrayOutputStream(64)
-    def u16(v: Int): Unit = { out.write(v & 0xff)
-      out.write((v >>> 8) & 0xff) }
-    def u32(v: Long): Unit = { u16((v & 0xffff).toInt)
-      u16(((v >>> 16) & 0xffff).toInt) }
-    u32(CookieNoRuns.toLong)
-    u32(gs.length.toLong)
+    Bytes.putLe32(out, CookieNoRuns)
+    Bytes.putLe32(out, gs.length)
     gs.foreach { case (k, vs) =>
-      u16(k); u16(vs.length - 1)
+      Bytes.putLe16(out, k); Bytes.putLe16(out, vs.length - 1)
     }
     // offset table (from the start of the serialization)
     var off = 4 + 4 + 4 * gs.length + 4 * gs.length
     gs.foreach { case (_, vs) =>
-      u32(off.toLong)
+      Bytes.putLe32(out, off)
       off += (if (vs.length <= ArrayMax) 2 * vs.length else 8192)
     }
     gs.foreach { case (_, vs) =>
-      if (vs.length <= ArrayMax) vs.foreach(u16)
+      if (vs.length <= ArrayMax) vs.foreach(Bytes.putLe16(out, _))
       else {
         val words = new Array[Long](1024)
         vs.foreach(v => words(v >>> 6) |= (1L << (v & 63)))
-        words.foreach { w =>
-          var b = 0
-          while (b < 8) { out.write(((w >>> (8 * b)) & 0xff).toInt)
-            b += 1 }
-        }
+        words.foreach(Bytes.putLe64(out, _))
       }
     }
     out.toByteArray
@@ -232,8 +216,8 @@ object Roaring {
 
   def parseArray(data: Array[Byte]): Option[Bitmap64] = {
     val c = new Cur(data, 0)
-    if (c.u32() != ArrayMagic.toLong || !c.ok) return None
-    val n = c.u64()
+    if (c.le32u() != ArrayMagic.toLong || !c.ok) return None
+    val n = c.le64()
     if (!c.ok || n < 0 || n > (1 << 20)) return None
     val maps = IndexedSeq.newBuilder[Bitmap]
     var i = 0L
@@ -260,11 +244,8 @@ object Roaring {
     val nMaps = if (values.isEmpty) 0L
       else (values.last >>> 32) + 1
     val out = new java.io.ByteArrayOutputStream(64)
-    def u32(v: Long): Unit = { var b = 0
-      while (b < 4) { out.write(((v >>> (8 * b)) & 0xff).toInt)
-        b += 1 } }
-    u32(ArrayMagic.toLong)
-    u32(nMaps); u32(nMaps >>> 32)
+    Bytes.putLe32(out, ArrayMagic)
+    Bytes.putLe64(out, nMaps)
     var hi = 0L
     i = 0
     while (hi < nMaps) {
@@ -293,7 +274,7 @@ object Roaring {
   def parsePortable64(data: Array[Byte], off: Int)
       : Option[(Array[Long], Int)] = {
     val c = new Cur(data, off)
-    val n = c.u64()
+    val n = c.le64()
     if (!c.ok || n < 0 || n > (1 << 20)) return None
     val out = Array.newBuilder[Long]
     var total = 0L
@@ -302,10 +283,7 @@ object Roaring {
     var prevKey = -1L
     while (i < n) {
       if (p + 4 > data.length) return None
-      var key = 0L
-      var k = 0
-      while (k < 4) { key |= (data(p + k) & 0xffL) << (8 * k)
-        k += 1 }
+      val key = Bytes.le32u(data, p)
       if (key <= prevKey) return None // keys ascending, distinct
       prevKey = key
       p += 4
@@ -330,14 +308,11 @@ object Roaring {
       i += 1
     }
     val out = new java.io.ByteArrayOutputStream(64)
-    def u32(v: Long): Unit = { var b = 0
-      while (b < 4) { out.write(((v >>> (8 * b)) & 0xff).toInt)
-        b += 1 } }
     val keys = values.map(_ >>> 32).distinct
-    u32(keys.length.toLong); u32(keys.length.toLong >>> 32)
+    Bytes.putLe64(out, keys.length)
     i = 0
     keys.foreach { key =>
-      u32(key)
+      Bytes.putLe32(out, key)
       val g = Array.newBuilder[Long]
       while (i < values.length && (values(i) >>> 32) == key) {
         g += values(i) & 0xffffffffL
@@ -415,12 +390,9 @@ object Roaring {
     crc.update(data)
     val out = new java.io.ByteArrayOutputStream(data.length + 9)
     out.write(1)
-    def be32(v: Long): Unit = { var b = 3
-      while (b >= 0) { out.write(((v >>> (8 * b)) & 0xff).toInt)
-        b -= 1 } }
-    be32(data.length.toLong)
+    Bytes.putBe32(out, data.length)
     out.write(data, 0, data.length)
-    be32(crc.getValue)
+    Bytes.putBe32(out, crc.getValue)
     (out.toByteArray, 1)
   }
 
@@ -431,10 +403,7 @@ object Roaring {
       : Option[Bitmap64] = {
     if (file.isEmpty || file(0) != 1) return None // format version
     if (offset < 1 || offset + 4 > file.length) return None
-    var sz = 0L
-    var b = 0
-    while (b < 4) { sz = (sz << 8) | (file(offset + b) & 0xffL)
-      b += 1 }
+    val sz = Bytes.be32u(file, offset)
     if (sz != sizeInBytes) return None
     val dataOff = offset + 4
     if (dataOff + sz + 4 > file.length) return None
@@ -442,13 +411,7 @@ object Roaring {
       dataOff + sz.toInt)
     val crc = new java.util.zip.CRC32()
     crc.update(data)
-    var want = 0L
-    b = 0
-    while (b < 4) {
-      want = (want << 8) | (file(dataOff + sz.toInt + b) & 0xffL)
-      b += 1
-    }
-    if (crc.getValue != want) return None
+    if (crc.getValue != Bytes.be32u(file, dataOff + sz.toInt)) return None
     parseArray(data)
   }
 }

@@ -98,11 +98,9 @@ object Safetensors {
     val hlen = header.length + pad
     val out = new java.io.ByteArrayOutputStream(
       8 + hlen + off.toInt)
-    var i = 0
-    while (i < 8) { out.write(((hlen.toLong >>> (8 * i)) & 0xff).toInt)
-      i += 1 }
+    Bytes.putLe64(out, hlen)
     out.write(header)
-    i = 0
+    var i = 0
     while (i < pad) { out.write(' '); i += 1 }
     tensors.foreach(t => out.write(t.data))
     out.toByteArray
@@ -117,11 +115,7 @@ object Safetensors {
   def parse(data: Array[Byte])
       : Option[(Map[String, String], Seq[Tensor])] = {
     if (data.length < 8) return None
-    var hlen = 0L
-    var i = 0
-    while (i < 8) {
-      hlen |= (data(i).toLong & 0xff) << (8 * i); i += 1
-    }
+    val hlen = Bytes.le64(data, 0)
     if (hlen < 2 || hlen > MaxHeader ||
       8 + hlen > data.length) return None
     val json = new String(data, 8, hlen.toInt, "UTF-8")
@@ -192,7 +186,6 @@ object Safetensors {
   def i64At(t: Tensor, i: Int): Long = bb(t).getLong(i * 8)
   def i32At(t: Tensor, i: Int): Int = bb(t).getInt(i * 4)
   def i16At(t: Tensor, i: Int): Short = bb(t).getShort(i * 2)
-  def i8At(t: Tensor, i: Int): Byte = t.data(i)
 
   /** IEEE 754 binary16 → Float (the ArrowIpc temporal decode's
     * half-float arithmetic, shared convention). */

@@ -44,17 +44,6 @@ object SevenZ {
     c.getValue
   }
 
-  private def le32(b: Array[Byte], o: Int): Long =
-    (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-      ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
-
-  private def le64(b: Array[Byte], o: Int): Long = {
-    var v = 0L
-    var i = 0
-    while (i < 8) { v |= (b(o + i) & 0xffL) << (8 * i); i += 1 }
-    v
-  }
-
   /** Cursor over header bytes with the 7z NUMBER encoding. */
   private final class Rd(val b: Array[Byte]) {
     var p = 0
@@ -179,7 +168,7 @@ object SevenZ {
               case 0x0a =>
                 val defined = r.definedBits(coders.length)
                 folderCrcs = defined.map(d =>
-                  if (d) Some(le32(r.bytes(4), 0)) else None).toSeq
+                  if (d) Some(Bytes.le32u(r.bytes(4), 0)) else None).toSeq
               case _ => throw Bad
             }
             id2 = r.num()
@@ -220,7 +209,7 @@ object SevenZ {
                     else (0 until cnt).map { _ =>
                       val d = defined(di)
                       di += 1
-                      if (d) Some(le32(r.bytes(4), 0)) else None
+                      if (d) Some(Bytes.le32u(r.bytes(4), 0)) else None
                     }
                 }
               case _ => throw Bad
@@ -289,10 +278,10 @@ object SevenZ {
       : Option[Seq[(SzEntry, Array[Byte])]] =
     try {
       if (!isSevenZ(data) || data.length < 32) return None
-      if (crc32(data, 12, 20) != le32(data, 8)) return None
-      val nhOff = le64(data, 12)
-      val nhSize = le64(data, 20)
-      val nhCrc = le32(data, 28)
+      if (crc32(data, 12, 20) != Bytes.le32u(data, 8)) return None
+      val nhOff = Bytes.le64(data, 12)
+      val nhSize = Bytes.le64(data, 20)
+      val nhCrc = Bytes.le32u(data, 28)
       if (nhOff < 0 || nhSize < 0 || nhSize > (1 << 24) ||
         32 + nhOff + nhSize > data.length) return None
       var header = java.util.Arrays.copyOfRange(data,
@@ -440,14 +429,7 @@ object SevenZ {
       i += 1
     }
     out.write(0xff)
-    var k = 0
-    while (k < 8) { out.write(((value >>> (8 * k)) & 0xff).toInt); k += 1 }
-  }
-
-  private def wle32(out: java.io.ByteArrayOutputStream,
-      v: Long): Unit = {
-    var i = 0
-    while (i < 4) { out.write(((v >>> (8 * i)) & 0xff).toInt); i += 1 }
+    Bytes.putLe64(out, value)
   }
 
   /** Build a 7z archive (late r14): one single-coder folder per
@@ -501,7 +483,7 @@ object SevenZ {
     entries.foreach(e => wnum(h, e._2.length.toLong))
     h.write(0x0a) // kCRC
     h.write(1) // all defined
-    entries.foreach(e => wle32(h, crc32(e._2, 0, e._2.length)))
+    entries.foreach(e => Bytes.putLe32(h, crc32(e._2, 0, e._2.length)))
     h.write(0x00) // end UnpackInfo
     // explicit SubStreamsInfo: one substream per folder (strict
     // readers — commons-compress among them — refuse to default
@@ -534,18 +516,11 @@ object SevenZ {
     out.write(0x27); out.write(0x1c)
     out.write(0); out.write(4) // format version 0.4
     val start = new java.io.ByteArrayOutputStream(20)
-    var i = 0
-    while (i < 8) {
-      start.write(((bodyLen >>> (8 * i)) & 0xff).toInt); i += 1
-    }
-    i = 0
-    while (i < 8) {
-      start.write(((header.length.toLong >>> (8 * i)) & 0xff).toInt)
-      i += 1
-    }
-    wle32(start, crc32(header, 0, header.length))
+    Bytes.putLe64(start, bodyLen)
+    Bytes.putLe64(start, header.length)
+    Bytes.putLe32(start, crc32(header, 0, header.length))
     val startArr = start.toByteArray
-    wle32(out, crc32(startArr, 0, startArr.length))
+    Bytes.putLe32(out, crc32(startArr, 0, startArr.length))
     out.write(startArr, 0, startArr.length)
     packed.foreach(p => out.write(p, 0, p.length))
     out.write(header, 0, header.length)

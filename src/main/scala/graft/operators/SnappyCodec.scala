@@ -24,10 +24,6 @@ object SnappyCodec {
   // Raw block format
   // ---------------------------------------------------------------
 
-  private def rd32(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8) |
-      ((b(o + 2) & 0xff) << 16) | ((b(o + 3) & 0xff) << 24)
-
   /** Greedy raw compressor: varint uncompressed length, then literal
     * runs broken by 2-byte-offset copies found through a 64 Ki-entry
     * multiplicative hash of 4-byte windows. Matches are capped at 64
@@ -36,9 +32,7 @@ object SnappyCodec {
     * copies, exactly how the reference encoder behaves. */
   def compress(src: Array[Byte]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(src.length / 2 + 16)
-    var v = src.length // varint preamble
-    while ((v & ~0x7f) != 0) { out.write((v & 0x7f) | 0x80); v >>>= 7 }
-    out.write(v)
+    Bytes.putVarint(out, src.length) // varint preamble
 
     def emitLiteral(from: Int, until: Int): Unit = {
       var p = from
@@ -61,7 +55,7 @@ object SnappyCodec {
     if (n < 4) { emitLiteral(0, n); return out.toByteArray }
     val table = new Array[Int](1 << 16)
     java.util.Arrays.fill(table, -1)
-    def hash(p: Int): Int = ((rd32(src, p) * 0x9E3779B1) >>> 16) & 0xffff
+    def hash(p: Int): Int = ((Bytes.le32(src, p) * 0x9E3779B1) >>> 16) & 0xffff
     var anchor = 0
     var i = 0
     while (i + 4 <= n) {
@@ -69,7 +63,7 @@ object SnappyCodec {
       val cand = table(h)
       table(h) = i
       if (cand >= 0 && i - cand <= 0xffff &&
-          rd32(src, cand) == rd32(src, i)) {
+          Bytes.le32(src, cand) == Bytes.le32(src, i)) {
         var m = 4
         while (i + m < n && src(cand + m) == src(i + m)) m += 1
         emitLiteral(anchor, i)
@@ -90,18 +84,10 @@ object SnappyCodec {
     * disagreeing with the preamble, or preamble past the 2^28 bomb
     * cap. Never throws. */
   def decompress(src: Array[Byte]): Option[Array[Byte]] = {
-    var p = 0
-    var expect = 0L
-    var shift = 0
-    var cont = true
-    while (cont) { // varint preamble
-      if (p >= src.length || shift > 31) return None
-      val b = src(p) & 0xff
-      p += 1
-      expect |= (b & 0x7fL) << shift
-      shift += 7
-      cont = (b & 0x80) != 0
-    }
+    val pre = new Bytes.Cursor(src)
+    val expect = pre.varint(5)
+    if (!pre.ok) return None
+    var p = pre.p
     if (expect > (1 << 28)) return None // bomb guard
     val dst = new Array[Byte](expect.toInt)
     var d = 0
@@ -140,7 +126,7 @@ object SnappyCodec {
           } else {
             if (p + 4 > src.length) return None
             len = (tag >>> 2) + 1
-            offset = rd32(src, p)
+            offset = Bytes.le32(src, p)
             p += 4
           }
           if (offset <= 0 || offset > d || d + len > dst.length) return None
@@ -192,9 +178,7 @@ object SnappyCodec {
       out.write(ty)
       out.write(clen & 0xff); out.write((clen >>> 8) & 0xff)
       out.write((clen >>> 16) & 0xff)
-      out.write((crc & 0xff).toInt); out.write(((crc >>> 8) & 0xff).toInt)
-      out.write(((crc >>> 16) & 0xff).toInt)
-      out.write(((crc >>> 24) & 0xff).toInt)
+      Bytes.putLe32(out, crc)
       out.write(body, 0, body.length)
       p += len
     }
@@ -219,7 +203,7 @@ object SnappyCodec {
       ty match {
         case 0x00 | 0x01 => // compressed / uncompressed data
           if (len < 4) return None
-          val crc = (0 until 4).map(i => (data(p + i) & 0xffL) << (8 * i)).sum
+          val crc = Bytes.le32u(data, p)
           val payload =
             if (ty == 0x01)
               Some(java.util.Arrays.copyOfRange(data, p + 4, p + len))

@@ -69,12 +69,6 @@ object Sqlite {
   // Low-level helpers
   // ---------------------------------------------------------------
 
-  private def u16(d: Array[Byte], o: Int): Int =
-    ((d(o) & 0xff) << 8) | (d(o + 1) & 0xff)
-  private def u32(d: Array[Byte], o: Int): Long =
-    ((d(o) & 0xffL) << 24) | ((d(o + 1) & 0xffL) << 16) |
-      ((d(o + 2) & 0xffL) << 8) | (d(o + 3) & 0xffL)
-
   /** (value, bytesRead) — spec varint: 1-9 bytes, 9th byte carries
     * 8 full bits. */
   private def varint(d: Array[Byte], o: Int): Option[(Long, Int)] = {
@@ -155,23 +149,23 @@ object Sqlite {
   def applyWal(db: Array[Byte], wal: Array[Byte])
       : Option[Array[Byte]] = {
     if (wal.length < 32) return None
-    val magic = u32(wal, 0)
+    val magic = Bytes.be32u(wal, 0)
     if (magic != 0x377f0682L && magic != 0x377f0683L) return None
     val ckLittle = magic == 0x377f0682L
-    if (u32(wal, 4) != 3007000L) return None
-    val pageSize = u32(wal, 8).toInt
+    if (Bytes.be32u(wal, 4) != 3007000L) return None
+    val pageSize = Bytes.be32u(wal, 8).toInt
     if (pageSize < 512 || pageSize > 65536 ||
       (pageSize & (pageSize - 1)) != 0) return None
     if (db.length % pageSize != 0) return None
     // the MAIN image's own header must agree on the page size — a
     // mismatched sidecar would merge a silently corrupt image
     if (db.length >= 100) {
-      val raw = u16(db, 16)
+      val raw = Bytes.be16(db, 16)
       val dbPs = if (raw == 1) 65536 else raw
       if (dbPs != pageSize) return None
     }
-    val salt1 = u32(wal, 16)
-    val salt2 = u32(wal, 20)
+    val salt1 = Bytes.be32u(wal, 16)
+    val salt2 = Bytes.be32u(wal, 20)
     // the s1/s2 recurrence over u32 word PAIRS in the magic's order
     def fold(s: (Long, Long), b: Array[Byte], off: Int, len: Int)
         : (Long, Long) = {
@@ -179,8 +173,8 @@ object Sqlite {
       var p = off
       val end = off + len
       while (p + 8 <= end) {
-        val x0 = if (ckLittle) u32le(b, p) else u32(b, p)
-        val x1 = if (ckLittle) u32le(b, p + 4) else u32(b, p + 4)
+        val x0 = if (ckLittle) Bytes.le32u(b, p) else Bytes.be32u(b, p)
+        val x1 = if (ckLittle) Bytes.le32u(b, p + 4) else Bytes.be32u(b, p + 4)
         s1 = (s1 + x0 + s2) & 0xffffffffL
         s2 = (s2 + x1 + s1) & 0xffffffffL
         p += 8
@@ -188,7 +182,7 @@ object Sqlite {
       (s1, s2)
     }
     val hdrCk = fold((0L, 0L), wal, 0, 24)
-    if (u32(wal, 24) != hdrCk._1 || u32(wal, 28) != hdrCk._2)
+    if (Bytes.be32u(wal, 24) != hdrCk._1 || Bytes.be32u(wal, 28) != hdrCk._2)
       return None
     val frameSize = 24 + pageSize
     // walk frames: newest valid frame per page, last commit bounds
@@ -199,15 +193,15 @@ object Sqlite {
     var off = 32
     var done = false
     while (!done && off + frameSize <= wal.length) {
-      val pgno = u32(wal, off)
-      val trunc = u32(wal, off + 4)
-      if (u32(wal, off + 8) != salt1 ||
-        u32(wal, off + 12) != salt2) done = true
+      val pgno = Bytes.be32u(wal, off)
+      val trunc = Bytes.be32u(wal, off + 4)
+      if (Bytes.be32u(wal, off + 8) != salt1 ||
+        Bytes.be32u(wal, off + 12) != salt2) done = true
       else {
         val c1 = fold(ck, wal, off, 8)
         val c2 = fold(c1, wal, off + 24, pageSize)
-        if (u32(wal, off + 16) != c2._1 ||
-          u32(wal, off + 20) != c2._2) done = true
+        if (Bytes.be32u(wal, off + 16) != c2._1 ||
+          Bytes.be32u(wal, off + 20) != c2._2) done = true
         else {
           ck = c2
           if (pgno < 1 || pgno > MaxPages) return None
@@ -236,24 +230,20 @@ object Sqlite {
     Some(out)
   }
 
-  private def u32le(b: Array[Byte], o: Int): Long =
-    (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-      ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
-
   def open(data: Array[Byte]): Option[Db] = {
     if (data.length < 512) return None
     var i = 0
     while (i < 16) { if (data(i) != Magic(i)) return None; i += 1 }
-    val psRaw = u16(data, 16)
+    val psRaw = Bytes.be16(data, 16)
     val pageSize = if (psRaw == 1) 65536 else psRaw
     if (pageSize < 512 || pageSize > 65536 ||
       (pageSize & (pageSize - 1)) != 0) return None
     val reserved = data(20) & 0xff
     val usable = pageSize - reserved
     if (usable < 480) return None
-    val enc = u32(data, 56)
+    val enc = Bytes.be32u(data, 56)
     if (enc != 1L && enc != 0L) return None // UTF-8 only (0: legacy empty)
-    val declared = u32(data, 28).toInt
+    val declared = Bytes.be32u(data, 28).toInt
     val byLen = data.length / pageSize
     if (data.length % pageSize != 0) return None
     val nPages = if (declared > 0 && declared <= byLen) declared
@@ -282,11 +272,7 @@ object Sqlite {
       case 8 => 0L
       case 9 => 1L
       case 7 =>
-        java.lang.Double.longBitsToDouble(
-          ((d(o) & 0xffL) << 56) | ((d(o + 1) & 0xffL) << 48) |
-            ((d(o + 2) & 0xffL) << 40) | ((d(o + 3) & 0xffL) << 32) |
-            ((d(o + 4) & 0xffL) << 24) | ((d(o + 5) & 0xffL) << 16) |
-            ((d(o + 6) & 0xffL) << 8) | (d(o + 7) & 0xffL))
+        java.lang.Double.longBitsToDouble(Bytes.be64(d, o))
       case n if n >= 1 && n <= 6 =>
         val len = serialSize(n).get.toInt
         var v = if ((d(o) & 0x80) != 0) -1L else 0L
@@ -343,7 +329,7 @@ object Sqlite {
       if (start + local + 4 > d.length) return None
       val out = new java.io.ByteArrayOutputStream(plen.toInt)
       out.write(d, start, local)
-      var next = u32(d, start + local).toInt
+      var next = Bytes.be32u(d, start + local).toInt
       var remaining = plen - local
       val seen = scala.collection.mutable.Set[Int]()
       while (remaining > 0) {
@@ -353,7 +339,7 @@ object Sqlite {
         if (off + 4 + chunk > d.length) return None
         out.write(d, off + 4, chunk)
         remaining -= chunk
-        next = u32(d, off).toInt
+        next = Bytes.be32u(d, off).toInt
       }
       Some((out.toByteArray, local + 4))
     }
@@ -393,13 +379,13 @@ object Sqlite {
       val hdr = base + (if (p == 1) 100 else 0)
       if (hdr >= d.length) return false
       val tpe = d(hdr) & 0xff
-      val nCells = u16(d, hdr + 3)
+      val nCells = Bytes.be16(d, hdr + 3)
       val cellPtrs = hdr + (if (tpe == 5) 12 else 8)
       tpe match {
         case 13 => // leaf table
           var i = 0
           while (i < nCells) {
-            val off = base + u16(d, cellPtrs + 2 * i)
+            val off = base + Bytes.be16(d, cellPtrs + 2 * i)
             if (off < base || off >= base + db.pageSize) return false
             val (rowid, payload, _) =
               leafPayload(db, base, off).getOrElse(return false)
@@ -410,13 +396,13 @@ object Sqlite {
         case 5 => // interior table
           var i = 0
           while (i < nCells) {
-            val off = base + u16(d, cellPtrs + 2 * i)
+            val off = base + Bytes.be16(d, cellPtrs + 2 * i)
             if (off < base || off + 4 > d.length) return false
-            val child = u32(d, off).toInt
+            val child = Bytes.be32u(d, off).toInt
             if (!go(child)) return false
             i += 1
           }
-          go(u32(d, hdr + 8).toInt) // rightmost
+          go(Bytes.be32u(d, hdr + 8).toInt) // rightmost
         case 2 | 10 =>
           false // index b-tree: use walkIndex (WITHOUT ROWID)
         case _ => false
@@ -441,12 +427,12 @@ object Sqlite {
       val hdr = base + (if (p == 1) 100 else 0)
       if (hdr + 8 > d.length) return false
       val tpe = d(hdr) & 0xff
-      val nCells = u16(d, hdr + 3)
+      val nCells = Bytes.be16(d, hdr + 3)
       tpe match {
         case 10 => // leaf index
           var i = 0
           while (i < nCells) {
-            val off = base + u16(d, hdr + 8 + 2 * i)
+            val off = base + Bytes.be16(d, hdr + 8 + 2 * i)
             if (off < base || off >= base + db.pageSize) return false
             out += indexPayload(db, off).getOrElse(return false)
             i += 1
@@ -455,13 +441,13 @@ object Sqlite {
         case 2 => // interior index: child, THEN the cell's own key
           var i = 0
           while (i < nCells) {
-            val off = base + u16(d, hdr + 12 + 2 * i)
+            val off = base + Bytes.be16(d, hdr + 12 + 2 * i)
             if (off < base || off + 4 > d.length) return false
-            if (!go(u32(d, off).toInt)) return false
+            if (!go(Bytes.be32u(d, off).toInt)) return false
             out += indexPayload(db, off + 4).getOrElse(return false)
             i += 1
           }
-          go(u32(d, hdr + 8).toInt) // rightmost
+          go(Bytes.be32u(d, hdr + 8).toInt) // rightmost
         case _ => false
       }
     }
@@ -717,15 +703,6 @@ object Sqlite {
     val pages = scala.collection.mutable.ArrayBuffer[Array[Byte]]()
     def newPage(): Int = { pages += new Array[Byte](pageSize)
       pages.length }
-    def put16(p: Array[Byte], o: Int, v: Int): Unit = {
-      p(o) = ((v >> 8) & 0xff).toByte; p(o + 1) = (v & 0xff).toByte
-    }
-    def put32(p: Array[Byte], o: Int, v: Long): Unit = {
-      p(o) = ((v >> 24) & 0xff).toByte
-      p(o + 1) = ((v >> 16) & 0xff).toByte
-      p(o + 2) = ((v >> 8) & 0xff).toByte
-      p(o + 3) = (v & 0xff).toByte
-    }
 
     /** Spill `payload` bytes past `local` to an overflow chain;
       * returns the first overflow page number. */
@@ -736,7 +713,7 @@ object Sqlite {
       while (off < payload.length) {
         val pno = newPage()
         val pg = pages(pno - 1)
-        if (prev != null) put32(prev, 0, pno.toLong)
+        if (prev != null) Bytes.setBe32(prev, 0, pno.toLong)
         else firstPage = pno
         val chunk = math.min(payload.length - off, u - 4)
         System.arraycopy(payload, off, pg, 4, chunk)
@@ -766,12 +743,7 @@ object Sqlite {
         val local = localFor(payload.length, maxLocal)
         out.write(payload, 0, local)
         val firstPage = spill(payload, local)
-        val ptr = new Array[Byte](4)
-        ptr(0) = ((firstPage >> 24) & 0xff).toByte
-        ptr(1) = ((firstPage >> 16) & 0xff).toByte
-        ptr(2) = ((firstPage >> 8) & 0xff).toByte
-        ptr(3) = (firstPage & 0xff).toByte
-        out.write(ptr, 0, 4)
+        Bytes.putBe32(out, firstPage)
       }
       out.toByteArray
     }
@@ -783,10 +755,7 @@ object Sqlite {
         : Array[Byte] = {
       val out = new java.io.ByteArrayOutputStream()
       if (leftChild > 0) {
-        out.write((leftChild >> 24) & 0xff)
-        out.write((leftChild >> 16) & 0xff)
-        out.write((leftChild >> 8) & 0xff)
-        out.write(leftChild & 0xff)
+        Bytes.putBe32(out, leftChild)
       }
       putVarint(out, payload.length.toLong)
       if (payload.length <= maxLocalIdx) {
@@ -795,10 +764,7 @@ object Sqlite {
         val local = localFor(payload.length, maxLocalIdx)
         out.write(payload, 0, local)
         val firstPage = spill(payload, local)
-        out.write((firstPage >> 24) & 0xff)
-        out.write((firstPage >> 16) & 0xff)
-        out.write((firstPage >> 8) & 0xff)
-        out.write(firstPage & 0xff)
+        Bytes.putBe32(out, firstPage)
       }
       out.toByteArray
     }
@@ -811,16 +777,16 @@ object Sqlite {
       val pg = pages(pno - 1)
       val interior = rightmost > 0
       pg(0) = if (interior) 2 else 10
-      put16(pg, 3, cells.length)
+      Bytes.setBe16(pg, 3, cells.length)
       val ptrBase = if (interior) 12 else 8
       var content = pageSize
       cells.zipWithIndex.foreach { case (cell, i) =>
         content -= cell.length
         System.arraycopy(cell, 0, pg, content, cell.length)
-        put16(pg, ptrBase + 2 * i, content)
+        Bytes.setBe16(pg, ptrBase + 2 * i, content)
       }
-      put16(pg, 5, content)
-      if (interior) put32(pg, 8, rightmost.toLong)
+      Bytes.setBe16(pg, 5, content)
+      if (interior) Bytes.setBe32(pg, 8, rightmost.toLong)
       pno
     }
 
@@ -919,14 +885,14 @@ object Sqlite {
         val pg = pages(pno - 1)
         val hdrOff = if (first && intoPage1) 100 else 0
         pg(hdrOff) = 13
-        put16(pg, hdrOff + 3, cur.length)
+        Bytes.setBe16(pg, hdrOff + 3, cur.length)
         var content = pageSize
         cur.zipWithIndex.foreach { case ((_, cell), i) =>
           content -= cell.length
           System.arraycopy(cell, 0, pg, content, cell.length)
-          put16(pg, hdrOff + 8 + 2 * i, content)
+          Bytes.setBe16(pg, hdrOff + 8 + 2 * i, content)
         }
-        put16(pg, hdrOff + 5, content)
+        Bytes.setBe16(pg, hdrOff + 5, content)
         out += ((pno, cur.last._1))
         cur = scala.collection.mutable.ArrayBuffer()
         curBytes = 0
@@ -946,7 +912,7 @@ object Sqlite {
         val pno = newPage()
         val pg = pages(pno - 1)
         pg(0) = 13
-        put16(pg, 5, pageSize)
+        Bytes.setBe16(pg, 5, pageSize)
         Seq((pno, 0L))
       }
     }
@@ -962,25 +928,20 @@ object Sqlite {
         val pg = pages(pno - 1)
         pg(0) = 5
         val n = cur.length - 1 // last child → rightmost pointer
-        put16(pg, 3, n)
+        Bytes.setBe16(pg, 3, n)
         var content = pageSize
         (0 until n).foreach { i =>
           val (child, key) = cur(i)
           val cell = new java.io.ByteArrayOutputStream()
-          val cb = new Array[Byte](4)
-          cb(0) = ((child >> 24) & 0xff).toByte
-          cb(1) = ((child >> 16) & 0xff).toByte
-          cb(2) = ((child >> 8) & 0xff).toByte
-          cb(3) = (child & 0xff).toByte
-          cell.write(cb, 0, 4)
+          Bytes.putBe32(cell, child)
           putVarint(cell, key)
           val bytes = cell.toByteArray
           content -= bytes.length
           System.arraycopy(bytes, 0, pg, content, bytes.length)
-          put16(pg, 12 + 2 * i, content)
+          Bytes.setBe16(pg, 12 + 2 * i, content)
         }
-        put16(pg, 5, content)
-        put32(pg, 8, cur.last._1.toLong)
+        Bytes.setBe16(pg, 5, content)
+        Bytes.setBe32(pg, 8, cur.last._1.toLong)
         out += ((pno, cur.last._2))
         cur = scala.collection.mutable.ArrayBuffer()
         curBytes = 0
@@ -1039,26 +1000,26 @@ object Sqlite {
       "schema record too large for one page")
     val pg1 = pages(0)
     pg1(100) = 13
-    put16(pg1, 103, 1)
+    Bytes.setBe16(pg1, 103, 1)
     val content = pageSize - schemaCell.length
     System.arraycopy(schemaCell, 0, pg1, content, schemaCell.length)
-    put16(pg1, 108, content)
-    put16(pg1, 105, content)
+    Bytes.setBe16(pg1, 108, content)
+    Bytes.setBe16(pg1, 105, content)
 
     // --- 100-byte header ---
     System.arraycopy(Magic, 0, pg1, 0, 16)
-    put16(pg1, 16, if (pageSize == 65536) 1 else pageSize)
+    Bytes.setBe16(pg1, 16, if (pageSize == 65536) 1 else pageSize)
     pg1(18) = 1; pg1(19) = 1 // legacy read/write versions
     pg1(20) = 0              // reserved per page
     pg1(21) = 64; pg1(22) = 32 // max/min embedded payload fraction
     pg1(23) = 32             // leaf payload fraction
-    put32(pg1, 24, 1L)       // file change counter
-    put32(pg1, 28, pages.length.toLong)
-    put32(pg1, 40, 0L)       // schema cookie
-    put32(pg1, 44, 4L)       // schema format number
-    put32(pg1, 56, 1L)       // text encoding: UTF-8
-    put32(pg1, 92, 1L)       // version-valid-for
-    put32(pg1, 96, 3037000L) // sqlite version number
+    Bytes.setBe32(pg1, 24, 1L)       // file change counter
+    Bytes.setBe32(pg1, 28, pages.length.toLong)
+    Bytes.setBe32(pg1, 40, 0L)       // schema cookie
+    Bytes.setBe32(pg1, 44, 4L)       // schema format number
+    Bytes.setBe32(pg1, 56, 1L)       // text encoding: UTF-8
+    Bytes.setBe32(pg1, 92, 1L)       // version-valid-for
+    Bytes.setBe32(pg1, 96, 3037000L) // sqlite version number
     val out = new java.io.ByteArrayOutputStream(
       pages.length * pageSize)
     pages.foreach(p => out.write(p, 0, pageSize))

@@ -134,18 +134,6 @@ object Tar {
   def bzip2Archive(tar: Array[Byte]): Array[Byte] =
     Bzip2.encode(tar)
 
-  /** zstd-wrap an archive (the `.tar.zst` convention) — store-mode
-    * frame from our own writer; [[parseAuto]] reads ANY zstd frame
-    * through operators/Zstd, including entropy-coded ones. */
-  def zstdArchive(tar: Array[Byte]): Array[Byte] =
-    Zstd.encodeStore(tar)
-
-  /** xz-wrap an archive (the `.tar.xz` convention) — store-shape
-    * stream from our own writer; [[parseAuto]] reads ANY xz stream
-    * through operators/Xz, including LZMA-coded ones. */
-  def xzArchive(tar: Array[Byte]): Array[Byte] =
-    Xz.encodeStore(tar)
-
   /** Gzip-wrap an archive (single member — the `.tgz` convention). */
   def gzipArchive(tar: Array[Byte]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()

@@ -25,22 +25,14 @@ object TfRecord {
     c.getValue
   }
 
-  private def le64(v: Long): Array[Byte] =
-    (0 until 8).map(i => ((v >>> (8 * i)) & 0xff).toByte).toArray
-  private def le32(v: Long): Array[Byte] =
-    (0 until 4).map(i => ((v >>> (8 * i)) & 0xff).toByte).toArray
-  private def rd64(b: Array[Byte], o: Int): Long =
-    (0 until 8).map(i => (b(o + i) & 0xffL) << (8 * i)).sum
-  private def rd32(b: Array[Byte], o: Int): Long =
-    (0 until 4).map(i => (b(o + i) & 0xffL) << (8 * i)).sum
-
   /** One framed record. */
   def buildRecord(data: Array[Byte]): Array[Byte] = {
-    val len = le64(data.length.toLong)
-    le64(data.length.toLong) ++
-      le32(mask(crc32c(len, 0, 8))) ++
-      data ++
-      le32(mask(crc32c(data, 0, data.length)))
+    val out = new java.io.ByteArrayOutputStream(data.length + 16)
+    Bytes.putLe64(out, data.length)
+    Bytes.putLe32(out, mask(crc32c(out.toByteArray, 0, 8)))
+    out.write(data)
+    Bytes.putLe32(out, mask(crc32c(data, 0, data.length)))
+    out.toByteArray
   }
 
   /** Concatenated records — a TFRecord shard. */
@@ -60,12 +52,12 @@ object TfRecord {
     var p = 0
     var ok = true
     while (ok && p + 12 <= data.length) {
-      val len = rd64(data, p)
-      val lenCrc = rd32(data, p + 8)
+      val len = Bytes.le64(data, p)
+      val lenCrc = Bytes.le32u(data, p + 8)
       if (len < 0 || p + 12 + len + 4 > data.length ||
         mask(crc32c(data, p, 8)) != lenCrc) ok = false
       else {
-        val dataCrc = rd32(data, p + 12 + len.toInt)
+        val dataCrc = Bytes.le32u(data, p + 12 + len.toInt)
         if (mask(crc32c(data, p + 12, len.toInt)) != dataCrc) ok = false
         else {
           val d = java.security.MessageDigest.getInstance("MD5")

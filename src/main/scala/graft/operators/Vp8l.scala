@@ -880,18 +880,15 @@ object Vp8l {
     if (data.length < 20) return None
     def tag(o: Int): String =
       if (o + 4 <= data.length) new String(data, o, 4, "US-ASCII") else ""
-    def u8(o: Int): Int = data(o) & 0xff
     if (tag(0) != "RIFF" || tag(8) != "WEBP") return None
     val riffEnd = math.min(data.length.toLong,
-      8L + (u8(4) | (u8(5) << 8) | (u8(6) << 16) |
-        ((u8(7) & 0x7f) << 24))).toInt
+      8L + (Bytes.le32(data, 4) & 0x7fffffff)).toInt
     var off = 12
     var chunk = -1
     var chunkLen = 0
     while (chunk < 0 && off + 8 <= riffEnd) {
       val id = tag(off)
-      val len = u8(off + 4) | (u8(off + 5) << 8) | (u8(off + 6) << 16) |
-        (u8(off + 7) << 24)
+      val len = Bytes.le32(data, off + 4)
       if (len < 0 || off + 8 + len > riffEnd) return None
       if (id == "VP8L") { chunk = off + 8; chunkLen = len }
       else off += 8 + len + (len & 1)

@@ -75,34 +75,14 @@ object Xz {
     c.getValue
   }
 
-  private def le32(b: Array[Byte], o: Int): Long =
-    (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-      ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
-
-  /** XZ multibyte varint (7 bits per byte, little-endian, max 9). */
+  /** XZ multibyte varint: at most 9 bytes, minimal encoding only. */
   private def readVarint(b: Array[Byte], off: Int, end: Int)
       : Option[(Long, Int)] = {
-    var v = 0L
-    var i = 0
-    var done = false
-    while (!done) {
-      if (off + i >= end || i >= 9) return None
-      val x = b(off + i) & 0xff
-      v |= (x & 0x7fL) << (7 * i)
-      i += 1
-      if ((x & 0x80) == 0) {
-        if (x == 0 && i > 1) return None // non-minimal
-        done = true
-      }
-    }
-    Some((v, i))
-  }
-
-  private def writeVarint(out: java.io.ByteArrayOutputStream,
-      value: Long): Unit = {
-    var v = value
-    while (v >= 0x80) { out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-    out.write(v.toInt)
+    val c = new Bytes.Cursor(b, off, end)
+    val v = c.varint(9)
+    val n = c.p - off
+    if (!c.ok || (n > 1 && b(c.p - 1) == 0)) None // non-minimal
+    else Some((v, n))
   }
 
   // ---------------------------------------------------------------
@@ -462,9 +442,7 @@ object Xz {
     val lp = (props / 9) % 5
     val pb = props / 45
     if (lc + lp > 4) return None
-    var size = 0L
-    var i = 0
-    while (i < 8) { size |= (data(5 + i) & 0xffL) << (8 * i); i += 1 }
+    val size = Bytes.le64(data, 5)
     val known = size != -1L
     if (known && (size < 0 || size > maxOut)) return None
     val out = new FrameBuf(if (known) size.toInt + 16 else 1 << 12,
@@ -539,7 +517,7 @@ object Xz {
       case 10 => 32 // SHA-256
       case _ => return None // reserved/unsupported ids
     }
-    if (crc32(data, p + 6, 2) != le32(data, p + 8)) return None
+    if (crc32(data, p + 6, 2) != Bytes.le32u(data, p + 8)) return None
     p += 12
     // blocks until the index indicator (0x00)
     val records = scala.collection.mutable.ArrayBuffer
@@ -553,7 +531,7 @@ object Xz {
         val hdrSizeByte = data(p) & 0xff
         val hdrSize = (hdrSizeByte + 1) * 4
         if (p + hdrSize > data.length) return None
-        if (crc32(data, p, hdrSize - 4) != le32(data, p + hdrSize - 4))
+        if (crc32(data, p, hdrSize - 4) != Bytes.le32u(data, p + hdrSize - 4))
           return None
         var q = p + 1
         val flags = data(q) & 0xff
@@ -606,13 +584,11 @@ object Xz {
         check match {
           case 0 =>
           case 1 =>
-            if (crc32(out.a, outBefore, produced) != le32(data, p))
+            if (crc32(out.a, outBefore, produced) != Bytes.le32u(data, p))
               return None
           case 4 =>
-            var want = 0L
-            var i = 0
-            while (i < 8) { want |= (data(p + i) & 0xffL) << (8 * i); i += 1 }
-            if (crc64(out.a, outBefore, produced) != want) return None
+            if (crc64(out.a, outBefore, produced) != Bytes.le64(data, p))
+              return None
           case _ =>
             val md = java.security.MessageDigest.getInstance("SHA-256")
             md.update(out.a, outBefore, produced)
@@ -645,14 +621,14 @@ object Xz {
       p += 1
     }
     if (p + 4 > data.length) return None
-    if (crc32(data, indexStart, p - indexStart) != le32(data, p)) return None
+    if (crc32(data, indexStart, p - indexStart) != Bytes.le32u(data, p)) return None
     p += 4
     val indexSize = p - indexStart
     // ----- footer: CRC32(backward+flags), backward size, flags, YZ
     if (p + 12 > data.length) return None
-    val footCrc = le32(data, p)
+    val footCrc = Bytes.le32u(data, p)
     if (crc32(data, p + 4, 6) != footCrc) return None
-    val backward = (le32(data, p + 4) + 1) * 4
+    val backward = (Bytes.le32u(data, p + 4) + 1) * 4
     if (backward != indexSize) return None
     if (data(p + 8) != 0 || (data(p + 9) & 0xff) != check) return None
     if (data(p + 10) != 'Y' || data(p + 11) != 'Z') return None
@@ -669,16 +645,12 @@ object Xz {
   def encodeStore(data: Array[Byte]): Array[Byte] = {
     require(data.length <= (1 << 26), "xz encode bomb guard")
     val out = new java.io.ByteArrayOutputStream(data.length + 128)
-    def le32Out(v: Long): Unit = {
-      var i = 0
-      while (i < 4) { out.write(((v >>> (8 * i)) & 0xff).toInt); i += 1 }
-    }
     // stream header (check = CRC32)
     out.write(0xfd); out.write('7'); out.write('z'); out.write('X')
     out.write('Z'); out.write(0)
     val flags = Array[Byte](0, 1)
     out.write(flags)
-    le32Out(crc32(flags, 0, 2))
+    Bytes.putLe32(out, crc32(flags, 0, 2))
     var unpadded = 0L
     var nRecords = 0
     if (data.nonEmpty) {
@@ -687,14 +659,14 @@ object Xz {
       val bh = new java.io.ByteArrayOutputStream()
       bh.write(0) // size byte placeholder
       bh.write(0) // flags
-      writeVarint(bh, 0x21)
-      writeVarint(bh, 1)
+      Bytes.putVarint(bh, 0x21)
+      Bytes.putVarint(bh, 1)
       bh.write(16)
       while ((bh.size() + 4) % 4 != 0) bh.write(0)
       val bhArr = bh.toByteArray
       bhArr(0) = (((bhArr.length + 4) / 4) - 1).toByte
       out.write(bhArr)
-      le32Out(crc32(bhArr, 0, bhArr.length))
+      Bytes.putLe32(out, crc32(bhArr, 0, bhArr.length))
       // LZMA2 uncompressed chunks (max 64 KiB each; first resets dict)
       val body = new java.io.ByteArrayOutputStream()
       var off = 0
@@ -713,32 +685,29 @@ object Xz {
       out.write(bodyArr)
       var padded = bhArr.length + 4 + bodyArr.length
       while (padded % 4 != 0) { out.write(0); padded += 1 }
-      le32Out(crc32(data, 0, data.length)) // the block check
+      Bytes.putLe32(out, crc32(data, 0, data.length)) // the block check
       unpadded = (bhArr.length + 4 + bodyArr.length + 4).toLong
       nRecords = 1
     }
     // index
     val idx = new java.io.ByteArrayOutputStream()
     idx.write(0)
-    writeVarint(idx, nRecords.toLong)
+    Bytes.putVarint(idx, nRecords.toLong)
     if (nRecords == 1) {
-      writeVarint(idx, unpadded)
-      writeVarint(idx, data.length.toLong)
+      Bytes.putVarint(idx, unpadded)
+      Bytes.putVarint(idx, data.length.toLong)
     }
     while (idx.size() % 4 != 0) idx.write(0)
     val idxArr = idx.toByteArray
     out.write(idxArr)
-    le32Out(crc32(idxArr, 0, idxArr.length))
+    Bytes.putLe32(out, crc32(idxArr, 0, idxArr.length))
     // footer: CRC32(backward size + flags), backward size, flags, YZ
     val backward = (idxArr.length + 4) / 4 - 1
     val tail = new Array[Byte](6)
-    tail(0) = (backward & 0xff).toByte
-    tail(1) = ((backward >>> 8) & 0xff).toByte
-    tail(2) = ((backward >>> 16) & 0xff).toByte
-    tail(3) = ((backward >>> 24) & 0xff).toByte
+    Bytes.setLe32(tail, 0, backward)
     tail(4) = 0
     tail(5) = 1
-    le32Out(crc32(tail, 0, 6))
+    Bytes.putLe32(out, crc32(tail, 0, 6))
     out.write(tail)
     out.write('Y'); out.write('Z')
     out.toByteArray

@@ -431,13 +431,8 @@ object XzEncode {
     out.write(PropsByte)
     val prop = dictProp(data.length)
     val dictSize = (2L | (prop & 1)) << (prop / 2 + 11)
-    var i = 0
-    while (i < 4) { out.write(((dictSize >>> (8 * i)) & 0xff).toInt); i += 1 }
-    i = 0
-    while (i < 8) {
-      out.write(((data.length.toLong >>> (8 * i)) & 0xff).toInt)
-      i += 1
-    }
+    Bytes.putLe32(out, dictSize)
+    Bytes.putLe64(out, data.length)
     val st = new EncState(3, 0, 2)
     val (head, prev, hashLog) = Lz77.tables(data.length, 17)
     val packed = lzmaChunk(data, 0, data.length, st, head, prev,
@@ -457,58 +452,45 @@ object XzEncode {
     require(data.length <= (1 << 26), "xz encode bomb guard")
     if (data.length < 16) return Xz.encodeStore(data)
     val out = new java.io.ByteArrayOutputStream(data.length / 2 + 128)
-    def le32Out(v: Long): Unit = {
-      var i = 0
-      while (i < 4) { out.write(((v >>> (8 * i)) & 0xff).toInt); i += 1 }
-    }
-    def writeVarint(b: java.io.ByteArrayOutputStream,
-        value: Long): Unit = {
-      var v = value
-      while (v >= 0x80) { b.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-      b.write(v.toInt)
-    }
     out.write(0xfd); out.write('7'); out.write('z'); out.write('X')
     out.write('Z'); out.write(0)
     val flags = Array[Byte](0, 1) // check = CRC32
     out.write(flags)
-    le32Out(Xz.crc32(flags, 0, 2))
+    Bytes.putLe32(out, Xz.crc32(flags, 0, 2))
     // block header: LZMA2 filter, dict size covering the input
     val bh = new java.io.ByteArrayOutputStream()
     bh.write(0) // size byte placeholder
     bh.write(0) // flags
-    writeVarint(bh, 0x21)
-    writeVarint(bh, 1)
+    Bytes.putVarint(bh, 0x21)
+    Bytes.putVarint(bh, 1)
     bh.write(dictProp(data.length))
     while ((bh.size() + 4) % 4 != 0) bh.write(0)
     val bhArr = bh.toByteArray
     bhArr(0) = (((bhArr.length + 4) / 4) - 1).toByte
     out.write(bhArr)
-    le32Out(Xz.crc32(bhArr, 0, bhArr.length))
+    Bytes.putLe32(out, Xz.crc32(bhArr, 0, bhArr.length))
     val bodyArr = lzma2Compress(data)
     out.write(bodyArr)
     var padded = bhArr.length + 4 + bodyArr.length
     while (padded % 4 != 0) { out.write(0); padded += 1 }
-    le32Out(Xz.crc32(data, 0, data.length)) // the block check
+    Bytes.putLe32(out, Xz.crc32(data, 0, data.length)) // the block check
     val unpadded = (bhArr.length + 4 + bodyArr.length + 4).toLong
     // index
     val idx = new java.io.ByteArrayOutputStream()
     idx.write(0)
-    writeVarint(idx, 1L)
-    writeVarint(idx, unpadded)
-    writeVarint(idx, data.length.toLong)
+    Bytes.putVarint(idx, 1L)
+    Bytes.putVarint(idx, unpadded)
+    Bytes.putVarint(idx, data.length.toLong)
     while (idx.size() % 4 != 0) idx.write(0)
     val idxArr = idx.toByteArray
     out.write(idxArr)
-    le32Out(Xz.crc32(idxArr, 0, idxArr.length))
+    Bytes.putLe32(out, Xz.crc32(idxArr, 0, idxArr.length))
     val backward = (idxArr.length + 4) / 4 - 1
     val tail = new Array[Byte](6)
-    tail(0) = (backward & 0xff).toByte
-    tail(1) = ((backward >>> 8) & 0xff).toByte
-    tail(2) = ((backward >>> 16) & 0xff).toByte
-    tail(3) = ((backward >>> 24) & 0xff).toByte
+    Bytes.setLe32(tail, 0, backward)
     tail(4) = 0
     tail(5) = 1
-    le32Out(Xz.crc32(tail, 0, 6))
+    Bytes.putLe32(out, Xz.crc32(tail, 0, 6))
     out.write(tail)
     out.write('Y'); out.write('Z')
     out.toByteArray

@@ -338,10 +338,7 @@ object Zarr {
         // numcodecs lz4 framing: u32 LE original size + one block
         val block = Lz4.compressBlock(raw)
         val out = new Array[Byte](4 + block.length)
-        out(0) = (raw.length & 0xff).toByte
-        out(1) = ((raw.length >> 8) & 0xff).toByte
-        out(2) = ((raw.length >> 16) & 0xff).toByte
-        out(3) = ((raw.length >> 24) & 0xff).toByte
+        Bytes.setLe32(out, 0, raw.length)
         System.arraycopy(block, 0, out, 4, block.length)
         out
       case Some(c) => sys.error(s"compressor $c")
@@ -403,8 +400,7 @@ object Zarr {
         out
       case Some("lz4") =>
         if (stored.length < 4) return None
-        val orig = (stored(0) & 0xff) | ((stored(1) & 0xff) << 8) |
-          ((stored(2) & 0xff) << 16) | ((stored(3) & 0xff) << 24)
+        val orig = Bytes.le32(stored, 0)
         if (orig != want) return None
         val out = new Array[Byte](want)
         val n = Lz4.decompressBlock(stored, 4, stored.length - 4, out)
@@ -843,11 +839,7 @@ object Zarr {
         val n = cur.length - 4
         val crc = new java.util.zip.CRC32C()
         crc.update(cur, 0, n)
-        var got = 0L
-        var i = 0
-        while (i < 4) { got |= (cur(n + i) & 0xffL) << (8 * i)
-          i += 1 }
-        if (crc.getValue != got) return None
+        if (crc.getValue != Bytes.le32u(cur, n)) return None
         cur = java.util.Arrays.copyOfRange(cur, 0, n)
       case ("gzip", _) =>
         val inf = new java.util.zip.Inflater()
@@ -912,12 +904,6 @@ object Zarr {
         val idx = undoChain(
           if (sh.indexCrc) Seq(("crc32c", 0)) else Seq.empty,
           idxStored, nInner * 16).getOrElse(return None)
-        def u64(o: Int): Long = {
-          var v = 0L; var i = 0
-          while (i < 8) { v |= (idx(o + i) & 0xffL) << (8 * i)
-            i += 1 }
-          v
-        }
         val out = new Array[Byte](want)
         // missing inner chunks read as fill value
         val fe = fillElem(meta)
@@ -930,8 +916,8 @@ object Zarr {
         var li = 0
         val gIdx = new Array[Int](grid.length)
         while (li < nInner) {
-          val off = u64(li * 16)
-          val nb = u64(li * 16 + 8)
+          val off = Bytes.le64(idx, li * 16)
+          val nb = Bytes.le64(idx, li * 16 + 8)
           if (!(off == -1L && nb == -1L)) {
             if (off < 0 || nb < 0 ||
               off + nb > stored.length) return None
@@ -971,9 +957,7 @@ object Zarr {
         crc.update(cur, 0, cur.length)
         val v = crc.getValue
         val out = java.util.Arrays.copyOf(cur, cur.length + 4)
-        var i = 0
-        while (i < 4) { out(cur.length + i) =
-          ((v >>> (8 * i)) & 0xff).toByte; i += 1 }
+        Bytes.setLe32(out, cur.length, v)
         cur = out
       case ("gzip", lvl) =>
         val d = new java.util.zip.Deflater(

@@ -35,23 +35,6 @@ object Zip {
     java.security.MessageDigest.getInstance("MD5")
       .digest(b).map("%02x".format(_)).mkString
 
-  private def le16(v: Int): Array[Byte] =
-    Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-  private def le32(v: Long): Array[Byte] =
-    Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-      ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-
-  private def le64(v: Long): Array[Byte] =
-    (0 until 8).map(i => ((v >> (8 * i)) & 0xff).toByte).toArray
-
-  private def rd16(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-  private def rd32(b: Array[Byte], o: Int): Long =
-    (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-      ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
-  private def rd64(b: Array[Byte], o: Int): Long =
-    (0 until 8).foldLeft(0L)((a, i) => a | ((b(o + i) & 0xffL) << (8 * i)))
-
   private def deflateRaw(data: Array[Byte]): Array[Byte] = {
     val d = new Deflater(Deflater.DEFAULT_COMPRESSION, true)
     d.setInput(data); d.finish()
@@ -98,35 +81,39 @@ object Zip {
       val method = if (defl) 8 else 0
       val off = out.size()
       // local file header
-      out.write(le32(0x04034b50L)); out.write(le16(20)) // version needed
-      out.write(le16(0)); out.write(le16(method))
-      out.write(le16(0)); out.write(le16(0))            // time/date
-      out.write(le32(crc.getValue))
-      out.write(le32(payload.length.toLong))
-      out.write(le32(data.length.toLong))
-      out.write(le16(nameB.length)); out.write(le16(0)) // extra len
+      Bytes.putLe32(out, 0x04034b50L); Bytes.putLe16(out, 20) // version needed
+      Bytes.putLe16(out, 0); Bytes.putLe16(out, method)
+      Bytes.putLe16(out, 0); Bytes.putLe16(out, 0)            // time/date
+      Bytes.putLe32(out, crc.getValue)
+      Bytes.putLe32(out, payload.length.toLong)
+      Bytes.putLe32(out, data.length.toLong)
+      Bytes.putLe16(out, nameB.length); Bytes.putLe16(out, 0) // extra len
       out.write(nameB); out.write(payload)
       // central directory entry; saturated size/offset fields spill
       // into the 0x0001 extended-information extra (APPNOTE §4.5.3)
       val z64 = forceZip64 || off >= 0xffffffffL ||
         payload.length >= 0xffffffffL || data.length >= 0xffffffffL
-      val extra = if (!z64) Array.empty[Byte] else
-        le16(0x0001) ++ le16(24) ++ le64(data.length.toLong) ++
-          le64(payload.length.toLong) ++ le64(off.toLong)
-      central.write(le32(0x02014b50L))
-      central.write(le16(if (z64) 45 else 20))
-      central.write(le16(if (z64) 45 else 20))
-      central.write(le16(0)); central.write(le16(method))
-      central.write(le16(0)); central.write(le16(0))
-      central.write(le32(crc.getValue))
-      central.write(le32(if (z64) 0xffffffffL else payload.length.toLong))
-      central.write(le32(if (z64) 0xffffffffL else data.length.toLong))
-      central.write(le16(nameB.length)); central.write(le16(extra.length))
-      central.write(le16(0)); central.write(le16(0))    // comment/disk
-      central.write(le16(0)); central.write(le32(0L))   // attrs
-      central.write(le32(if (z64) 0xffffffffL else off.toLong))
+      val extra = new java.io.ByteArrayOutputStream(28)
+      if (z64) {
+        Bytes.putLe16(extra, 0x0001); Bytes.putLe16(extra, 24)
+        Bytes.putLe64(extra, data.length.toLong)
+        Bytes.putLe64(extra, payload.length.toLong)
+        Bytes.putLe64(extra, off.toLong)
+      }
+      Bytes.putLe32(central, 0x02014b50L)
+      Bytes.putLe16(central, if (z64) 45 else 20)
+      Bytes.putLe16(central, if (z64) 45 else 20)
+      Bytes.putLe16(central, 0); Bytes.putLe16(central, method)
+      Bytes.putLe16(central, 0); Bytes.putLe16(central, 0)
+      Bytes.putLe32(central, crc.getValue)
+      Bytes.putLe32(central, if (z64) 0xffffffffL else payload.length.toLong)
+      Bytes.putLe32(central, if (z64) 0xffffffffL else data.length.toLong)
+      Bytes.putLe16(central, nameB.length); Bytes.putLe16(central, extra.size)
+      Bytes.putLe16(central, 0); Bytes.putLe16(central, 0)    // comment/disk
+      Bytes.putLe16(central, 0); Bytes.putLe32(central, 0L)   // attrs
+      Bytes.putLe32(central, if (z64) 0xffffffffL else off.toLong)
       central.write(nameB)
-      central.write(extra)
+      extra.writeTo(central)
       count += 1
     }
     val cdOff = out.size()
@@ -136,24 +123,24 @@ object Zip {
       cdOff >= 0xffffffffL || cd.length >= 0xffffffffL
     if (needZ64) {
       val recOff = out.size()
-      out.write(le32(0x06064b50L))                      // ZIP64 EOCD record
-      out.write(le64(44L))                              // size of remainder
-      out.write(le16(45)); out.write(le16(45))          // made by / needed
-      out.write(le32(0L)); out.write(le32(0L))          // disk numbers
-      out.write(le64(count.toLong)); out.write(le64(count.toLong))
-      out.write(le64(cd.length.toLong)); out.write(le64(cdOff.toLong))
-      out.write(le32(0x07064b50L))                      // ZIP64 EOCD locator
-      out.write(le32(0L))                               // disk with record
-      out.write(le64(recOff.toLong))
-      out.write(le32(1L))                               // total disks
+      Bytes.putLe32(out, 0x06064b50L)                      // ZIP64 EOCD record
+      Bytes.putLe64(out, 44L)                              // size of remainder
+      Bytes.putLe16(out, 45); Bytes.putLe16(out, 45)          // made by / needed
+      Bytes.putLe32(out, 0L); Bytes.putLe32(out, 0L)          // disk numbers
+      Bytes.putLe64(out, count.toLong); Bytes.putLe64(out, count.toLong)
+      Bytes.putLe64(out, cd.length.toLong); Bytes.putLe64(out, cdOff.toLong)
+      Bytes.putLe32(out, 0x07064b50L)                      // ZIP64 EOCD locator
+      Bytes.putLe32(out, 0L)                               // disk with record
+      Bytes.putLe64(out, recOff.toLong)
+      Bytes.putLe32(out, 1L)                               // total disks
     }
-    out.write(le32(0x06054b50L))                        // EOCD
-    out.write(le16(0)); out.write(le16(0))
+    Bytes.putLe32(out, 0x06054b50L)                        // EOCD
+    Bytes.putLe16(out, 0); Bytes.putLe16(out, 0)
     val n16 = if (needZ64) 0xffff else count
-    out.write(le16(n16)); out.write(le16(n16))
-    out.write(le32(if (needZ64) 0xffffffffL else cd.length.toLong))
-    out.write(le32(if (needZ64) 0xffffffffL else cdOff.toLong))
-    out.write(le16(0))
+    Bytes.putLe16(out, n16); Bytes.putLe16(out, n16)
+    Bytes.putLe32(out, if (needZ64) 0xffffffffL else cd.length.toLong)
+    Bytes.putLe32(out, if (needZ64) 0xffffffffL else cdOff.toLong)
+    Bytes.putLe16(out, 0)
     out.toByteArray
   }
 
@@ -173,27 +160,27 @@ object Zip {
     var i = data.length - 22
     val lo = math.max(0, data.length - 22 - 65535)
     while (eocd < 0 && i >= lo) {
-      if (rd32(data, i) == 0x06054b50L) eocd = i
+      if (Bytes.le32u(data, i) == 0x06054b50L) eocd = i
       i -= 1
     }
     if (eocd < 0) return Seq.empty
-    var n: Long = rd16(data, eocd + 10).toLong
-    var cdL = rd32(data, eocd + 16) // CD offset (untrusted 32-bit)
+    var n: Long = Bytes.le16(data, eocd + 10).toLong
+    var cdL = Bytes.le32u(data, eocd + 16) // CD offset (untrusted 32-bit)
     // Saturated classic fields → follow the ZIP64 EOCD locator
     // (fixed 20 bytes immediately before the EOCD) to the ZIP64 EOCD
     // record for the 64-bit truth. Malformed structures (bad
     // signatures, out-of-range offsets) end the walk with no rows —
     // same never-throw discipline as the rest of the parser.
     if (n == 0xffffL || cdL == 0xffffffffL ||
-        rd32(data, eocd + 12) == 0xffffffffL) {
+        Bytes.le32u(data, eocd + 12) == 0xffffffffL) {
       val loc = eocd - 20
-      if (loc < 0 || rd32(data, loc) != 0x07064b50L) return Seq.empty
-      val recL = rd64(data, loc + 8)
+      if (loc < 0 || Bytes.le32u(data, loc) != 0x07064b50L) return Seq.empty
+      val recL = Bytes.le64(data, loc + 8)
       if (recL < 0 || recL > loc - 56 ||
-          rd32(data, recL.toInt) != 0x06064b50L) return Seq.empty
+          Bytes.le32u(data, recL.toInt) != 0x06064b50L) return Seq.empty
       val rec = recL.toInt
-      n = rd64(data, rec + 32)
-      cdL = rd64(data, rec + 48)
+      n = Bytes.le64(data, rec + 32)
+      cdL = Bytes.le64(data, rec + 48)
       if (n < 0 || cdL < 0) return Seq.empty
     }
     var p = if (cdL > Int.MaxValue) -1 else cdL.toInt
@@ -202,16 +189,16 @@ object Zip {
     var ok = true
     while (ok && k < n) {
       if (p < 0 || p + 46 > data.length ||
-        rd32(data, p) != 0x02014b50L) ok = false
+        Bytes.le32u(data, p) != 0x02014b50L) ok = false
       else {
-        val method = rd16(data, p + 10)
-        val crcStored = rd32(data, p + 16)
-        var csizeL = rd32(data, p + 20)
-        var usizeL = rd32(data, p + 24)
-        val nameLen = rd16(data, p + 28)
-        val extraLen = rd16(data, p + 30)
-        val cmtLen = rd16(data, p + 32)
-        var lhoL = rd32(data, p + 42)
+        val method = Bytes.le16(data, p + 10)
+        val crcStored = Bytes.le32u(data, p + 16)
+        var csizeL = Bytes.le32u(data, p + 20)
+        var usizeL = Bytes.le32u(data, p + 24)
+        val nameLen = Bytes.le16(data, p + 28)
+        val extraLen = Bytes.le16(data, p + 30)
+        val cmtLen = Bytes.le16(data, p + 32)
+        var lhoL = Bytes.le32u(data, p + 42)
         // 0xFFFFFFFF size/offset fields resolve through the 0x0001
         // extra: 64-bit values present ONLY for the saturated classic
         // fields, in spec order usize, csize, lho (APPNOTE §4.5.3)
@@ -221,19 +208,19 @@ object Zip {
           var e = p + 46 + nameLen
           val eEnd = e + extraLen
           while (e + 4 <= eEnd) {
-            val id = rd16(data, e)
-            val len = rd16(data, e + 2)
+            val id = Bytes.le16(data, e)
+            val len = Bytes.le16(data, e + 2)
             if (id == 0x0001 && e + 4 + len <= eEnd) {
               var f = e + 4
               val fEnd = e + 4 + len
               if (usizeL == 0xffffffffL && f + 8 <= fEnd) {
-                usizeL = rd64(data, f); f += 8
+                usizeL = Bytes.le64(data, f); f += 8
               }
               if (csizeL == 0xffffffffL && f + 8 <= fEnd) {
-                csizeL = rd64(data, f); f += 8
+                csizeL = Bytes.le64(data, f); f += 8
               }
               if (lhoL == 0xffffffffL && f + 8 <= fEnd) {
-                lhoL = rd64(data, f); f += 8
+                lhoL = Bytes.le64(data, f); f += 8
               }
             }
             e += 4 + len
@@ -250,13 +237,13 @@ object Zip {
             csizeL * 1040L + 4096L)
         if (!sizesSane || p + 46 + nameLen > data.length ||
           lho < 0 || lho + 30 > data.length ||
-          rd32(data, lho) != 0x04034b50L) ok = false
+          Bytes.le32u(data, lho) != 0x04034b50L) ok = false
         else {
           val csize = csizeL.toInt
           val usize = usizeL.toInt
           val name = new String(data, p + 46, nameLen, "UTF-8")
-          val lNameLen = rd16(data, lho + 26)
-          val lExtraLen = rd16(data, lho + 28)
+          val lNameLen = Bytes.le16(data, lho + 26)
+          val lExtraLen = Bytes.le16(data, lho + 28)
           val dataOff = lho + 30 + lNameLen + lExtraLen
           if (dataOff.toLong + csize > data.length) ok = false
           else {

@@ -58,16 +58,6 @@ object Zstd {
 
   private def rotl(v: Long, n: Int): Long = (v << n) | (v >>> (64 - n))
 
-  private def le64(b: Array[Byte], o: Int): Long = {
-    var v = 0L
-    var i = 0
-    while (i < 8) { v |= (b(o + i) & 0xffL) << (8 * i); i += 1 }
-    v
-  }
-  private def le32(b: Array[Byte], o: Int): Long =
-    (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-      ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
-
   /** xxHash64 over a byte range (seed 0 — what zstd frames use). */
   def xxh64(b: Array[Byte], off: Int, len: Int): Long = {
     var h = 0L
@@ -79,10 +69,10 @@ object Zstd {
       var v3 = 0L
       var v4 = -P1
       while (p + 32 <= end) {
-        v1 = rotl(v1 + le64(b, p) * P2, 31) * P1
-        v2 = rotl(v2 + le64(b, p + 8) * P2, 31) * P1
-        v3 = rotl(v3 + le64(b, p + 16) * P2, 31) * P1
-        v4 = rotl(v4 + le64(b, p + 24) * P2, 31) * P1
+        v1 = rotl(v1 + Bytes.le64(b, p) * P2, 31) * P1
+        v2 = rotl(v2 + Bytes.le64(b, p + 8) * P2, 31) * P1
+        v3 = rotl(v3 + Bytes.le64(b, p + 16) * P2, 31) * P1
+        v4 = rotl(v4 + Bytes.le64(b, p + 24) * P2, 31) * P1
         p += 32
       }
       h = rotl(v1, 1) + rotl(v2, 7) + rotl(v3, 12) + rotl(v4, 18)
@@ -92,11 +82,11 @@ object Zstd {
     } else h = P5
     h += len.toLong
     while (p + 8 <= end) {
-      h = rotl(h ^ (rotl(le64(b, p) * P2, 31) * P1), 27) * P1 + P4
+      h = rotl(h ^ (rotl(Bytes.le64(b, p) * P2, 31) * P1), 27) * P1 + P4
       p += 8
     }
     if (p + 4 <= end) {
-      h = rotl(h ^ (le32(b, p) * P1), 23) * P2 + P3
+      h = rotl(h ^ (Bytes.le32u(b, p) * P1), 23) * P2 + P3
       p += 4
     }
     while (p < end) {
@@ -496,7 +486,7 @@ object Zstd {
     if (!hasMagic)
       return Some(new Dict(0L, null, null, null, null,
         Array(1L, 4L, 8L), b))
-    val id = le32(b, 4)
+    val id = Bytes.le32u(b, 4)
     var off = 8
     val (huf, used) = readHufTree(b, off, b.length).getOrElse(return None)
     off += used
@@ -511,7 +501,7 @@ object Zstd {
     val ml_ = fse(52, 9).getOrElse(return None)
     val ll_ = fse(35, 9).getOrElse(return None)
     if (off + 12 > b.length) return None
-    val reps = Array(le32(b, off), le32(b, off + 4), le32(b, off + 8))
+    val reps = Array(Bytes.le32u(b, off), Bytes.le32u(b, off + 4), Bytes.le32u(b, off + 8))
     off += 12
     val content = java.util.Arrays.copyOfRange(b, off, b.length)
     if (reps.exists(r => r <= 0 || r > content.length + 1)) return None
@@ -539,7 +529,7 @@ object Zstd {
     while (off < data.length) {
       if (isSkippable(data, off)) {
         if (off + 8 > data.length) return None
-        val sz = le32(data, off + 4)
+        val sz = Bytes.le32u(data, off + 4)
         if (off + 8 + sz > data.length) return None
         off = off + 8 + sz.toInt
       } else {
@@ -658,7 +648,7 @@ object Zstd {
     if (contentSize >= 0 && produced != contentSize) return None
     if (hasChecksum) {
       if (p + 4 > data.length) return None
-      val want = le32(data, p)
+      val want = Bytes.le32u(data, p)
       p += 4
       if ((xxh64(frame.a, base, produced) & 0xffffffffL) != want)
         return None
@@ -937,8 +927,7 @@ object Zstd {
         val v = n - 256
         out.write(v & 0xff); out.write((v >>> 8) & 0xff)
       case _ =>
-        out.write(n & 0xff); out.write((n >>> 8) & 0xff)
-        out.write((n >>> 16) & 0xff); out.write((n >>> 24) & 0xff)
+        Bytes.putLe32(out, n)
     }
     val blockMax = math.min(math.max(n, 1), 1 << 17)
     var off = 0
@@ -962,10 +951,7 @@ object Zstd {
       off += len
     }
     if (withChecksum) {
-      val cs = xxh64(data, 0, data.length) & 0xffffffffL
-      out.write((cs & 0xff).toInt); out.write(((cs >>> 8) & 0xff).toInt)
-      out.write(((cs >>> 16) & 0xff).toInt)
-      out.write(((cs >>> 24) & 0xff).toInt)
+      Bytes.putLe32(out, xxh64(data, 0, data.length))
     }
     out.toByteArray
   }

@@ -431,8 +431,7 @@ object ZstdEncode {
       out.write((h >> 16) & 0xff)
     } else if (regen <= 16383 && comp <= 16383) {
       val h = 2 | (2 << 2) | (regen << 4) | (comp << 18)
-      out.write(h & 0xff); out.write((h >> 8) & 0xff)
-      out.write((h >> 16) & 0xff); out.write((h >> 24) & 0xff)
+      Bytes.putLe32(out, h)
     } else if (regen < (1 << 18) && comp < (1 << 18)) {
       val h = 2L | (3L << 2) | (regen.toLong << 4) |
         (comp.toLong << 22)
@@ -546,8 +545,7 @@ object ZstdEncode {
         val v = n - 256
         out.write(v & 0xff); out.write((v >>> 8) & 0xff)
       case _ =>
-        out.write(n & 0xff); out.write((n >>> 8) & 0xff)
-        out.write((n >>> 16) & 0xff); out.write((n >>> 24) & 0xff)
+        Bytes.putLe32(out, n)
     }
     val (head, prev, hashLog) = Lz77.tables(n, 17)
     val blockMax = 1 << 17
@@ -587,10 +585,7 @@ object ZstdEncode {
       }
     }
     if (withChecksum) {
-      val cs = Zstd.xxh64(data, 0, data.length) & 0xffffffffL
-      out.write((cs & 0xff).toInt); out.write(((cs >>> 8) & 0xff).toInt)
-      out.write(((cs >>> 16) & 0xff).toInt)
-      out.write(((cs >>> 24) & 0xff).toInt)
+      Bytes.putLe32(out, Zstd.xxh64(data, 0, data.length))
     }
     out.toByteArray
   }
@@ -626,8 +621,7 @@ object ZstdEncode {
         val v = n - 256
         out.write(v & 0xff); out.write((v >>> 8) & 0xff)
       case _ =>
-        out.write(n & 0xff); out.write((n >>> 8) & 0xff)
-        out.write((n >>> 16) & 0xff); out.write((n >>> 24) & 0xff)
+        Bytes.putLe32(out, n)
     }
     // index the whole dictionary into the hash chains so the first
     // frame bytes can already match into it
@@ -661,10 +655,7 @@ object ZstdEncode {
       off += len
     }
     if (withChecksum) {
-      val cs = Zstd.xxh64(data, 0, data.length) & 0xffffffffL
-      out.write((cs & 0xff).toInt); out.write(((cs >>> 8) & 0xff).toInt)
-      out.write(((cs >>> 16) & 0xff).toInt)
-      out.write(((cs >>> 24) & 0xff).toInt)
+      Bytes.putLe32(out, Zstd.xxh64(data, 0, data.length))
     }
     out.toByteArray
   }
